@@ -99,6 +99,54 @@ class WireGoldenSpec extends AnyFunSuite {
     assert(toHex(encode(m)) == toHex(expected))
   }
 
+  // ------------------------------------------------- encode edge cases
+  // Input handling the encoder must keep exactly: which names and IPs
+  // it accepts, how it normalizes them, and the message it rejects with.
+
+  private def aMsg(name: String, ip: String) = Message(1, queryFlags(OpcodeUpdate),
+    Seq(Question("example.com.", TypeSoa, ClassIn)), Nil,
+    Seq(Rr(name, TypeA, ClassIn, 60, AData(ip))), Nil)
+
+  private def rejection(m: Message): String =
+    intercept[IllegalArgumentException](encode(m)).getMessage
+
+  test("encode: a name without the trailing dot encodes as the absolute name") {
+    def q(n: String) = Message(1, queryFlags(OpcodeQuery),
+      Seq(Question(n, TypeAxfr, ClassIn)), Nil, Nil, Nil)
+    assert(toHex(encode(q("example.com"))) == toHex(encode(q("example.com."))))
+    assert(toHex(encode(aMsg("www.example.com", "10.0.0.1"))) ==
+      toHex(encode(aMsg("www.example.com.", "10.0.0.1"))))
+  }
+
+  test("encode: empty labels are skipped, the root name is one zero byte") {
+    val m = Message(1, queryFlags(OpcodeQuery),
+      Seq(Question("a..b.", TypeAxfr, ClassIn), Question(".", TypeAxfr, ClassIn)),
+      Nil, Nil, Nil)
+    assert(toHex(encode(m)) == toHex(hex(
+      "00 01 00 00 00 02 00 00 00 00 00 00" +
+      " 01 61 01 62 00 00 fc 00 01" + // a..b. -> 1"a"1"b"0
+      " 00 00 fc 00 01")))            // .     -> 0
+  }
+
+  test("encode: a 63-byte label is accepted, a 64-byte label is rejected") {
+    val ok = ("x" * 63) + ".example.com."
+    val body = encode(aMsg(ok, "10.0.0.1"))
+    assert(decode(body).authority.map(_.name) == Seq(ok))
+    val bad = ("x" * 64) + ".example.com."
+    assert(rejection(aMsg(bad, "10.0.0.1")) == s"requirement failed: label too long in '$bad'")
+  }
+
+  test("encode: malformed IPv4 rdata is rejected with the codec's messages") {
+    assert(rejection(aMsg("a.example.com.", "300.1.1.1")) ==
+      "requirement failed: IPv4 octet out of range in '300.1.1.1'")
+    assert(rejection(aMsg("a.example.com.", "1.2.3")) ==
+      "requirement failed: not an IPv4 address: '1.2.3'")
+    assert(rejection(aMsg("a.example.com.", "1.2.3.4.5")) ==
+      "requirement failed: not an IPv4 address: '1.2.3.4.5'")
+    assert(rejection(aMsg("a.example.com.", "a.b.c.d")) ==
+      "not an IPv4 address: 'a.b.c.d'")
+  }
+
   // ------------------------------------------------------------- decode
   // These vectors use foreign-encoder shapes: compression pointers and
   // full (non-root) SOA MNAME/RNAME, which this codec never produces.
