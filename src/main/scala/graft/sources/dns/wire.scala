@@ -1,6 +1,6 @@
 package graft.sources.dns
 
-import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream, EOFException, IOException}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, EOFException, IOException, OutputStream}
 import java.net.{InetSocketAddress, ServerSocket, Socket}
 import java.nio.charset.StandardCharsets
 
@@ -61,66 +61,140 @@ object DnsWire {
 
   // ------------------------------------------------------------ encode
 
-  private def writeName(out: DataOutputStream, name: String): Unit = {
-    val abs = Fqdn.normalize(name)
-    abs.split('.').filter(_.nonEmpty).foreach { label =>
-      val bytes = label.getBytes(StandardCharsets.US_ASCII)
-      require(bytes.length < 64, s"label too long in '$name'")
-      out.writeByte(bytes.length)
-      out.write(bytes)
+  /** Writes a message straight into one array sized from an upper bound
+    * of its encoding, so nothing grows or is copied on the way. The
+    * first `offset` bytes stay free for the TCP length prefix. */
+  private final class Writer(capacity: Int, offset: Int) {
+    private val buf = new Array[Byte](capacity)
+    private var pos = offset
+
+    def u8(v: Int): Unit = { buf(pos) = v.toByte; pos += 1 }
+    def u16(v: Int): Unit = { buf(pos) = (v >>> 8).toByte; buf(pos + 1) = v.toByte; pos += 2 }
+    def u32(v: Int): Unit = { u16(v >>> 16); u16(v) }
+
+    /** Bytes written after the reserved offset. */
+    def size: Int = pos - offset
+    def setU16(at: Int, v: Int): Unit = { buf(at) = (v >>> 8).toByte; buf(at + 1) = v.toByte }
+    def toArray: Array[Byte] =
+      if (pos == buf.length) buf else java.util.Arrays.copyOf(buf, pos)
+
+    /** Labels of the absolute form of `name`, empty labels skipped. */
+    def name(name: String): Unit = {
+      var start = 0
+      while (start < name.length) {
+        var end = name.indexOf('.', start)
+        if (end < 0) end = name.length
+        if (end > start) label(name, start, end)
+        start = end + 1
+      }
+      u8(0)
     }
-    out.writeByte(0)
+
+    private def label(name: String, start: Int, end: Int): Unit = {
+      var i = start
+      while (i < end && name.charAt(i) < 0x80) i += 1
+      if (i == end) {
+        require(end - start < 64, s"label too long in '$name'")
+        u8(end - start)
+        i = start
+        while (i < end) { buf(pos) = name.charAt(i).toByte; pos += 1; i += 1 }
+      } else {
+        // non-ASCII: the charset's replacement rules set the byte count
+        val bytes = name.substring(start, end).getBytes(StandardCharsets.US_ASCII)
+        require(bytes.length < 64, s"label too long in '$name'")
+        u8(bytes.length)
+        System.arraycopy(bytes, 0, buf, pos, bytes.length)
+        pos += bytes.length
+      }
+    }
+
+    /** A dotted quad: four '.'-separated fields (trailing empty fields
+      * ignored), each an optionally signed decimal integer in 0..255.
+      * Out-of-range octets are rejected rather than silently truncated
+      * to a byte — a record like '300.1.1.1' must fail the write, not
+      * land as 44.1.1.1. */
+    def ipv4(ip: String): Unit = {
+      var end = ip.length
+      while (end > 0 && ip.charAt(end - 1) == '.') end -= 1
+      var fields = 1
+      var i = 0
+      while (i < end) { if (ip.charAt(i) == '.') fields += 1; i += 1 }
+      require(fields == 4, s"not an IPv4 address: '$ip'")
+      u16(4)
+      var start = 0
+      while (start < end) {
+        var stop = ip.indexOf('.', start)
+        if (stop < 0) stop = end
+        u8(octet(ip, start, stop))
+        start = stop + 1
+      }
+    }
+
+    private def octet(ip: String, start: Int, end: Int): Int = {
+      def malformed = new IllegalArgumentException(s"not an IPv4 address: '$ip'")
+      val negative = start < end && ip.charAt(start) == '-'
+      var i = if (negative || (start < end && ip.charAt(start) == '+')) start + 1 else start
+      if (i == end) throw malformed
+      var v = 0L
+      while (i < end) {
+        val d = Character.digit(ip.charAt(i), 10)
+        if (d < 0) throw malformed
+        v = v * 10 + d
+        if (v > Int.MaxValue + 1L) throw malformed
+        i += 1
+      }
+      if (!negative && v > Int.MaxValue) throw malformed
+      if (negative) v = -v
+      require(v >= 0 && v <= 255, s"IPv4 octet out of range in '$ip'")
+      v.toInt
+    }
+
+    def rr(rr: Rr): Unit = {
+      name(rr.name)
+      u16(rr.rtype)
+      u16(rr.rclass)
+      u32(rr.ttl.toInt)
+      rr.rdata match {
+        case AData(ip) => ipv4(ip)
+        case EmptyData => u16(0)
+        case SoaData(serial) =>
+          // MNAME/RNAME are irrelevant to transfer/update semantics;
+          // root-encode them (1 byte each) and zero the timers.
+          u16(1 + 1 + 20)
+          u8(0) // mname = "."
+          u8(0) // rname = "."
+          u32(serial.toInt)
+          u32(0); u32(0); u32(0); u32(0)
+      }
+    }
   }
 
-  private def writeRr(out: DataOutputStream, rr: Rr): Unit = {
-    writeName(out, rr.name)
-    out.writeShort(rr.rtype)
-    out.writeShort(rr.rclass)
-    out.writeInt(rr.ttl.toInt)
-    rr.rdata match {
-      case AData(ip) =>
-        val parts = ip.split('.')
-        require(parts.length == 4, s"not an IPv4 address: '$ip'")
-        out.writeShort(4)
-        parts.foreach { p =>
-          // reject rather than silently truncate to a byte — a record
-          // like '300.1.1.1' must fail the write, not land as 44.1.1.1
-          val v = try p.toInt catch {
-            case _: NumberFormatException =>
-              throw new IllegalArgumentException(s"not an IPv4 address: '$ip'")
-          }
-          require(v >= 0 && v <= 255, s"IPv4 octet out of range in '$ip'")
-          out.writeByte(v)
-        }
-      case EmptyData =>
-        out.writeShort(0)
-      case SoaData(serial) =>
-        // MNAME/RNAME are irrelevant to transfer/update semantics;
-        // root-encode them (1 byte each) and zero the timers.
-        out.writeShort(1 + 1 + 20)
-        out.writeByte(0) // mname = "."
-        out.writeByte(0) // rname = "."
-        out.writeInt(serial.toInt)
-        out.writeInt(0); out.writeInt(0); out.writeInt(0); out.writeInt(0)
-    }
+  /** Upper bound on a message's encoded size: a name takes at most one
+    * byte per character plus two, an RR's rdata at most the SOA's 22. */
+  private def encodedBound(m: Message): Int = {
+    var n = 12
+    m.questions.foreach(q => n += q.name.length + 2 + 4)
+    def rrs(s: Seq[Rr]): Unit = s.foreach(r => n += r.name.length + 2 + 10 + 22)
+    rrs(m.answers); rrs(m.authority); rrs(m.additional)
+    n
   }
 
-  def encode(m: Message): Array[Byte] = {
-    val buf = new ByteArrayOutputStream()
-    val out = new DataOutputStream(buf)
-    out.writeShort(m.id)
-    out.writeShort(m.flags)
-    out.writeShort(m.questions.size)
-    out.writeShort(m.answers.size)
-    out.writeShort(m.authority.size)
-    out.writeShort(m.additional.size)
-    m.questions.foreach { q =>
-      writeName(out, q.name); out.writeShort(q.qtype); out.writeShort(q.qclass)
-    }
-    (m.answers ++ m.authority ++ m.additional).foreach(writeRr(out, _))
-    out.flush()
-    buf.toByteArray
+  private def write(m: Message, offset: Int): Writer = {
+    val w = new Writer(offset + encodedBound(m), offset)
+    w.u16(m.id)
+    w.u16(m.flags)
+    w.u16(m.questions.size)
+    w.u16(m.answers.size)
+    w.u16(m.authority.size)
+    w.u16(m.additional.size)
+    m.questions.foreach { q => w.name(q.name); w.u16(q.qtype); w.u16(q.qclass) }
+    m.answers.foreach(w.rr)
+    m.authority.foreach(w.rr)
+    m.additional.foreach(w.rr)
+    w
   }
+
+  def encode(m: Message): Array[Byte] = write(m, 0).toArray
 
   // ------------------------------------------------------------ decode
 
@@ -192,12 +266,24 @@ object DnsWire {
 
   // ------------------------------------------------- TCP framing (§4.2.2)
 
-  def writeFramed(out: DataOutputStream, m: Message): Unit = {
-    val bytes = encode(m)
-    out.writeShort(bytes.length)
-    out.write(bytes)
-    out.flush()
+  /** The largest message a TCP frame can carry: its length prefix is
+    * 16 bits. */
+  val MaxFramedBytes = 65535
+
+  /** `m` encoded behind its 2-byte length prefix, ready for one `write`.
+    * A message over [[MaxFramedBytes]] is rejected here, before any
+    * byte of it can reach a stream. */
+  def frame(m: Message): Array[Byte] = {
+    val w = write(m, 2)
+    if (w.size > MaxFramedBytes) throw new IllegalArgumentException(
+      s"DNS message of ${w.size} bytes exceeds the $MaxFramedBytes-byte TCP frame limit")
+    w.setU16(0, w.size)
+    w.toArray
   }
+
+  /** Writes `m` as one frame in a single `write`. It does not flush:
+    * the caller flushes once per exchange, after its last message. */
+  def writeFramed(out: OutputStream, m: Message): Unit = out.write(frame(m))
 
   def readFramed(in: DataInputStream): Message = {
     val len = in.readUnsignedShort()
@@ -239,8 +325,9 @@ final class WireDnsServer(val backing: InMemoryDnsServer = new InMemoryDnsServer
 
   private def serve(sock: Socket): Unit = {
     try {
-      val in = new DataInputStream(sock.getInputStream)
-      val out = new DataOutputStream(sock.getOutputStream)
+      sock.setTcpNoDelay(true)
+      val in = WireSocket.input(sock)
+      val out = WireSocket.output(sock)
       while (true) {
         val req = DnsWire.readFramed(in)
         val resp = try handle(req) catch {
@@ -250,16 +337,19 @@ final class WireDnsServer(val backing: InMemoryDnsServer = new InMemoryDnsServer
             Seq(Message(req.id, responseFlags(req.opcode, RcodeNotAuth), req.questions,
               Nil, Nil, Nil))
         }
-        try resp.foreach(DnsWire.writeFramed(out, _))
-        catch {
-          // un-encodable response data (e.g. a malformed stored record)
-          // must surface to the client as SERVFAIL, not kill the
-          // connection — a died connection reads as EOF, which
-          // ignore-failures would silently turn into an empty zone
+        // Every message is encoded before any is written, so a response
+        // is all or nothing: un-encodable data (e.g. a malformed stored
+        // record) answers one SERVFAIL, never a partial transfer, and
+        // does not kill the connection — a died connection reads as
+        // EOF, which ignore-failures would silently turn into an empty
+        // zone.
+        val frames = try resp.map(DnsWire.frame) catch {
           case _: IllegalArgumentException =>
-            DnsWire.writeFramed(out, Message(req.id,
-              responseFlags(req.opcode, RcodeServFail), req.questions, Nil, Nil, Nil))
+            Seq(DnsWire.frame(Message(req.id,
+              responseFlags(req.opcode, RcodeServFail), req.questions, Nil, Nil, Nil)))
         }
+        frames.foreach(out.write)
+        out.flush()
       }
     } catch {
       case _: EOFException | _: IOException => () // client done
@@ -361,19 +451,29 @@ object WireDnsServer {
 }
 
 private object WireSocket {
+  /** Both ends buffer their streams, so a framed read or write costs no
+    * syscall of its own; writers flush once per exchange. */
+  private val BufferBytes = 64 * 1024
+
+  def input(sock: Socket): DataInputStream =
+    new DataInputStream(new BufferedInputStream(sock.getInputStream, BufferBytes))
+  def output(sock: Socket): BufferedOutputStream =
+    new BufferedOutputStream(sock.getOutputStream, BufferBytes)
+
   /** Open, run, close. timeout=0 always fails (reference failure
     * matrix, same contract as the in-memory client); otherwise it is a
-    * real connect + SO read timeout. */
+    * real connect + SO read timeout. TCP_NODELAY is on: each exchange
+    * is one flushed request, so Nagle's algorithm only adds delay. */
   def withSocket[A](host: String, port: Int, timeoutSec: Int, what: String)
-                   (f: (DataInputStream, DataOutputStream) => A): A = {
+                   (f: (DataInputStream, OutputStream) => A): A = {
     if (timeoutSec == 0)
       throw new java.net.SocketTimeoutException(s"$what timed out (timeout=0)")
     val sock = new Socket()
     try {
+      sock.setTcpNoDelay(true)
       sock.connect(new InetSocketAddress(host, port), timeoutSec * 1000)
       sock.setSoTimeout(timeoutSec * 1000)
-      f(new DataInputStream(sock.getInputStream),
-        new DataOutputStream(sock.getOutputStream))
+      f(input(sock), output(sock))
     } finally sock.close()
   }
 }
@@ -397,6 +497,7 @@ final class WireTransferClient(host: String, port: Int) extends ZoneTransferClie
           Message(1, queryFlags(OpcodeQuery), Seq(Question(z, TypeIxfr, ClassIn)),
             Nil, Seq(Rr(z, TypeSoa, ClassIn, 0, SoaData(serial))), Nil)
       writeFramed(out, query)
+      out.flush()
 
       val rrs = scala.collection.mutable.ArrayBuffer.empty[Rr]
       def readInto(): Unit = {
@@ -505,38 +606,39 @@ final class WireTransferClient(host: String, port: Int) extends ZoneTransferClie
 
 /** RFC 2136 dynamic updates over TCP: one message per (zone, batch),
   * adds as class-IN RRs with the record TTL, deletes as class-NONE;
-  * any rcode != 0 throws (job fails, like the reference). */
+  * any rcode != 0 throws (job fails, like the reference). A batch too
+  * large for one TCP frame fails before a connection is opened. */
 final class WireUpdateEmitter(host: String, port: Int, timeoutSec: Int) extends UpdateEmitter {
   import DnsWire._
 
   override def update(zone: String, changes: Seq[DnsUpdateRecord]): Unit =
-    WireSocket.withSocket(host, port, timeoutSec, s"update of '$zone'") { (in, out) =>
-      val z = Fqdn.normalize(zone)
-      val rrs = changes.map { u =>
-        if (u.action == DnsAction.IxfrDelete)
-          Rr(u.fqdn, TypeA, ClassNone, 0, AData(u.ip))
-        else
-          Rr(u.fqdn, TypeA, ClassIn, u.ttl.toLong, AData(u.ip))
-      }
-      writeFramed(out, Message(1, queryFlags(OpcodeUpdate),
-        Seq(Question(z, TypeSoa, ClassIn)), Nil, rrs, Nil))
-      val resp = readFramed(in)
-      if (resp.rcode != RcodeNoError)
-        throw new IOException(s"update of '$zone' rejected: rcode ${resp.rcode}")
-    }
+    send("update", zone, changes.map { u =>
+      if (u.action == DnsAction.IxfrDelete)
+        Rr(u.fqdn, TypeA, ClassNone, 0, AData(u.ip))
+      else
+        Rr(u.fqdn, TypeA, ClassIn, u.ttl.toLong, AData(u.ip))
+    })
 
   /** One atomic overwrite message: §2.5.2 delete-RRset RRs (CLASS ANY,
     * TTL 0, empty RDATA) for every wiped name, then the adds. */
   override def overwrite(zone: String, wipeNames: Seq[String],
                          adds: Seq[DnsUpdateRecord]): Unit =
-    WireSocket.withSocket(host, port, timeoutSec, s"overwrite of '$zone'") { (in, out) =>
-      val z = Fqdn.normalize(zone)
-      val rrs = wipeNames.map(n => Rr(n, TypeA, ClassAny, 0, EmptyData)) ++
-        adds.map(u => Rr(u.fqdn, TypeA, ClassIn, u.ttl.toLong, AData(u.ip)))
-      writeFramed(out, Message(1, queryFlags(OpcodeUpdate),
-        Seq(Question(z, TypeSoa, ClassIn)), Nil, rrs, Nil))
+    send("overwrite", zone, wipeNames.map(n => Rr(n, TypeA, ClassAny, 0, EmptyData)) ++
+      adds.map(u => Rr(u.fqdn, TypeA, ClassIn, u.ttl.toLong, AData(u.ip))))
+
+  private def send(what: String, zone: String, rrs: Seq[Rr]): Unit = {
+    val bytes = try frame(Message(1, queryFlags(OpcodeUpdate),
+      Seq(Question(Fqdn.normalize(zone), TypeSoa, ClassIn)), Nil, rrs, Nil))
+    catch {
+      case e: IllegalArgumentException => throw new IllegalArgumentException(
+        s"$what of '$zone' with ${rrs.size} changes: ${e.getMessage}", e)
+    }
+    WireSocket.withSocket(host, port, timeoutSec, s"$what of '$zone'") { (in, out) =>
+      out.write(bytes)
+      out.flush()
       val resp = readFramed(in)
       if (resp.rcode != RcodeNoError)
-        throw new IOException(s"overwrite of '$zone' rejected: rcode ${resp.rcode}")
+        throw new IOException(s"$what of '$zone' rejected: rcode ${resp.rcode}")
     }
+  }
 }

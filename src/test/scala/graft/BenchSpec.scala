@@ -76,4 +76,25 @@ class BenchSpec extends AnyFunSuite {
     assert(full.contains("q_10")) // the full line keeps every message
     assert(!compact.contains('\n'))
   }
+
+  test("official file routes on the committed anchor's core count, not the host's") {
+    val c32 = """{"metric":"total","value":73.1,"unit":"sec","cpus":"32","queries":{}}"""
+    assert(Bench.officialName("32", Some(c32)) == "BENCH_OFFICIAL.json")
+    assert(Bench.officialName("8", Some(c32)) == "BENCH_OFFICIAL_c8.json")
+    assert(Bench.officialName("4", Some(c32)) == "BENCH_OFFICIAL_c4.json")
+    // no anchor yet: the run becomes it; an unstamped one is never replaced
+    assert(Bench.officialName("4", None) == "BENCH_OFFICIAL.json")
+    assert(Bench.officialName("4", Some("""{"metric":"total","value":1.0}""")) ==
+      "BENCH_OFFICIAL_c4.json")
+  }
+
+  test("the committed anchor is replaced only by a run at its own core count") {
+    val anchor = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("BENCH_OFFICIAL.json")), "UTF-8")
+    val cpus = """"cpus":"([^"]*)"""".r.findFirstMatchIn(anchor).map(_.group(1))
+    assert(cpus.nonEmpty, "BENCH_OFFICIAL.json must record its core count")
+    assert(Bench.officialName(cpus.get, Some(anchor)) == "BENCH_OFFICIAL.json")
+    val other = (cpus.get.toInt + 1).toString
+    assert(Bench.officialName(other, Some(anchor)) == s"BENCH_OFFICIAL_c$other.json")
+  }
 }

@@ -221,4 +221,39 @@ class WireGoldenSpec extends AnyFunSuite {
       new java.io.ByteArrayInputStream(framed)))
     assert(back == m)
   }
+
+  test("framing: writeFramed issues exactly one write and leaves the flush to the caller") {
+    val m = Message(1, queryFlags(OpcodeQuery),
+      Seq(Question("example.com.", TypeAxfr, ClassIn)), Nil, Nil, Nil)
+    val sink = new java.io.ByteArrayOutputStream()
+    var writes = 0
+    var flushes = 0
+    val counting = new java.io.OutputStream {
+      override def write(b: Int): Unit = { writes += 1; sink.write(b) }
+      override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+        writes += 1; sink.write(b, off, len)
+      }
+      override def flush(): Unit = flushes += 1
+    }
+    writeFramed(counting, m)
+    assert(writes == 1 && flushes == 0, s"writes=$writes flushes=$flushes")
+    assert(toHex(sink.toByteArray) == toHex(hex("00 1d") ++ encode(m)))
+  }
+
+  test("framing: a 65,535-byte message is framed, one byte more is rejected unwritten") {
+    // 12-byte header + 5,955 root-named RRs of 11 bytes + one of 18
+    // ("abcdef." = 8-byte name) = 65,535; "abcdefg." adds the one byte
+    def msg(last: String) = Message(1, queryFlags(OpcodeUpdate), Nil, Nil,
+      Seq.fill(5955)(Rr(".", TypeA, ClassAny, 0, EmptyData)) :+
+        Rr(last, TypeA, ClassAny, 0, EmptyData), Nil)
+    val max = msg("abcdef.")
+    assert(encode(max).length == MaxFramedBytes)
+    val framed = frame(max)
+    assert(framed.length == MaxFramedBytes + 2 && framed(0) == -1 && framed(1) == -1)
+
+    val sink = new java.io.ByteArrayOutputStream()
+    val e = intercept[IllegalArgumentException](writeFramed(sink, msg("abcdefg.")))
+    assert(e.getMessage == "DNS message of 65536 bytes exceeds the 65535-byte TCP frame limit")
+    assert(sink.size == 0)
+  }
 }

@@ -254,6 +254,98 @@ class WireSpec extends AnyFunSuite {
     }
   }
 
+  /** A raw connection to `srv` with a 5 s read timeout: a response the
+    * server leaves in its buffer fails the read instead of hanging it. */
+  private def withRawSocket(srv: WireDnsServer)
+                           (f: (java.io.DataInputStream, java.io.OutputStream) => Unit): Unit = {
+    val sock = new java.net.Socket(srv.host, srv.port)
+    try {
+      sock.setSoTimeout(5000)
+      f(new java.io.DataInputStream(sock.getInputStream), sock.getOutputStream)
+    } finally sock.close()
+  }
+
+  private def axfrQuery(zone: String) =
+    Message(1, queryFlags(OpcodeQuery), Seq(Question(zone, TypeAxfr, ClassIn)), Nil, Nil, Nil)
+
+  private def updateMsg(zone: String, rrs: Seq[Rr]) =
+    Message(1, queryFlags(OpcodeUpdate), Seq(Question(zone, TypeSoa, ClassIn)), Nil, rrs, Nil)
+
+  test("un-encodable record mid-zone: one SERVFAIL, no partial transfer, connection lives") {
+    withServer { srv =>
+      // the 13th of 20 records sits in the third 5-RR message
+      srv.backing.addZone("bad.acme.", (1 to 20).map { i =>
+        ARecord(f"h$i%02d.bad.acme.", if (i == 13) "300.1.1.1" else s"10.5.0.$i")
+      })
+      srv.backing.addZone("good.acme.", Seq(ARecord("a.good.acme.", "10.5.1.1")))
+      withRawSocket(srv) { (in, out) =>
+        writeFramed(out, axfrQuery("bad.acme."))
+        val first = readFramed(in)
+        assert(first.rcode == RcodeServFail, first)
+        assert(first.answers.isEmpty)
+        writeFramed(out, axfrQuery("good.acme."))
+        val good = readFramed(in)
+        assert(good.rcode == RcodeNoError)
+        assert(good.answers.map(_.rdata) == Seq(SoaData(1), AData("10.5.1.1"), SoaData(1)))
+      }
+    }
+  }
+
+  test("one connection, AXFR then up-to-date IXFR then UPDATE: every response arrives") {
+    withServer { srv =>
+      val z = "f.acme."
+      srv.backing.addZone(z, (1 to 7).map(i => ARecord(s"h$i.$z", s"10.6.0.$i")))
+      withRawSocket(srv) { (in, out) =>
+        writeFramed(out, axfrQuery(z))
+        val axfr = scala.collection.mutable.ArrayBuffer.empty[Rr]
+        while (!(axfr.size > 1 && axfr.last.rtype == TypeSoa)) axfr ++= readFramed(in).answers
+        assert(axfr.size == 9) // SOA, 7 records, SOA over two messages
+
+        writeFramed(out, Message(2, queryFlags(OpcodeQuery), Seq(Question(z, TypeIxfr, ClassIn)),
+          Nil, Seq(Rr(z, TypeSoa, ClassIn, 0, SoaData(1))), Nil))
+        val ixfr = readFramed(in)
+        assert(ixfr.id == 2 && ixfr.answers == Seq(Rr(z, TypeSoa, ClassIn, 0, SoaData(1))))
+
+        writeFramed(out, updateMsg(z, Seq(Rr(s"new.$z", TypeA, ClassIn, 60, AData("10.6.1.1")))))
+        assert(readFramed(in).rcode == RcodeNoError)
+      }
+      assert(srv.backing.serialOf(z) == 2)
+      assert(srv.backing.lookup(s"new.$z") == Seq("10.6.1.1"))
+    }
+  }
+
+  test("an update over the 65,535-byte TCP frame fails unsent and leaves the zone alone") {
+    withServer { srv =>
+      val z = "big.acme."
+      srv.backing.addZone(z, Nil)
+      def adds(n: Int, tag: String) = (1 to n).map(i =>
+        DnsUpdateRecord(DnsAction.IxfrAdd, s"$tag$i.$z", "10.6.0.1", i.toLong, 60))
+      def rrs(n: Int, tag: String) = adds(n, tag).map(u =>
+        Rr(u.fqdn, TypeA, ClassIn, u.ttl.toLong, AData(u.ip)))
+      val size = encode(updateMsg(z, rrs(2500, "n"))).length
+      assert(size > MaxFramedBytes)
+
+      val emitter = new WireUpdateEmitter(srv.host, srv.port, timeoutSec = 5)
+      val e = intercept[IllegalArgumentException](emitter.update(z, adds(2500, "n")))
+      assert(e.getMessage == s"update of '$z' with 2500 changes: " +
+        s"DNS message of $size bytes exceeds the 65535-byte TCP frame limit")
+      assert(srv.backing.serialOf(z) == 1)
+
+      // on one connection: the rejected frame leaves no byte on the
+      // stream, so the server thread reading it answers the next update
+      withRawSocket(srv) { (in, out) =>
+        intercept[IllegalArgumentException](writeFramed(out, updateMsg(z, rrs(2500, "n"))))
+        writeFramed(out, updateMsg(z, rrs(3, "m")))
+        assert(readFramed(in).rcode == RcodeNoError)
+      }
+      emitter.update(z, adds(10, "k"))
+      assert(srv.backing.serialOf(z) == 3)
+      assert(srv.backing.lookup(s"n1.$z").isEmpty)
+      assert(srv.backing.lookup(s"m3.$z") == Seq("10.6.0.1"))
+      assert(srv.backing.lookup(s"k10.$z") == Seq("10.6.0.1"))
+    }
+  }
+
   test("connection dropped mid-transfer surfaces an IO error (task retry path)") {
     // server sends the opening SOA + one record, then closes without
     // the terminating SOA — the client must fail, never return a
