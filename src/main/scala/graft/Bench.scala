@@ -87,81 +87,15 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_CONF="k=v;k=v" overlays builder confs, same contract
-    // as Verify's — how config experiments (e.g. join-strategy A/Bs)
-    // are measured on the real bench without code edits. Applied last;
-    // unset (the driver's case) leaves the builder exactly as below.
-    val extraConf = sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(';')).map(_.trim).filter(_.nonEmpty)
-      .map { kv =>
-        // a '='-less token would otherwise die as an opaque MatchError
-        // at startup (r19 advice) — name the bad token instead
-        require(kv.contains("="),
-          s"bad SPARK_GRAFT_CONF entry (expected key=value): '$kv'")
-        val Array(k, v) = kv.split("=", 2)
-        (k, v)
-      }
-    val builder = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // recognize the dns scan's KeyGroupedPartitioning (storage-partitioned joins)
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      // The generated-class cache (CodeGenerator.cache) defaults to 100
-      // entries; this suite plans ~216 keys × several codegen units per
-      // pass (~1k+ distinct generated sources), so at the default every
-      // pass evicts everything and re-Janino-compiles the whole suite —
-      // the ~45-75 s/pass of HotSpot JIT churn the r18 instrumentation
-      // measured (BASELINE.md). Sized to hold the whole suite, repeat
-      // passes cache-hit instead (static conf — must be set at builder
-      // time). Measured effect recorded in BASELINE.md r19.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-    val spark = extraConf.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    if (extraConf.nonEmpty)
-      System.err.println(s"[bench] extra conf: ${extraConf.map(kv => kv._1 + "=" + kv._2).mkString(";")}")
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cpus()
+    val spark = Session.create()
 
-    // clearCache() drops registered table caches but NOT the RDD blocks
-    // that eager localCheckpoint() fences leave in the BlockManager
-    // (r19 advice): ~15 checkpointed frames per suite pass × 4 passes
-    // accumulate MEMORY_AND_DISK blocks until ContextCleaner GC and
-    // smear later-pass timings with memory pressure. Release them
-    // deterministically after every query, outside the timed region.
-    def releaseBlocks(): Unit =
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-
-    // Warmup pass: compile/JIT every plan shape once, untimed. A
-    // warmup failure is never fatal here (the timed pass records it as
-    // -1 + errors), but it IS surfaced immediately for humans tailing
-    // the run.
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).count() catch { case e: Throwable =>
-        System.err.println(s"[bench] warmup of $name failed: ${e.getMessage}") }
-      spark.catalog.clearCache() // intra-query caches must not leak across queries
-      releaseBlocks()
-    }
-
-    var errors = List.empty[String]
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
-    val best = scala.collection.mutable.Map.empty[String, Double]
-    val failed = scala.collection.mutable.Set.empty[String]
-    // Host-interference gauge: a fixed data-independent workload timed
-    // once per pass. Same plan, same cardinality, every round — so when
-    // suite totals drift between same-code runs, the calib series says
-    // whether the HOST moved (calib drifts with it) or a plan regressed
-    // (calib flat). Quantifies what previously took a same-code A/B
-    // (BASELINE.md r9) to establish.
-    def calibrate(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(200000000L).selectExpr("sum(id * 3 + 1) AS s").count()
-      (System.nanoTime() - t0) / 1e9
-    }
-    calibrate() // warm the calib plan like every other query
+    // Host-interference gauge (Session.calibrate), timed once per pass:
+    // when suite totals drift between same-code runs, the calib series
+    // says whether the host or a plan moved — what previously took a
+    // same-code A/B (BASELINE.md r9) to establish.
+    Session.calibrate(spark) // warm the calib plan like every other query
     val calibs = scala.collection.mutable.ArrayBuffer.empty[Double]
     // Anchor-drift instrumentation (r17 verdict item 6, opt-in via
     // SPARK_GRAFT_BENCH_JVMSTATS): per-pass per-key timings (not just
@@ -193,39 +127,16 @@ object Bench {
       require(n >= 1, s"SPARK_GRAFT_BENCH_PASSES must be >= 1, got $n")
       n
     }.getOrElse(3)
-    (1 to passes).foreach { _ =>
-      calibs += calibrate()
-      val passKeys = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-      val (jit0, gc0) = (jitMs, gcMs)
-      names.foreach { case (name, fn) =>
-        if (!failed(name)) {
-          try {
-            val t0 = System.nanoTime()
-            fn(spark, sfDir).count()
-            val elapsed = (System.nanoTime() - t0) / 1e9
-            spark.catalog.clearCache()
-            releaseBlocks()
-            if (elapsed < best.getOrElse(name, Double.MaxValue)) best(name) = elapsed
-            if (jvmStats) passKeys += name -> elapsed
-          } catch { case e: Throwable =>
-            // one failure marks the query failed for good: -1, never a
-            // partial min from the passes that did succeed
-            errors ::= s"$name: ${e.getMessage}"
-            failed += name
-            best.remove(name)
-            spark.catalog.clearCache()
-            releaseBlocks()
-          }
-        }
-      }
-      if (jvmStats) {
+    var (jit0, gc0) = (0L, 0L)
+    val timings = timeKeys(spark, sfDir, names, passes,
+      beforePass = () => { calibs += Session.calibrate(spark); jit0 = jitMs; gc0 = gcMs },
+      afterPass = passKeys => if (jvmStats) {
         val ks = passKeys.map { case (k, v) =>
           "\"" + k + "\":" + String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
         }.mkString("{", ",", "}")
         passDumps += s"""{"calib":${String.format(java.util.Locale.ROOT, "%.3f",
           Double.box(calibs.last))},"jit_ms":${jitMs - jit0},"gc_ms":${gcMs - gc0},"keys":$ks}"""
-      }
-    }
+      })
     if (jvmStats) {
       try java.nio.file.Files.writeString(
         java.nio.file.Paths.get("target/bench_jvmstats.json"),
@@ -233,7 +144,6 @@ object Bench {
       catch { case e: Throwable =>
         System.err.println(s"[bench] jvmstats write failed: ${e.getMessage}") }
     }
-    val results = names.map { case (name, _) => name -> best.getOrElse(name, -1.0) }
     // The per-query map has grown past what the driver's output tail
     // buffer retains (~3.5 KB at 84 queries): four rounds running the
     // full line was captured starting mid-map and failed to parse. So
@@ -241,8 +151,8 @@ object Bench {
     // no per-query map — it fits any tail buffer (guarded by BenchSpec
     // at 250+ keys). The full line still goes out first on both streams
     // and to bench.json for humans and for the per-query history.
-    val (line, compact) = resultLines(results, SparkEntry.stagedReadbackKeys,
-      calibs.toSeq, errors.reverse, sfDir, cpus)
+    val (line, compact) = resultLines(timings.seconds, SparkEntry.stagedReadbackKeys,
+      calibs.toSeq, timings.errors, sfDir, cpus)
     // The driver extracts this JSON from process output; sbt wraps
     // stdout lines in [info]/[success] noise that has drowned it three
     // rounds running. Emit it on all three channels: stdout, a known
@@ -296,4 +206,56 @@ object Bench {
     System.err.println(compact)
     System.err.flush()
   }
+
+  /** Bench's timing method over `keys`: each runs once untimed (a
+    * failure there only prints), then `passes` round-robin passes time
+    * `count()` per key. Table caches and fence blocks are released
+    * after every run, outside the timed region, so no query's leftovers
+    * tax the next. One failure marks a key failed for good: its seconds
+    * are -1, never a partial min from the passes that did succeed, and
+    * "key: message" joins the errors. `beforePass` and `afterPass` (the
+    * pass's per-key seconds) bracket each timed pass. Returns seconds
+    * in `keys` order, row counts of the keys that never failed, and the
+    * errors in the order they happened. */
+  private[graft] def timeKeys(spark: SparkSession, sfDir: String,
+      keys: Seq[(String, SparkEntry.Query)], passes: Int,
+      beforePass: () => Unit = () => (),
+      afterPass: Seq[(String, Double)] => Unit = _ => ()): Timings = {
+    def release(): Unit = { spark.catalog.clearCache(); Session.releaseBlocks(spark) }
+    keys.foreach { case (name, fn) =>
+      try fn(spark, sfDir).count() catch { case e: Throwable =>
+        System.err.println(s"[bench] warmup of $name failed: ${e.getMessage}") }
+      release()
+    }
+    val best = scala.collection.mutable.Map.empty[String, Double]
+    val rows = scala.collection.mutable.Map.empty[String, Long]
+    val failed = scala.collection.mutable.Set.empty[String]
+    var errors = List.empty[String]
+    (1 to passes).foreach { _ =>
+      beforePass()
+      val times = keys.filterNot(k => failed(k._1)).flatMap { case (name, fn) =>
+        try {
+          val t0 = System.nanoTime()
+          val n = fn(spark, sfDir).count()
+          val elapsed = (System.nanoTime() - t0) / 1e9
+          release()
+          rows(name) = n
+          if (elapsed < best.getOrElse(name, Double.MaxValue)) best(name) = elapsed
+          Some(name -> elapsed)
+        } catch { case e: Throwable =>
+          errors ::= s"$name: ${e.getMessage}"
+          failed += name
+          best.remove(name)
+          rows.remove(name)
+          release()
+          None
+        }
+      }
+      afterPass(times)
+    }
+    Timings(keys.map { case (k, _) => k -> best.getOrElse(k, -1.0) }, rows.toMap, errors.reverse)
+  }
+
+  private[graft] final case class Timings(
+      seconds: Seq[(String, Double)], rows: Map[String, Long], errors: List[String])
 }

@@ -14,13 +14,20 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     graft.queries.Relational.q3ShippingPriority(spark, "/root/testdata/sf0.001")
 
+  /** A gated query: (session, sf dir) => result frame. */
+  type Query = (SparkSession, String) => DataFrame
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  def queries: Map[String, Query] =
     graft.queries.Relational.queries ++ graft.queries.Connector.queries ++
       graft.queries.TextOps.queries ++ graft.queries.EmbeddingOps.queries ++
       graft.queries.PipelineOps.queries ++ graft.functions.Multimodal.queries ++
       graft.queries.Storage.queries ++ graft.streaming.StreamingOps.queries ++
       graft.queries.PqOps.queries ++ graft.queries.CurationOps.queries
+
+  /** The query named `key`; a mistyped key fails with its name. */
+  def query(key: String): Query =
+    queries.getOrElse(key, throw new IllegalArgumentException(s"unknown query key '$key'"))
 
   /** Keys whose timed bench pass reads a staged replay artifact
     * instead of re-running a streaming-query lifecycle — tagged in the

@@ -7,65 +7,48 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet // optional query-name filter
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_CONF="k=v;k=v" overlays builder confs — how the
-    // verification matrix runs mode cells (spark.sql.ansi.enabled=false,
-    // a non-UTC session zone, a different state-store provider) against
-    // the same gate without code edits. Applied last, so it can
-    // override the defaults below.
-    val extraConf = sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(';')).map(_.trim).filter(_.nonEmpty)
-      .map { kv =>
-        require(kv.contains("="),
-          s"bad SPARK_GRAFT_CONF entry (expected key=value): '$kv'")
-        val Array(k, v) = kv.split("=", 2)
-        (k, v)
-      }
-    val builder = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // recognize the dns scan's KeyGroupedPartitioning (storage-partitioned joins)
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      // suite-sized generated-class cache (see Bench.scala — the
-      // 100-entry default thrashes at 216 keys and re-compiles every
-      // plan every pass)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-    val spark = extraConf.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    if (extraConf.nonEmpty)
-      System.err.println(s"[verify] extra conf: ${extraConf.map(kv => kv._1 + "=" + kv._2).mkString(";")}")
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    // Host-interference gauge, same fixed workload as Bench.calibrate:
+    val spark = Session.create()
+    // Host-interference gauge (Session.calibrate), the one Bench times:
     // when a verify run is anomalously slow (or a query times out on
     // the driver), the bracketing calib pair says whether the HOST was
     // loaded or the PLAN regressed. Warm once, then time.
-    def calibrate(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(200000000L).selectExpr("sum(id * 3 + 1) AS s").count()
-      (System.nanoTime() - t0) / 1e9
-    }
-    calibrate()
-    val calibIn = calibrate()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (only.isEmpty || only(name)) {
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
-      }
-      spark.catalog.clearCache() // intra-query caches must not leak across queries
-    }
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${Json.quote(k)}: ${Json.quote(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val calibOut = calibrate()
+    Session.calibrate(spark)
+    val calibIn = Session.calibrate(spark)
+    val failed = dump(spark, sfDir, outDir, SparkEntry.queries, SparkEntry.oracleSql, only)
+    val calibOut = Session.calibrate(spark)
     System.err.println(f"[verify] calib=[$calibIn%.3f,$calibOut%.3f]")
     spark.stop()
+    // a failed key fails the run, after every other key is dumped
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} failed: ${failed.mkString(" ")}")
+      sys.exit(1)
+    }
+  }
+
+  /** Writes each of `queries` (only those in `only`, when it is
+    * non-empty) to `<outDir>/<key>` as one parquet file, then `oracles`
+    * to `<outDir>/oracle_sql.json`. A failing key is reported on stderr
+    * and the rest still run. Returns the failed keys in run order. */
+  private[graft] def dump(spark: SparkSession, sfDir: String, outDir: String,
+      queries: Map[String, SparkEntry.Query], oracles: Map[String, String],
+      only: Set[String]): List[String] = {
+    new java.io.File(outDir).mkdirs()
+    val failed = queries.toList.flatMap { case (name, fn) =>
+      val failure =
+        if (only.nonEmpty && !only(name)) None
+        else try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name)
+        }
+      spark.catalog.clearCache() // intra-query caches must not leak across queries
+      failure
+    }
+    val json = oracles
+      .map { case (k, v) => s"${Json.quote(k)}: ${Json.quote(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    failed
   }
 }

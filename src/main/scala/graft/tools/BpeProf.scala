@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Chain-vs-native BPE probe: for each rule count, build the replace
@@ -26,13 +26,7 @@ object BpeProf {
 
   def main(args: Array[String]): Unit = {
     val counts = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(40, 676, 1500)
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.create()
     import spark.implicits._
     val words = spark.range(200000)
       .select(concat_ws("", (0 until 8).map(i =>

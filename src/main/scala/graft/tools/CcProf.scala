@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Isolates the connected-components loop's cost from its callers'
@@ -8,28 +7,20 @@ import org.apache.spark.sql.functions._
   * [[graft.queries.TextOps.connectedComponents]] on bare synthetic
   * path graphs of a chosen size/diameter (the ComponentsSpec
   * fixture), printing rounds and min-of-N wall per configuration.
-  * The q_graph_components gap between this number and the Profile
+  * The q_graph_components gap between this number and the TimeKeys
   * number is the prelude (staged-rank read + chain join + final
   * rollup) — the loop budget and the prelude budget are tuned
   * separately.
   *
   * Usage: runMain graft.tools.CcProf [nVertices] [blockSize]
+  * (`SPARK_GRAFT_CONF="spark.sql.adaptive.enabled=false"` for the AQE-off
+  * comparison)
   */
 object CcProf {
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toInt else 52000
     val block = if (args.length > 1) args(1).toInt else 40
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.create()
 
     // -shuffle: remap vertex ids through a bijection that destroys
     // the order-locality correlation (path neighbors get unrelated

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Measure the LSH/IVF sizing dials at an arbitrary corpus scale: runs
   * [[graft.queries.EmbeddingOps.bandOccupancyAt]] /
   * [[graft.queries.EmbeddingOps.ivfOccupancyAt]] for each requested
@@ -28,16 +26,7 @@ object Dial {
     val mode = args(1)
     // parsed lazily: recall settings are bits[:cap], not plain ints
     lazy val vals = args.drop(2).map(_.toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.create()
 
     if (mode == "recall") {
       // settings are bits[:cap]; cap defaults to the gate-pinned BucketCap

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dump `.explain("formatted")` for named SparkEntry queries to files —
@@ -16,25 +15,13 @@ object Plans {
     val names =
       if (args.drop(3).sameElements(Array("all"))) graft.SparkEntry.queries.keys.toSeq.sorted
       else args.drop(3).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.create()
     java.nio.file.Files.createDirectories(outDir)
     names.foreach { name =>
       try {
         // inside the try (r19 advice): one mistyped name must print
         // PLANS FAILED and continue, not abort the whole dump run
-        val fn = graft.SparkEntry.queries.getOrElse(name,
-          sys.error(s"unknown query key '$name'"))
+        val fn = graft.SparkEntry.query(name)
         val df = fn(spark, sfDir)
         // Execute first so AQE-finalized subplans and localCheckpoint
         // fences reflect what the bench actually times, then dump the

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Stage-level wall-time bisect for the PQ family: times each building
   * block of the IVF×PQ composition in isolation (count() actions on
   * the intermediate frames, min-of-3 warm) so the expensive stage at a
@@ -12,16 +10,7 @@ import org.apache.spark.sql.SparkSession
 object PqProf {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.create()
 
     def time(name: String)(mk: => org.apache.spark.sql.DataFrame): Unit = {
       mk.count() // warm

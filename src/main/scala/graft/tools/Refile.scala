@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Rewrite a fixture dir's tables as multi-file parquet. The Scale10
   * replicas come out as ONE file with ONE row group, which pins the
   * whole scan stage — including every per-doc projection that fuses
@@ -17,15 +15,7 @@ object Refile {
     val src = args(0)
     val out = args(1)
     val n = args.lift(2).map(_.toInt).getOrElse(32)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.create()
     for (t <- Seq("documents", "embeddings", "events", "lineitem")) {
       val p = s"$src/$t.parquet"
       if (new java.io.File(p).exists) {

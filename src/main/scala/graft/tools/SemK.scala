@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Measure SemDeDup's cell-count dial: runs
   * [[graft.queries.EmbeddingOps.semanticDedupAt]] at each requested k
   * (warm + min of 3) so the "size k ∝ n to hold within-cell pair work
@@ -12,16 +10,7 @@ object SemK {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val ks = args.drop(1).map(_.toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.create()
 
     import org.apache.spark.sql.functions._
     ks.foreach { k =>

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
@@ -8,24 +7,15 @@ import org.apache.spark.sql.streaming.{OutputMode, Trigger}
   * interval join replay and dumps per-batch progress JSON (batch count,
   * durationMs breakdown, state-store metrics) so the fixed costs are
   * attributed instead of guessed. Usage:
-  *   runMain graft.tools.StreamProf <sfDir> [shufflePartitions]
+  *   runMain graft.tools.StreamProf <sfDir>
+  * Shuffle partitions and no-data micro-batches are set through the
+  * `SPARK_GRAFT_CONF` overlay, e.g.
+  * `spark.sql.shuffle.partitions=32;spark.sql.streaming.noDataMicroBatches.enabled=false`.
   */
 object StreamProf {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val parts = args.lift(1).getOrElse("32")
-    val noData = args.lift(2).getOrElse("true")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.streaming.noDataMicroBatches.enabled", noData)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.create()
 
     // warmup + timed, mirroring Bench
     def run(tag: String): Unit = {
@@ -40,7 +30,7 @@ object StreamProf {
       q.awaitTermination()
       val n = spark.table(s"prof_join_$tag").count()
       val secs = (System.nanoTime() - t0) / 1e9
-      println(f"RUN $tag parts=$parts total=$secs%.2f s rows=$n batches=${q.recentProgress.length}")
+      println(f"RUN $tag parts=${spark.conf.get("spark.sql.shuffle.partitions")} total=$secs%.2f s rows=$n batches=${q.recentProgress.length}")
       q.recentProgress.foreach(p => println(p.json))
     }
     run("warm")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale-stress runner for the streaming/arbitrary-state gate keys:
   * runs each named key (from `SparkEntry.queries`) warm + N timed
   * passes against an SF dir (base testdata or a `Scale10` replica) and
@@ -22,36 +20,19 @@ object StreamScale {
     // time the replay itself at scale, so every call re-runs it.
     System.setProperty("graft.fresh.replays", "1"): Unit
     val dir = args(0)
-    val keys = args.drop(1).toSeq
+    // every name resolves (or fails by name) before Spark starts
+    val keys = args.drop(1).toSeq.map(k => k -> graft.SparkEntry.query(k))
     require(keys.nonEmpty, "usage: StreamScale <sfDir> <key> [key...]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // same SPARK_GRAFT_CONF overlay as Verify: lets a measurement force
-    // e.g. the RocksDB provider onto replays that default to HDFS
-    // (replaySession copies spark.sql.streaming.* confs from here)
-    val extraConf = sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(';')).map(_.trim).filter(_.nonEmpty)
-      .map { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        (k, v)
-      }
-    val builder = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    val spark = extraConf.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // replaySession copies spark.sql.streaming.* confs from this session,
+    // so a SPARK_GRAFT_CONF overlay can force e.g. the RocksDB provider
+    // onto replays that default to HDFS
+    val spark = graft.Session.create()
 
     def duBytes(f: java.io.File): Long =
       if (f.isDirectory) Option(f.listFiles()).map(_.map(duBytes).sum).getOrElse(0L)
       else f.length()
 
-    keys.foreach { key =>
-      val fn = graft.SparkEntry.queries.getOrElse(key,
-        throw new IllegalArgumentException(s"unknown query $key"))
+    keys.foreach { case (key, fn) =>
       (0 to 2).foreach { pass =>
         val tag = if (pass == 0) "warm" else s"timed$pass"
         graft.streaming.StreamingOps.lastReplayProgress = Nil

@@ -1,62 +1,32 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.{Bench, Json, Session, SparkEntry}
 
-/** Per-key timing for optimization A/Bs: Bench's exact methodology
-  * (same session confs, untimed warmup, min over round-robin passes)
-  * restricted to the named keys — so a single query's before/after
-  * can be measured in seconds instead of a full 216-key suite run.
-  * Usage:
+/** Per-key timing for optimization A/Bs: Bench's method
+  * ([[graft.Bench.timeKeys]] on a [[graft.Session]]) restricted to the
+  * named keys — so a single query's before/after can be measured in
+  * seconds instead of a full 216-key suite run. Usage:
   *   runMain graft.tools.TimeKeys <sfDir> <passes> <query> [query...]
-  * Prints one "TIMEKEYS {json}" line. NOT a driver surface — the
-  * official numbers remain graft.Bench's.
+  * Prints one "TIMEKEYS {json}" line: per key the min seconds (-1 when
+  * it failed) and the row count, plus the errors. The official numbers
+  * remain graft.Bench's.
   */
 object TimeKeys {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val passes = args(1).toInt
-    val names = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // same overlay contract as Bench/Verify — config A/Bs per key
-    val extraConf = sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(';')).map(_.trim).filter(_.nonEmpty)
-      .map { kv =>
-        require(kv.contains("="),
-          s"bad SPARK_GRAFT_CONF entry (expected key=value): '$kv'")
-        val Array(k, v) = kv.split("=", 2)
-        (k, v)
-      }
-    val builder = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-    val spark = extraConf.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def releaseBlocks(): Unit =
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    val fns = names.map(n => n -> graft.SparkEntry.queries(n))
-    fns.foreach { case (_, fn) =>
-      fn(spark, sfDir).count(); spark.catalog.clearCache(); releaseBlocks()
-    }
-    val best = scala.collection.mutable.Map.empty[String, Double]
-    (1 to passes).foreach { _ =>
-      fns.foreach { case (name, fn) =>
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        val elapsed = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache(); releaseBlocks()
-        if (elapsed < best.getOrElse(name, Double.MaxValue)) best(name) = elapsed
-      }
-    }
-    val qs = names.map(n => "\"" + n + "\":" + String.format(
-      java.util.Locale.ROOT, "%.4f", Double.box(best(n)))).mkString("{", ",", "}")
+    // every name resolves (or fails by name) before Spark starts
+    val keys = args.drop(2).toSeq.map(n => n -> SparkEntry.query(n))
+    val spark = Session.create()
+    val t = Bench.timeKeys(spark, sfDir, keys, passes)
     spark.stop()
-    println(s"""TIMEKEYS {"sf":"$sfDir","cpus":"$cpus","passes":$passes,"queries":$qs}""")
+    val qs = t.seconds.map { case (k, v) =>
+      Json.quote(k) + ":" + String.format(java.util.Locale.ROOT, "%.4f", Double.box(v))
+    }.mkString("{", ",", "}")
+    val rows = t.seconds.collect { case (k, _) if t.rows.contains(k) =>
+      Json.quote(k) + ":" + t.rows(k) }.mkString("{", ",", "}")
+    val errors = t.errors.map(Json.quote).mkString("[", ",", "]")
+    println(s"""TIMEKEYS {"sf":${Json.quote(sfDir)},"cpus":"${Session.cpus()}","passes":$passes,""" +
+      s""""queries":$qs,"rows":$rows,"errors":$errors}""")
   }
 }

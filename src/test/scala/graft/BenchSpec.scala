@@ -97,4 +97,18 @@ class BenchSpec extends AnyFunSuite {
     val other = (cpus.get.toInt + 1).toString
     assert(Bench.officialName(other, Some(anchor)) == s"BENCH_OFFICIAL_c$other.json")
   }
+
+  test("the shared timing loop records a failing key as -1 plus an error") {
+    val spark = SparkTestSession.spark
+    var passes = 0
+    val keys: Seq[(String, SparkEntry.Query)] = Seq(
+      "q_good" -> ((s, _) => s.range(7).toDF("id")),
+      "q_bad" -> ((_, _) => throw new IllegalStateException("boom")))
+    val t = Bench.timeKeys(spark, "/unused", keys, passes = 2, beforePass = () => passes += 1)
+    assert(passes == 2)
+    assert(t.seconds.map(_._1) == Seq("q_good", "q_bad"))
+    assert(t.seconds.toMap.apply("q_good") >= 0 && t.seconds.toMap.apply("q_bad") == -1.0)
+    assert(t.rows == Map("q_good" -> 7L))
+    assert(t.errors == List("q_bad: boom"))
+  }
 }

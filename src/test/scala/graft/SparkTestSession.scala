@@ -3,23 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (Spark sessions are
-  * expensive; ScalaTest suites in one forked JVM share it). */
+  * expensive; ScalaTest suites in one forked JVM share it). The mains'
+  * conf set ([[Session.conf]]) at a fixed 4 cores, whatever
+  * SPARK_GRAFT_CPUS says, with its own app name and a temp warehouse. */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // recognize the dns scan's KeyGroupedPartitioning (storage-partitioned joins)
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Session.build(Session.conf("4") ++ Seq(
+    "spark.app.name" -> "graft-test",
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-warehouse").toString))
 }
