@@ -91,7 +91,7 @@ object CurationOps {
     // nodes is referenced by the edge build, every unrolled round's
     // rank rebuild, AND the final rollup — materialize it once rather
     // than re-scanning the documents table ~5x in one dag
-    val nodes = graphNodes(s, dir).localCheckpoint()
+    val nodes = Fences.rowScale(graphNodes(s, dir), budget = "v + n ~ 16 B/doc")
     val edges = linkEdgesOf(nodes)
     val withDeg = edges
       .join(edges.groupBy($"src").agg(count(lit(1)).as("deg")), "src")
@@ -461,7 +461,8 @@ object CurationOps {
     // build (ids + the count attach) — fence it once like
     // qLinkPagerank already does, so the only other docs scan is the
     // anchor-text pull itself (3 FileScans → 2 in the r20 plan)
-    val cnt = linkEdgesOf(graphNodes(s, dir).localCheckpoint()).where($"dst" < 13)
+    val cnt = linkEdgesOf(Fences.rowScale(graphNodes(s, dir), budget = "v + n ~ 16 B/doc"))
+      .where($"dst" < 13)
       .join(anchors, $"doc_id" === $"src")
       .groupBy($"dst", $"anchor").agg(count(lit(1)).as("c"))
     cnt.groupBy($"dst".as("hub"))

@@ -55,7 +55,12 @@ private[graft] object Fences {
     df.sparkSession.conf.getOption(CheckpointDirKey) match {
       case Some(d) =>
         val sc = df.sparkSession.sparkContext
-        sc.setCheckpointDir(d)
+        // setCheckpointDir makes a fresh UUID subdirectory per call:
+        // set it once per (session, dir), not once per fence
+        val root = new org.apache.hadoop.fs.Path(d)
+        val qualified = root.getFileSystem(sc.hadoopConfiguration).makeQualified(root)
+        if (!sc.getCheckpointDir.exists(c => new org.apache.hadoop.fs.Path(c).getParent == qualified))
+          sc.setCheckpointDir(d)
         val cached = df.persist(
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val out = cached.checkpoint()

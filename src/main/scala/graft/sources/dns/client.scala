@@ -18,6 +18,22 @@ trait ZoneTransferClient extends Serializable {
     * DnsZoneTransferHandler.java:31-40). Throws on unknown zone,
     * unreachable server, or timeout. */
   def transfer(zone: String, serial: Long, xfr: XfrType, timeoutSec: Int): TransferResult
+
+  /** A zone's current records: a serial-0 AXFR (RFC 1995 §2 makes it a
+    * full snapshot). The write side's one reading of zone state — the
+    * wipe set of a replace, the victims of a DELETE, the row-level
+    * scan. A delta reply means the client or server broke that
+    * contract; read as state it would let a replace wipe every record
+    * the delta did not name, so it throws instead. */
+  final def snapshot(zone: String, timeoutSec: Int): Seq[ARecord] =
+    transfer(zone, 0L, XfrType.AXFR, timeoutSec) match {
+      case AxfrResult(_, records) => records
+      case r: IxfrResult =>
+        throw new IllegalStateException(
+          s"dns_update: zone $zone answered a serial-0 (full state) " +
+            s"scan with an IXFR delta (serial ${r.serial}) — " +
+            "refusing to treat a delta as zone state")
+    }
 }
 
 trait UpdateEmitter extends Serializable {
@@ -157,11 +173,6 @@ final class InMemoryDnsServer {
     val from = st.serial
     st.serial += 1
     st.journal += IxfrDelta(from, st.serial, adds = adds.toSeq, deletes = deletes.toSeq)
-  }
-
-  /** All record-holding names of a zone (for the overwrite wipe set). */
-  def namesOf(zone: String): Seq[String] = synchronized {
-    state(zone).records.iterator.map(_.fqdn).toVector.distinct
   }
 
   /** Convenience for tests: adds then deletes. */

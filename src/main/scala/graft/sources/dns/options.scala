@@ -27,7 +27,6 @@ final case class DnsSourceOptions(common: DnsCommonOptions,
                                   maxKeptCommits: Int,
                                   fixedTimestampMicros: Option[Long],
                                   estimatedZoneBytes: Long,
-                                  estimatedZoneRows: Long,
                                   maxZonesPerBatch: Option[Int] = None) {
   require(organization.nonEmpty, "option 'organization' is required")
   require(zones.nonEmpty, "option 'zones' is required (CSV of zone names)")
@@ -37,8 +36,14 @@ final case class DnsSourceOptions(common: DnsCommonOptions,
     s"option 'max-zones-per-batch' must be > 0: ${maxZonesPerBatch.get}")
   require(estimatedZoneBytes > 0,
     s"option 'estimated-zone-bytes' must be > 0: $estimatedZoneBytes")
-  require(estimatedZoneRows > 0,
-    s"option 'estimated-zone-rows' must be > 0: $estimatedZoneRows")
+
+  /** Row-count companion to the bytes bound — expected records per
+    * zone at [[DnsOptions.EstimatedRowBytes]] per A-record row. Feeds
+    * the scan's reported `numRows` + per-column statistics, which is
+    * what lets the cost-based optimizer ORDER a multi-way join
+    * involving the connector — a wrong value changes plan choice,
+    * never results. */
+  def estimatedZoneRows: Long = estimatedZoneBytes / DnsOptions.EstimatedRowBytes
 }
 
 /** Sink options. The three row-level fields exist ONLY for SQL
@@ -70,12 +75,9 @@ object DnsOptions {
     * estimate exists to enable); a wrong value changes plan choice,
     * never results. 256 KiB ≈ a few thousand A records. */
   val DefaultEstimatedZoneBytes = 256L * 1024L
-  /** Row-count companion to the bytes bound: expected records per zone
-    * (256 KiB at ~128 B per A-record row). Feeds the scan's reported
-    * `numRows` + per-column statistics, which is what lets the
-    * cost-based optimizer ORDER a multi-way join involving the
-    * connector — a wrong value changes plan choice, never results. */
-  val DefaultEstimatedZoneRows = 2048L
+  /** Bytes per A-record row the row estimate assumes: the default
+    * 256 KiB bound is 2048 rows per zone. */
+  val EstimatedRowBytes = 128L
   /** `inmemory` (default) talks to the in-process server directly;
     * `wire` is a real TCP client speaking RFC 1035/1995/2136 (the
     * reference's dnsjava role) — loopback-only in this zero-egress
@@ -117,8 +119,6 @@ object DnsOptions {
       fixedTimestampMicros = o.get("fixed-timestamp-micros").map(_.toLong),
       estimatedZoneBytes = o.get("estimated-zone-bytes").map(_.toLong)
         .getOrElse(DefaultEstimatedZoneBytes),
-      estimatedZoneRows = o.get("estimated-zone-rows").map(_.toLong)
-        .getOrElse(DefaultEstimatedZoneRows),
       // Streaming admission control (SupportsAdmissionControl): at most
       // this many ZONES transfer per micro-batch, the rest carry over
       // to later triggers round-robin. Zones are the only subdividable

@@ -137,6 +137,43 @@ final case class SortSpec(field: String, ascending: Boolean, nullsFirst: Boolean
   * Complete (single-zone) pushdown may carry a `PushedOffset` too. */
 final case class PushedTopN(orders: Seq[SortSpec], limit: Int)
 
+/** Marker for a pushed-down COUNT(*): `byZone` = grouped by `zone`
+  * (complete pushdown — one final row per zone) vs global (partial —
+  * Spark sums the per-partition counts). */
+final case class PushedCountAgg(byZone: Boolean)
+
+/** Everything [[DnsScanBuilder]] accepted into the scan, as ONE value:
+  * the zone predicates (already applied to the zone list, kept for the
+  * description), the COUNT(*) aggregate, the limit, the TopN and the
+  * offset. A complete TopN/LIMIT/OFFSET push deletes Spark's own Sort
+  * and Limit nodes, so a layer that dropped part of it would return
+  * wrong rows without failing — scan, batch and reader factory carry
+  * it as one required parameter, and [[DnsPartitionReader]] applies
+  * it. */
+final case class DnsPushdown(predicates: Array[Predicate],
+                             agg: Option[PushedCountAgg],
+                             limit: Option[Int],
+                             topN: Option[PushedTopN],
+                             offset: Option[Int]) {
+  /** The pushdown part of the scan description, in the form the plan
+    * assertions read (`PushedPredicates=[...]`, `PushedTopN=[...]`…). */
+  def describe: String =
+    (if (predicates.nonEmpty)
+      s", PushedPredicates=[${predicates.map(_.describe()).mkString(", ")}]" else "") +
+      agg.map(a => s", PushedAggregation=[COUNT(*)${if (a.byZone) " GROUP BY zone" else ""}]")
+        .getOrElse("") +
+      topN.map(t => s", PushedTopN=[ORDER BY ${t.orders.map(_.describe).mkString(", ")} " +
+        s"LIMIT ${t.limit}]").getOrElse("") +
+      limit.map(n => s", PushedLimit=LIMIT $n").getOrElse("") +
+      offset.map(n => s", PushedOffset=OFFSET $n").getOrElse("")
+}
+
+object DnsPushdown {
+  /** Nothing pushed — the builder's start state, and what the
+    * micro-batch stream reads with (every record of every delta). */
+  val empty: DnsPushdown = DnsPushdown(Array.empty, None, None, None, None)
+}
+
 /** Pushdown upgrades over the reference's plain TableScan (SURVEY §4):
   *
   *  - zone-equality predicates (`zone = 'x.'`, `zone IN (...)`) prune
@@ -161,12 +198,8 @@ final class DnsScanBuilder(opts: DnsSourceOptions) extends ScanBuilder
   with SupportsPushDownTopN with SupportsPushDownOffset {
 
   private var zones: Seq[String] = opts.zones
-  private var pushed: Array[Predicate] = Array.empty
   private var required: StructType = DnsSchemas.read
-  private var pushedAgg: Option[PushedCountAgg] = None
-  private var limit: Option[Int] = None
-  private var topN: Option[PushedTopN] = None
-  private var offset: Option[Int] = None
+  private var pushdown: DnsPushdown = DnsPushdown.empty
 
   /** LIMIT pushdown — partial on a multi-zone scan (each partition's
     * reader stops materializing after `n` rows; Spark keeps the global
@@ -178,8 +211,8 @@ final class DnsScanBuilder(opts: DnsSourceOptions) extends ScanBuilder
     * with aggregate pushdown by refusing: a LIMIT under a pushed COUNT
     * would change the count. */
   override def pushLimit(n: Int): Boolean =
-    if (pushedAgg.isDefined) false
-    else { limit = Some(n); true }
+    if (pushdown.agg.isDefined) false
+    else { pushdown = pushdown.copy(limit = Some(n)); true }
 
   /** ORDER BY ... LIMIT pushdown (`SupportsPushDownTopN`): the reader
     * sorts its zone's records in memory (a zone is bounded by message
@@ -192,11 +225,11 @@ final class DnsScanBuilder(opts: DnsSourceOptions) extends ScanBuilder
     * Sort node, so nothing upstream keeps them alive) — the reader
     * materializes them for the comparison and projects them away. */
   override def pushTopN(orders: Array[SortOrder], n: Int): Boolean = {
-    if (pushedAgg.isDefined || orders.isEmpty) false
+    if (pushdown.agg.isDefined || orders.isEmpty) false
     else {
       val specs = orders.toSeq.map(parseOrder)
       if (specs.exists(_.isEmpty)) false
-      else { topN = Some(PushedTopN(specs.flatten, n)); true }
+      else { pushdown = pushdown.copy(topN = Some(PushedTopN(specs.flatten, n))); true }
     }
   }
 
@@ -223,8 +256,8 @@ final class DnsScanBuilder(opts: DnsSourceOptions) extends ScanBuilder
     * `pushTopN(orders, k + m)` + `pushOffset(m)`) or standalone for a
     * bare `.offset(m)`. */
   override def pushOffset(n: Int): Boolean =
-    if (pushedAgg.isDefined || zones.length != 1) false
-    else { offset = Some(n); true }
+    if (pushdown.agg.isDefined || zones.length != 1) false
+    else { pushdown = pushdown.copy(offset = Some(n)); true }
 
   /** COUNT(*) pushdown (`SupportsPushDownAggregates`): a zone-level
     * record census — the monitoring query a DNS estate runs all day —
@@ -259,7 +292,7 @@ final class DnsScanBuilder(opts: DnsSourceOptions) extends ScanBuilder
     if (!acceptableAgg(agg)) false
     else {
       val byZone = agg.groupByExpressions.nonEmpty
-      pushedAgg = Some(PushedCountAgg(byZone))
+      pushdown = pushdown.copy(agg = Some(PushedCountAgg(byZone)))
       required = StructType(
         (if (byZone) Seq(StructField("zone", StringType, nullable = false)) else Nil) ++
           agg.aggregateExpressions.indices
@@ -275,17 +308,17 @@ final class DnsScanBuilder(opts: DnsSourceOptions) extends ScanBuilder
     val (zonePreds, rest) = predicates.partition(
       p => ZonePredicates.prune(zones, p).isDefined)
     zonePreds.foreach(p => zones = ZonePredicates.prune(zones, p).get)
-    pushed = zonePreds
+    pushdown = pushdown.copy(predicates = zonePreds)
     rest // everything else is evaluated by Spark above the scan
   }
 
-  override def pushedPredicates(): Array[Predicate] = pushed
+  override def pushedPredicates(): Array[Predicate] = pushdown.predicates
 
   override def pruneColumns(requiredSchema: StructType): Unit = {
     // After aggregate pushdown the scan's output IS the aggregation
     // schema (set in pushAggregation); column pruning no longer
     // applies to it.
-    if (pushedAgg.isDefined) return
+    if (pushdown.agg.isDefined) return
     // Preserve the connector's canonical column order; a referenced
     // metadata column (`_serial`/`_xfr_kind`) arrives appended to the
     // required schema and stays appended, in its own canonical order.
@@ -295,21 +328,11 @@ final class DnsScanBuilder(opts: DnsSourceOptions) extends ScanBuilder
         DnsSchemas.metadata.fields.filter(f => keep.contains(f.name)))
   }
 
-  override def build(): Scan =
-    new DnsScan(opts, zones, required, pushedAgg, limit, pushed, topN, offset)
+  override def build(): Scan = new DnsScan(opts, zones, required, pushdown)
 }
 
-/** Marker for a pushed-down COUNT(*): `byZone` = grouped by `zone`
-  * (complete pushdown — one final row per zone) vs global (partial —
-  * Spark sums the per-partition counts). */
-final case class PushedCountAgg(byZone: Boolean)
-
 final class DnsScan(opts: DnsSourceOptions, zones: Seq[String], schema: StructType,
-                    pushedAgg: Option[PushedCountAgg] = None,
-                    pushedLimit: Option[Int] = None,
-                    pushedPreds: Array[Predicate] = Array.empty,
-                    pushedTopN: Option[PushedTopN] = None,
-                    pushedOffset: Option[Int] = None)
+                    pushdown: DnsPushdown)
   extends Scan with SupportsRuntimeV2Filtering with SupportsReportStatistics
   with SupportsReportPartitioning with SupportsReportOrdering {
 
@@ -335,25 +358,13 @@ final class DnsScan(opts: DnsSourceOptions, zones: Seq[String], schema: StructTy
   override def description(): String =
     s"DnsScan(server=${opts.common.server}, zones=${runtimeZones.mkString(",")}, " +
       s"xfr=${opts.xfr}, columns=[${schema.fieldNames.mkString(",")}]" +
-      (if (pushedPreds.nonEmpty)
-        s", PushedPredicates=[${pushedPreds.map(_.describe()).mkString(", ")}]" else "") +
-      pushedAgg.map(a => s", PushedAggregation=[COUNT(*)${if (a.byZone) " GROUP BY zone" else ""}]")
-        .getOrElse("") +
-      pushedTopN.map(t => s", PushedTopN=[ORDER BY ${t.orders.map(_.describe).mkString(", ")} " +
-        s"LIMIT ${t.limit}]").getOrElse("") +
-      pushedLimit.map(n => s", PushedLimit=LIMIT $n").getOrElse("") +
-      pushedOffset.map(n => s", PushedOffset=OFFSET $n").getOrElse("") + ")"
+      pushdown.describe + ")"
 
-  /** DPP handshake: declare `zone` runtime-filterable. Spark's
-    * PartitionPruning rule then plants a DynamicPruningSubquery on any
-    * equi-join over `zone` whose other side carries a selective filter;
-    * at execution BatchScanExec evaluates it, calls [[filter]] with the
-    * surviving values, and re-plans partitions — so the transfers for
-    * runtime-eliminated zones never start. */
   /** Planner statistics (`SupportsReportStatistics`), reported AFTER
     * static pushdown so a pruned zone shrinks the estimate:
     * size = surviving zones × the `estimated-zone-bytes` bound,
-    * rows = surviving zones × `estimated-zone-rows`, and per-COLUMN
+    * rows = surviving zones × that bound / 128 B per A-record row
+    * ([[DnsSourceOptions.estimatedZoneRows]]), and per-COLUMN
     * statistics for `zone` — the one column whose statistics the
     * connector knows EXACTLY before any transfer runs (the zone list
     * is configuration: ndv = surviving zones, zero nulls, real name
@@ -405,8 +416,8 @@ final class DnsScan(opts: DnsSourceOptions, zones: Seq[String], schema: StructTy
     * `zone` become a storage-partitioned join — at estate scale, the
     * difference between shuffling every record of every zone and
     * joining transfer-local. Recognized when
-    * `spark.sql.sources.v2.bucketing.enabled` is true (set in the
-    * session builders); inert otherwise — results never change, only
+    * `spark.sql.sources.v2.bucketing.enabled` is true (set by
+    * `graft.Session`); inert otherwise — results never change, only
     * the exchanges. Guarded on `zone` surviving projection: a scan
     * that pruned `zone` away has nothing to key-group on. */
   override def outputPartitioning(): org.apache.spark.sql.connector.read.partitioning.Partitioning = {
@@ -437,6 +448,12 @@ final class DnsScan(opts: DnsSourceOptions, zones: Seq[String], schema: StructTy
     else Array.empty
   }
 
+  /** DPP handshake: declare `zone` runtime-filterable. Spark's
+    * PartitionPruning rule then plants a DynamicPruningSubquery on any
+    * equi-join over `zone` whose other side carries a selective filter;
+    * at execution BatchScanExec evaluates it, calls [[filter]] with the
+    * surviving values, and re-plans partitions — so the transfers for
+    * runtime-eliminated zones never start. */
   override def filterAttributes(): Array[NamedReference] =
     Array(org.apache.spark.sql.connector.expressions.Expressions.column("zone"))
 
@@ -448,49 +465,31 @@ final class DnsScan(opts: DnsSourceOptions, zones: Seq[String], schema: StructTy
       ZonePredicates.prune(runtimeZones, p).foreach(runtimeZones = _)
     }
 
-  // Registered ONCE per scan (lazy), over the statically-pruned zone
-  // list: with runtime filtering Spark calls toBatch a second time
-  // after [[filter]], and re-registering would double-count. A
+  // One named max-serial accumulator per zone, registered on the
+  // driver at planning time (reference DnsSourceRelationProvider
+  // .java:73-88); values surface in the Spark UI. Streaming does not
+  // read these: the micro-batch stream registers its own. Registered
+  // ONCE per scan (lazy), over the statically-pruned zone list: with
+  // runtime filtering Spark calls toBatch a second time after
+  // [[filter]], and re-registering would double-count. A
   // runtime-pruned zone simply never updates its accumulator.
-  private lazy val accs: Map[String, ZoneVersion] = {
-    // One named max-serial accumulator per zone, registered on the
-    // driver at planning time (reference DnsSourceRelationProvider
-    // .java:73-88); values surface in the Spark UI and feed streaming.
-    val sc = SparkSession.active.sparkContext
-    zones.map { z =>
-      val acc = new ZoneVersion
-      sc.register(acc, s"dns.zone.version.$z")
-      z -> acc
-    }.toMap
-  }
+  private lazy val accs: Map[String, ZoneVersion] =
+    ZoneVersion.register(SparkSession.active.sparkContext, "dns.zone.version", zones)
 
-  override def toBatch: Batch =
-    new DnsBatch(opts, runtimeZones, schema,
-      runtimeZones.map(z => z -> opts.serial).toMap, accs, pushedAgg, pushedLimit,
-      pushedTopN, pushedOffset)
+  /** A batch at the `serial` option for every zone, over the zones
+    * that survived runtime filtering when Spark asked for it. */
+  override def toBatch: Batch = {
+    val planned = runtimeZones
+    new Batch {
+      override def planInputPartitions(): Array[InputPartition] =
+        DnsZoneInputPartition.plan(planned, _ => opts.serial)
+      override def createReaderFactory(): PartitionReaderFactory =
+        new DnsReaderFactory(opts, schema, pushdown, accs, counters = None)
+    }
+  }
 
   override def toMicroBatchStream(checkpointLocation: String) =
     new DnsMicroBatchStream(opts, zones, schema, checkpointLocation)
-}
-
-/** Batch at a fixed per-zone serial snapshot. */
-final class DnsBatch(opts: DnsSourceOptions, zones: Seq[String], schema: StructType,
-                     serials: Map[String, Long],
-                     accs: Map[String, ZoneVersion],
-                     pushedAgg: Option[PushedCountAgg] = None,
-                     pushedLimit: Option[Int] = None,
-                     pushedTopN: Option[PushedTopN] = None,
-                     pushedOffset: Option[Int] = None) extends Batch {
-
-  override def planInputPartitions(): Array[InputPartition] =
-    zones.zipWithIndex.map { case (zone, i) =>
-      DnsZoneInputPartition(i, zone, serials.getOrElse(zone, opts.serial))
-        .asInstanceOf[InputPartition]
-    }.toArray
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new DnsReaderFactory(opts, schema, accs, pushedAgg, pushedLimit,
-      pushedTopN, pushedOffset)
 }
 
 /** One partition per zone (reference DnsZonePartition.java:11-19).
@@ -503,19 +502,24 @@ final case class DnsZoneInputPartition(index: Int, zone: String, serial: Long)
     new GenericInternalRow(Array[Any](UTF8String.fromString(zone)))
 }
 
+object DnsZoneInputPartition {
+  /** The partition plan of batch and stream alike: one partition per
+    * zone, in zone-list order, transferring from `serialOf(zone)`. */
+  def plan(zones: Seq[String], serialOf: String => Long): Array[InputPartition] =
+    zones.zipWithIndex.map { case (zone, i) =>
+      DnsZoneInputPartition(i, zone, serialOf(zone)): InputPartition
+    }.toArray
+}
+
 final class DnsReaderFactory(opts: DnsSourceOptions, schema: StructType,
+                             pushdown: DnsPushdown,
                              accs: Map[String, ZoneVersion],
-                             pushedAgg: Option[PushedCountAgg] = None,
-                             pushedLimit: Option[Int] = None,
-                             pushedTopN: Option[PushedTopN] = None,
-                             pushedOffset: Option[Int] = None,
-                             counters: Option[DnsStreamCounters] = None)
+                             counters: Option[DnsStreamCounters])
   extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[DnsZoneInputPartition]
-    new DnsPartitionReader(opts, schema, p, accs.get(p.zone), pushedAgg, pushedLimit,
-      pushedTopN, pushedOffset, counters)
+    new DnsPartitionReader(opts, schema, p, pushdown, accs.get(p.zone), counters)
   }
 }
 
@@ -527,12 +531,9 @@ final class DnsReaderFactory(opts: DnsSourceOptions, schema: StructType,
   */
 final class DnsPartitionReader(opts: DnsSourceOptions, schema: StructType,
                                p: DnsZoneInputPartition,
+                               pushdown: DnsPushdown,
                                acc: Option[ZoneVersion],
-                               pushedAgg: Option[PushedCountAgg] = None,
-                               pushedLimit: Option[Int] = None,
-                               pushedTopN: Option[PushedTopN] = None,
-                               pushedOffset: Option[Int] = None,
-                               counters: Option[DnsStreamCounters] = None)
+                               counters: Option[DnsStreamCounters])
   extends PartitionReader[InternalRow] {
 
   // Configuration errors (unknown client name) must always propagate;
@@ -598,7 +599,7 @@ final class DnsPartitionReader(opts: DnsSourceOptions, schema: StructType,
     // empty or swallowed-failure zone contributes no group. The global
     // (partial) form always emits, count 0 included, so Spark's final
     // sum is never null.
-    pushedAgg match {
+    pushdown.agg match {
       case Some(PushedCountAgg(byZone)) =>
         val n = changes.length.toLong
         if (byZone && n == 0L) Iterator.empty
@@ -614,7 +615,7 @@ final class DnsPartitionReader(opts: DnsSourceOptions, schema: StructType,
         // away (a COMPLETE TopN push removes the Sort node, so nothing
         // upstream keeps them alive): materialize them for the
         // comparison, project them away after.
-        val sortOnly: Seq[String] = pushedTopN
+        val sortOnly: Seq[String] = pushdown.topN
           .map(_.orders.map(_.field).distinct.filterNot(schema.fieldNames.contains))
           .getOrElse(Seq.empty)
         val buildSchema = StructType(schema.fields ++ sortOnly.map(f =>
@@ -639,7 +640,7 @@ final class DnsPartitionReader(opts: DnsSourceOptions, schema: StructType,
           while (i < fieldWriters.length) { fieldWriters(i)(row, i, action, rec); i += 1 }
           row
         }
-        val selected: Iterator[InternalRow] = pushedTopN match {
+        val selected: Iterator[InternalRow] = pushdown.topN match {
           case Some(t) =>
             // Pushed ORDER BY ... LIMIT: in-memory sort of the zone's
             // already-materialized record list (bounded by the DNS
@@ -648,14 +649,14 @@ final class DnsPartitionReader(opts: DnsSourceOptions, schema: StructType,
             // pushTopN(orders, k + m) + pushOffset(m).
             val cmp = topNOrdering(t, buildSchema)
             changes.map { case (a, r) => build(a, r) }.sorted(cmp)
-              .iterator.take(t.limit).drop(pushedOffset.getOrElse(0))
+              .iterator.take(t.limit).drop(pushdown.offset.getOrElse(0))
           case None =>
             // Partial limit: stop materializing past the pushed bound —
             // Spark's global limit above the scan finishes the job (a
             // single-zone complete push takes exactly the answer).
-            val limited = pushedLimit.foldLeft(
+            val limited = pushdown.limit.foldLeft(
               changes.iterator.map { case (a, r) => build(a, r) })((it, n) => it.take(n))
-            limited.drop(pushedOffset.getOrElse(0))
+            limited.drop(pushdown.offset.getOrElse(0))
         }
         // project away sort-only columns (they sit appended, so the
         // output row is the first schema.length fields)

@@ -157,14 +157,8 @@ final class DnsMicroBatchStream(opts: DnsSourceOptions, zones: Seq[String],
     m
   }
 
-  private val accs: Map[String, ZoneVersion] = {
-    val sc = SparkSession.active.sparkContext
-    zones.map { z =>
-      val acc = new ZoneVersion
-      sc.register(acc, s"dns.stream.zone.version.$z")
-      z -> acc
-    }.toMap
-  }
+  private val accs: Map[String, ZoneVersion] =
+    ZoneVersion.register(SparkSession.active.sparkContext, "dns.stream.zone.version", zones)
 
   /** Driver-side view of each zone's last committed serial. */
   private val current: mutable.Map[String, Long] = {
@@ -287,14 +281,11 @@ final class DnsMicroBatchStream(opts: DnsSourceOptions, zones: Seq[String],
       case Some(adm) => val a = adm.toSet; zones.filter(a)
       case None => zones
     }
-    planned.zipWithIndex.map { case (zone, i) =>
-      DnsZoneInputPartition(i, zone, serials.getOrElse(zone, opts.serial))
-        .asInstanceOf[InputPartition]
-    }.toArray
+    DnsZoneInputPartition.plan(planned, z => serials.getOrElse(z, opts.serial))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new DnsReaderFactory(opts, schema, accs, counters = Some(counters))
+    new DnsReaderFactory(opts, schema, DnsPushdown.empty, accs, Some(counters))
 
   private def persist(): Unit = {
     absorbAccumulators()

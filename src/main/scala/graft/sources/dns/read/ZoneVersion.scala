@@ -1,5 +1,6 @@
 package graft.sources.dns.read
 
+import org.apache.spark.SparkContext
 import org.apache.spark.util.AccumulatorV2
 
 /** Max-serial accumulator: executors observe the zone's SOA serial
@@ -26,4 +27,15 @@ final class ZoneVersion extends AccumulatorV2[Long, Long] {
     serial = math.max(serial, other.value)
 
   override def value: Long = serial
+}
+
+object ZoneVersion {
+  /** One accumulator per zone, registered on the driver as
+    * `<prefix>.<zone>` (the name the Spark UI shows). */
+  def register(sc: SparkContext, prefix: String, zones: Seq[String]): Map[String, ZoneVersion] =
+    zones.map { z =>
+      val acc = new ZoneVersion
+      sc.register(acc, s"$prefix.$z")
+      z -> acc
+    }.toMap
 }

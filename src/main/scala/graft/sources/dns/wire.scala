@@ -566,7 +566,9 @@ final class WireTransferClient(host: String, port: Int) extends ZoneTransferClie
     * EMPTY AXFR-style snapshot (distinguishable from up-to-date by
     * length — a real delta sequence has ≥ 2 inner SOAs, so ≥ 4 RRs);
     * else IXFR delta sequence. An explicit AXFR request is always a
-    * snapshot, never a delta. */
+    * snapshot, never a delta: a SOA inside its record stream is a
+    * malformed response (RFC 5936 §2.2 allows one only first and
+    * last) and throws. */
   private def parseTransfer(zone: String, rrs: Seq[Rr],
                             requestedAxfr: Boolean): TransferResult = {
     val serial = rrs.head.rdata match {
@@ -579,6 +581,9 @@ final class WireTransferClient(host: String, port: Int) extends ZoneTransferClie
     if (!requestedAxfr && rrs.size == 1) IxfrResult(serial, Nil) // up to date
     else if (rrs.size == 2 || rrs(1).rtype != TypeSoa) // snapshot (incl. empty zone)
       AxfrResult(serial, aRecords(rrs.drop(1).dropRight(1)))
+    else if (requestedAxfr)
+      throw new IOException(s"zone transfer of '$zone' failed: AXFR response carries " +
+        "a SOA inside its record stream (RFC 5936 §2.2: only first and last)")
     else {
       // IXFR: SOA(new) [SOA(old) dels SOA(mid) adds]... SOA(new)
       val body = rrs.drop(1).dropRight(1)

@@ -101,22 +101,10 @@ final class DnsZoneStateReaderFactory(opts: DnsSinkOptions)
     val p = partition.asInstanceOf[DnsZoneStatePartition]
     new PartitionReader[InternalRow] {
       private val rows: Iterator[InternalRow] = {
-        val client = DnsClients.transferClient(opts.common)
-        val records = client.transfer(p.zone, 0L, XfrType.AXFR,
-          opts.common.timeoutSec) match {
-          case AxfrResult(_, recs) => recs
-          case r: IxfrResult =>
-            // A serial-0 request is an AXFR by contract (RFC 1995 §2);
-            // a delta reply here means the client or server broke it.
-            // Mapping it to "empty zone" would make the group-replace
-            // commit silently wipe every carryover record — fail loudly
-            // instead (advice r18; the repo's contract-violation
-            // discipline).
-            throw new IllegalStateException(
-              s"dns_update: zone ${p.zone} answered a serial-0 (full state) " +
-                s"scan with an IXFR delta (serial ${r.serial}) — " +
-                "refusing to treat a delta as zone state")
-        }
+        // A delta reply would make the group-replace commit wipe every
+        // carryover record, so snapshot throws on one.
+        val records = DnsClients.transferClient(opts.common)
+          .snapshot(p.zone, opts.common.timeoutSec)
         val ts = opts.fixedTimestampMicros.getOrElse(0L)
         records.iterator.map { r =>
           new GenericInternalRow(Array[Any](
@@ -164,32 +152,19 @@ final class DnsReplaceDataWrite(opts: DnsSinkOptions, schema: StructType)
       new DnsReplaceWriterFactory(opts, schema)
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      // Cross-task merge + a second LWW pass (tasks dedup locally;
-      // the same record can be staged by two tasks).
-      val staged: Map[String, Seq[DnsUpdateRecord]] = messages
-        .collect { case DnsOverwriteStaged(zones) => zones }
-        .flatten.groupBy(_._1).view
-        .mapValues(g => LwwDedup(g.flatMap(_._2).toSeq)).toMap
+      val staged = DnsOverwriteStaged.merge(messages)
       val groups = opts.zones // normalized + deduped at option parse
       val stray = staged.keySet -- groups.toSet
       require(stray.isEmpty,
         s"dns_update row-level write produced rows for zones outside the " +
           s"table's zones option (${stray.toSeq.sorted.mkString(", ")}) — " +
           "unscanned zones cannot be replaced; add them to OPTIONS zones")
-      val client = DnsClients.transferClient(opts.common)
-      val emitter = DnsClients.updateEmitter(opts.common)
-      groups.sorted.foreach { zone =>
-        val current = client.transfer(zone, 0L, XfrType.AXFR,
-          opts.common.timeoutSec) match {
-          case AxfrResult(_, records) => records.map(_.fqdn).distinct
-          case IxfrResult(_, deltas) => deltas.flatMap(_.adds).map(_.fqdn).distinct
-        }
-        // Replacement content is a SET — deterministic (fqdn, ip)
-        // order, not chronological: there is no apply order to
-        // preserve in a state snapshot.
-        emitter.overwrite(zone, current,
-          staged.getOrElse(zone, Nil).sortBy(r => (r.fqdn, r.ip)))
-      }
+      // Replacement content is a SET — deterministic (fqdn, ip) order,
+      // not chronological: there is no apply order to preserve in a
+      // state snapshot. Every group is replaced, an empty one wiped.
+      DnsOverwriteStaged.replaceZones(DnsClients.transferClient(opts.common),
+        DnsClients.updateEmitter(opts.common), opts.common.timeoutSec, groups,
+        staged.view.mapValues(_.sortBy(r => (r.fqdn, r.ip))).toMap)
     }
 
     override def abort(messages: Array[WriterCommitMessage]): Unit = ()

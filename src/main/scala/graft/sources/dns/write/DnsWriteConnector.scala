@@ -141,11 +141,7 @@ final class DnsUpdateTable(opts: DnsSinkOptions) extends Table with SupportsWrit
     val client = DnsClients.transferClient(opts.common)
     val emitter = DnsClients.updateEmitter(opts.common)
     fqdns.groupBy(Fqdn.zoneOf).toSeq.sortBy(_._1).foreach { case (zone, names) =>
-      val current = client.transfer(zone, 0L, XfrType.AXFR, opts.common.timeoutSec) match {
-        case AxfrResult(_, records) => records
-        case IxfrResult(_, _) => Seq.empty // serial-0 ⇒ AXFR contract makes this unreachable
-      }
-      val victims = current
+      val victims = client.snapshot(zone, opts.common.timeoutSec)
         .filter(r => names.contains(r.fqdn.toLowerCase(java.util.Locale.ROOT)) &&
           ips.forall(_.contains(r.ip)))
         .sortBy(r => (r.fqdn, r.ip)).distinct
@@ -238,21 +234,13 @@ final class DnsTruncateWrite(opts: DnsSinkOptions, schema: StructType)
     override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
       new DnsWriterFactory(opts, FieldIndices(schema), truncating = true)
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      // Driver-side, once per job: read each zone's current names and
-      // send the atomic wipe+add. One partition was demanded, but the
-      // merge is written defensively (and zone order pinned) anyway.
-      val staged = messages.collect { case DnsOverwriteStaged(zones) => zones }
-        .flatten.groupBy(_._1).view.mapValues(_.flatMap(_._2).toSeq)
-        .toSeq.sortBy(_._1)
-      val client = DnsClients.transferClient(opts.common)
-      val emitter = DnsClients.updateEmitter(opts.common)
-      staged.foreach { case (zone, adds) =>
-        val current = client.transfer(zone, 0L, XfrType.AXFR, opts.common.timeoutSec) match {
-          case AxfrResult(_, records) => records.map(_.fqdn).distinct
-          case IxfrResult(_, deltas) => deltas.flatMap(_.adds).map(_.fqdn).distinct
-        }
-        emitter.overwrite(zone, current, adds)
-      }
+      // Driver-side, once per job: replace every staged zone. One
+      // partition was demanded, so the cross-task merge sees one
+      // task's deduped content and keeps its chronological order.
+      val staged = DnsOverwriteStaged.merge(messages)
+      DnsOverwriteStaged.replaceZones(DnsClients.transferClient(opts.common),
+        DnsClients.updateEmitter(opts.common), opts.common.timeoutSec,
+        staged.keys.toSeq, staged)
     }
     override def abort(messages: Array[WriterCommitMessage]): Unit = ()
   }
@@ -407,6 +395,30 @@ case object DnsWriteCommitted extends WriterCommitMessage
 /** Overwrite content staged task→driver: zone → deduped new records. */
 final case class DnsOverwriteStaged(zones: Seq[(String, Seq[DnsUpdateRecord])])
   extends WriterCommitMessage
+
+/** The driver-side half of every zone replace (overwrite and the
+  * row-level group replace): merge what the tasks staged, then wipe
+  * and refill each zone in one atomic message. */
+object DnsOverwriteStaged {
+  /** Zone → new content across all tasks. Tasks dedup locally, but
+    * two tasks may stage the same record, so the merge runs
+    * last-write-wins again (a no-op on one task's deduped output). */
+  def merge(messages: Array[WriterCommitMessage]): Map[String, Seq[DnsUpdateRecord]] =
+    messages.collect { case DnsOverwriteStaged(zones) => zones }
+      .flatten.groupBy(_._1).view
+      .mapValues(g => LwwDedup(g.flatMap(_._2).toSeq)).toMap
+
+  /** Per zone, in sorted order: snapshot the current names, then send
+    * the §2.5.2 wipe of those names followed by the zone's `content`
+    * (none for a zone absent from it — the replace empties it). */
+  private[dns] def replaceZones(client: ZoneTransferClient, emitter: UpdateEmitter,
+                                timeoutSec: Int, zones: Seq[String],
+                                content: Map[String, Seq[DnsUpdateRecord]]): Unit =
+    zones.sorted.foreach { zone =>
+      val names = client.snapshot(zone, timeoutSec).map(_.fqdn).distinct
+      emitter.overwrite(zone, names, content.getOrElse(zone, Nil))
+    }
+}
 
 /** Cluster-scale write helpers. */
 object DnsWrites {

@@ -32,4 +32,18 @@ class FencesSpec extends AnyFunSuite {
       assert(wrote, s"no checkpoint files under $ckDir — the swap did not engage")
     } finally spark.conf.unset(Fences.CheckpointDirKey)
   }
+
+  test("rowScale sets the checkpoint dir once per dir, not once per fence") {
+    val ckDir = java.nio.file.Files.createTempDirectory("graft-fence-once")
+    spark.conf.set(Fences.CheckpointDirKey, ckDir.toString)
+    try {
+      assert(Fences.rowScale(spark.range(10).toDF("id"), budget = "8 B/row").count() == 10)
+      val first = spark.sparkContext.getCheckpointDir
+      assert(first.exists(_.contains(ckDir.getFileName.toString)), first.toString)
+      assert(Fences.rowScale(spark.range(20).toDF("id"), budget = "8 B/row").count() == 20)
+      assert(spark.sparkContext.getCheckpointDir == first)
+      // one UUID subdirectory under the configured dir, not one per call
+      assert(java.nio.file.Files.list(ckDir).count() == 1)
+    } finally spark.conf.unset(Fences.CheckpointDirKey)
+  }
 }

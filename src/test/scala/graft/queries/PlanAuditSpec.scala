@@ -92,7 +92,7 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("dns column statistics: CBO reorders a 3-way join so the small estates join first") {
-    // The scan reports numRows (zones x estimated-zone-rows) and EXACT
+    // The scan reports numRows (zones x estimated-zone-bytes / 128) and EXACT
     // per-column statistics for `zone` (the zone list is
     // configuration: ndv = surviving zones, zero nulls). Under CBO,
     // that is everything CostBasedJoinReorder needs to move a join
@@ -105,7 +105,7 @@ class PlanAuditSpec extends AnyFunSuite {
         .option("organization", "graft")
         .option("zones", zones)
         .option("xfr", "AXFR")
-        .option("estimated-zone-rows", rowsPerZone.toString)
+        .option("estimated-zone-bytes", (rowsPerZone * 128L).toString)
         .load()
         .select(org.apache.spark.sql.functions.col("zone"),
           org.apache.spark.sql.functions.col("fqdn"))

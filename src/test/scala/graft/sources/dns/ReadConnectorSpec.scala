@@ -132,8 +132,7 @@ class ReadConnectorSpec extends AnyFunSuite {
 
   test("estimated-zone-bytes feeds the reported scan statistics") {
     seeded(5322)
-    val df = read(5322, "xfr" -> "AXFR", "estimated-zone-bytes" -> "1024",
-      "estimated-zone-rows" -> "8")
+    val df = read(5322, "xfr" -> "AXFR", "estimated-zone-bytes" -> "1024")
     val v2 = df.queryExecution.optimizedPlan.collect {
       case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r
     }

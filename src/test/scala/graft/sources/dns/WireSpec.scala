@@ -245,6 +245,32 @@ class WireSpec extends AnyFunSuite {
     assert(r == AxfrResult(7, Nil))
   }
 
+  test("AXFR answered with a delta-shaped stream is rejected, never read as a delta") {
+    // RFC 5936 §2.2: an AXFR response holds a SOA only first and last.
+    // [SOA(3), SOA(1), del, SOA(2), add, SOA(3)] is an IXFR shape; the
+    // write side reads zone state through AXFR, so it must not come
+    // back as an IxfrResult
+    val ss = new java.net.ServerSocket(0, 1, java.net.InetAddress.getByName("127.0.0.1"))
+    val soa = (s: Long) => Rr("z.acme.", TypeSoa, ClassIn, 0, SoaData(s))
+    val t = new Thread(() => {
+      val sock = ss.accept()
+      val in = new java.io.DataInputStream(sock.getInputStream)
+      val out = new java.io.DataOutputStream(sock.getOutputStream)
+      val req = readFramed(in)
+      writeFramed(out, Message(req.id, responseFlags(OpcodeQuery, RcodeNoError),
+        req.questions, Seq(soa(3), soa(1), Rr("a.z.acme.", TypeA, ClassIn, 60, AData("10.0.0.1")),
+          soa(2), Rr("b.z.acme.", TypeA, ClassIn, 60, AData("10.0.0.2")), soa(3)), Nil, Nil))
+      out.flush()
+      sock.close()
+    })
+    t.setDaemon(true)
+    t.start()
+    val c = new WireTransferClient("127.0.0.1", ss.getLocalPort)
+    val e = intercept[java.io.IOException](c.transfer("z.acme.", 0, XfrType.AXFR, 5))
+    ss.close()
+    assert(e.getMessage.contains("SOA inside its record stream"), e.getMessage)
+  }
+
   test("malformed stored record answers SERVFAIL, not a dead connection") {
     withServer { srv =>
       srv.backing.addZone("bad.acme.", Seq(ARecord("h.bad.acme.", "300.1.1.1")))
