@@ -31,7 +31,7 @@ object Bench {
   private[graft] def resultLines(
       results: Seq[(String, Double)], staged: Set[String],
       calibs: Seq[Double], errors: List[String], sfDir: String,
-      cpus: String = "?"): (String, String) = {
+      cpus: String, nproc: Int): (String, String) = {
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
     // Full JSON escaping (incl. control chars): exception messages are
@@ -52,7 +52,10 @@ object Bench {
     // "cpus" makes each committed artifact self-describing: the c32 and
     // c8 official files differ only in it and in the numbers, so a
     // consumer never has to infer the core count from the file name.
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","cpus":${Json.quote(cpus)},"queries":$qs,"staged_readback":$stagedJson,"calib":$calibJson,"errors":$errJson,"sf":"$sfDir"}"""
+    // "nproc" is the host's processor count beside it, so a c4 line
+    // from a 32-core host and one from a 4-core host tell apart.
+    val host = s""""cpus":${Json.quote(cpus)},"nproc":$nproc"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec",$host,"queries":$qs,"staged_readback":$stagedJson,"calib":$calibJson,"errors":$errJson,"sf":"$sfDir"}"""
     // "compact":true disambiguates this line from the full one above
     // for any consumer that greps by metric instead of taking the
     // absolute last line — both lines share "metric":"total".
@@ -67,7 +70,7 @@ object Bench {
       (if (more > 0) shown :+ Json.quote(s"(+$more more — see bench.json)")
        else shown).mkString("[", ",", "]")
     }
-    val compact = s"""{"metric":"total","compact":true,"value":$total,"unit":"sec","calib":$calibJson,"errors":$compactErrs,"sf":"$sfDir"}"""
+    val compact = s"""{"metric":"total","compact":true,"value":$total,"unit":"sec",$host,"calib":$calibJson,"errors":$compactErrs,"sf":"$sfDir"}"""
     (line, compact)
   }
 
@@ -152,7 +155,7 @@ object Bench {
     // at 250+ keys). The full line still goes out first on both streams
     // and to bench.json for humans and for the per-query history.
     val (line, compact) = resultLines(timings.seconds, SparkEntry.stagedReadbackKeys,
-      calibs.toSeq, timings.errors, sfDir, cpus)
+      calibs.toSeq, timings.errors, sfDir, cpus, Runtime.getRuntime.availableProcessors())
     // The driver extracts this JSON from process output; sbt wraps
     // stdout lines in [info]/[success] noise that has drowned it three
     // rounds running. Emit it on all three channels: stdout, a known

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.sources.dns._
+import graft.streaming.Replay
 
 /** Connector-backed CORRECTNESS queries: deterministic in-memory DNS
   * fixtures, read/written through the real `dns` / `dns_update`
@@ -923,14 +924,15 @@ object Connector {
   /** The NATIVE streaming sink under the gate: a formulaic update log
     * replayed through the file-stream source into
     * `writeStream.format("dns_update")` (the V2 StreamingWrite — no
-    * foreachBatch), Trigger.Once + checkpoint, final zone state read
-    * back over AXFR. Ids 8-15 re-add the same fqdns with different IPs
-    * and later timestamps, so multi-record names and chronological
-    * apply are both exercised through the streaming path. */
-  def qDnsStreamSink(s: SparkSession, dir: String): DataFrame = {
+    * foreachBatch), one run to the end of the log + checkpoint, final
+    * zone state read back over AXFR. Ids 8-15 re-add the same fqdns
+    * with different IPs and later timestamps, so multi-record names and
+    * chronological apply are both exercised through the streaming
+    * path. */
+  def qDnsStreamSink(s: SparkSession, dir: String): DataFrame =
    // Same once-per-JVM staging as qDnsStream: the native-sink replay
    // plus the AXFR read-back run as the staging; the key reads back.
-   val staged = Scratch.staged("dns_stream_sink_result", dir) { sb =>
+   Replay.result(s, dir, "dns_stream_sink") {
     import s.implicits._
     val port = freshPort("q_dns_stream_sink")
     InMemoryDnsServer.reset(Host, port)
@@ -950,13 +952,10 @@ object Connector {
         lit(3600).cast("int").as("ttl"))
       .coalesce(1).write.mode("overwrite").parquet(s"$base/log")
 
-    val q = s.readStream.schema(DnsSchemas.write).parquet(s"$base/log")
+    Replay.run("dns_stream_sink", s.readStream.schema(DnsSchemas.write).parquet(s"$base/log")
       .writeStream.format("dns_update")
       .option("server", Host).option("port", port.toString)
-      .option("checkpointLocation", s"$base/ck")
-      .trigger(Trigger.Once())
-      .start()
-    require(q.awaitTermination(180000), "dns sink stream did not terminate")
+      .option("checkpointLocation", s"$base/ck")): Unit
 
     s.read.format("dns")
       .option("server", Host).option("port", port.toString)
@@ -965,11 +964,7 @@ object Connector {
       .option("fixed-timestamp-micros", TsMicros.toString)
       .load()
       .select("fqdn", "ip", "zone")
-      .write.parquet(new java.io.File(sb, "result").toString)
-   }
-   s.read.parquet(new java.io.File(staged, "result").toString)
-     .orderBy("fqdn", "ip")
-  }
+   }.orderBy("fqdn", "ip")
 
   /** Final zone: seeds 3-4 survive (0-2 deleted), n0..n4 carry BOTH
     * generation IPs (distinct A records per name). */
@@ -986,7 +981,7 @@ object Connector {
       |ORDER BY fqdn, ip""".stripMargin
 
   /** The streaming source under the oracle gate, resume-once included:
-    * two Trigger.Once runs of `readStream.format("dns")` into one
+    * two run-to-end runs of `readStream.format("dns")` into one
     * parquet sink sharing one checkpoint. Run 1 starts at serial 0 ⇒
     * AXFR of the seeded zone (10 rows); the zone then changes (3 adds,
     * 1 delete); run 2 restores the committed serial from the
@@ -997,11 +992,11 @@ object Connector {
     * reference's headline behavior (DnsStreamingSource.java:31-178,
     * resume test DnsSourceRelationProviderTest.java:203-226) as an
     * official gate row, not just a spec. */
-  def qDnsStream(s: SparkSession, dir: String): DataFrame = {
+  def qDnsStream(s: SparkSession, dir: String): DataFrame =
    // The two-run resume sequence stages once per JVM (same discipline
    // as StreamingOps' staged replays — both lifecycles still run, in
    // this process, as the staging; the timed key reads the artifact).
-   val staged = Scratch.staged("dns_stream_result", dir) { sb =>
+   Replay.result(s, dir, "dns_stream") {
     val port = freshPort("q_dns_stream")
     InMemoryDnsServer.reset(Host, port)
     val srv = InMemoryDnsServer.at(Host, port)
@@ -1011,18 +1006,14 @@ object Connector {
     val out = s"$base/out"
     val ck = s"$base/ck"
 
-    def runOnce(): Unit = {
-      val q = s.readStream.format("dns")
+    def runOnce(): Unit =
+      Replay.run("dns_stream", s.readStream.format("dns")
         .option("server", Host).option("port", port.toString)
         .option("organization", "graft").option("zones", "st.graft")
         .option("fixed-timestamp-micros", TsMicros.toString)
         .load()
         .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ck)
-        .trigger(Trigger.Once())
-        .start()
-      require(q.awaitTermination(180000), "dns stream run did not terminate")
-    }
+        .option("path", out).option("checkpointLocation", ck)): Unit
 
     runOnce() // serial 0 ⇒ AXFR h0..h9
     srv.update("st.graft.",
@@ -1030,13 +1021,8 @@ object Connector {
       Seq(ARecord("h0.st.graft.", "10.5.0.0")))
     runOnce() // resume ⇒ IXFR delta only
 
-    s.read.parquet(out)
-      .select("action", "fqdn", "ip", "zone")
-      .write.parquet(new java.io.File(sb, "result").toString)
-   }
-   s.read.parquet(new java.io.File(staged, "result").toString)
-     .orderBy("action", "fqdn")
-  }
+    s.read.parquet(out).select("action", "fqdn", "ip", "zone")
+   }.orderBy("action", "fqdn")
 
   /** Zone-SET change across a streaming restart (r15 verdict item 5 —
     * the reference quirk §2.3.3 made a gate: DnsStreamingSource
@@ -1055,8 +1041,8 @@ object Connector {
     * pins the exact union: a duplicated AXFR, a lost serial, a
     * leaked b-add, or a c started at the wrong serial each move the
     * hash. */
-  def qDnsZoneChange(s: SparkSession, dir: String): DataFrame = {
-   val staged = Scratch.staged("dns_zone_change_result", dir) { sb =>
+  def qDnsZoneChange(s: SparkSession, dir: String): DataFrame =
+   Replay.result(s, dir, "dns_zone_change") {
     val port = freshPort("q_dns_zone_change")
     InMemoryDnsServer.reset(Host, port)
     val srv = InMemoryDnsServer.at(Host, port)
@@ -1067,18 +1053,14 @@ object Connector {
     val out = s"$base/out"
     val ck = s"$base/ck"
 
-    def runOnce(zones: String): Unit = {
-      val q = s.readStream.format("dns")
+    def runOnce(zones: String): Unit =
+      Replay.run("dns_zone_change", s.readStream.format("dns")
         .option("server", Host).option("port", port.toString)
         .option("organization", "graft").option("zones", zones)
         .option("fixed-timestamp-micros", TsMicros.toString)
         .load()
         .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ck)
-        .trigger(Trigger.Once())
-        .start()
-      require(q.awaitTermination(180000), "dns zone-change stream run did not terminate")
-    }
+        .option("path", out).option("checkpointLocation", ck)): Unit
 
     runOnce("zca.graft,zcb.graft") // both AXFR from 0
     srv.update("zca.graft.",
@@ -1088,13 +1070,8 @@ object Connector {
     srv.addZone("zcc.graft.", (0 to 4).map(i => ARecord(s"c$i.zcc.graft.", s"10.6.2.$i")))
     runOnce("zca.graft,zcc.graft") // a: IXFR delta; c: AXFR from 0; b: dropped
 
-    s.read.parquet(out)
-      .select("action", "fqdn", "ip", "zone")
-      .write.parquet(new java.io.File(sb, "result").toString)
-   }
-   s.read.parquet(new java.io.File(staged, "result").toString)
-     .orderBy("action", "fqdn")
-  }
+    s.read.parquet(out).select("action", "fqdn", "ip", "zone")
+   }.orderBy("action", "fqdn")
 
   /** Streaming ADMISSION CONTROL under the oracle gate (r16 verdict
     * item 4 — the last idiomatic DSv2 streaming surface): with
@@ -1177,11 +1154,12 @@ object Connector {
     * batches in zone-list order (AvailableNow consumes the REMAINING
     * set head-first, unlike the steady-state round-robin): batch 0 =
     * zones {0,1}, batch 1 = {2,3}. The oracle pins the zone→batch
-    * assignment; a source that fails to terminate hangs the gate, one
-    * that re-admits duplicates rows, one that leaks un-admitted zones
-    * into a batch moves a batch_id. */
-  def qDnsAvailableNow(s: SparkSession, dir: String): DataFrame = {
-   val staged = Scratch.staged("dns_available_now_result", dir) { sb =>
+    * assignment; a source that fails to terminate is stopped and fails
+    * the gate at the [[Replay]] bound, one that re-admits duplicates
+    * rows, one that leaks un-admitted zones into a batch moves a
+    * batch_id. */
+  def qDnsAvailableNow(s: SparkSession, dir: String): DataFrame =
+   Replay.result(s, dir, "dns_available_now") {
     val port = freshPort("q_dns_available_now")
     InMemoryDnsServer.reset(Host, port)
     val srv = InMemoryDnsServer.at(Host, port)
@@ -1192,7 +1170,7 @@ object Connector {
     val base = Scratch.fresh("dns_available_now", dir)
     val out = s"$base/out"
     val ck = s"$base/ck"
-    val q = s.readStream.format("dns")
+    Replay.run("dns_available_now", s.readStream.format("dns")
       .option("server", Host).option("port", port.toString)
       .option("organization", "graft")
       .option("zones", "an0.graft,an1.graft,an2.graft,an3.graft")
@@ -1205,18 +1183,9 @@ object Connector {
             lit(id).as("batch_id"))
           .write.mode("append").parquet(out)
       }
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    require(q.awaitTermination(180000),
-      "AvailableNow dns stream did not self-terminate")
-    s.read.parquet(out)
-      .select("action", "fqdn", "ip", "zone", "batch_id")
-      .write.parquet(new java.io.File(sb, "result").toString)
-   }
-   s.read.parquet(new java.io.File(staged, "result").toString)
-     .orderBy("zone", "fqdn")
-  }
+      .option("checkpointLocation", ck)): Unit
+    s.read.parquet(out).select("action", "fqdn", "ip", "zone", "batch_id")
+   }.orderBy("zone", "fqdn")
 
   private val qDnsAvailableNowOracle: String =
     """WITH z AS (SELECT unnest(generate_series(0, 3)) AS j),
@@ -1512,8 +1481,10 @@ object Connector {
   )
 
   /** Same discipline as [[graft.streaming.StreamingOps.stagedReadbackKeys]]:
-    * these two keys' timed passes read the once-per-JVM staged replay
-    * result, not a fresh streaming-query lifecycle. */
+    * these keys' timed passes read the once-per-JVM staged replay
+    * result, not a fresh streaming-query lifecycle. All but
+    * q_dns_ratelimit (a ProcessingTime run stopped by hand) stage
+    * through the [[Replay]] harness's [[Replay.result]]. */
   val stagedReadbackKeys: Set[String] =
     Set("q_dns_stream", "q_dns_stream_sink", "q_dns_zone_change", "q_dns_ratelimit",
       "q_dns_available_now")

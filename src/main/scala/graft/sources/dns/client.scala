@@ -205,16 +205,24 @@ object InMemoryDnsServer {
   }
 
   def reset(host: String, port: Int): Unit = synchronized { servers -= ((host, port)) }
+
+  /** The server a client reaches at (host, port) for `what`: timeout 0
+    * always fails (reference failure matrix, the wire client's
+    * contract too), and an address with no registered server refuses. */
+  private[dns] def reach(host: String, port: Int, timeoutSec: Int,
+                         what: String): InMemoryDnsServer = {
+    if (timeoutSec == 0)
+      throw new java.net.SocketTimeoutException(s"$what timed out (timeout=0)")
+    if (!exists(host, port))
+      throw new java.net.ConnectException(s"no DNS server at $host:$port")
+    at(host, port)
+  }
 }
 
 final class InMemoryTransferClient(host: String, port: Int) extends ZoneTransferClient {
   override def transfer(zone: String, serial: Long, xfr: XfrType,
                         timeoutSec: Int): TransferResult = {
-    if (timeoutSec == 0) // reference failure matrix: timeout 0 always fails
-      throw new java.net.SocketTimeoutException(s"zone transfer of '$zone' timed out (timeout=0)")
-    if (!InMemoryDnsServer.exists(host, port))
-      throw new java.net.ConnectException(s"no DNS server at $host:$port")
-    val server = InMemoryDnsServer.at(host, port)
+    val server = InMemoryDnsServer.reach(host, port, timeoutSec, s"zone transfer of '$zone'")
     xfr match {
       case XfrType.AXFR => server.axfr(zone) // always full, serial ignored (DnsZoneRDD.java:76-80)
       case XfrType.IXFR if serial == 0L => server.axfr(zone) // serial 0 ⇒ AXFR (Xfr.java:43-48)
@@ -229,13 +237,8 @@ final class InMemoryTransferClient(host: String, port: Int) extends ZoneTransfer
   * only observable semantic is the failure matrix's timeout=0 ⇒
   * immediate timeout, mirroring the transfer client. */
 final class InMemoryUpdateEmitter(host: String, port: Int, timeoutSec: Int) extends UpdateEmitter {
-  private def server(zone: String): InMemoryDnsServer = {
-    if (timeoutSec == 0)
-      throw new java.net.SocketTimeoutException(s"update of '$zone' timed out (timeout=0)")
-    if (!InMemoryDnsServer.exists(host, port))
-      throw new java.net.ConnectException(s"no DNS server at $host:$port")
-    InMemoryDnsServer.at(host, port)
-  }
+  private def server(zone: String): InMemoryDnsServer =
+    InMemoryDnsServer.reach(host, port, timeoutSec, s"update of '$zone'")
 
   override def update(zone: String, changes: Seq[DnsUpdateRecord]): Unit =
     server(zone).update(zone, changes.map { u =>

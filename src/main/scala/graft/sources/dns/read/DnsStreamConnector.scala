@@ -89,17 +89,9 @@ final class ProgressLog(checkpointLocation: String, maxKept: Int) extends Serial
     val id = latestBatchId()
     if (id < 0) None
     else {
-      val bytes = {
-        val in = fs.open(new Path(dir, id.toString))
-        try {
-          val out = new java.io.ByteArrayOutputStream()
-          val buf = new Array[Byte](4096)
-          var n = in.read(buf)
-          while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-          out.toString("UTF-8")
-        } finally in.close()
-      }
-      Some(DnsOffset.fromJson(bytes).serials)
+      val in = fs.open(new Path(dir, id.toString))
+      val json = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      Some(DnsOffset.fromJson(json).serials)
     }
   }
 

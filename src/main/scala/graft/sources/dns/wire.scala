@@ -514,7 +514,7 @@ final class WireTransferClient(host: String, port: Int) extends ZoneTransferClie
       // responses may span messages too (RFC 1995 §2), but their delta
       // streams interleave SOA section-headers, so termination is
       // STATEFUL: walk the delta grammar and stop only at a SOA bearing
-      // the new serial at a delta-START boundary ([[ixfrComplete]]).
+      // the new serial at a delta-START boundary ([[IxfrWalk]]).
       // A first message holding exactly one SOA is up-to-date, the
       // standard client reading (dnsjava does the same) of RFC 1995's
       // single-SOA response.
@@ -523,8 +523,10 @@ final class WireTransferClient(host: String, port: Int) extends ZoneTransferClie
       else if (rrs.size == 1 && rrs.head.rtype == TypeSoa) ()
       else if (rrs(1).rtype != TypeSoa) // AXFR-style answer to IXFR (journal gap)
         while (!(rrs.size > 1 && rrs.last.rtype == TypeSoa)) readInto()
-      else
-        while (!ixfrComplete(rrs)) readInto()
+      else {
+        val walk = new IxfrWalk(rrs)
+        while (!walk.complete()) readInto()
+      }
       parseTransfer(zone, rrs.toSeq, useAxfr)
     }
 
@@ -534,31 +536,38 @@ final class WireTransferClient(host: String, port: Int) extends ZoneTransferClie
     * strictly increase within the journal, so the only SOA carrying
     * serial n at a delta-start position is the closing one (the last
     * delta's ADD-section header also carries n, but sits at an
-    * add-header position, never a delta start). Called per received
-    * message with an incrementally longer prefix. */
-  private def ixfrComplete(rrs: scala.collection.Seq[Rr]): Boolean = {
-    val n = rrs.head.rdata match {
+    * add-header position, never a delta start). [[complete]] is called
+    * once per received message while `rrs` grows; the walk resumes
+    * where the previous call stopped, so each RR is examined once and
+    * reassembly stays linear in the stream length. */
+  private final class IxfrWalk(rrs: scala.collection.Seq[Rr]) {
+    private val n = rrs.head.rdata match {
       case SoaData(s) => s
       case _ => throw new IOException("transfer does not start with SOA")
     }
-    var i = 1
-    while (i < rrs.size) {
-      val atDeltaStart = rrs(i).rdata match {
-        case SoaData(s) => s
-        case _ => throw new IOException("malformed IXFR delta (expected SOA)")
+    private var i = 1 // next RR to examine
+    private var section = 0 // 0: at a delta start, 1: deletes, 2: adds
+
+    def complete(): Boolean = {
+      while (i < rrs.size) {
+        if (section == 0) {
+          val atDeltaStart = rrs(i).rdata match {
+            case SoaData(s) => s
+            case _ => throw new IOException("malformed IXFR delta (expected SOA)")
+          }
+          if (atDeltaStart == n) {
+            if (i != rrs.size - 1)
+              throw new IOException("trailing records after closing IXFR SOA")
+            return true
+          }
+          section = 1
+          i += 1
+        } else if (rrs(i).rtype != TypeSoa) i += 1
+        else if (section == 1) { section = 2; i += 1 } // add-section header
+        else section = 0 // next delta start, or the closing SOA
       }
-      if (atDeltaStart == n) {
-        if (i != rrs.size - 1)
-          throw new IOException("trailing records after closing IXFR SOA")
-        return true
-      }
-      val delEnd = rrs.indexWhere(_.rtype == TypeSoa, i + 1) // add-section header
-      if (delEnd < 0) return false
-      val addEnd = rrs.indexWhere(_.rtype == TypeSoa, delEnd + 1) // next delta / closing
-      if (addEnd < 0) return false
-      i = addEnd
+      false
     }
-    false
   }
 
   /** Classify the RR stream per RFC 1995 §4: single SOA = up to date
@@ -585,8 +594,9 @@ final class WireTransferClient(host: String, port: Int) extends ZoneTransferClie
       throw new IOException(s"zone transfer of '$zone' failed: AXFR response carries " +
         "a SOA inside its record stream (RFC 5936 §2.2: only first and last)")
     else {
-      // IXFR: SOA(new) [SOA(old) dels SOA(mid) adds]... SOA(new)
-      val body = rrs.drop(1).dropRight(1)
+      // IXFR: SOA(new) [SOA(old) dels SOA(mid) adds]... SOA(new).
+      // Indexed: the walk below indexes and slices per delta.
+      val body = rrs.toIndexedSeq.drop(1).dropRight(1)
       val deltas = scala.collection.mutable.ArrayBuffer.empty[IxfrDelta]
       var i = 0
       while (i < body.size) {

@@ -109,18 +109,14 @@ final class DnsUpdateTable(opts: DnsSinkOptions) extends Table with SupportsWrit
     * emitter, ordering, and quirk-fix as the DataWriter path. Beyond
     * the reference, whose sink is append-only (DnsSinkRelation
     * .java:33-42). */
-  override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    filters.exists {
-      case EqualTo("fqdn", _: String) => true
-      case In("fqdn", vs) => vs.nonEmpty && vs.forall(_.isInstanceOf[String])
-      case _ => false
-    } && filters.forall {
-      case EqualTo("fqdn", _: String) => true
-      case In("fqdn", vs) => vs.nonEmpty && vs.forall(_.isInstanceOf[String])
-      case EqualTo("ip", _: String) => true
-      case In("ip", vs) => vs.nonEmpty && vs.forall(_.isInstanceOf[String])
+  override def canDeleteWhere(filters: Array[Filter]): Boolean = {
+    def on(column: String)(f: Filter): Boolean = f match {
+      case EqualTo(`column`, _: String) => true
+      case In(`column`, vs) => vs.nonEmpty && vs.forall(_.isInstanceOf[String])
       case _ => false
     }
+    filters.exists(on("fqdn")) && filters.forall(f => on("fqdn")(f) || on("ip")(f))
+  }
 
   override def deleteWhere(filters: Array[Filter]): Unit = {
     require(canDeleteWhere(filters),

@@ -22,7 +22,8 @@ class BenchSpec extends AnyFunSuite {
       calibs = Seq(0.083, 0.413, 0.28),
       errors = errors,
       sfDir = "/root/testdata/sf0.1",
-      cpus = "32")
+      cpus = "32",
+      nproc = 4)
 
   test("compact line stays under the driver capture limit at 250 keys") {
     val (_, compact) = lines(250, Nil)
@@ -55,6 +56,14 @@ class BenchSpec extends AnyFunSuite {
     // it is reading without trusting the file name.
     val (full, _) = lines(5, Nil)
     assert(full.contains("\"cpus\":\"32\""), full.take(200))
+  }
+
+  test("both lines carry the host's processor count beside cpus") {
+    // a c4 line from a 32-core host and one from a 4-core host must
+    // tell apart: nproc is availableProcessors, cpus the configured count
+    val (full, compact) = lines(5, Nil)
+    Seq(full, compact).foreach(l =>
+      assert(l.contains("\"cpus\":\"32\",\"nproc\":4"), l.take(200)))
   }
 
   test("multi-line error messages stay on one escaped line in both forms") {
