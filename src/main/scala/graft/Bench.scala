@@ -21,11 +21,17 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
+  /** How many keys the compact line names (`queries_top`): the
+    * heaviest, so a per-query diff across commits survives a consumer
+    * that sees only the output tail. */
+  private[graft] val CompactTopKeys = 15
+
   /** The two result lines, extracted so BenchSpec can guard their
     * shape: the FULL line (per-query map — grows with the suite, goes
     * to bench.json / BENCH_OFFICIAL.json and stdout for humans) and
-    * the COMPACT line (no per-query map — its length must stay under
-    * the driver's ~2000-char output-tail capture at ANY suite size;
+    * the COMPACT line (no per-query map, only the [[CompactTopKeys]]
+    * heaviest keys — its length must stay under a ~2000-char
+    * output-tail capture at ANY suite size;
     * ANCHORS.json r11_official records what truncation did before the
     * compact form existed). */
   private[graft] def resultLines(
@@ -70,7 +76,10 @@ object Bench {
       (if (more > 0) shown :+ Json.quote(s"(+$more more — see bench.json)")
        else shown).mkString("[", ",", "]")
     }
-    val compact = s"""{"metric":"total","compact":true,"value":$total,"unit":"sec",$host,"calib":$calibJson,"errors":$compactErrs,"sf":"$sfDir"}"""
+    // The heaviest keys, failed ones (-1) left out, ties by name.
+    val top = results.filter(_._2 >= 0).sortBy { case (k, v) => (-v, k) }
+      .take(CompactTopKeys).map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val compact = s"""{"metric":"total","compact":true,"value":$total,"unit":"sec",$host,"queries_top":$top,"calib":$calibJson,"errors":$compactErrs,"sf":"$sfDir"}"""
     (line, compact)
   }
 

@@ -7,84 +7,64 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.sources.dns._
 import graft.streaming.Replay
 
-/** Connector-backed CORRECTNESS queries: deterministic in-memory DNS
-  * fixtures, read/written through the real `dns` / `dns_update`
-  * DataSource V2 paths, with DuckDB oracles that regenerate the same
-  * data from `generate_series` arithmetic (no parquet tables needed).
+/** Connector-backed CORRECTNESS queries: deterministic DNS fixtures on
+  * loopback [[WireDnsServer]]s, read/written through the real `dns` /
+  * `dns_update` DataSource V2 paths over the wire client, with DuckDB
+  * oracles that regenerate the same data from `generate_series`
+  * arithmetic (no parquet tables needed).
   *
   * Fixtures are reseeded from scratch on every call so Verify/Bench
   * runs are idempotent.
   */
 object Connector {
 
-  private val Host = "verify-dns"
   private val TsMicros = 1723400000000000L
 
-  /** Per-call fixture keys. The in-memory "port" is a JVM-local
-    * registry key, NOT an OS port — two concurrent JVMs each have
-    * their own registry and can never collide on it. Within a JVM,
-    * allocating a FRESH key per call makes each invocation's fixture
-    * private, so the seed-then-lazy-read window cannot race a
-    * concurrent caller of the same query; resetting the previous
-    * call's key keeps the registry bounded (≤1 live fixture per
-    * query), and a stale DataFrame consumed after a newer call fails
-    * loudly (ConnectException) instead of silently reading the newer
-    * call's state. */
-  private val portGen = new java.util.concurrent.atomic.AtomicInteger(56000)
-  private val lastPort = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-  private def freshPort(name: String): Int = {
-    val p = portGen.incrementAndGet()
-    val prev = lastPort.put(name, p)
-    if (prev != null) InMemoryDnsServer.reset(Host, prev.intValue())
-    p
-  }
-
-  /** Zones z0..z3; zone j holds hosts h0..h(9+j) with formulaic IPs.
-    * Parameterized by target server so the in-memory and wire paths
-    * share one fixture — and therefore one oracle. */
-  private def seedReadZones(srv: InMemoryDnsServer): Unit =
-    (0 to 3).foreach { j =>
-      srv.addZone(s"z$j.graft.",
-        (0 to 9 + j).map(i => ARecord(s"h$i.z$j.graft.", s"10.$j.0.$i")))
-    }
-
-  private def seedReadFixture(port: Int): Unit = {
-    InMemoryDnsServer.reset(Host, port)
-    seedReadZones(InMemoryDnsServer.at(Host, port))
-  }
-
   /** Per-call loopback wire servers (real TCP on ephemeral 127.0.0.1
-    * ports, daemon accept threads), one namespace per query — the
-    * wire analogue of [[freshPort]]. Previously ONE shared server was
-    * re-seeded by all q_dns_wire_* queries, which made correctness
-    * silently depend on sequential execution (r8 ADVICE); a fresh
-    * server per call removes the coupling entirely. The replaced
-    * server for the same query is stopped — by then its DataFrame has
-    * been consumed (Verify writes / Bench counts before re-invoking),
-    * and a stale one would fail loudly on connect. */
+    * ports, daemon accept threads), one per query name. A fresh server
+    * per call makes each invocation's fixture private, so the
+    * seed-then-lazy-read window cannot race a concurrent caller of the
+    * same query. The replaced server for the same name is stopped — by
+    * then its DataFrame has been consumed (Verify writes / Bench counts
+    * before re-invoking), and a stale one fails loudly on connect
+    * instead of silently reading the newer call's state. */
   private val lastWire = new java.util.concurrent.ConcurrentHashMap[String, WireDnsServer]()
   private def freshWire(name: String): WireDnsServer = {
-    val s = WireDnsServer.start()
+    val s = new WireDnsServer()
     val prev = lastWire.put(name, s)
-    if (prev != null) WireDnsServer.stop(prev.port)
+    if (prev != null) prev.close()
     s
   }
 
-  /** Full batch read through spark.read.format("dns"): registry →
-    * table → one partition per zone → AXFR rows. */
-  def qDnsRead(s: SparkSession, dir: String): DataFrame = {
-    val port = freshPort("q_dns_read")
-    seedReadFixture(port)
+  /** A fresh server for `name` holding zones z0..z3; zone j holds hosts
+    * h0..h(9+j) with formulaic IPs. */
+  private def readFixture(name: String): WireDnsServer = {
+    val wire = freshWire(name)
+    (0 to 3).foreach { j =>
+      wire.backing.addZone(s"z$j.graft.",
+        (0 to 9 + j).map(i => ARecord(s"h$i.z$j.graft.", s"10.$j.0.$i")))
+    }
+    wire
+  }
+
+  private val ReadZones = "z0.graft,z1.graft,z2.graft,z3.graft"
+
+  /** Batch AXFR read of `zones` from the fixture server. */
+  private def axfr(s: SparkSession, wire: WireDnsServer, zones: String): DataFrame =
     s.read.format("dns")
-      .option("server", Host).option("port", port.toString)
-      .option("organization", "graft")
-      .option("zones", "z0.graft,z1.graft,z2.graft,z3.graft")
+      .option("server", wire.host).option("port", wire.port.toString)
+      .option("organization", "graft").option("zones", zones)
       .option("xfr", "AXFR")
       .option("fixed-timestamp-micros", TsMicros.toString)
       .load()
+
+  /** Full batch read through spark.read.format("dns"): table → one
+    * partition per zone → one wire AXFR each (RFC 1035/5936 encode, TCP
+    * framing, multi-message reassembly) → rows. */
+  def qDnsRead(s: SparkSession, dir: String): DataFrame =
+    axfr(s, readFixture("q_dns_read"), ReadZones)
       .select("action", "fqdn", "ip", "organization", "timestamp", "zone")
       .orderBy("zone", "fqdn")
-  }
 
   private val qDnsReadOracle: String =
     s"""WITH h AS (
@@ -108,20 +88,11 @@ object Connector {
     * whole transfers is the connector's only meaningful scan
     * optimization — at a large zone count it is the difference
     * between O(zones) network transfers and O(requested). */
-  def qDnsZonePruned(s: SparkSession, dir: String): DataFrame = {
-    val port = freshPort("q_dns_zone_pruned")
-    seedReadFixture(port)
-    s.read.format("dns")
-      .option("server", Host).option("port", port.toString)
-      .option("organization", "graft")
-      .option("zones", "z0.graft,z1.graft,z2.graft,z3.graft")
-      .option("xfr", "AXFR")
-      .option("fixed-timestamp-micros", TsMicros.toString)
-      .load()
+  def qDnsZonePruned(s: SparkSession, dir: String): DataFrame =
+    axfr(s, readFixture("q_dns_zone_pruned"), ReadZones)
       .filter(col("zone") === "z2.graft.")
       .select("action", "fqdn", "ip", "zone")
       .orderBy("fqdn")
-  }
 
   private val qDnsZonePrunedOracle: String =
     """SELECT 'AXFR' AS action, 'h'||i||'.z2.graft.' AS fqdn,
@@ -138,7 +109,7 @@ object Connector {
     * scan; at execution BatchScanExec evaluates the dim side first,
     * hands the surviving zone values to `DnsScan.filter`, and re-plans
     * partitions — so the two unwanted zones' transfers NEVER run. The
-    * gate pins that behaviorally: `transfers_run` is the in-memory
+    * gate pins that behaviorally: `transfers_run` is the fixture
     * server's served-transfer count read after execution, and the
     * oracle says 2 — a regression to scan-all-four (DPP not fired, or
     * the filter ignored) breaks the hash, not just a plan assert.
@@ -149,17 +120,16 @@ object Connector {
     * before the DPP rule looks for a selective predicate. */
   def qDnsRuntimePrune(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val port = freshPort("q_dns_runtime_prune")
-    seedReadFixture(port)
+    val wire = readFixture("q_dns_runtime_prune")
     stageRuntimePruneDim(s, dir)
-    val joined = runtimePruneJoin(s, dir, port)
+    val joined = runtimePruneJoin(s, dir, wire)
     // Execute NOW: the transfer count is only meaningful after the scan
     // ran, and it must ride the returned frame. The collect is fixture-
     // scale (24 rows) — the same eager-fixture shape as the other
     // connector keys, not a data-path collect.
     val rows = joined.collect().toSeq
       .map(r => (r.getString(0), r.getString(1), r.getString(2)))
-    val transfers = InMemoryDnsServer.at(Host, port).transferCount
+    val transfers = wire.backing.transferCount
     rows.toDF("zone", "fqdn", "ip")
       .withColumn("transfers_run", lit(transfers))
       .orderBy("zone", "fqdn")
@@ -169,33 +139,23 @@ object Connector {
     * PlanAuditSpec can assert the DPP subquery reached the DNS scan
     * (the gated key returns a post-execution local frame, whose plan no
     * longer shows the join). Caller seeds the fixture + dim first. */
-  private[graft] def runtimePruneJoin(s: SparkSession, dir: String, port: Int): DataFrame = {
+  private[graft] def runtimePruneJoin(s: SparkSession, dir: String,
+                                      wire: WireDnsServer): DataFrame = {
     import s.implicits._
     val dimPath = new java.io.File(Scratch.dir("dns_rtp_dim", dir), "dim")
-    val dns = s.read.format("dns")
-      .option("server", Host).option("port", port.toString)
-      .option("organization", "graft")
-      .option("zones", "z0.graft,z1.graft,z2.graft,z3.graft")
-      .option("xfr", "AXFR")
-      .option("fixed-timestamp-micros", TsMicros.toString)
-      .load()
-      .select("zone", "fqdn", "ip")
+    val dns = axfr(s, wire, ReadZones).select("zone", "fqdn", "ip")
     val dim = s.read.parquet(dimPath.toString).filter($"wanted" === 1).select("zone")
     dns.join(dim, Seq("zone")).select($"zone", $"fqdn", $"ip")
   }
 
-  /** Seed the [[qDnsRuntimePrune]] fixture on a fresh port and return
-    * it — the spec-side entry to the same fixture + staged dim. */
-  private[graft] def seedRuntimePruneFixture(s: SparkSession, dir: String): Int = {
-    val port = freshPort("q_dns_runtime_prune_audit")
-    seedReadFixture(port)
+  /** Seed the [[qDnsRuntimePrune]] fixture on a fresh server and
+    * return it — the spec-side entry to the same fixture + staged dim;
+    * the spec reads `backing.transferCount` off it. */
+  private[graft] def seedRuntimePruneFixture(s: SparkSession, dir: String): WireDnsServer = {
+    val wire = readFixture("q_dns_runtime_prune_audit")
     stageRuntimePruneDim(s, dir)
-    port
+    wire
   }
-
-  /** Spec-side read of the fixture server's served-transfer count. */
-  private[graft] def transfersServed(port: Int): Long =
-    InMemoryDnsServer.at(Host, port).transferCount
 
   /** Staged once per JVM (marker-gated, a pure function of nothing):
     * the dimension rows say z1/z3 are wanted, z0 is present-but-not
@@ -231,22 +191,15 @@ object Connector {
     * DnsSourceRelationProvider.java:73-88). `_xfr_kind` pins the kind
     * that actually RAN (AXFR here), not an echo of the `xfr` option. */
   def qDnsMetadataCols(s: SparkSession, dir: String): DataFrame = {
-    val port = freshPort("q_dns_metadata_cols")
-    seedReadFixture(port)
-    val srv = InMemoryDnsServer.at(Host, port)
+    val wire = readFixture("q_dns_metadata_cols")
+    val srv = wire.backing
     (0 to 3).foreach { j =>
       (0 until j).foreach { k =>
         srv.update(s"z$j.graft.",
           adds = Seq(ARecord(s"u$k.z$j.graft.", s"10.$j.1.$k")), deletes = Nil)
       }
     }
-    s.read.format("dns")
-      .option("server", Host).option("port", port.toString)
-      .option("organization", "graft")
-      .option("zones", "z0.graft,z1.graft,z2.graft,z3.graft")
-      .option("xfr", "AXFR")
-      .option("fixed-timestamp-micros", TsMicros.toString)
-      .load()
+    axfr(s, wire, ReadZones)
       .select(col("zone"), col("fqdn"), col("_serial"), col("_xfr_kind"))
       .orderBy("zone", "fqdn")
   }
@@ -280,32 +233,19 @@ object Connector {
     * chosen without a hint — is asserted in PlanAuditSpec. At scale
     * this is the difference between shipping a 100 TB fact table and
     * shipping a kilobyte zone list. */
-  def qDnsAutoBroadcast(s: SparkSession, dir: String): DataFrame = {
-    val port = freshPort("q_dns_auto_broadcast")
-    seedReadFixture(port)
-    autoBroadcastJoin(s, port)
-  }
+  def qDnsAutoBroadcast(s: SparkSession, dir: String): DataFrame =
+    autoBroadcastJoin(s, readFixture("q_dns_auto_broadcast"))
 
   /** Spec-side fixture for the auto-broadcast audit: same seeding on
-    * its own port. */
-  private[graft] def seedAutoBroadcastFixture(): Int = {
-    val port = freshPort("q_dns_auto_broadcast_audit")
-    seedReadFixture(port)
-    port
-  }
+    * its own server. */
+  private[graft] def seedAutoBroadcastFixture(): WireDnsServer =
+    readFixture("q_dns_auto_broadcast_audit")
 
   /** The lazy join [[qDnsAutoBroadcast]] gates — exposed so
     * PlanAuditSpec can assert the reported statistics and the hint-free
     * broadcast choice on the exact plan the key runs. */
-  private[graft] def autoBroadcastJoin(s: SparkSession, port: Int): DataFrame = {
-    val dns = s.read.format("dns")
-      .option("server", Host).option("port", port.toString)
-      .option("organization", "graft")
-      .option("zones", "z0.graft,z1.graft,z2.graft,z3.graft")
-      .option("xfr", "AXFR")
-      .option("fixed-timestamp-micros", TsMicros.toString)
-      .load()
-      .select(col("zone"), col("fqdn"))
+  private[graft] def autoBroadcastJoin(s: SparkSession, wire: WireDnsServer): DataFrame = {
+    val dns = axfr(s, wire, ReadZones).select(col("zone"), col("fqdn"))
     val logs = s.range(0, 3000000L).select(
       concat(lit("h"), col("id") % 10, lit(".z"), col("id") % 4, lit(".graft."))
         .as("fqdn"),
@@ -329,35 +269,13 @@ object Connector {
       |FROM logs JOIN dns ON logs.fqdn = dns.fqdn
       |GROUP BY dns.zone ORDER BY dns.zone""".stripMargin
 
-  /** The same full read through the WIRE client: executors open real
-    * TCP sockets to the loopback [[WireDnsServer]] and speak RFC
-    * 1035/5936 — message encode, TCP framing, compression-pointer-aware
-    * decode, multi-message AXFR termination — instead of calling the
-    * in-memory registry. Identical fixture ⇒ identical oracle: the two
-    * transports must be result-indistinguishable, which is exactly the
-    * contract that lets `client=wire` point at a standards-compliant
-    * server on a real cluster (the role dnsjava plays in the reference,
-    * Xfr.java:37-50). */
-  def qDnsWireRead(s: SparkSession, dir: String): DataFrame = {
-    val wire = freshWire("q_dns_wire_read")
-    seedReadZones(wire.backing)
-    s.read.format("dns")
-      .option("server", wire.host).option("port", wire.port.toString)
-      .option("client", "wire")
-      .option("organization", "graft")
-      .option("zones", "z0.graft,z1.graft,z2.graft,z3.graft")
-      .option("xfr", "AXFR")
-      .option("fixed-timestamp-micros", TsMicros.toString)
-      .load()
-      .select("action", "fqdn", "ip", "organization", "timestamp", "zone")
-      .orderBy("zone", "fqdn")
-  }
-
   /** Write-then-read round trip through BOTH connectors: a formulaic
     * update log (adds, deletes of seeded records, add/delete flips on
     * the same identity at different timestamps) written via
     * format("dns_update") — exercising validation, fqdn normalization,
-    * zone derivation, LWW dedup, chronological apply — then the final
+    * zone derivation, LWW dedup, chronological apply, each RFC 2136
+    * message encoded (adds class IN, deletes class NONE), TCP-framed,
+    * decoded and applied by the server, rcode checked — then the final
     * zone state read back via format("dns") AXFR.
     *
     * The update DF is hash-repartitioned by derived zone
@@ -370,9 +288,11 @@ object Connector {
     * presence as "latest change per (fqdn, ip) is not a delete" —
     * exactly the LWW-dedup + chronological-apply contract. */
   def qDnsRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val port = freshPort("q_dns_roundtrip")
-    InMemoryDnsServer.reset(Host, port)
-    seedRoundtripZones(InMemoryDnsServer.at(Host, port))
+    val wire = freshWire("q_dns_roundtrip")
+    (0 to 1).foreach { j =>
+      wire.backing.addZone(s"w$j.graft.",
+        (0 to 9).map(k => ARecord(s"seed$k.w$j.graft.", s"10.88.$j.$k")))
+    }
     // The SCALE write path: one hash exchange on the derived zone puts
     // each zone's entire update set in one task → exactly one RFC 2136
     // message per zone, LWW-deduped over the full zone history — the
@@ -380,27 +300,17 @@ object Connector {
     // serializing the write to one task.
     graft.sources.dns.write.DnsWrites.repartitionByZone(roundtripUpdates(s))
       .write.format("dns_update")
-      .option("server", Host).option("port", port.toString)
+      .option("server", wire.host).option("port", wire.port.toString)
       .mode("append").save()
 
-    s.read.format("dns")
-      .option("server", Host).option("port", port.toString)
-      .option("organization", "graft").option("zones", "w0.graft,w1.graft")
-      .option("xfr", "AXFR")
-      .option("fixed-timestamp-micros", TsMicros.toString)
-      .load()
+    axfr(s, wire, "w0.graft,w1.graft")
       .select("fqdn", "ip", "zone")
       .orderBy("zone", "fqdn", "ip")
   }
 
-  private def seedRoundtripZones(srv: InMemoryDnsServer): Unit =
-    (0 to 1).foreach { j =>
-      srv.addZone(s"w$j.graft.", (0 to 9).map(k => ARecord(s"seed$k.w$j.graft.", s"10.88.$j.$k")))
-    }
-
   /** The formulaic roundtrip update log (adds, deletes of seeded
     * records, add/delete flips on the same identity at different
-    * timestamps), shared between the in-memory and wire roundtrips. */
+    * timestamps). */
   private def roundtripUpdates(s: SparkSession): DataFrame = {
     import s.implicits._
     val j = $"id" % 2
@@ -424,32 +334,6 @@ object Connector {
         .as("ip"),
       timestamp_micros(lit(TsMicros + 1000000L) + $"id").as("timestamp"),
       lit(3600).cast("int").as("ttl"))
-  }
-
-  /** The identical roundtrip through the WIRE transport on both legs:
-    * every partition's RFC 2136 update message is encoded, TCP-framed,
-    * decoded and applied by the loopback server (adds as class-IN RRs,
-    * deletes as class-NONE, rcode checked — wire.scala), and the final
-    * state is read back over a wire AXFR. Same update log, same oracle
-    * as [[qDnsRoundtrip]]: transport must never change results. */
-  def qDnsWireRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val wire = freshWire("q_dns_wire_roundtrip")
-    seedRoundtripZones(wire.backing)
-    graft.sources.dns.write.DnsWrites.repartitionByZone(roundtripUpdates(s))
-      .write.format("dns_update")
-      .option("server", wire.host).option("port", wire.port.toString)
-      .option("client", "wire")
-      .mode("append").save()
-
-    s.read.format("dns")
-      .option("server", wire.host).option("port", wire.port.toString)
-      .option("client", "wire")
-      .option("organization", "graft").option("zones", "w0.graft,w1.graft")
-      .option("xfr", "AXFR")
-      .option("fixed-timestamp-micros", TsMicros.toString)
-      .load()
-      .select("fqdn", "ip", "zone")
-      .orderBy("zone", "fqdn", "ip")
   }
 
   private val qDnsRoundtripOracle: String =
@@ -486,23 +370,18 @@ object Connector {
   /** IXFR delta read: seed a zone, apply two formulaic update messages
     * (serials 1→2→3), then read changes since serial 1 through the
     * connector. Exercises the incremental path end-to-end: the serial
-    * predicate handed to the server, delta journaling, and the
-    * deletes-before-adds flattening order (made hash-stable here by the
-    * ord column, mirroring q_union_changes). */
+    * predicate handed to the server (the client SOA in the request's
+    * authority section), delta journaling, the server's RFC 1995 delta
+    * sequence (SOA(new), then per delta SOA(old) deletes SOA(mid) adds,
+    * closing SOA(new)) that [[WireTransferClient]] must reassemble into
+    * the exact delta structure, and the deletes-before-adds flattening
+    * order (made hash-stable here by the ord column, mirroring
+    * q_union_changes). */
   def qDnsIxfr(s: SparkSession, dir: String): DataFrame = {
-    val port = freshPort("q_dns_ixfr")
-    InMemoryDnsServer.reset(Host, port)
-    seedIxfrZone(InMemoryDnsServer.at(Host, port))
-    ixfrProjection(s, s.read.format("dns")
-      .option("server", Host).option("port", port.toString)
-      .option("organization", "graft").option("zones", "x.graft")
-      .option("xfr", "IXFR").option("serial", "1")
-      .option("fixed-timestamp-micros", TsMicros.toString)
-      .load())
-  }
-
-  /** Zone at serial 3 with a two-delta journal since serial 1. */
-  private def seedIxfrZone(srv: InMemoryDnsServer): Unit = {
+    import s.implicits._
+    val wire = freshWire("q_dns_ixfr")
+    // zone at serial 3 with a two-delta journal since serial 1
+    val srv = wire.backing
     srv.addZone("x.graft.", (0 to 4).map(k => ARecord(s"h$k.x.graft.", s"10.0.0.$k")))
     // serial 1 → 2: add h5..h7, delete h0
     srv.update("x.graft.",
@@ -512,32 +391,15 @@ object Connector {
     srv.update("x.graft.",
       Seq(ARecord("h8.x.graft.", "10.0.0.8")),
       (1 to 2).map(k => ARecord(s"h$k.x.graft.", s"10.0.0.$k")))
-  }
-
-  private def ixfrProjection(s: SparkSession, df: DataFrame): DataFrame = {
-    import s.implicits._
-    df.select($"action", $"fqdn", $"ip",
-        when($"action" === DnsAction.IxfrDelete, 0).otherwise(1).as("ord"))
-      .orderBy($"ord", $"fqdn")
-  }
-
-  /** The same IXFR through the wire: the hardest stretch of the codec
-    * under the oracle gate — the server serializes the RFC 1995 delta
-    * sequence (SOA(new), then per delta SOA(old) deletes SOA(mid) adds,
-    * closing SOA(new)) and [[WireTransferClient.parseTransfer]] must
-    * reconstruct the exact delta structure from the flat RR stream,
-    * including the client-SOA-in-authority request encoding. Same
-    * journal, same oracle as [[qDnsIxfr]]. */
-  def qDnsWireIxfr(s: SparkSession, dir: String): DataFrame = {
-    val wire = freshWire("q_dns_wire_ixfr")
-    seedIxfrZone(wire.backing)
-    ixfrProjection(s, s.read.format("dns")
+    s.read.format("dns")
       .option("server", wire.host).option("port", wire.port.toString)
-      .option("client", "wire")
       .option("organization", "graft").option("zones", "x.graft")
       .option("xfr", "IXFR").option("serial", "1")
       .option("fixed-timestamp-micros", TsMicros.toString)
-      .load())
+      .load()
+      .select($"action", $"fqdn", $"ip",
+        when($"action" === DnsAction.IxfrDelete, 0).otherwise(1).as("ord"))
+      .orderBy($"ord", $"fqdn")
   }
 
   private val qDnsIxfrOracle: String =
@@ -559,12 +421,11 @@ object Connector {
     * catalog. Same fixture and oracle as [[qDnsRead]]: DDL-vs-DataFrame
     * registration must be result-invisible. */
   def qDnsSql(s: SparkSession, dir: String): DataFrame = {
-    val port = freshPort("q_dns_sql")
-    seedReadFixture(port)
+    val wire = readFixture("q_dns_sql")
     s.sql("DROP TABLE IF EXISTS graft_dns_sql")
     s.sql(
       s"""CREATE TABLE graft_dns_sql USING dns OPTIONS (
-         | server '$Host', port '$port', organization 'graft',
+         | server '${wire.host}', port '${wire.port}', organization 'graft',
          | zones 'z0.graft,z1.graft,z2.graft,z3.graft', xfr 'AXFR',
          | `fixed-timestamp-micros` '$TsMicros')""".stripMargin)
     s.sql(
@@ -582,10 +443,9 @@ object Connector {
     * write-side validation rejections stay spec-tested — an error has
     * no result row to hash.) */
   def qDnsIgnoreFailures(s: SparkSession, dir: String): DataFrame = {
-    val port = freshPort("q_dns_ignore_failures")
-    seedReadFixture(port)
+    val wire = readFixture("q_dns_ignore_failures")
     s.read.format("dns")
-      .option("server", Host).option("port", port.toString)
+      .option("server", wire.host).option("port", wire.port.toString)
       .option("organization", "graft")
       .option("zones", "z0.graft,z1.graft,nosuch.graft,z3.graft")
       .option("xfr", "AXFR")
@@ -701,14 +561,13 @@ object Connector {
     * The log adds 8 records and deletes 2 seeded ones; the oracle
     * replays the final zone state. */
   def qDnsSqlInsert(s: SparkSession, dir: String): DataFrame = {
-    val port = freshPort("q_dns_sql_insert")
-    InMemoryDnsServer.reset(Host, port)
-    val srv = InMemoryDnsServer.at(Host, port)
-    srv.addZone("sq.graft.", (0 to 2).map(k => ARecord(s"seed$k.sq.graft.", s"10.6.0.$k")))
+    val wire = freshWire("q_dns_sql_insert")
+    wire.backing.addZone("sq.graft.",
+      (0 to 2).map(k => ARecord(s"seed$k.sq.graft.", s"10.6.0.$k")))
     s.sql("DROP TABLE IF EXISTS graft_dns_sink")
     s.sql(
       s"""CREATE TABLE graft_dns_sink USING dns_update
-         |OPTIONS (server '$Host', port '$port')""".stripMargin)
+         |OPTIONS (server '${wire.host}', port '${wire.port}')""".stripMargin)
     s.sql(
       s"""INSERT INTO graft_dns_sink
          |SELECT CASE WHEN id < 8 THEN 'IXFR_ADD' ELSE 'IXFR_DELETE' END AS action,
@@ -719,12 +578,7 @@ object Connector {
          |  timestamp_micros(${TsMicros + 1000000L} + id) AS timestamp,
          |  CAST(3600 AS INT) AS ttl
          |FROM range(10)""".stripMargin)
-    s.read.format("dns")
-      .option("server", Host).option("port", port.toString)
-      .option("organization", "graft").option("zones", "sq.graft")
-      .option("xfr", "AXFR")
-      .option("fixed-timestamp-micros", TsMicros.toString)
-      .load()
+    axfr(s, wire, "sq.graft")
       .select("fqdn", "ip", "zone")
       .orderBy("fqdn", "ip")
   }
@@ -750,33 +604,26 @@ object Connector {
     * through the same metadata-column surface q_dns_metadata_cols
     * gates. */
   def qDnsSqlDelete(s: SparkSession, dir: String): DataFrame = {
-    val port = freshPort("q_dns_sql_delete")
-    InMemoryDnsServer.reset(Host, port)
-    val srv = InMemoryDnsServer.at(Host, port)
-    srv.addZone("dz.graft.",
+    val wire = freshWire("q_dns_sql_delete")
+    wire.backing.addZone("dz.graft.",
       (0 to 7).map(k => ARecord(s"d$k.dz.graft.", s"10.9.0.$k")) ++
         Seq(ARecord("d1.dz.graft.", "10.9.1.1"), ARecord("d3.dz.graft.", "10.9.1.3")))
     // Table name carries the fixture port: two sessions sharing a
     // metastore (or concurrent invocations of this key) each get a
     // self-contained table aimed at their own live server, never a
     // DELETE against a stale port.
-    val tbl = s"graft_dns_del_$port"
+    val tbl = s"graft_dns_del_${wire.port}"
     s.sql(s"DROP TABLE IF EXISTS $tbl")
     s.sql(
       s"""CREATE TABLE $tbl USING dns_update
-         |OPTIONS (server '$Host', port '$port')""".stripMargin)
+         |OPTIONS (server '${wire.host}', port '${wire.port}')""".stripMargin)
     // unnormalized relative names on purpose: DELETE values normalize
     // like every other connector entry point
     s.sql(
       s"DELETE FROM $tbl WHERE fqdn IN ('d1.dz.graft', 'd5.dz.graft')")
     s.sql(
       s"DELETE FROM $tbl WHERE fqdn = 'd3.dz.graft' AND ip = '10.9.0.3'")
-    s.read.format("dns")
-      .option("server", Host).option("port", port.toString)
-      .option("organization", "graft").option("zones", "dz.graft")
-      .option("xfr", "AXFR")
-      .option("fixed-timestamp-micros", TsMicros.toString)
-      .load()
+    axfr(s, wire, "dz.graft")
       .select(col("fqdn"), col("ip"), col("zone"), col("_serial"))
       .orderBy("fqdn", "ip")
   }
@@ -800,9 +647,8 @@ object Connector {
     * adds landed in a single message, not a wipe message plus an add
     * message. */
   def qDnsOverwrite(s: SparkSession, dir: String): DataFrame = {
-    val port = freshPort("q_dns_overwrite")
-    InMemoryDnsServer.reset(Host, port)
-    val srv = InMemoryDnsServer.at(Host, port)
+    val wire = freshWire("q_dns_overwrite")
+    val srv = wire.backing
     srv.addZone("oz.graft.", (0 to 5).map(k => ARecord(s"o$k.oz.graft.", s"10.8.0.$k")))
     srv.addZone("keep.graft.", (0 to 2).map(k => ARecord(s"k$k.keep.graft.", s"10.8.1.$k")))
     import s.implicits._
@@ -813,15 +659,10 @@ object Connector {
         timestamp_micros(lit(TsMicros) + $"id").as("timestamp"),
         lit(300).as("ttl"))
       .write.format("dns_update")
-      .option("server", Host).option("port", port.toString)
+      .option("server", wire.host).option("port", wire.port.toString)
       .mode("overwrite").save()
 
-    s.read.format("dns")
-      .option("server", Host).option("port", port.toString)
-      .option("organization", "graft").option("zones", "oz.graft,keep.graft")
-      .option("xfr", "AXFR")
-      .option("fixed-timestamp-micros", TsMicros.toString)
-      .load()
+    axfr(s, wire, "oz.graft,keep.graft")
       .select(col("fqdn"), col("ip"), col("zone"), col("_serial"))
       .orderBy("fqdn", "ip")
   }
@@ -855,17 +696,16 @@ object Connector {
     * (op='noop'), which must CARRY OVER unchanged — the group
     * semantics a delta operation wouldn't exercise. */
   def qDnsMerge(s: SparkSession, dir: String): DataFrame = {
-    val port = freshPort("q_dns_merge")
-    InMemoryDnsServer.reset(Host, port)
-    val srv = InMemoryDnsServer.at(Host, port)
+    val wire = freshWire("q_dns_merge")
+    val srv = wire.backing
     srv.addZone("mz.graft.", (0 to 7).map(k => ARecord(s"m$k.mz.graft.", s"10.20.0.$k")))
     srv.addZone("m2z.graft.", (0 to 3).map(k => ARecord(s"n$k.m2z.graft.", s"10.21.0.$k")))
     srv.addZone("keep.graft.", (0 to 2).map(k => ARecord(s"k$k.keep.graft.", s"10.22.0.$k")))
-    val tbl = s"graft_dns_merge_$port"
+    val tbl = s"graft_dns_merge_${wire.port}"
     s.sql(s"DROP TABLE IF EXISTS $tbl")
     s.sql(
       s"""CREATE TABLE $tbl USING dns_update
-         |OPTIONS (server '$Host', port '$port', zones 'mz.graft,m2z.graft',
+         |OPTIONS (server '${wire.host}', port '${wire.port}', zones 'mz.graft,m2z.graft',
          |  `fixed-timestamp-micros` '$TsMicros')""".stripMargin)
     s.sql(
       s"""SELECT * FROM VALUES
@@ -888,12 +728,7 @@ object Connector {
          |  (action, fqdn, ip, timestamp, ttl)
          |  VALUES ('IXFR_ADD', s.fqdn, s.ip, timestamp_micros(${TsMicros + 1L}), 300)
          |""".stripMargin)
-    s.read.format("dns")
-      .option("server", Host).option("port", port.toString)
-      .option("organization", "graft").option("zones", "mz.graft,m2z.graft,keep.graft")
-      .option("xfr", "AXFR")
-      .option("fixed-timestamp-micros", TsMicros.toString)
-      .load()
+    axfr(s, wire, "mz.graft,m2z.graft,keep.graft")
       .select(col("fqdn"), col("ip"), col("zone"), col("_serial"))
       .orderBy("fqdn", "ip")
   }
@@ -934,10 +769,8 @@ object Connector {
    // plus the AXFR read-back run as the staging; the key reads back.
    Replay.result(s, dir, "dns_stream_sink") {
     import s.implicits._
-    val port = freshPort("q_dns_stream_sink")
-    InMemoryDnsServer.reset(Host, port)
-    val srv = InMemoryDnsServer.at(Host, port)
-    srv.addZone("sk.graft.", (0 to 4).map(k => ARecord(s"seed$k.sk.graft.", s"10.8.0.$k")))
+    val wire = freshWire("q_dns_stream_sink")
+    wire.backing.addZone("sk.graft.", (0 to 4).map(k => ARecord(s"seed$k.sk.graft.", s"10.8.0.$k")))
 
     val base = Scratch.fresh("dns_stream_sink", dir)
     val k = $"id" % 8
@@ -954,16 +787,10 @@ object Connector {
 
     Replay.run("dns_stream_sink", s.readStream.schema(DnsSchemas.write).parquet(s"$base/log")
       .writeStream.format("dns_update")
-      .option("server", Host).option("port", port.toString)
+      .option("server", wire.host).option("port", wire.port.toString)
       .option("checkpointLocation", s"$base/ck")): Unit
 
-    s.read.format("dns")
-      .option("server", Host).option("port", port.toString)
-      .option("organization", "graft").option("zones", "sk.graft")
-      .option("xfr", "AXFR")
-      .option("fixed-timestamp-micros", TsMicros.toString)
-      .load()
-      .select("fqdn", "ip", "zone")
+    axfr(s, wire, "sk.graft").select("fqdn", "ip", "zone")
    }.orderBy("fqdn", "ip")
 
   /** Final zone: seeds 3-4 survive (0-2 deleted), n0..n4 carry BOTH
@@ -997,9 +824,8 @@ object Connector {
    // as StreamingOps' staged replays — both lifecycles still run, in
    // this process, as the staging; the timed key reads the artifact).
    Replay.result(s, dir, "dns_stream") {
-    val port = freshPort("q_dns_stream")
-    InMemoryDnsServer.reset(Host, port)
-    val srv = InMemoryDnsServer.at(Host, port)
+    val wire = freshWire("q_dns_stream")
+    val srv = wire.backing
     srv.addZone("st.graft.", (0 to 9).map(i => ARecord(s"h$i.st.graft.", s"10.5.0.$i")))
 
     val base = Scratch.fresh("dns_stream", dir)
@@ -1008,7 +834,7 @@ object Connector {
 
     def runOnce(): Unit =
       Replay.run("dns_stream", s.readStream.format("dns")
-        .option("server", Host).option("port", port.toString)
+        .option("server", wire.host).option("port", wire.port.toString)
         .option("organization", "graft").option("zones", "st.graft")
         .option("fixed-timestamp-micros", TsMicros.toString)
         .load()
@@ -1043,9 +869,8 @@ object Connector {
     * hash. */
   def qDnsZoneChange(s: SparkSession, dir: String): DataFrame =
    Replay.result(s, dir, "dns_zone_change") {
-    val port = freshPort("q_dns_zone_change")
-    InMemoryDnsServer.reset(Host, port)
-    val srv = InMemoryDnsServer.at(Host, port)
+    val wire = freshWire("q_dns_zone_change")
+    val srv = wire.backing
     srv.addZone("zca.graft.", (0 to 3).map(i => ARecord(s"a$i.zca.graft.", s"10.6.0.$i")))
     srv.addZone("zcb.graft.", (0 to 2).map(i => ARecord(s"b$i.zcb.graft.", s"10.6.1.$i")))
 
@@ -1055,7 +880,7 @@ object Connector {
 
     def runOnce(zones: String): Unit =
       Replay.run("dns_zone_change", s.readStream.format("dns")
-        .option("server", Host).option("port", port.toString)
+        .option("server", wire.host).option("port", wire.port.toString)
         .option("organization", "graft").option("zones", zones)
         .option("fixed-timestamp-micros", TsMicros.toString)
         .load()
@@ -1092,18 +917,16 @@ object Connector {
     * moves a batch_id, duplicates rows, or drops a zone. */
   def qDnsRatelimit(s: SparkSession, dir: String): DataFrame = {
    val staged = Scratch.staged("dns_ratelimit_result", dir) { sb =>
-    val port = freshPort("q_dns_ratelimit")
-    InMemoryDnsServer.reset(Host, port)
-    val srv = InMemoryDnsServer.at(Host, port)
+    val wire = freshWire("q_dns_ratelimit")
     (0 to 3).foreach { j =>
-      srv.addZone(s"rl$j.graft.",
+      wire.backing.addZone(s"rl$j.graft.",
         (0 to 1 + j).map(i => ARecord(s"a$i.rl$j.graft.", s"10.7.$j.$i")))
     }
     val base = Scratch.fresh("dns_ratelimit", dir)
     val out = s"$base/out"
     val ck = s"$base/ck"
     val q = s.readStream.format("dns")
-      .option("server", Host).option("port", port.toString)
+      .option("server", wire.host).option("port", wire.port.toString)
       .option("organization", "graft")
       .option("zones", "rl0.graft,rl1.graft,rl2.graft,rl3.graft")
       .option("max-zones-per-batch", "2")
@@ -1160,18 +983,16 @@ object Connector {
     * batch_id. */
   def qDnsAvailableNow(s: SparkSession, dir: String): DataFrame =
    Replay.result(s, dir, "dns_available_now") {
-    val port = freshPort("q_dns_available_now")
-    InMemoryDnsServer.reset(Host, port)
-    val srv = InMemoryDnsServer.at(Host, port)
+    val wire = freshWire("q_dns_available_now")
     (0 to 3).foreach { j =>
-      srv.addZone(s"an$j.graft.",
+      wire.backing.addZone(s"an$j.graft.",
         (0 to 1 + j).map(i => ARecord(s"a$i.an$j.graft.", s"10.10.$j.$i")))
     }
     val base = Scratch.fresh("dns_available_now", dir)
     val out = s"$base/out"
     val ck = s"$base/ck"
     Replay.run("dns_available_now", s.readStream.format("dns")
-      .option("server", Host).option("port", port.toString)
+      .option("server", wire.host).option("port", wire.port.toString)
       .option("organization", "graft")
       .option("zones", "an0.graft,an1.graft,an2.graft,an3.graft")
       .option("max-zones-per-batch", "2")
@@ -1252,15 +1073,8 @@ object Connector {
     * formulaic counts (zone j → 10 + j records) make a wrong or
     * double-counted partition an oracle mismatch, not a flake. */
   def qDnsPushedCount(s: SparkSession, dir: String): DataFrame = {
-    val port = freshPort("q_dns_pushed_count")
-    seedReadFixture(port)
-    def load() = s.read.format("dns")
-      .option("server", Host).option("port", port.toString)
-      .option("organization", "graft")
-      .option("zones", "z0.graft,z1.graft,z2.graft,z3.graft")
-      .option("xfr", "AXFR")
-      .option("fixed-timestamp-micros", TsMicros.toString)
-      .load()
+    val wire = readFixture("q_dns_pushed_count")
+    def load() = axfr(s, wire, ReadZones)
     val byZone = load().groupBy(col("zone")).agg(expr("count(*)").as("n_records"))
     val total = load().agg(expr("count(*)").as("n_records"))
       .select(lit("TOTAL").as("zone"), col("n_records"))
@@ -1282,21 +1096,12 @@ object Connector {
     * ABOVE the limit only canonicalizes output order. The partial
     * contract (reader stops early, Spark keeps the global limit) and
     * the agg-composition refusal are spec-asserted. */
-  def qDnsLimit(s: SparkSession, dir: String): DataFrame = {
-    val port = freshPort("q_dns_limit")
-    seedReadFixture(port)
-    s.read.format("dns")
-      .option("server", Host).option("port", port.toString)
-      .option("organization", "graft")
-      .option("zones", "z0.graft,z1.graft,z2.graft,z3.graft")
-      .option("xfr", "AXFR")
-      .option("fixed-timestamp-micros", TsMicros.toString)
-      .load()
+  def qDnsLimit(s: SparkSession, dir: String): DataFrame =
+    axfr(s, readFixture("q_dns_limit"), ReadZones)
       .filter(col("zone") === "z2.graft.")
       .select("action", "fqdn", "ip", "zone")
       .limit(5)
       .orderBy("fqdn")
-  }
 
   private val qDnsLimitOracle: String =
     """SELECT 'AXFR' AS action, 'h'||i||'.z2.graft.' AS fqdn,
@@ -1316,20 +1121,11 @@ object Connector {
     * unique, so the top-7 set has no tie to break. The pushed shape
     * (`PushedTopN=[ORDER BY fqdn ASC LIMIT 7]`) is plan-asserted in
     * ReadConnectorSpec. */
-  def qDnsTopn(s: SparkSession, dir: String): DataFrame = {
-    val port = freshPort("q_dns_topn")
-    seedReadFixture(port)
-    s.read.format("dns")
-      .option("server", Host).option("port", port.toString)
-      .option("organization", "graft")
-      .option("zones", "z0.graft,z1.graft,z2.graft,z3.graft")
-      .option("xfr", "AXFR")
-      .option("fixed-timestamp-micros", TsMicros.toString)
-      .load()
+  def qDnsTopn(s: SparkSession, dir: String): DataFrame =
+    axfr(s, readFixture("q_dns_topn"), ReadZones)
       .select("action", "fqdn", "ip", "zone")
       .orderBy("fqdn")
       .limit(7)
-  }
 
   private val qDnsTopnOracle: String =
     """WITH h AS (
@@ -1350,22 +1146,13 @@ object Connector {
     * point, it pins the reader's UTF8 comparison against DuckDB's).
     * A multi-zone scan refuses the offset (skipping m rows per
     * partition is not the global skip); that refusal is spec-pinned. */
-  def qDnsOffset(s: SparkSession, dir: String): DataFrame = {
-    val port = freshPort("q_dns_offset")
-    seedReadFixture(port)
-    s.read.format("dns")
-      .option("server", Host).option("port", port.toString)
-      .option("organization", "graft")
-      .option("zones", "z0.graft,z1.graft,z2.graft,z3.graft")
-      .option("xfr", "AXFR")
-      .option("fixed-timestamp-micros", TsMicros.toString)
-      .load()
+  def qDnsOffset(s: SparkSession, dir: String): DataFrame =
+    axfr(s, readFixture("q_dns_offset"), ReadZones)
       .filter(col("zone") === "z2.graft.")
       .select("action", "fqdn", "ip", "zone")
       .orderBy("fqdn")
       .offset(2)
       .limit(5)
-  }
 
   private val qDnsOffsetOracle: String =
     """SELECT 'AXFR' AS action, 'h'||i||'.z2.graft.' AS fqdn,
@@ -1390,26 +1177,13 @@ object Connector {
     * difference between shuffling every record of every zone and
     * joining transfer-local. Results are conf-independent; only the
     * exchanges differ. */
-  def qDnsSpj(s: SparkSession, dir: String): DataFrame = {
-    val port = freshPort("q_dns_spj")
-    seedReadFixture(port)
-    spjJoin(s, port)
-  }
+  def qDnsSpj(s: SparkSession, dir: String): DataFrame =
+    spjJoin(s, readFixture("q_dns_spj"))
 
-  private[graft] def seedSpjFixture(): Int = {
-    val port = freshPort("q_dns_spj_audit")
-    seedReadFixture(port)
-    port
-  }
+  private[graft] def seedSpjFixture(): WireDnsServer = readFixture("q_dns_spj_audit")
 
-  private[graft] def spjJoin(s: SparkSession, port: Int): DataFrame = {
-    def load() = s.read.format("dns")
-      .option("server", Host).option("port", port.toString)
-      .option("organization", "graft")
-      .option("zones", "z0.graft,z1.graft,z2.graft,z3.graft")
-      .option("xfr", "AXFR")
-      .option("fixed-timestamp-micros", TsMicros.toString)
-      .load()
+  private[graft] def spjJoin(s: SparkSession, wire: WireDnsServer): DataFrame = {
+    def load() = axfr(s, wire, ReadZones)
     val records = load().select(col("zone"), col("fqdn"), col("ip"))
     val census = load().groupBy(col("zone")).agg(count(col("fqdn")).as("zone_records"))
     records.hint("merge").join(census, Seq("zone"))
@@ -1423,14 +1197,8 @@ object Connector {
     * side, so BOTH scans statically prune to the two zones (two
     * transfers each, not four) and the join still plans
     * storage-partitioned — pruning and SPJ compose. */
-  private[graft] def spjSubsetJoin(s: SparkSession, port: Int): DataFrame = {
-    def load() = s.read.format("dns")
-      .option("server", Host).option("port", port.toString)
-      .option("organization", "graft")
-      .option("zones", "z0.graft,z1.graft,z2.graft,z3.graft")
-      .option("xfr", "AXFR")
-      .option("fixed-timestamp-micros", TsMicros.toString)
-      .load()
+  private[graft] def spjSubsetJoin(s: SparkSession, wire: WireDnsServer): DataFrame = {
+    def load() = axfr(s, wire, ReadZones)
     val records = load().select(col("zone"), col("fqdn"), col("ip"))
     val census = load()
       .filter(col("zone").isin("z1.graft.", "z3.graft."))
@@ -1456,9 +1224,6 @@ object Connector {
     "q_dns_runtime_prune" -> qDnsRuntimePrune,
     "q_dns_roundtrip" -> qDnsRoundtrip,
     "q_dns_ixfr" -> qDnsIxfr,
-    "q_dns_wire_read" -> qDnsWireRead,
-    "q_dns_wire_roundtrip" -> qDnsWireRoundtrip,
-    "q_dns_wire_ixfr" -> qDnsWireIxfr,
     "q_dns_sql" -> qDnsSql,
     "q_dns_sql_insert" -> qDnsSqlInsert,
     "q_dns_stream" -> qDnsStream,
@@ -1489,17 +1254,14 @@ object Connector {
     Set("q_dns_stream", "q_dns_stream_sink", "q_dns_zone_change", "q_dns_ratelimit",
       "q_dns_available_now")
 
-  /** Wire and SQL variants share the in-memory oracles verbatim —
-    * transport and registration surface must never change results. */
+  /** The SQL variant shares q_dns_read's oracle verbatim —
+    * registration surface must never change results. */
   val oracles: Map[String, String] = Map(
     "q_dns_read" -> qDnsReadOracle,
     "q_dns_zone_pruned" -> qDnsZonePrunedOracle,
     "q_dns_runtime_prune" -> qDnsRuntimePruneOracle,
     "q_dns_roundtrip" -> qDnsRoundtripOracle,
     "q_dns_ixfr" -> qDnsIxfrOracle,
-    "q_dns_wire_read" -> qDnsReadOracle,
-    "q_dns_wire_roundtrip" -> qDnsRoundtripOracle,
-    "q_dns_wire_ixfr" -> qDnsIxfrOracle,
     "q_dns_sql" -> qDnsReadOracle,
     "q_dns_sql_insert" -> qDnsSqlInsertOracle,
     "q_dns_stream" -> qDnsStreamOracle,

@@ -2,14 +2,14 @@ package graft.sources.dns
 
 import scala.collection.mutable
 
-/** The protocol boundary, abstracted. The reference talks to a live
-  * DNS server through dnsjava (`Xfr.java:37-50` for transfers,
-  * `DnsUpdate.java:46-81` for RFC 2136 updates); this build is
-  * zero-egress, so the same two operations are expressed as traits and
-  * served by an in-process implementation. On a real cluster the
-  * `client` option selects a network-backed implementation; everything
-  * above this boundary (partition planning, offsets, dedup, validation)
-  * is identical either way.
+/** The protocol boundary. The reference talks to a live DNS server
+  * through dnsjava (`Xfr.java:37-50` for transfers, `DnsUpdate.java:46-81`
+  * for RFC 2136 updates). Here the two operations are traits with one
+  * implementation each, the RFC 1035/1995/2136 wire client
+  * ([[WireTransferClient]], [[WireUpdateEmitter]] in wire.scala), which
+  * every read, write and row-level path constructs from the connector's
+  * `server`/`port`/`timeout` options. The traits stay so that tests can
+  * substitute fakes.
   */
 trait ZoneTransferClient extends Serializable {
   /** Run a zone transfer. `serial == 0` or xfr=AXFR means full transfer
@@ -57,28 +57,10 @@ trait UpdateEmitter extends Serializable {
   def overwrite(zone: String, wipeNames: Seq[String], adds: Seq[DnsUpdateRecord]): Unit
 }
 
-object DnsClients {
-  /** Resolve the client implementation named by the `client` option.
-    * Executors call this from partition readers/writers, so resolution
-    * must be side-effect free and local. */
-  def transferClient(opts: DnsCommonOptions): ZoneTransferClient = opts.client match {
-    case "inmemory" => new InMemoryTransferClient(opts.server, opts.port)
-    case "wire" => new WireTransferClient(opts.server, opts.port)
-    case other => throw new IllegalArgumentException(
-      s"unknown dns client '$other' (this build ships: inmemory, wire)")
-  }
-
-  def updateEmitter(opts: DnsCommonOptions): UpdateEmitter = opts.client match {
-    case "inmemory" => new InMemoryUpdateEmitter(opts.server, opts.port, opts.timeoutSec)
-    case "wire" => new WireUpdateEmitter(opts.server, opts.port, opts.timeoutSec)
-    case other => throw new IllegalArgumentException(
-      s"unknown dns client '$other' (this build ships: inmemory, wire)")
-  }
-}
-
-/** In-process DNS server: zones with SOA serials, AXFR/IXFR semantics
-  * and dynamic updates. Thread-safe. Stands in for the reference's
-  * Bind9 testcontainer (BindContainerFactory.java:21-22).
+/** Zone store: zones with SOA serials, AXFR/IXFR semantics and dynamic
+  * updates. Thread-safe. [[WireDnsServer]] serves it over loopback TCP,
+  * standing in for the reference's Bind9 testcontainer
+  * (BindContainerFactory.java:21-22).
   */
 final class InMemoryDnsServer {
   private final class ZoneState {
@@ -186,68 +168,4 @@ final class InMemoryDnsServer {
   }
 
   def serialOf(zone: String): Long = synchronized(state(zone).serial)
-}
-
-/** Process-wide registry of in-memory servers keyed by (host, port).
-  * local[N] runs executors in the driver JVM, so readers/writers reach
-  * the same instance; a networked client implementation replaces this
-  * on a real cluster.
-  */
-object InMemoryDnsServer {
-  private val servers = mutable.Map.empty[(String, Int), InMemoryDnsServer]
-
-  def at(host: String, port: Int): InMemoryDnsServer = synchronized {
-    servers.getOrElseUpdate((host, port), new InMemoryDnsServer)
-  }
-
-  def exists(host: String, port: Int): Boolean = synchronized {
-    servers.contains((host, port))
-  }
-
-  def reset(host: String, port: Int): Unit = synchronized { servers -= ((host, port)) }
-
-  /** The server a client reaches at (host, port) for `what`: timeout 0
-    * always fails (reference failure matrix, the wire client's
-    * contract too), and an address with no registered server refuses. */
-  private[dns] def reach(host: String, port: Int, timeoutSec: Int,
-                         what: String): InMemoryDnsServer = {
-    if (timeoutSec == 0)
-      throw new java.net.SocketTimeoutException(s"$what timed out (timeout=0)")
-    if (!exists(host, port))
-      throw new java.net.ConnectException(s"no DNS server at $host:$port")
-    at(host, port)
-  }
-}
-
-final class InMemoryTransferClient(host: String, port: Int) extends ZoneTransferClient {
-  override def transfer(zone: String, serial: Long, xfr: XfrType,
-                        timeoutSec: Int): TransferResult = {
-    val server = InMemoryDnsServer.reach(host, port, timeoutSec, s"zone transfer of '$zone'")
-    xfr match {
-      case XfrType.AXFR => server.axfr(zone) // always full, serial ignored (DnsZoneRDD.java:76-80)
-      case XfrType.IXFR if serial == 0L => server.axfr(zone) // serial 0 ⇒ AXFR (Xfr.java:43-48)
-      case XfrType.IXFR => server.ixfr(zone, serial)
-    }
-  }
-}
-
-/** The sink's `timeout` option reaches the emitter the same way the
-  * reference hands it to its update resolver (DnsUpdate.java:46-81):
-  * via construction. The in-memory server answers instantly, so the
-  * only observable semantic is the failure matrix's timeout=0 ⇒
-  * immediate timeout, mirroring the transfer client. */
-final class InMemoryUpdateEmitter(host: String, port: Int, timeoutSec: Int) extends UpdateEmitter {
-  private def server(zone: String): InMemoryDnsServer =
-    InMemoryDnsServer.reach(host, port, timeoutSec, s"update of '$zone'")
-
-  override def update(zone: String, changes: Seq[DnsUpdateRecord]): Unit =
-    server(zone).update(zone, changes.map { u =>
-      ZoneChange(ARecord(u.fqdn, u.ip), delete = u.action == DnsAction.IxfrDelete)
-    })
-
-  override def overwrite(zone: String, wipeNames: Seq[String],
-                         adds: Seq[DnsUpdateRecord]): Unit =
-    server(zone).applyOps(zone,
-      wipeNames.map(DeleteNameOp(_)) ++
-        adds.map(u => AddOp(ARecord(u.fqdn, u.ip))))
 }

@@ -11,8 +11,7 @@ import scala.jdk.CollectionConverters._
   * (SURVEY.md §2.3.1): `ignore-failures` defaults to a clean `false`
   * instead of parsing the option *name* as a boolean.
   */
-final case class DnsCommonOptions(server: String, port: Int, timeoutSec: Int,
-                                  client: String) {
+final case class DnsCommonOptions(server: String, port: Int, timeoutSec: Int) {
   require(server.nonEmpty, "option 'server' is required")
   require(port >= 1 && port <= 65535, s"option 'port' out of range: $port")
   require(timeoutSec >= 0, s"option 'timeout' must be >= 0: $timeoutSec")
@@ -78,11 +77,6 @@ object DnsOptions {
   /** Bytes per A-record row the row estimate assumes: the default
     * 256 KiB bound is 2048 rows per zone. */
   val EstimatedRowBytes = 128L
-  /** `inmemory` (default) talks to the in-process server directly;
-    * `wire` is a real TCP client speaking RFC 1035/1995/2136 (the
-    * reference's dnsjava role) — loopback-only in this zero-egress
-    * build, but protocol-complete for the connector's record scope. */
-  val DefaultClient = "inmemory"
   /** TTL the row-level scan presents for current records: the server
     * model stores A records as (name, ip) only (reference parity), so
     * rows written back by UPDATE/MERGE carry this nominal TTL unless
@@ -94,8 +88,7 @@ object DnsOptions {
       server = o.getOrElse("server",
         throw new IllegalArgumentException("option 'server' is required")),
       port = o.get("port").map(_.toInt).getOrElse(DefaultPort),
-      timeoutSec = o.get("timeout").map(_.toInt).getOrElse(DefaultTimeoutSec),
-      client = o.getOrElse("client", DefaultClient))
+      timeoutSec = o.get("timeout").map(_.toInt).getOrElse(DefaultTimeoutSec))
 
   def source(javaMap: java.util.Map[String, String]): DnsSourceOptions =
     source(lowerKeys(javaMap))

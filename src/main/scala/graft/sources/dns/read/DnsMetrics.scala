@@ -10,7 +10,7 @@ import org.apache.spark.sql.connector.metric.{CustomSumMetric, CustomTaskMetric}
   * per scan node and renders them in the SQL UI — at fleet scale this
   * is how an operator sees WHAT a dns scan moved, not just how long
   * it took. Names are the contract (`DnsMetricsSpec` pins them and
-  * the values against the in-memory server's zone contents). */
+  * the values against the loopback server's zone contents). */
 object DnsMetrics {
   val RecordsName = "dnsTransferRecords"
   val BytesName = "dnsTransferBytes"
@@ -25,7 +25,7 @@ final class DnsRecordsMetric extends CustomSumMetric {
 
 /** Approximate wire payload: UTF-8 bytes of each record's fqdn + ip
   * (the rdata this connector projects — headers/compression excluded,
-  * so the number is transport-independent and exactly reproducible). */
+  * so the number is encoding-independent and exactly reproducible). */
 final class DnsBytesMetric extends CustomSumMetric {
   override def name(): String = DnsMetrics.BytesName
   override def description(): String = "dns transfer payload bytes (fqdn+ip)"

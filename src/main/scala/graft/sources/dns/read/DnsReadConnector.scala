@@ -536,10 +536,7 @@ final class DnsPartitionReader(opts: DnsSourceOptions, schema: StructType,
                                counters: Option[DnsStreamCounters])
   extends PartitionReader[InternalRow] {
 
-  // Configuration errors (unknown client name) must always propagate;
-  // only the transfer itself is subject to the ignore-failures policy
-  // (reference swallows transfer errors only — DnsZoneRDD.java:83-92).
-  private val client = DnsClients.transferClient(opts.common)
+  private val client = new WireTransferClient(opts.common.server, opts.common.port)
 
   // Custom-metric counters, captured while the transfer materializes
   // below (reported via currentMetricsValues — DnsMetrics.scala).

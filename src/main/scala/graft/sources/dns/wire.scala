@@ -4,18 +4,16 @@ import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, EOFE
 import java.net.{InetSocketAddress, ServerSocket, Socket}
 import java.nio.charset.StandardCharsets
 
-/** DNS wire protocol: the networked counterpart of the in-memory
-  * client, hand-built from the public RFCs (1035 message format and
-  * TCP framing, 5936 AXFR, 1995 IXFR, 2136 dynamic update) — the role
-  * dnsjava plays in the reference (Xfr.java:37-50,
-  * DnsUpdate.java:46-81). The zero-egress build can't reach a real
-  * BIND, so [[WireDnsServer]] serves the same protocol over loopback
-  * TCP from an [[InMemoryDnsServer]]; the client side
-  * ([[WireTransferClient]], [[WireUpdateEmitter]]) is a real socket
-  * client — framing, timeouts, rcode handling — selected with
-  * `client=wire`, and would point at any standards-compliant server
-  * unchanged. Scope: A records in class IN, the subset the connector's
-  * schema carries.
+/** DNS wire protocol, the connector's one transport, hand-built from
+  * the public RFCs (1035 message format and TCP framing, 5936 AXFR,
+  * 1995 IXFR, 2136 dynamic update) — the role dnsjava plays in the
+  * reference (Xfr.java:37-50, DnsUpdate.java:46-81). The zero-egress
+  * build can't reach a real BIND, so [[WireDnsServer]] serves the same
+  * protocol over loopback TCP from an [[InMemoryDnsServer]]; the client
+  * side ([[WireTransferClient]], [[WireUpdateEmitter]]) is a real socket
+  * client — framing, timeouts, rcode handling — and would point at any
+  * standards-compliant server unchanged. Scope: A records in class IN,
+  * the subset the connector's schema carries.
   */
 object DnsWire {
   // record types / classes (RFC 1035 §3.2, RFC 1995, RFC 5936)
@@ -174,10 +172,12 @@ object DnsWire {
   private def encodedBound(m: Message): Int = {
     var n = 12
     m.questions.foreach(q => n += q.name.length + 2 + 4)
-    def rrs(s: Seq[Rr]): Unit = s.foreach(r => n += r.name.length + 2 + 10 + 22)
+    def rrs(s: Seq[Rr]): Unit = s.foreach(r => n += rrBound(r))
     rrs(m.answers); rrs(m.authority); rrs(m.additional)
     n
   }
+
+  private def rrBound(r: Rr): Int = r.name.length + 2 + 10 + 22
 
   private def write(m: Message, offset: Int): Writer = {
     val w = new Writer(offset + encodedBound(m), offset)
@@ -281,6 +281,32 @@ object DnsWire {
     w.toArray
   }
 
+  /** `m` as consecutive messages that each fit one frame by
+    * [[encodedBound]]: its authority section (an update's RRs) is cut,
+    * in order, into runs that share `m`'s header and question. A
+    * message whose bound fits comes back as is, so it is never split
+    * and encodes once. An RR too large for any frame is a run of its
+    * own and fails at [[frame]]. */
+  def splitForFrames(m: Message): Seq[Message] =
+    if (encodedBound(m) <= MaxFramedBytes) Seq(m)
+    else {
+      val fixed = encodedBound(m.copy(authority = Nil))
+      val runs = scala.collection.mutable.ArrayBuffer.empty[Message]
+      val run = scala.collection.mutable.ArrayBuffer.empty[Rr]
+      var size = fixed
+      m.authority.foreach { r =>
+        if (run.nonEmpty && size + rrBound(r) > MaxFramedBytes) {
+          runs += m.copy(authority = run.toSeq)
+          run.clear()
+          size = fixed
+        }
+        run += r
+        size += rrBound(r)
+      }
+      runs += m.copy(authority = run.toSeq)
+      runs.toSeq
+    }
+
   /** Writes `m` as one frame in a single `write`. It does not flush:
     * the caller flushes once per exchange, after its last message. */
   def writeFramed(out: OutputStream, m: Message): Unit = out.write(frame(m))
@@ -294,10 +320,10 @@ object DnsWire {
 }
 
 /** Loopback TCP server speaking the wire protocol, backed by an
-  * [[InMemoryDnsServer]] for zone state (same semantics the in-memory
-  * client exercises — one code path for AXFR/IXFR/update logic, two
-  * transports). Single-threaded accept loop on a daemon thread; each
-  * connection handles any number of framed requests. */
+  * [[InMemoryDnsServer]] for zone state (AXFR/IXFR/update logic lives
+  * there; this class is only the protocol). Single-threaded accept loop
+  * on a daemon thread; each connection handles any number of framed
+  * requests. */
 final class WireDnsServer(val backing: InMemoryDnsServer = new InMemoryDnsServer) {
   import DnsWire._
 
@@ -433,23 +459,6 @@ final class WireDnsServer(val backing: InMemoryDnsServer = new InMemoryDnsServer
     }
 }
 
-/** Process-wide registry of loopback wire servers, mirroring
-  * [[InMemoryDnsServer]]'s: tests start a server, executors (threads
-  * in the same JVM under local[N]) connect to its real TCP port. */
-object WireDnsServer {
-  private val servers = scala.collection.mutable.Map.empty[Int, WireDnsServer]
-
-  def start(): WireDnsServer = synchronized {
-    val s = new WireDnsServer()
-    servers(s.port) = s
-    s
-  }
-
-  def stop(port: Int): Unit = synchronized {
-    servers.remove(port).foreach(_.close())
-  }
-}
-
 private object WireSocket {
   /** Both ends buffer their streams, so a framed read or write costs no
     * syscall of its own; writers flush once per exchange. */
@@ -461,9 +470,9 @@ private object WireSocket {
     new BufferedOutputStream(sock.getOutputStream, BufferBytes)
 
   /** Open, run, close. timeout=0 always fails (reference failure
-    * matrix, same contract as the in-memory client); otherwise it is a
-    * real connect + SO read timeout. TCP_NODELAY is on: each exchange
-    * is one flushed request, so Nagle's algorithm only adds delay. */
+    * matrix); otherwise it is a real connect + SO read timeout.
+    * TCP_NODELAY is on: each exchange is one flushed request, so
+    * Nagle's algorithm only adds delay. */
   def withSocket[A](host: String, port: Int, timeoutSec: Int, what: String)
                    (f: (DataInputStream, OutputStream) => A): A = {
     if (timeoutSec == 0)
@@ -619,41 +628,61 @@ final class WireTransferClient(host: String, port: Int) extends ZoneTransferClie
   }
 }
 
-/** RFC 2136 dynamic updates over TCP: one message per (zone, batch),
-  * adds as class-IN RRs with the record TTL, deletes as class-NONE;
-  * any rcode != 0 throws (job fails, like the reference). A batch too
-  * large for one TCP frame fails before a connection is opened. */
+/** RFC 2136 dynamic updates over TCP: adds as class-IN RRs with the
+  * record TTL, deletes as class-NONE; any rcode != 0 throws (job fails,
+  * like the reference). Every message is framed before a connection is
+  * opened, so a batch too large for one TCP frame fails unsent. */
 final class WireUpdateEmitter(host: String, port: Int, timeoutSec: Int) extends UpdateEmitter {
   import DnsWire._
 
   override def update(zone: String, changes: Seq[DnsUpdateRecord]): Unit =
-    send("update", zone, changes.map { u =>
+    send("update", zone, Seq(updateMessage(zone, changes)))
+
+  /** The append path's update: `changes` in their order as consecutive
+    * messages on one connection, each within one TCP frame
+    * ([[DnsWire.splitForFrames]]) — one message when they fit. Each
+    * message applies atomically, the batch as a whole does not; appends
+    * are set-semantic, so a retried task re-sends them safely. */
+  def append(zone: String, changes: Seq[DnsUpdateRecord]): Unit =
+    send("update", zone, splitForFrames(updateMessage(zone, changes)))
+
+  /** One atomic overwrite message: §2.5.2 delete-RRset RRs (CLASS ANY,
+    * TTL 0, empty RDATA) for every wiped name, then the adds. */
+  override def overwrite(zone: String, wipeNames: Seq[String],
+                         adds: Seq[DnsUpdateRecord]): Unit =
+    send("overwrite", zone, Seq(message(zone,
+      wipeNames.map(n => Rr(n, TypeA, ClassAny, 0, EmptyData)) ++
+        adds.map(u => Rr(u.fqdn, TypeA, ClassIn, u.ttl.toLong, AData(u.ip))))))
+
+  private def updateMessage(zone: String, changes: Seq[DnsUpdateRecord]): Message =
+    message(zone, changes.map { u =>
       if (u.action == DnsAction.IxfrDelete)
         Rr(u.fqdn, TypeA, ClassNone, 0, AData(u.ip))
       else
         Rr(u.fqdn, TypeA, ClassIn, u.ttl.toLong, AData(u.ip))
     })
 
-  /** One atomic overwrite message: §2.5.2 delete-RRset RRs (CLASS ANY,
-    * TTL 0, empty RDATA) for every wiped name, then the adds. */
-  override def overwrite(zone: String, wipeNames: Seq[String],
-                         adds: Seq[DnsUpdateRecord]): Unit =
-    send("overwrite", zone, wipeNames.map(n => Rr(n, TypeA, ClassAny, 0, EmptyData)) ++
-      adds.map(u => Rr(u.fqdn, TypeA, ClassIn, u.ttl.toLong, AData(u.ip))))
+  private def message(zone: String, rrs: Seq[Rr]): Message =
+    Message(1, queryFlags(OpcodeUpdate),
+      Seq(Question(Fqdn.normalize(zone), TypeSoa, ClassIn)), Nil, rrs, Nil)
 
-  private def send(what: String, zone: String, rrs: Seq[Rr]): Unit = {
-    val bytes = try frame(Message(1, queryFlags(OpcodeUpdate),
-      Seq(Question(Fqdn.normalize(zone), TypeSoa, ClassIn)), Nil, rrs, Nil))
-    catch {
-      case e: IllegalArgumentException => throw new IllegalArgumentException(
-        s"$what of '$zone' with ${rrs.size} changes: ${e.getMessage}", e)
+  /** Frames every message, then sends them in order on one connection,
+    * each answered before the next goes. */
+  private def send(what: String, zone: String, messages: Seq[Message]): Unit = {
+    val frames = messages.map { m =>
+      try frame(m) catch {
+        case e: IllegalArgumentException => throw new IllegalArgumentException(
+          s"$what of '$zone' with ${m.authority.size} changes: ${e.getMessage}", e)
+      }
     }
     WireSocket.withSocket(host, port, timeoutSec, s"$what of '$zone'") { (in, out) =>
-      out.write(bytes)
-      out.flush()
-      val resp = readFramed(in)
-      if (resp.rcode != RcodeNoError)
-        throw new IOException(s"$what of '$zone' rejected: rcode ${resp.rcode}")
+      frames.foreach { bytes =>
+        out.write(bytes)
+        out.flush()
+        val resp = readFramed(in)
+        if (resp.rcode != RcodeNoError)
+          throw new IOException(s"$what of '$zone' rejected: rcode ${resp.rcode}")
+      }
     }
   }
 }

@@ -103,7 +103,7 @@ final class DnsZoneStateReaderFactory(opts: DnsSinkOptions)
       private val rows: Iterator[InternalRow] = {
         // A delta reply would make the group-replace commit wipe every
         // carryover record, so snapshot throws on one.
-        val records = DnsClients.transferClient(opts.common)
+        val records = new WireTransferClient(opts.common.server, opts.common.port)
           .snapshot(p.zone, opts.common.timeoutSec)
         val ts = opts.fixedTimestampMicros.getOrElse(0L)
         records.iterator.map { r =>
@@ -162,8 +162,10 @@ final class DnsReplaceDataWrite(opts: DnsSinkOptions, schema: StructType)
       // Replacement content is a SET — deterministic (fqdn, ip) order,
       // not chronological: there is no apply order to preserve in a
       // state snapshot. Every group is replaced, an empty one wiped.
-      DnsOverwriteStaged.replaceZones(DnsClients.transferClient(opts.common),
-        DnsClients.updateEmitter(opts.common), opts.common.timeoutSec, groups,
+      DnsOverwriteStaged.replaceZones(
+        new WireTransferClient(opts.common.server, opts.common.port),
+        new WireUpdateEmitter(opts.common.server, opts.common.port, opts.common.timeoutSec),
+        opts.common.timeoutSec, groups,
         staged.view.mapValues(_.sortBy(r => (r.fqdn, r.ip))).toMap)
     }
 

@@ -32,10 +32,12 @@ import graft.sources.dns._
   * (action, fqdn, ip) keeping max timestamp (DnsUpdate.java:46-54), then
   * ONE atomic update message per (task × zone) applied in chronological
   * order (the reference iterates a HashMap here — order unspecified; we
-  * fix the quirk deterministically, SURVEY §2.3.5).
+  * fix the quirk deterministically, SURVEY §2.3.5). A zone's batch too
+  * large for one 65,535-byte TCP frame goes as consecutive messages in
+  * the same order ([[WireUpdateEmitter.append]]).
   *
-  * Scale design: the only network per task is one message per zone it
-  * saw; pre-partitioning the input by derived zone
+  * Scale design: the only network per task is one connection per zone
+  * it saw; pre-partitioning the input by derived zone
   * (`repartition(zone_of(fqdn))`) makes that one message per zone
   * cluster-wide — left to the caller, as in the reference.
   */
@@ -134,8 +136,8 @@ final class DnsUpdateTable(opts: DnsSinkOptions) extends Table with SupportsWrit
       case In("ip", vs) => vs.map(_.asInstanceOf[String]).toSet
     }
     val ips: Option[Set[String]] = ipSets.reduceOption(_ intersect _)
-    val client = DnsClients.transferClient(opts.common)
-    val emitter = DnsClients.updateEmitter(opts.common)
+    val client = new WireTransferClient(opts.common.server, opts.common.port)
+    val emitter = new WireUpdateEmitter(opts.common.server, opts.common.port, opts.common.timeoutSec)
     fqdns.groupBy(Fqdn.zoneOf).toSeq.sortBy(_._1).foreach { case (zone, names) =>
       val victims = client.snapshot(zone, opts.common.timeoutSec)
         .filter(r => names.contains(r.fqdn.toLowerCase(java.util.Locale.ROOT)) &&
@@ -234,9 +236,10 @@ final class DnsTruncateWrite(opts: DnsSinkOptions, schema: StructType)
       // partition was demanded, so the cross-task merge sees one
       // task's deduped content and keeps its chronological order.
       val staged = DnsOverwriteStaged.merge(messages)
-      DnsOverwriteStaged.replaceZones(DnsClients.transferClient(opts.common),
-        DnsClients.updateEmitter(opts.common), opts.common.timeoutSec,
-        staged.keys.toSeq, staged)
+      DnsOverwriteStaged.replaceZones(
+        new WireTransferClient(opts.common.server, opts.common.port),
+        new WireUpdateEmitter(opts.common.server, opts.common.port, opts.common.timeoutSec),
+        opts.common.timeoutSec, staged.keys.toSeq, staged)
     }
     override def abort(messages: Array[WriterCommitMessage]): Unit = ()
   }
@@ -298,7 +301,8 @@ final class DnsWriterFactory(opts: DnsSinkOptions, idx: FieldIndices,
 
 /** Executor-side writer. Buffers validated updates per derived zone;
   * on the APPEND path all network I/O happens in commit() — one
-  * message per zone.
+  * connection per zone, one message unless the zone's batch outgrows
+  * a TCP frame.
   *
   * Failure semantics, append path: a task that fails before commit()
   * sends nothing (abort() just drops the buffers), so Spark's retry
@@ -315,8 +319,8 @@ final class DnsDataWriter(opts: DnsSinkOptions, idx: FieldIndices,
                           truncating: Boolean = false)
   extends DataWriter[InternalRow] {
 
-  // Configuration errors must propagate at task start, not mid-buffer.
-  private val emitter = DnsClients.updateEmitter(opts.common)
+  private val emitter =
+    new WireUpdateEmitter(opts.common.server, opts.common.port, opts.common.timeoutSec)
 
   private val perZone = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[DnsUpdateRecord]]
 
@@ -324,12 +328,11 @@ final class DnsDataWriter(opts: DnsSinkOptions, idx: FieldIndices,
     // Validation mirrors DnsPartitionHandler.java:69-77 via the shared
     // rule table (DnsValidation — the same function the gated
     // q_dns_validate audit classifies with). Address validity is
-    // checked HERE, transport-independently: commit() sends one
-    // message per zone, so a row that only failed at wire encoding
-    // would abort the job AFTER earlier zones were already applied;
-    // failing the task in write() keeps every transport
-    // all-or-nothing per task (the reference fails the same way when
-    // dnsjava parses the address).
+    // checked HERE: commit() sends zone after zone, so a row that only
+    // failed at wire encoding would abort the job AFTER earlier zones
+    // were already applied; failing the task in write() keeps the
+    // write all-or-nothing per task (the reference fails the same way
+    // when dnsjava parses the address).
     def strOpt(i: Int): Option[String] =
       if (row.isNullAt(i)) None else Some(row.getUTF8String(i).toString)
     val actionOpt = strOpt(idx.action)
@@ -374,7 +377,7 @@ final class DnsDataWriter(opts: DnsSinkOptions, idx: FieldIndices,
       } else {
         perZone.foreach { case (zone, updates) =>
           val deduped = LwwDedup(updates.toSeq)
-          if (deduped.nonEmpty) emitter.update(zone, deduped)
+          if (deduped.nonEmpty) emitter.append(zone, deduped)
         }
         DnsWriteCommitted
       }

@@ -34,9 +34,10 @@ class BenchSpec extends AnyFunSuite {
 
   test("compact line length is independent of suite size") {
     // the rendered TOTAL legitimately grows a few chars with the suite;
-    // normalize it away so the assert pins the structural fields only
+    // normalize it away so the assert pins the structural fields only.
+    // From queries_top's cap on, a larger suite adds nothing.
     def normalized(s: String) = s.replaceAll(""""value":[-0-9.eE]+""", """"value":X""")
-    val (_, c1) = lines(10, Nil)
+    val (_, c1) = lines(Bench.CompactTopKeys, Nil)
     val (_, c2) = lines(1000, Nil)
     assert(normalized(c1).length == normalized(c2).length,
       "a per-query term leaked into the compact line — it will outgrow the tail buffer")
@@ -84,6 +85,19 @@ class BenchSpec extends AnyFunSuite {
     assert(compact.contains("+7 more"))
     assert(full.contains("q_10")) // the full line keeps every message
     assert(!compact.contains('\n'))
+  }
+
+  test("compact line names the 15 heaviest keys and stays bounded with 3 long errors") {
+    val results = (1 to 250).map(i => f"q_synthetic_key_with_a_long_name_$i%03d" -> i * 0.001) :+
+      ("q_failed" -> -1.0)
+    val errs = (1 to 3).map(i => s"q_$i: " + ("Caused by: boom\n" * 200)).toList
+    val (_, compact) = Bench.resultLines(results, Set("q_dns_stream"),
+      Seq(0.083, 0.413, 0.28), errs, "testdata/sf0.1", "32", 4)
+    assert(compact.length < DriverCaptureLimit, s"compact line is ${compact.length} chars")
+    val top = """"queries_top":\{([^}]*)\}""".r.findFirstMatchIn(compact)
+      .getOrElse(fail(s"no queries_top in $compact")).group(1)
+    val named = """"(q_[a-z0-9_]+)":""".r.findAllMatchIn(top).map(_.group(1)).toSeq
+    assert(named == (250 to 236 by -1).map(i => f"q_synthetic_key_with_a_long_name_$i%03d"))
   }
 
   test("official file routes on the committed anchor's core count, not the host's") {

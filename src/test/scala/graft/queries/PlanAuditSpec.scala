@@ -54,20 +54,20 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("q_dns_runtime_prune: the DPP runtime filter reaches the DNS scan") {
-    val port = Connector.seedRuntimePruneFixture(spark, dir)
-    val joined = Connector.runtimePruneJoin(spark, dir, port)
+    val wire = Connector.seedRuntimePruneFixture(spark, dir)
+    val joined = Connector.runtimePruneJoin(spark, dir, wire)
     val s = planString(joined)
     // the planner planted a dynamic-pruning subquery on the scan side…
     assert(s.contains("dynamicpruning"), s)
     // …and the filter reached DnsScan.filter, not just the plan header:
     // only the two wanted zones' transfers actually ran
-    assert(Connector.transfersServed(port) == 2L,
-      s"expected 2 transfers after runtime pruning, got ${Connector.transfersServed(port)}")
+    assert(wire.backing.transferCount == 2L,
+      s"expected 2 transfers after runtime pruning, got ${wire.backing.transferCount}")
   }
 
   test("q_dns_auto_broadcast: reported statistics drive a hint-free static broadcast of the DNS side") {
-    val port = Connector.seedAutoBroadcastFixture()
-    val df = Connector.autoBroadcastJoin(spark, port)
+    val wire = Connector.seedAutoBroadcastFixture()
+    val df = Connector.autoBroadcastJoin(spark, wire)
     // The connector's estimate is what the optimizer sees: 4 surviving
     // zones × the 256 KiB default — not defaultSizeInBytes (Long.Max).
     val v2 = df.queryExecution.optimizedPlan.collect {
@@ -98,10 +98,10 @@ class PlanAuditSpec extends AnyFunSuite {
     // that is everything CostBasedJoinReorder needs to move a join
     // written worst-first (big estate innermost) into cheapest-first
     // order — the multi-way-join payoff column statistics exist for.
-    val port = Connector.seedAutoBroadcastFixture()
+    val wire = Connector.seedAutoBroadcastFixture()
     def estate(zones: String, rowsPerZone: Long) =
       spark.read.format("dns")
-        .option("server", "verify-dns").option("port", port.toString)
+        .option("server", wire.host).option("port", wire.port.toString)
         .option("organization", "graft")
         .option("zones", zones)
         .option("xfr", "AXFR")
@@ -160,8 +160,8 @@ class PlanAuditSpec extends AnyFunSuite {
     // only exchange in the whole plan is the final orderBy's range
     // partitioning. A regression in the partitioning report would
     // surface here as hash exchanges under the join.
-    val port = Connector.seedSpjFixture()
-    val nodes = collectNodes(executed(Connector.spjJoin(spark, port)))
+    val wire = Connector.seedSpjFixture()
+    val nodes = collectNodes(executed(Connector.spjJoin(spark, wire)))
     val hashExchanges = nodes.collect {
       case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
         if e.outputPartitioning.isInstanceOf[org.apache.spark.sql.catalyst.plans.physical.HashPartitioning] => e
@@ -197,8 +197,8 @@ class PlanAuditSpec extends AnyFunSuite {
     // storage-partitioned — the estate-reconciliation-over-a-subset
     // shape. Matched partition values after pruning mean zero hash
     // exchanges, same as the full join.
-    val port = Connector.seedSpjFixture()
-    val df = Connector.spjSubsetJoin(spark, port)
+    val wire = Connector.seedSpjFixture()
+    val df = Connector.spjSubsetJoin(spark, wire)
     df.collect()
     assert(df.count() == 24, s"expected 11+13 rows for z1/z3, got ${df.count()}")
     val nodes = collectNodes(executed(df))

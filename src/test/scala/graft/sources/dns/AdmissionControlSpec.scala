@@ -22,7 +22,7 @@ class AdmissionControlSpec extends AnyFunSuite {
       maxZones: Option[Int]): DnsMicroBatchStream = {
     spark // the stream registers ZoneVersion accumulators on the active session
     val opts = DnsOptions.source(Map(
-      "server" -> "t", "port" -> port.toString, "organization" -> "acme",
+      "server" -> "127.0.0.1", "port" -> port.toString, "organization" -> "acme",
       "zones" -> zones.mkString(",")) ++
       maxZones.map(n => "max-zones-per-batch" -> n.toString))
     new DnsMicroBatchStream(opts, opts.zones, DnsSchemas.read, ck)
@@ -110,27 +110,26 @@ class AdmissionControlSpec extends AnyFunSuite {
     // in the single batch. If this ever changes (Spark honoring
     // limits under Once), the q_dns_ratelimit fixture can simplify —
     // this test is the tripwire.
-    val port = 5464
-    InMemoryDnsServer.reset("t", port)
-    val srv = InMemoryDnsServer.at("t", port)
-    srv.addZone("o1.acme.", Seq(ARecord("x.o1.acme.", "10.9.0.1")))
-    srv.addZone("o2.acme.", Seq(ARecord("y.o2.acme.", "10.9.0.2")))
-    val out = Files.createTempDirectory("dns-adm-out").toString
-    val ck = Files.createTempDirectory("dns-adm-ck2").toString
-    val q = spark.readStream.format("dns")
-      .option("server", "t").option("port", port.toString)
-      .option("organization", "acme")
-      .option("zones", "o1.acme,o2.acme")
-      .option("max-zones-per-batch", "1")
-      .option("fixed-timestamp-micros", "1723400000000000")
-      .load()
-      .writeStream.format("parquet")
-      .option("path", out).option("checkpointLocation", ck)
-      .trigger(Trigger.Once())
-      .start()
-    assert(q.awaitTermination(180000))
-    val got = spark.read.parquet(out)
-    assert(got.count() == 2, "Trigger.Once must transfer both zones in one batch")
-    assert(got.select("zone").distinct().count() == 2)
+    Loopback.withServer { wire =>
+      wire.backing.addZone("o1.acme.", Seq(ARecord("x.o1.acme.", "10.9.0.1")))
+      wire.backing.addZone("o2.acme.", Seq(ARecord("y.o2.acme.", "10.9.0.2")))
+      val out = Files.createTempDirectory("dns-adm-out").toString
+      val ck = Files.createTempDirectory("dns-adm-ck2").toString
+      val q = spark.readStream.format("dns")
+        .option("server", wire.host).option("port", wire.port.toString)
+        .option("organization", "acme")
+        .option("zones", "o1.acme,o2.acme")
+        .option("max-zones-per-batch", "1")
+        .option("fixed-timestamp-micros", "1723400000000000")
+        .load()
+        .writeStream.format("parquet")
+        .option("path", out).option("checkpointLocation", ck)
+        .trigger(Trigger.Once())
+        .start()
+      assert(q.awaitTermination(180000))
+      val got = spark.read.parquet(out)
+      assert(got.count() == 2, "Trigger.Once must transfer both zones in one batch")
+      assert(got.select("zone").distinct().count() == 2)
+    }
   }
 }

@@ -2,92 +2,93 @@ package graft.sources.dns
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** In-memory zone-transfer client behavior, mirroring the reference's
-  * live-server assertions (DnsSourceRelationProviderTest failure matrix;
-  * Xfr.java AXFR/IXFR rules) without a network. */
+/** Zone-transfer client and update emitter behavior over the wire
+  * client against a loopback server, mirroring the reference's
+  * live-server assertions (DnsSourceRelationProviderTest failure
+  * matrix; Xfr.java AXFR/IXFR rules). */
 class ClientSpec extends AnyFunSuite {
+  import Loopback.withServer
 
-  private def freshServer(): (InMemoryDnsServer, DnsCommonOptions) = {
-    val port = 10000 + scala.util.Random.nextInt(50000)
-    InMemoryDnsServer.reset("t", port)
-    val srv = InMemoryDnsServer.at("t", port)
-    (srv, DnsCommonOptions("t", port, 10, "inmemory"))
-  }
+  private def client(srv: WireDnsServer) = new WireTransferClient(srv.host, srv.port)
 
   test("AXFR returns the full zone regardless of serial") {
-    val (srv, o) = freshServer()
-    srv.addZone("example.acme.", Seq(ARecord("a.example.acme.", "10.0.0.1"),
-      ARecord("b.example.acme.", "10.0.0.2")))
-    srv.update("example.acme.", Seq(ARecord("c.example.acme.", "10.0.0.3")), Nil)
-    val c = DnsClients.transferClient(o)
-    val r = c.transfer("example.acme.", 999, XfrType.AXFR, 10)
-    assert(r.isInstanceOf[AxfrResult])
-    assert(r.asInstanceOf[AxfrResult].records.size == 3)
-    assert(r.serial == 2)
+    withServer { srv =>
+      srv.backing.addZone("example.acme.", Seq(ARecord("a.example.acme.", "10.0.0.1"),
+        ARecord("b.example.acme.", "10.0.0.2")))
+      srv.backing.update("example.acme.", Seq(ARecord("c.example.acme.", "10.0.0.3")), Nil)
+      val r = client(srv).transfer("example.acme.", 999, XfrType.AXFR, 10)
+      assert(r.isInstanceOf[AxfrResult])
+      assert(r.asInstanceOf[AxfrResult].records.size == 3)
+      assert(r.serial == 2)
+    }
   }
 
   test("IXFR with serial 0 behaves as AXFR (Xfr.java:43-48)") {
-    val (srv, o) = freshServer()
-    srv.addZone("z.", Seq(ARecord("a.z.", "1.1.1.1")))
-    val r = DnsClients.transferClient(o).transfer("z.", 0, XfrType.IXFR, 10)
-    assert(r.isInstanceOf[AxfrResult])
+    withServer { srv =>
+      srv.backing.addZone("z.", Seq(ARecord("a.z.", "1.1.1.1")))
+      val r = client(srv).transfer("z.", 0, XfrType.IXFR, 10)
+      assert(r.isInstanceOf[AxfrResult])
+    }
   }
 
   test("IXFR returns only deltas since serial; delete-then-add visible") {
-    val (srv, o) = freshServer()
-    srv.addZone("z.", Seq(ARecord("a.z.", "1.1.1.1")))
-    srv.update("z.", Seq(ARecord("b.z.", "2.2.2.2")), Seq(ARecord("a.z.", "1.1.1.1")))
-    val r = DnsClients.transferClient(o).transfer("z.", 1, XfrType.IXFR, 10)
-    val ix = r.asInstanceOf[IxfrResult]
-    assert(ix.deltas.size == 1)
-    assert(ix.deltas.head.adds == Seq(ARecord("b.z.", "2.2.2.2")))
-    assert(ix.deltas.head.deletes == Seq(ARecord("a.z.", "1.1.1.1")))
-    assert(ix.serial == 2)
+    withServer { srv =>
+      srv.backing.addZone("z.", Seq(ARecord("a.z.", "1.1.1.1")))
+      srv.backing.update("z.", Seq(ARecord("b.z.", "2.2.2.2")), Seq(ARecord("a.z.", "1.1.1.1")))
+      val r = client(srv).transfer("z.", 1, XfrType.IXFR, 10)
+      val ix = r.asInstanceOf[IxfrResult]
+      assert(ix.deltas.size == 1)
+      assert(ix.deltas.head.adds == Seq(ARecord("b.z.", "2.2.2.2")))
+      assert(ix.deltas.head.deletes == Seq(ARecord("a.z.", "1.1.1.1")))
+      assert(ix.serial == 2)
+    }
   }
 
   test("IXFR past a journal gap falls back to AXFR") {
-    val (srv, o) = freshServer()
-    srv.addZone("z.", Seq(ARecord("a.z.", "1.1.1.1")))
-    // Journal starts at serial 1; asking for changes since a serial the
-    // journal does not cover must yield a full transfer.
-    val r = DnsClients.transferClient(o).transfer("z.", 5, XfrType.IXFR, 10)
-    assert(r.isInstanceOf[IxfrResult] && r.asInstanceOf[IxfrResult].deltas.isEmpty)
-    srv.update("z.", Seq(ARecord("b.z.", "2.2.2.2")), Nil) // serial 2
-    val r2 = DnsClients.transferClient(o).transfer("z.", -1 & 0xFFFF, XfrType.IXFR, 10)
-    assert(r2.isInstanceOf[AxfrResult] || r2.isInstanceOf[IxfrResult])
+    withServer { srv =>
+      srv.backing.addZone("z.", Seq(ARecord("a.z.", "1.1.1.1")))
+      // Journal starts at serial 1; asking for changes since a serial the
+      // journal does not cover must yield a full transfer.
+      val r = client(srv).transfer("z.", 5, XfrType.IXFR, 10)
+      assert(r.isInstanceOf[IxfrResult] && r.asInstanceOf[IxfrResult].deltas.isEmpty)
+      srv.backing.update("z.", Seq(ARecord("b.z.", "2.2.2.2")), Nil) // serial 2
+      val r2 = client(srv).transfer("z.", -1 & 0xFFFF, XfrType.IXFR, 10)
+      assert(r2.isInstanceOf[AxfrResult] || r2.isInstanceOf[IxfrResult])
+    }
   }
 
   test("timeout 0 always fails; unknown server fails; unknown zone fails") {
-    val (srv, o) = freshServer()
-    srv.addZone("z.", Seq(ARecord("a.z.", "1.1.1.1")))
-    val c = DnsClients.transferClient(o)
-    intercept[java.net.SocketTimeoutException](c.transfer("z.", 0, XfrType.AXFR, 0))
-    intercept[java.net.ConnectException](
-      DnsClients.transferClient(o.copy(port = 1)).transfer("z.", 0, XfrType.AXFR, 10))
-    intercept[IllegalArgumentException](c.transfer("nope.", 0, XfrType.AXFR, 10))
-  }
-
-  test("unknown client name is a configuration error") {
-    intercept[IllegalArgumentException](
-      DnsClients.transferClient(DnsCommonOptions("s", 53, 10, "carrier-pigeon")))
+    withServer { srv =>
+      srv.backing.addZone("z.", Seq(ARecord("a.z.", "1.1.1.1")))
+      val c = client(srv)
+      intercept[java.net.SocketTimeoutException](c.transfer("z.", 0, XfrType.AXFR, 0))
+      intercept[java.net.ConnectException](
+        new WireTransferClient(srv.host, 1).transfer("z.", 0, XfrType.AXFR, 10))
+      // the server answers an unknown zone with NOTAUTH (rcode 9)
+      val e = intercept[java.io.IOException](c.transfer("nope.", 0, XfrType.AXFR, 10))
+      assert(e.getMessage.contains("rcode 9"), e.getMessage)
+    }
   }
 
   test("update applies changes in message order (RFC 2136 sequential-apply)") {
-    val (srv, o) = freshServer()
-    srv.addZone("z.", Nil)
-    val rec = ARecord("h.z.", "9.9.9.9")
-    // add then delete in one message → ends absent
-    srv.update("z.", Seq(ZoneChange(rec, delete = false), ZoneChange(rec, delete = true)))
-    assert(srv.lookup("h.z.").isEmpty)
-    // delete then add in one message → ends present
-    srv.update("z.", Seq(ZoneChange(rec, delete = true), ZoneChange(rec, delete = false)))
-    assert(srv.lookup("h.z.") == Seq("9.9.9.9"))
+    withServer { srv =>
+      srv.backing.addZone("z.", Nil)
+      val em = new WireUpdateEmitter(srv.host, srv.port, 10)
+      def change(action: String) = DnsUpdateRecord(action, "h.z.", "9.9.9.9", 0L, 60)
+      // add then delete in one message → ends absent
+      em.update("z.", Seq(change(DnsAction.IxfrAdd), change(DnsAction.IxfrDelete)))
+      assert(srv.backing.lookup("h.z.").isEmpty)
+      // delete then add in one message → ends present
+      em.update("z.", Seq(change(DnsAction.IxfrDelete), change(DnsAction.IxfrAdd)))
+      assert(srv.backing.lookup("h.z.") == Seq("9.9.9.9"))
+    }
   }
 
   test("update to unknown zone rejects whole message (rcode != 0 equivalent)") {
-    val (_, o) = freshServer()
-    val em = DnsClients.updateEmitter(o)
-    intercept[IllegalArgumentException](em.update("ghost.zone.",
-      Seq(DnsUpdateRecord(DnsAction.IxfrAdd, "a.ghost.zone.", "1.2.3.4", 0L, 60))))
+    withServer { srv =>
+      val em = new WireUpdateEmitter(srv.host, srv.port, 10)
+      intercept[java.io.IOException](em.update("ghost.zone.",
+        Seq(DnsUpdateRecord(DnsAction.IxfrAdd, "a.ghost.zone.", "1.2.3.4", 0L, 60))))
+    }
   }
 }

@@ -6,9 +6,10 @@ import graft.sources.dns.read.DnsMetrics
 
 /** DSv2 custom metrics on the dns scan: the metric set is reported by
   * the scan, and after an execution the SQL-UI metric values equal
-  * the numbers the in-memory server actually served — records, the
+  * the numbers the server actually served — records, the
   * fqdn+ip payload bytes, and IXFR→AXFR fallbacks. */
 class DnsMetricsSpec extends AnyFunSuite {
+  import Loopback.withServer
   private lazy val spark = graft.SparkTestSession.spark
 
   private val ZoneRecords = Seq(
@@ -16,16 +17,15 @@ class DnsMetricsSpec extends AnyFunSuite {
     ARecord("green.met.acme.", "10.8.0.2"),
     ARecord("blue.met.acme.", "10.8.0.3"))
 
-  private def seeded(port: Int): InMemoryDnsServer = {
-    InMemoryDnsServer.reset("t", port)
-    val srv = InMemoryDnsServer.at("t", port)
+  private def seeded(wire: WireDnsServer): InMemoryDnsServer = {
+    val srv = wire.backing
     srv.addZone("met.acme.", ZoneRecords)
     srv
   }
 
   private def read(port: Int, extra: (String, String)*) =
     spark.read.format("dns").options(Map(
-      "server" -> "t", "port" -> port.toString, "organization" -> "acme",
+      "server" -> "127.0.0.1", "port" -> port.toString, "organization" -> "acme",
       "zones" -> "met.acme",
       "fixed-timestamp-micros" -> "1723400000000000") ++ extra).load()
 
@@ -38,38 +38,44 @@ class DnsMetricsSpec extends AnyFunSuite {
     r.fqdn.getBytes("UTF-8").length + r.ip.getBytes("UTF-8").length).sum.toLong
 
   test("the scan reports the three dns metrics") {
-    seeded(5471)
-    val names = scanNode(read(5471)).scan.supportedCustomMetrics().map(_.name()).toSet
-    assert(names == Set(DnsMetrics.RecordsName, DnsMetrics.BytesName,
-      DnsMetrics.FallbacksName))
+    withServer { wire =>
+      seeded(wire)
+      val names = scanNode(read(wire.port)).scan.supportedCustomMetrics().map(_.name()).toSet
+      assert(names == Set(DnsMetrics.RecordsName, DnsMetrics.BytesName,
+        DnsMetrics.FallbacksName))
+    }
   }
 
   test("after an AXFR read the metric values match what the server served") {
-    seeded(5472)
-    val df = read(5472)
-    val node = scanNode(df)
-    assert(df.collect().length == 3) // executes the same QueryExecution/plan instance
-    val m = node.metrics
-    assert(m(DnsMetrics.RecordsName).value == 3L)
-    assert(m(DnsMetrics.BytesName).value == expectedBytes)
-    assert(m(DnsMetrics.FallbacksName).value == 0L, "serial-0 snapshot is not a fallback")
+    withServer { wire =>
+      seeded(wire)
+      val df = read(wire.port)
+      val node = scanNode(df)
+      assert(df.collect().length == 3) // executes the same QueryExecution/plan instance
+      val m = node.metrics
+      assert(m(DnsMetrics.RecordsName).value == 3L)
+      assert(m(DnsMetrics.BytesName).value == expectedBytes)
+      assert(m(DnsMetrics.FallbacksName).value == 0L, "serial-0 snapshot is not a fallback")
+    }
   }
 
   test("an IXFR request served from a journal gap counts as a fallback") {
-    // advance the zone with a no-net-change add+delete, then trim the
-    // journal to nothing — a resume from serial 1 now hits the gap and
-    // the server answers with a full AXFR (RFC 1995 §4); the metric
-    // must say so
-    val srv = seeded(5473)
-    srv.update("met.acme.", Seq(ARecord("tmp.met.acme.", "10.8.0.9")), Nil)
-    srv.update("met.acme.", Nil, Seq(ARecord("tmp.met.acme.", "10.8.0.9")))
-    srv.trimJournal("met.acme.", 0)
-    val df = read(5473, "serial" -> "1")
-    val node = scanNode(df)
-    assert(df.collect().length == 3) // the fallback snapshot
-    val m = node.metrics
-    assert(m(DnsMetrics.FallbacksName).value == 1L)
-    assert(m(DnsMetrics.RecordsName).value == 3L)
-    assert(m(DnsMetrics.BytesName).value == expectedBytes)
+    withServer { wire =>
+      // advance the zone with a no-net-change add+delete, then trim the
+      // journal to nothing — a resume from serial 1 now hits the gap and
+      // the server answers with a full AXFR (RFC 1995 §4); the metric
+      // must say so
+      val srv = seeded(wire)
+      srv.update("met.acme.", Seq(ARecord("tmp.met.acme.", "10.8.0.9")), Nil)
+      srv.update("met.acme.", Nil, Seq(ARecord("tmp.met.acme.", "10.8.0.9")))
+      srv.trimJournal("met.acme.", 0)
+      val df = read(wire.port, "serial" -> "1")
+      val node = scanNode(df)
+      assert(df.collect().length == 3) // the fallback snapshot
+      val m = node.metrics
+      assert(m(DnsMetrics.FallbacksName).value == 1L)
+      assert(m(DnsMetrics.RecordsName).value == 3L)
+      assert(m(DnsMetrics.BytesName).value == expectedBytes)
+    }
   }
 }

@@ -11,11 +11,12 @@ import org.apache.spark.sql.streaming.Trigger
   * once across two Trigger.Once runs
   * (DnsSourceRelationProviderTest.java:203-226). */
 class StreamingReadSpec extends AnyFunSuite {
+  import Loopback.withServer
   private lazy val spark = graft.SparkTestSession.spark
 
-  private def runOnce(port: Int, outDir: String, ckDir: String): Unit = {
+  private def runOnce(wire: WireDnsServer, outDir: String, ckDir: String): Unit = {
     val q = spark.readStream.format("dns")
-      .option("server", "t").option("port", port.toString)
+      .option("server", wire.host).option("port", wire.port.toString)
       .option("organization", "acme")
       .option("zones", "example.acme")
       .option("fixed-timestamp-micros", "1723400000000000")
@@ -29,138 +30,138 @@ class StreamingReadSpec extends AnyFunSuite {
   }
 
   test("two Trigger.Once runs read each change exactly once") {
-    val port = 5401
-    InMemoryDnsServer.reset("t", port)
-    val srv = InMemoryDnsServer.at("t", port)
-    srv.addZone("example.acme.", Seq(
-      ARecord("red.example.acme.", "10.1.0.1"),
-      ARecord("green.example.acme.", "10.1.0.2")))
+    withServer { wire =>
+      val srv = wire.backing
+      srv.addZone("example.acme.", Seq(
+        ARecord("red.example.acme.", "10.1.0.1"),
+        ARecord("green.example.acme.", "10.1.0.2")))
 
-    val out = Files.createTempDirectory("dns-stream-out").toString
-    val ck = Files.createTempDirectory("dns-stream-ck").toString
+      val out = Files.createTempDirectory("dns-stream-out").toString
+      val ck = Files.createTempDirectory("dns-stream-ck").toString
 
-    runOnce(port, out, ck) // initial: serial 0 → AXFR of 2 records
+      runOnce(wire, out, ck) // initial: serial 0 → AXFR of 2 records
 
-    // Change the zone between runs; the second run must see ONLY the delta.
-    srv.update("example.acme.",
-      Seq(ARecord("blue.example.acme.", "10.1.0.3")),
-      Seq(ARecord("red.example.acme.", "10.1.0.1")))
+      // Change the zone between runs; the second run must see ONLY the delta.
+      srv.update("example.acme.",
+        Seq(ARecord("blue.example.acme.", "10.1.0.3")),
+        Seq(ARecord("red.example.acme.", "10.1.0.1")))
 
-    runOnce(port, out, ck)
+      runOnce(wire, out, ck)
 
-    val got = spark.read.parquet(out)
-    assert(got.count() == 4) // 2 AXFR + 1 IXFR_ADD + 1 IXFR_DELETE
-    // effectively-once: no identity row appears twice
-    val dupes = got.groupBy("action", "fqdn", "ip", "organization", "zone")
-      .count().filter(col("count") > 1).count()
-    assert(dupes == 0)
-    assert(got.filter(col("action") === DnsAction.IxfrAdd).count() == 1)
-    assert(got.filter(col("action") === DnsAction.IxfrDelete).count() == 1)
+      val got = spark.read.parquet(out)
+      assert(got.count() == 4) // 2 AXFR + 1 IXFR_ADD + 1 IXFR_DELETE
+      // effectively-once: no identity row appears twice
+      val dupes = got.groupBy("action", "fqdn", "ip", "organization", "zone")
+        .count().filter(col("count") > 1).count()
+      assert(dupes == 0)
+      assert(got.filter(col("action") === DnsAction.IxfrAdd).count() == 1)
+      assert(got.filter(col("action") === DnsAction.IxfrDelete).count() == 1)
+    }
   }
 
   test("third run with no zone changes reads nothing new") {
-    val port = 5402
-    InMemoryDnsServer.reset("t", port)
-    val srv = InMemoryDnsServer.at("t", port)
-    srv.addZone("example.acme.", Seq(ARecord("a.example.acme.", "1.1.1.1")))
+    withServer { wire =>
+      val srv = wire.backing
+      srv.addZone("example.acme.", Seq(ARecord("a.example.acme.", "1.1.1.1")))
 
-    val out = Files.createTempDirectory("dns-stream-out2").toString
-    val ck = Files.createTempDirectory("dns-stream-ck2").toString
-    runOnce(port, out, ck)
-    runOnce(port, out, ck)
-    assert(spark.read.parquet(out).count() == 1)
+      val out = Files.createTempDirectory("dns-stream-out2").toString
+      val ck = Files.createTempDirectory("dns-stream-ck2").toString
+      runOnce(wire, out, ck)
+      runOnce(wire, out, ck)
+      assert(spark.read.parquet(out).count() == 1)
+    }
   }
 
   test("Trigger.ProcessingTime: continuous micro-batches pick up live zone changes") {
-    val port = 5403
-    InMemoryDnsServer.reset("t", port)
-    val srv = InMemoryDnsServer.at("t", port)
-    srv.addZone("example.acme.", Seq(ARecord("a.example.acme.", "1.1.1.1")))
+    withServer { wire =>
+      val srv = wire.backing
+      srv.addZone("example.acme.", Seq(ARecord("a.example.acme.", "1.1.1.1")))
 
-    val out = Files.createTempDirectory("dns-pt-out").toString
-    val ck = Files.createTempDirectory("dns-pt-ck").toString
-    val q = spark.readStream.format("dns")
-      .option("server", "t").option("port", port.toString)
-      .option("organization", "acme")
-      .option("zones", "example.acme")
-      .option("fixed-timestamp-micros", "1723400000000000")
-      .load()
-      .writeStream.format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.ProcessingTime("200 milliseconds"))
-      .start()
-    try {
-      // batch 1 delivers the AXFR; then mutate the zone mid-stream and
-      // a later batch must deliver exactly the delta
-      def countIs(n: Long): Boolean = {
-        // generous deadline: this host occasionally stalls 10x under
-        // external load, and a flaked gate voids more than it protects
-        val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
-        while (System.nanoTime() < deadline) {
-          val c = try spark.read.parquet(out).count() catch { case _: Throwable => -1L }
-          if (c == n) return true
-          Thread.sleep(100)
+      val out = Files.createTempDirectory("dns-pt-out").toString
+      val ck = Files.createTempDirectory("dns-pt-ck").toString
+      val q = spark.readStream.format("dns")
+        .option("server", wire.host).option("port", wire.port.toString)
+        .option("organization", "acme")
+        .option("zones", "example.acme")
+        .option("fixed-timestamp-micros", "1723400000000000")
+        .load()
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ck)
+        .trigger(Trigger.ProcessingTime("200 milliseconds"))
+        .start()
+      try {
+        // batch 1 delivers the AXFR; then mutate the zone mid-stream and
+        // a later batch must deliver exactly the delta
+        def countIs(n: Long): Boolean = {
+          // generous deadline: this host occasionally stalls 10x under
+          // external load, and a flaked gate voids more than it protects
+          val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
+          while (System.nanoTime() < deadline) {
+            val c = try spark.read.parquet(out).count() catch { case _: Throwable => -1L }
+            if (c == n) return true
+            Thread.sleep(100)
+          }
+          false
         }
-        false
-      }
-      assert(countIs(1), "initial AXFR record never arrived")
-      srv.update("example.acme.", Seq(ARecord("b.example.acme.", "2.2.2.2")), Nil)
-      assert(countIs(2), "IXFR delta never arrived under ProcessingTime")
-    } finally q.stop()
-    val got = spark.read.parquet(out)
-    assert(got.filter(col("fqdn") === "b.example.acme.")
-      .select("action").collect().map(_.getString(0)).toSeq == Seq(DnsAction.IxfrAdd))
-    // effectively-once even across many empty batches
-    assert(got.count() == 2)
+        assert(countIs(1), "initial AXFR record never arrived")
+        srv.update("example.acme.", Seq(ARecord("b.example.acme.", "2.2.2.2")), Nil)
+        assert(countIs(2), "IXFR delta never arrived under ProcessingTime")
+      } finally q.stop()
+      val got = spark.read.parquet(out)
+      assert(got.filter(col("fqdn") === "b.example.acme.")
+        .select("action").collect().map(_.getString(0)).toSeq == Seq(DnsAction.IxfrAdd))
+      // effectively-once even across many empty batches
+      assert(got.count() == 2)
+    }
   }
 
   test("ReportsSourceMetrics: progress carries records/bytes/fallbacks/zones") {
-    // Two zones with known content; one Trigger.Once batch. The
-    // progress JSON's sources[0].metrics must carry the cumulative
-    // counters, and their values must match what the server actually
-    // served: 3 + 2 records, payloadBytes = Σ |fqdn|+|ip| (the
-    // transport-independent rdata bound DnsMetricsSpec pins for the
-    // scan-level twin), 2 zones admitted, zero fallbacks on a serial-0
-    // snapshot.
-    val port = 5405
-    InMemoryDnsServer.reset("t", port)
-    val srv = InMemoryDnsServer.at("t", port)
-    val recs1 = Seq(
-      ARecord("a.m1.acme.", "10.9.0.1"),
-      ARecord("b.m1.acme.", "10.9.0.2"),
-      ARecord("c.m1.acme.", "10.9.0.3"))
-    val recs2 = Seq(
-      ARecord("a.m2.acme.", "10.9.1.1"),
-      ARecord("b.m2.acme.", "10.9.1.2"))
-    srv.addZone("m1.acme.", recs1)
-    srv.addZone("m2.acme.", recs2)
-    val out = Files.createTempDirectory("dns-metrics-out").toString
-    val ck = Files.createTempDirectory("dns-metrics-ck").toString
-    val q = spark.readStream.format("dns")
-      .option("server", "t").option("port", port.toString)
-      .option("organization", "acme")
-      .option("zones", "m1.acme,m2.acme")
-      .option("fixed-timestamp-micros", "1723400000000000")
-      .load()
-      .writeStream.format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", ck)
-      .trigger(Trigger.Once())
-      .start()
-    q.awaitTermination(180000)
-    val progresses = q.recentProgress
-    assert(progresses.nonEmpty, "no progress events recorded")
-    val withData = progresses.filter(_.numInputRows > 0)
-    assert(withData.nonEmpty, "no progress with rows")
-    val m = withData.last.sources(0).metrics
-    val expectedBytes = (recs1 ++ recs2)
-      .map(r => r.fqdn.getBytes("UTF-8").length + r.ip.getBytes("UTF-8").length)
-      .sum.toLong
-    assert(m.get("recordsTransferred") == "5", s"metrics were $m")
-    assert(m.get("payloadBytes") == expectedBytes.toString, s"metrics were $m")
-    assert(m.get("ixfrFallbacks") == "0", s"metrics were $m")
-    assert(m.get("zonesAdmitted") == "2", s"metrics were $m")
+    withServer { wire =>
+      // Two zones with known content; one Trigger.Once batch. The
+      // progress JSON's sources[0].metrics must carry the cumulative
+      // counters, and their values must match what the server actually
+      // served: 3 + 2 records, payloadBytes = Σ |fqdn|+|ip| (the
+      // encoding-independent rdata bound DnsMetricsSpec pins for the
+      // scan-level twin), 2 zones admitted, zero fallbacks on a serial-0
+      // snapshot.
+      val srv = wire.backing
+      val recs1 = Seq(
+        ARecord("a.m1.acme.", "10.9.0.1"),
+        ARecord("b.m1.acme.", "10.9.0.2"),
+        ARecord("c.m1.acme.", "10.9.0.3"))
+      val recs2 = Seq(
+        ARecord("a.m2.acme.", "10.9.1.1"),
+        ARecord("b.m2.acme.", "10.9.1.2"))
+      srv.addZone("m1.acme.", recs1)
+      srv.addZone("m2.acme.", recs2)
+      val out = Files.createTempDirectory("dns-metrics-out").toString
+      val ck = Files.createTempDirectory("dns-metrics-ck").toString
+      val q = spark.readStream.format("dns")
+        .option("server", wire.host).option("port", wire.port.toString)
+        .option("organization", "acme")
+        .option("zones", "m1.acme,m2.acme")
+        .option("fixed-timestamp-micros", "1723400000000000")
+        .load()
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ck)
+        .trigger(Trigger.Once())
+        .start()
+      q.awaitTermination(180000)
+      val progresses = q.recentProgress
+      assert(progresses.nonEmpty, "no progress events recorded")
+      val withData = progresses.filter(_.numInputRows > 0)
+      assert(withData.nonEmpty, "no progress with rows")
+      val m = withData.last.sources(0).metrics
+      val expectedBytes = (recs1 ++ recs2)
+        .map(r => r.fqdn.getBytes("UTF-8").length + r.ip.getBytes("UTF-8").length)
+        .sum.toLong
+      assert(m.get("recordsTransferred") == "5", s"metrics were $m")
+      assert(m.get("payloadBytes") == expectedBytes.toString, s"metrics were $m")
+      assert(m.get("ixfrFallbacks") == "0", s"metrics were $m")
+      assert(m.get("zonesAdmitted") == "2", s"metrics were $m")
+    }
   }
 
   test("progress log restores latest serials and retains maxKept commits") {

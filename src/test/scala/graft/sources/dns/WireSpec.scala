@@ -4,9 +4,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 /** The wire-protocol path: RFC 1035 codec, AXFR/IXFR/UPDATE over real
-  * loopback TCP, and the full connector stack with `client=wire`. */
+  * loopback TCP, and the full connector stack over the wire client. */
 class WireSpec extends AnyFunSuite {
   import DnsWire._
+  import Loopback.withServer
 
   test("codec: message with question, A and SOA records round-trips") {
     val m = Message(42, queryFlags(OpcodeQuery),
@@ -76,11 +77,6 @@ class WireSpec extends AnyFunSuite {
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(200),
       Prop.forAll(genMsg) { m => decode(encode(m)) == m })
     assert(res.passed, res.status.toString)
-  }
-
-  private def withServer(f: WireDnsServer => Unit): Unit = {
-    val srv = WireDnsServer.start()
-    try f(srv) finally WireDnsServer.stop(srv.port)
   }
 
   test("AXFR over TCP returns serial and all records") {
@@ -372,6 +368,25 @@ class WireSpec extends AnyFunSuite {
     }
   }
 
+  test("splitForFrames: a batch that fits is one message as is; a larger one splits in order") {
+    val z = "z00.bench."
+    def rrs(n: Int) = (1 to n).map(i => Rr(s"h$i.$z", TypeA, ClassIn, 300, AData("10.6.0.1")))
+    // a benchmark write op sends 288 changes per zone, at most 1,000:
+    // the very message comes back, so it is encoded once and never split
+    Seq(288, 1000).foreach { n =>
+      val m = updateMsg(z, rrs(n))
+      val parts = splitForFrames(m)
+      assert(parts.size == 1 && (parts.head eq m), s"$n changes")
+    }
+    val big = updateMsg(z, rrs(5000))
+    assert(encode(big).length > MaxFramedBytes)
+    val parts = splitForFrames(big)
+    assert(parts.size > 1)
+    assert(parts.flatMap(_.authority) == big.authority, "runs keep the RR order")
+    assert(parts.forall(p => p.id == big.id && p.flags == big.flags && p.questions == big.questions))
+    assert(parts.forall(p => encode(p).length <= MaxFramedBytes))
+  }
+
   test("connection dropped mid-transfer surfaces an IO error (task retry path)") {
     // server sends the opening SOA + one record, then closes without
     // the terminating SOA — the client must fail, never return a
@@ -414,7 +429,6 @@ class WireSpec extends AnyFunSuite {
         lit(60).cast("int").as("ttl"))
         .write.format("dns_update")
         .option("server", srv.host).option("port", srv.port.toString)
-        .option("client", "wire")
         .mode("append").save()
       // every record present, each task×zone message applied atomically
       (0L until 60L).foreach { i =>
@@ -432,7 +446,6 @@ class WireSpec extends AnyFunSuite {
       def runOnce(): Unit = {
         val q = spark.readStream.format("dns")
           .option("server", srv.host).option("port", srv.port.toString)
-          .option("client", "wire")
           .option("organization", "acme").option("zones", "ws.acme")
           .option("fixed-timestamp-micros", "1723400000000000")
           .load()
@@ -458,12 +471,11 @@ class WireSpec extends AnyFunSuite {
     // TCP path: each transfer failure mode must (a) fail the read
     // loudly with ignore-failures=false — a truncated zone must never
     // pass as complete — and (b) collapse to an empty zone with
-    // ignore-failures=true, exactly like the in-memory client.
+    // ignore-failures=true.
     val spark = graft.SparkTestSession.spark
     def read(port: Int, ignore: Boolean, timeout: Int) =
       spark.read.format("dns")
         .option("server", "127.0.0.1").option("port", port.toString)
-        .option("client", "wire")
         .option("organization", "acme").option("zones", "m.acme")
         .option("ignore-failures", ignore.toString)
         .option("timeout", timeout.toString)
@@ -512,7 +524,6 @@ class WireSpec extends AnyFunSuite {
     val spark = graft.SparkTestSession.spark
     val df = spark.read.format("dns")
       .option("server", "127.0.0.1").option("port", "1")
-      .option("client", "wire")
       .option("organization", "acme").option("zones", "dead.acme")
       .option("ignore-failures", "true")
       .option("timeout", "1")
@@ -534,7 +545,6 @@ class WireSpec extends AnyFunSuite {
       }
       val df = spark.read.format("dns")
         .option("server", srv.host).option("port", srv.port.toString)
-        .option("client", "wire")
         .option("organization", "acme")
         .option("zones", zones.map(_.dropRight(1)).mkString(","))
         .option("xfr", "AXFR").load()
@@ -561,7 +571,6 @@ class WireSpec extends AnyFunSuite {
       }
       val df = spark.read.format("dns")
         .option("server", srv.host).option("port", srv.port.toString)
-        .option("client", "wire")
         .option("organization", "acme")
         .option("zones", zones.map(_.dropRight(1)).mkString(","))
         .option("xfr", "IXFR").option("serial", "1").load()
@@ -630,7 +639,6 @@ class WireSpec extends AnyFunSuite {
     withPoisonServer(good, Set(poison)) { (host, port) =>
       def read(ignore: Boolean) = spark.read.format("dns")
         .option("server", host).option("port", port.toString)
-        .option("client", "wire")
         .option("organization", "acme")
         .option("zones", (good :+ poison).map(_.dropRight(1)).mkString(","))
         .option("xfr", "AXFR")
@@ -660,14 +668,12 @@ class WireSpec extends AnyFunSuite {
         .toDF("action", "fqdn", "ip", "timestamp", "ttl")
         .write.format("dns_update")
         .option("server", srv.host).option("port", srv.port.toString)
-        .option("client", "wire")
         .mode("append").save()
       assert(srv.backing.lookup("b.w.acme.") == Seq("10.2.0.2"))
 
       // read back through the V2 source, over TCP (AXFR)
       val df = spark.read.format("dns")
         .option("server", srv.host).option("port", srv.port.toString)
-        .option("client", "wire")
         .option("organization", "acme").option("zones", "w.acme")
         .option("xfr", "AXFR").load()
       val got = df.select("fqdn", "ip").collect()

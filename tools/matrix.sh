@@ -64,9 +64,6 @@ q_dns_stream
 q_dns_stream_sink
 q_dns_topn
 q_dns_validate
-q_dns_wire_ixfr
-q_dns_wire_read
-q_dns_wire_roundtrip
 q_dns_zone_change
 q_dns_zone_pruned
 q_tws_metadata"
