@@ -528,6 +528,7 @@ final class DnsReaderFactory(opts: DnsSourceOptions, schema: StructType,
   * partition (reference DnsZoneRDD.java:63-97). IXFR deltas flatten as
   * ALL deletes then ALL adds — the global order is part of the
   * observable output (reference Xfr.java:52-74, SURVEY §2.3.4).
+  * close() closes the client's connection.
   */
 final class DnsPartitionReader(opts: DnsSourceOptions, schema: StructType,
                                p: DnsZoneInputPartition,
@@ -712,5 +713,5 @@ final class DnsPartitionReader(opts: DnsSourceOptions, schema: StructType,
       new DnsTaskMetric(DnsMetrics.BytesName, metricBytes),
       new DnsTaskMetric(DnsMetrics.FallbacksName, metricFallbacks))
 
-  override def close(): Unit = ()
+  override def close(): Unit = client.close()
 }

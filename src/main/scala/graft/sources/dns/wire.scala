@@ -168,7 +168,8 @@ object DnsWire {
   }
 
   /** Upper bound on a message's encoded size: a name takes at most one
-    * byte per character plus two, an RR's rdata at most the SOA's 22. */
+    * byte per character plus two, an RR its fixed 10 bytes plus its
+    * rdata ([[rdataBytes]]). */
   private def encodedBound(m: Message): Int = {
     var n = 12
     m.questions.foreach(q => n += q.name.length + 2 + 4)
@@ -177,7 +178,15 @@ object DnsWire {
     n
   }
 
-  private def rrBound(r: Rr): Int = r.name.length + 2 + 10 + 22
+  private def rrBound(r: Rr): Int = r.name.length + 2 + 10 + rdataBytes(r.rdata)
+
+  /** RDATA bytes as [[Writer.rr]] writes them: an address 4, the
+    * root-named SOA 22, the delete-RRset form none. */
+  private def rdataBytes(d: Rdata): Int = d match {
+    case _: AData => 4
+    case _: SoaData => 22
+    case EmptyData => 0
+  }
 
   private def write(m: Message, offset: Int): Writer = {
     val w = new Writer(offset + encodedBound(m), offset)
@@ -334,10 +343,17 @@ final class WireDnsServer(val backing: InMemoryDnsServer = new InMemoryDnsServer
 
   @volatile private var running = true
 
+  /** Connections accepted since construction — the observable that
+    * client connection reuse is graded on, as transfers are on
+    * `backing.transferCount`. */
+  private val accepted = new java.util.concurrent.atomic.AtomicLong(0L)
+  def connectionCount: Long = accepted.get()
+
   private val acceptor = new Thread(() => {
     while (running) {
       try {
         val sock = serverSocket.accept()
+        accepted.incrementAndGet()
         val t = new Thread(() => serve(sock), s"wire-dns-conn")
         t.setDaemon(true)
         t.start()
@@ -468,34 +484,61 @@ private object WireSocket {
     new DataInputStream(new BufferedInputStream(sock.getInputStream, BufferBytes))
   def output(sock: Socket): BufferedOutputStream =
     new BufferedOutputStream(sock.getOutputStream, BufferBytes)
+}
 
-  /** Open, run, close. timeout=0 always fails (reference failure
-    * matrix); otherwise it is a real connect + SO read timeout.
-    * TCP_NODELAY is on: each exchange is one flushed request, so
-    * Nagle's algorithm only adds delay. */
-  def withSocket[A](host: String, port: Int, timeoutSec: Int, what: String)
-                   (f: (DataInputStream, OutputStream) => A): A = {
-    if (timeoutSec == 0)
-      throw new java.net.SocketTimeoutException(s"$what timed out (timeout=0)")
-    val sock = new Socket()
+/** A client's one TCP connection to a DNS server, opened by the first
+  * exchange and reused by every later one (RFC 7766 §6.2.1), until its
+  * owner calls [[close]]. An exchange that throws closes it, so the
+  * next one reconnects; nothing is retried inside a call. timeout=0
+  * always fails, before connecting (reference failure matrix);
+  * otherwise it is a real connect + SO read timeout. TCP_NODELAY is
+  * on: each exchange is one flushed request, so Nagle's algorithm only
+  * adds delay. One owner, one thread: a task, or a driver-side commit. */
+private final class WireConnection(host: String, port: Int) {
+  private var sock: Socket = _
+  private var in: DataInputStream = _
+  private var out: OutputStream = _
+
+  def exchange[A](timeoutSec: Int, what: String)(f: (DataInputStream, OutputStream) => A): A =
     try {
-      sock.setTcpNoDelay(true)
-      sock.connect(new InetSocketAddress(host, port), timeoutSec * 1000)
+      if (timeoutSec == 0)
+        throw new java.net.SocketTimeoutException(s"$what timed out (timeout=0)")
+      if (sock == null) open(timeoutSec)
       sock.setSoTimeout(timeoutSec * 1000)
-      f(input(sock), output(sock))
-    } finally sock.close()
+      f(in, out)
+    } catch { case t: Throwable => close(); throw t }
+
+  private def open(timeoutSec: Int): Unit = {
+    val s = new Socket()
+    sock = s
+    s.setTcpNoDelay(true)
+    s.connect(new InetSocketAddress(host, port), timeoutSec * 1000)
+    in = WireSocket.input(s)
+    out = WireSocket.output(s)
+  }
+
+  /** Idempotent and quiet: it runs on failure paths, where an error of
+    * its own would hide the one that closed the connection. */
+  def close(): Unit = if (sock != null) {
+    try sock.close() catch { case _: IOException => () }
+    sock = null; in = null; out = null
   }
 }
 
-/** Zone transfers over TCP. One socket per transfer; reads framed
-  * messages until the closing SOA (AXFR responses may span messages —
-  * RFC 5936 §2.2). */
+/** Zone transfers over TCP, each on the client's one connection
+  * ([[WireConnection]]), transfer after transfer, until its owner
+  * calls [[close]]. Reads framed messages until the closing SOA (AXFR
+  * responses may span messages — RFC 5936 §2.2). */
 final class WireTransferClient(host: String, port: Int) extends ZoneTransferClient {
   import DnsWire._
 
+  @transient private lazy val connection = new WireConnection(host, port)
+
+  def close(): Unit = connection.close()
+
   override def transfer(zone: String, serial: Long, xfr: XfrType,
                         timeoutSec: Int): TransferResult =
-    WireSocket.withSocket(host, port, timeoutSec, s"zone transfer of '$zone'") { (in, out) =>
+    connection.exchange(timeoutSec, s"zone transfer of '$zone'") { (in, out) =>
       val z = Fqdn.normalize(zone)
       // serial 0 ⇒ full transfer, like the reference (Xfr.java:43-48)
       val useAxfr = xfr == XfrType.AXFR || serial == 0L
@@ -630,29 +673,38 @@ final class WireTransferClient(host: String, port: Int) extends ZoneTransferClie
 
 /** RFC 2136 dynamic updates over TCP: adds as class-IN RRs with the
   * record TTL, deletes as class-NONE; any rcode != 0 throws (job fails,
-  * like the reference). Every message is framed before a connection is
-  * opened, so a batch too large for one TCP frame fails unsent. */
+  * like the reference). Every message of a call is framed before the
+  * first is sent, so a batch that cannot be framed fails unsent. All
+  * calls share the emitter's one connection ([[WireConnection]]), zone
+  * after zone, until its owner calls [[close]]. */
 final class WireUpdateEmitter(host: String, port: Int, timeoutSec: Int) extends UpdateEmitter {
   import DnsWire._
 
-  override def update(zone: String, changes: Seq[DnsUpdateRecord]): Unit =
-    send("update", zone, Seq(updateMessage(zone, changes)))
+  @transient private lazy val connection = new WireConnection(host, port)
 
-  /** The append path's update: `changes` in their order as consecutive
-    * messages on one connection, each within one TCP frame
-    * ([[DnsWire.splitForFrames]]) — one message when they fit. Each
-    * message applies atomically, the batch as a whole does not; appends
-    * are set-semantic, so a retried task re-sends them safely. */
-  def append(zone: String, changes: Seq[DnsUpdateRecord]): Unit =
-    send("update", zone, splitForFrames(updateMessage(zone, changes)))
+  def close(): Unit = connection.close()
+
+  override def update(zone: String, changes: Seq[DnsUpdateRecord]): Unit =
+    send("update", Seq(zone -> Seq(updateMessage(zone, changes))))
+
+  /** The append path's update of every zone a task saw, in the given
+    * order: each zone's changes in their order as consecutive messages,
+    * each within one TCP frame ([[DnsWire.splitForFrames]]) — one
+    * message when they fit. Each message applies atomically, the batch
+    * as a whole does not; appends are set-semantic, so a retried task
+    * re-sends them safely. */
+  def append(zones: Seq[(String, Seq[DnsUpdateRecord])]): Unit =
+    send("update", zones.map { case (zone, changes) =>
+      zone -> splitForFrames(updateMessage(zone, changes))
+    })
 
   /** One atomic overwrite message: §2.5.2 delete-RRset RRs (CLASS ANY,
     * TTL 0, empty RDATA) for every wiped name, then the adds. */
   override def overwrite(zone: String, wipeNames: Seq[String],
                          adds: Seq[DnsUpdateRecord]): Unit =
-    send("overwrite", zone, Seq(message(zone,
+    send("overwrite", Seq(zone -> Seq(message(zone,
       wipeNames.map(n => Rr(n, TypeA, ClassAny, 0, EmptyData)) ++
-        adds.map(u => Rr(u.fqdn, TypeA, ClassIn, u.ttl.toLong, AData(u.ip))))))
+        adds.map(u => Rr(u.fqdn, TypeA, ClassIn, u.ttl.toLong, AData(u.ip)))))))
 
   private def updateMessage(zone: String, changes: Seq[DnsUpdateRecord]): Message =
     message(zone, changes.map { u =>
@@ -666,22 +718,26 @@ final class WireUpdateEmitter(host: String, port: Int, timeoutSec: Int) extends 
     Message(1, queryFlags(OpcodeUpdate),
       Seq(Question(Fqdn.normalize(zone), TypeSoa, ClassIn)), Nil, rrs, Nil)
 
-  /** Frames every message, then sends them in order on one connection,
-    * each answered before the next goes. */
-  private def send(what: String, zone: String, messages: Seq[Message]): Unit = {
-    val frames = messages.map { m =>
-      try frame(m) catch {
-        case e: IllegalArgumentException => throw new IllegalArgumentException(
-          s"$what of '$zone' with ${m.authority.size} changes: ${e.getMessage}", e)
+  /** Frames every zone's messages, then sends them in order on the
+    * connection, each answered before the next goes. */
+  private def send(what: String, zones: Seq[(String, Seq[Message])]): Unit = {
+    val framed = zones.map { case (zone, messages) =>
+      zone -> messages.map { m =>
+        try frame(m) catch {
+          case e: IllegalArgumentException => throw new IllegalArgumentException(
+            s"$what of '$zone' with ${m.authority.size} changes: ${e.getMessage}", e)
+        }
       }
     }
-    WireSocket.withSocket(host, port, timeoutSec, s"$what of '$zone'") { (in, out) =>
-      frames.foreach { bytes =>
-        out.write(bytes)
-        out.flush()
-        val resp = readFramed(in)
-        if (resp.rcode != RcodeNoError)
-          throw new IOException(s"$what of '$zone' rejected: rcode ${resp.rcode}")
+    framed.foreach { case (zone, frames) =>
+      connection.exchange(timeoutSec, s"$what of '$zone'") { (in, out) =>
+        frames.foreach { bytes =>
+          out.write(bytes)
+          out.flush()
+          val resp = readFramed(in)
+          if (resp.rcode != RcodeNoError)
+            throw new IOException(s"$what of '$zone' rejected: rcode ${resp.rcode}")
+        }
       }
     }
   }

@@ -100,11 +100,11 @@ final class DnsZoneStateReaderFactory(opts: DnsSinkOptions)
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[DnsZoneStatePartition]
     new PartitionReader[InternalRow] {
+      private val client = new WireTransferClient(opts.common.server, opts.common.port)
       private val rows: Iterator[InternalRow] = {
         // A delta reply would make the group-replace commit wipe every
         // carryover record, so snapshot throws on one.
-        val records = new WireTransferClient(opts.common.server, opts.common.port)
-          .snapshot(p.zone, opts.common.timeoutSec)
+        val records = client.snapshot(p.zone, opts.common.timeoutSec)
         val ts = opts.fixedTimestampMicros.getOrElse(0L)
         records.iterator.map { r =>
           new GenericInternalRow(Array[Any](
@@ -121,7 +121,7 @@ final class DnsZoneStateReaderFactory(opts: DnsSinkOptions)
         h
       }
       override def get(): InternalRow = current
-      override def close(): Unit = ()
+      override def close(): Unit = client.close()
     }
   }
 }
@@ -162,11 +162,10 @@ final class DnsReplaceDataWrite(opts: DnsSinkOptions, schema: StructType)
       // Replacement content is a SET — deterministic (fqdn, ip) order,
       // not chronological: there is no apply order to preserve in a
       // state snapshot. Every group is replaced, an empty one wiped.
-      DnsOverwriteStaged.replaceZones(
-        new WireTransferClient(opts.common.server, opts.common.port),
-        new WireUpdateEmitter(opts.common.server, opts.common.port, opts.common.timeoutSec),
-        opts.common.timeoutSec, groups,
-        staged.view.mapValues(_.sortBy(r => (r.fqdn, r.ip))).toMap)
+      DriverWire(opts.common) { (client, emitter) =>
+        DnsOverwriteStaged.replaceZones(client, emitter, opts.common.timeoutSec, groups,
+          staged.view.mapValues(_.sortBy(r => (r.fqdn, r.ip))).toMap)
+      }
     }
 
     override def abort(messages: Array[WriterCommitMessage]): Unit = ()

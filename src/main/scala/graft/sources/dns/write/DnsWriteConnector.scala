@@ -36,10 +36,12 @@ import graft.sources.dns._
   * large for one 65,535-byte TCP frame goes as consecutive messages in
   * the same order ([[WireUpdateEmitter.append]]).
   *
-  * Scale design: the only network per task is one connection per zone
-  * it saw; pre-partitioning the input by derived zone
-  * (`repartition(zone_of(fqdn))`) makes that one message per zone
-  * cluster-wide — left to the caller, as in the reference.
+  * Scale design: the only network per task is one connection, which
+  * carries the task's zones in order and is closed by the writer's
+  * owner-side `close`; pre-partitioning the input by derived zone
+  * ([[DnsWrites.repartitionByZone]]) makes that one message per zone
+  * cluster-wide, from one task per shuffle partition — left to the
+  * caller, as in the reference.
   */
 final class DnsUpdateTableProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "dns_update"
@@ -136,18 +138,18 @@ final class DnsUpdateTable(opts: DnsSinkOptions) extends Table with SupportsWrit
       case In("ip", vs) => vs.map(_.asInstanceOf[String]).toSet
     }
     val ips: Option[Set[String]] = ipSets.reduceOption(_ intersect _)
-    val client = new WireTransferClient(opts.common.server, opts.common.port)
-    val emitter = new WireUpdateEmitter(opts.common.server, opts.common.port, opts.common.timeoutSec)
-    fqdns.groupBy(Fqdn.zoneOf).toSeq.sortBy(_._1).foreach { case (zone, names) =>
-      val victims = client.snapshot(zone, opts.common.timeoutSec)
-        .filter(r => names.contains(r.fqdn.toLowerCase(java.util.Locale.ROOT)) &&
-          ips.forall(_.contains(r.ip)))
-        .sortBy(r => (r.fqdn, r.ip)).distinct
-      if (victims.nonEmpty)
-        emitter.update(zone, victims.map(r =>
-          // timestamp/ttl are append-path fields; a delete is keyed by
-          // (name, ip) alone (RFC 2136 §2.5.4 — class NONE, TTL 0).
-          DnsUpdateRecord(DnsAction.IxfrDelete, r.fqdn, r.ip, 0L, 0)))
+    DriverWire(opts.common) { (client, emitter) =>
+      fqdns.groupBy(Fqdn.zoneOf).toSeq.sortBy(_._1).foreach { case (zone, names) =>
+        val victims = client.snapshot(zone, opts.common.timeoutSec)
+          .filter(r => names.contains(r.fqdn.toLowerCase(java.util.Locale.ROOT)) &&
+            ips.forall(_.contains(r.ip)))
+          .sortBy(r => (r.fqdn, r.ip)).distinct
+        if (victims.nonEmpty)
+          emitter.update(zone, victims.map(r =>
+            // timestamp/ttl are append-path fields; a delete is keyed by
+            // (name, ip) alone (RFC 2136 §2.5.4 — class NONE, TTL 0).
+            DnsUpdateRecord(DnsAction.IxfrDelete, r.fqdn, r.ip, 0L, 0)))
+      }
     }
   }
 
@@ -236,10 +238,10 @@ final class DnsTruncateWrite(opts: DnsSinkOptions, schema: StructType)
       // partition was demanded, so the cross-task merge sees one
       // task's deduped content and keeps its chronological order.
       val staged = DnsOverwriteStaged.merge(messages)
-      DnsOverwriteStaged.replaceZones(
-        new WireTransferClient(opts.common.server, opts.common.port),
-        new WireUpdateEmitter(opts.common.server, opts.common.port, opts.common.timeoutSec),
-        opts.common.timeoutSec, staged.keys.toSeq, staged)
+      DriverWire(opts.common) { (client, emitter) =>
+        DnsOverwriteStaged.replaceZones(client, emitter,
+          opts.common.timeoutSec, staged.keys.toSeq, staged)
+      }
     }
     override def abort(messages: Array[WriterCommitMessage]): Unit = ()
   }
@@ -300,9 +302,10 @@ final class DnsWriterFactory(opts: DnsSinkOptions, idx: FieldIndices,
 }
 
 /** Executor-side writer. Buffers validated updates per derived zone;
-  * on the APPEND path all network I/O happens in commit() — one
-  * connection per zone, one message unless the zone's batch outgrows
-  * a TCP frame.
+  * on the APPEND path all network I/O happens in commit() — the
+  * emitter's one connection carries the task's zones in order, one
+  * message per zone unless its batch outgrows a TCP frame — and
+  * close() closes that connection.
   *
   * Failure semantics, append path: a task that fails before commit()
   * sends nothing (abort() just drops the buffers), so Spark's retry
@@ -327,12 +330,11 @@ final class DnsDataWriter(opts: DnsSinkOptions, idx: FieldIndices,
   override def write(row: InternalRow): Unit = {
     // Validation mirrors DnsPartitionHandler.java:69-77 via the shared
     // rule table (DnsValidation — the same function the gated
-    // q_dns_validate audit classifies with). Address validity is
-    // checked HERE: commit() sends zone after zone, so a row that only
-    // failed at wire encoding would abort the job AFTER earlier zones
-    // were already applied; failing the task in write() keeps the
-    // write all-or-nothing per task (the reference fails the same way
-    // when dnsjava parses the address).
+    // q_dns_validate audit classifies with). What the rules do not
+    // cover (a label too long, say) fails at wire encoding, which
+    // commit() runs for every zone before it sends the first one, so a
+    // task's write stays all-or-nothing either way (the reference fails
+    // the same way when dnsjava parses the address).
     def strOpt(i: Int): Option[String] =
       if (row.isNullAt(i)) None else Some(row.getUTF8String(i).toString)
     val actionOpt = strOpt(idx.action)
@@ -375,10 +377,9 @@ final class DnsDataWriter(opts: DnsSinkOptions, idx: FieldIndices,
         // exactly once.
         DnsOverwriteStaged(perZone.toSeq.map { case (z, u) => z -> LwwDedup(u.toSeq) })
       } else {
-        perZone.foreach { case (zone, updates) =>
-          val deduped = LwwDedup(updates.toSeq)
-          if (deduped.nonEmpty) emitter.append(zone, deduped)
-        }
+        emitter.append(perZone.toSeq
+          .map { case (zone, updates) => zone -> LwwDedup(updates.toSeq) }
+          .filter(_._2.nonEmpty))
         DnsWriteCommitted
       }
     perZone.clear()
@@ -386,7 +387,7 @@ final class DnsDataWriter(opts: DnsSinkOptions, idx: FieldIndices,
   }
 
   override def abort(): Unit = perZone.clear()
-  override def close(): Unit = ()
+  override def close(): Unit = emitter.close()
 }
 
 case object DnsWriteCommitted extends WriterCommitMessage
@@ -419,6 +420,16 @@ object DnsOverwriteStaged {
     }
 }
 
+/** The driver-side wire pair of a DELETE or a zone replace, both
+  * closed when `body` returns or throws. */
+private object DriverWire {
+  def apply[A](common: DnsCommonOptions)(body: (WireTransferClient, WireUpdateEmitter) => A): A = {
+    val client = new WireTransferClient(common.server, common.port)
+    val emitter = new WireUpdateEmitter(common.server, common.port, common.timeoutSec)
+    try body(client, emitter) finally { client.close(); emitter.close() }
+  }
+}
+
 /** Cluster-scale write helpers. */
 object DnsWrites {
   import org.apache.spark.sql.DataFrame
@@ -430,11 +441,18 @@ object DnsWrites {
     * by a single task in one deterministic order. This is the engine-
     * level form of the reference's per-partition zone grouping
     * (DnsPartitionHandler.java:32-35): pay one hash shuffle, get
-    * minimal network fan-out to the DNS servers. */
+    * minimal network fan-out to the DNS servers.
+    *
+    * The shuffle has a fixed partition count, the frame's session's
+    * `spark.sql.shuffle.partitions`: AQE coalesces a by-column
+    * repartition (to one task for a small batch) but leaves a by-number
+    * one alone, so the write runs one task per shuffle partition, each
+    * sending its zones in order on its own connection. */
   def repartitionByZone(updates: DataFrame): DataFrame = {
     val normalized = when(col("fqdn").endsWith("."), col("fqdn"))
       .otherwise(concat(col("fqdn"), lit(".")))
     val zone = normalized.substr(instr(normalized, ".") + 1, length(normalized))
-    updates.repartition(zone)
+    updates.repartition(
+      updates.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, zone)
   }
 }

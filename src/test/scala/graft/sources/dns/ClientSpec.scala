@@ -62,6 +62,10 @@ class ClientSpec extends AnyFunSuite {
       srv.backing.addZone("z.", Seq(ARecord("a.z.", "1.1.1.1")))
       val c = client(srv)
       intercept[java.net.SocketTimeoutException](c.transfer("z.", 0, XfrType.AXFR, 0))
+      val e0 = intercept[java.net.SocketTimeoutException](new WireUpdateEmitter(srv.host, srv.port, 0)
+        .update("z.", Seq(DnsUpdateRecord(DnsAction.IxfrAdd, "b.z.", "1.2.3.4", 0L, 60))))
+      assert(e0.getMessage == "update of 'z.' timed out (timeout=0)")
+      assert(srv.connectionCount == 0, "timeout=0 connected")
       intercept[java.net.ConnectException](
         new WireTransferClient(srv.host, 1).transfer("z.", 0, XfrType.AXFR, 10))
       // the server answers an unknown zone with NOTAUTH (rcode 9)
@@ -81,6 +85,43 @@ class ClientSpec extends AnyFunSuite {
       // delete then add in one message → ends present
       em.update("z.", Seq(change(DnsAction.IxfrDelete), change(DnsAction.IxfrAdd)))
       assert(srv.backing.lookup("h.z.") == Seq("9.9.9.9"))
+    }
+  }
+
+  test("a transfer client does every transfer on one connection until closed") {
+    withServer { srv =>
+      srv.backing.addZone("z.", Seq(ARecord("a.z.", "1.1.1.1")))
+      val c = client(srv)
+      try {
+        val first = c.transfer("z.", 0, XfrType.AXFR, 10)
+        assert(c.transfer("z.", 0, XfrType.AXFR, 10) == first)
+        assert(first == AxfrResult(1, Seq(ARecord("a.z.", "1.1.1.1"))))
+        assert(srv.connectionCount == 1)
+      } finally c.close()
+      // a closed client reconnects on its next call
+      c.transfer("z.", 0, XfrType.AXFR, 10)
+      c.close()
+      assert(srv.connectionCount == 2)
+    }
+  }
+
+  test("a rejected update closes the emitter's connection; the next update reconnects") {
+    withServer { srv =>
+      srv.backing.addZone("z.", Nil)
+      val em = new WireUpdateEmitter(srv.host, srv.port, 10)
+      def add(zone: String, host: String) =
+        em.update(zone, Seq(DnsUpdateRecord(DnsAction.IxfrAdd, s"$host.$zone", "1.2.3.4", 0L, 60)))
+      try {
+        val e = intercept[java.io.IOException](add("ghost.zone.", "a"))
+        assert(e.getMessage == "update of 'ghost.zone.' rejected: rcode 9")
+        assert(srv.connectionCount == 1)
+        add("z.", "a")
+        assert(srv.connectionCount == 2, "the failed exchange's connection was reused")
+        add("z.", "b")
+        assert(srv.connectionCount == 2, "a good exchange's connection was not reused")
+      } finally em.close()
+      assert(srv.backing.lookup("a.z.") == Seq("1.2.3.4"))
+      assert(srv.backing.serialOf("z.") == 3)
     }
   }
 

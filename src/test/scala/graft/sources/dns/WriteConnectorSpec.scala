@@ -168,8 +168,35 @@ class WriteConnectorSpec extends AnyFunSuite {
         .option("xfr", "AXFR").load()
         .select("fqdn", "ip").collect().map(r => (r.getString(0), r.getString(1))).toSet
       assert(back == model)
-      // more than one message reached the zone: one serial bump each
-      assert(srv.serialOf("big.test.") > 2)
+      // three frame-sized messages reached the zone, one serial bump
+      // each: the bound charges an A record its 4 rdata bytes, so a
+      // frame holds about 2,100 of these changes
+      assert(srv.serialOf("big.test.") == 4)
+    }
+  }
+
+  test("a task's append is all-or-nothing: an unencodable zone fails it before any zone is sent") {
+    // DnsValidation has no label-length rule; the encoder rejects a
+    // label of 64 bytes or more. Zone A's rows come first in the task,
+    // so a commit that sent zone after zone would apply A, then fail.
+    withServer { wire =>
+      val srv = fresh(wire, "lbl-a.test.", "lbl-b.test.")
+      import spark.implicits._
+      val e = intercept[Exception] {
+        Seq(
+          (DnsAction.IxfrAdd, "h1.lbl-a.test", "1.1.1.1", new Timestamp(1L), 60),
+          (DnsAction.IxfrAdd, "h2.lbl-a.test", "1.1.1.2", new Timestamp(2L), 60),
+          (DnsAction.IxfrAdd, s"${"x" * 64}.lbl-b.test", "2.2.2.2", new Timestamp(3L), 60))
+          .toDF("action", "fqdn", "ip", "timestamp", "ttl")
+          .coalesce(1)
+          .write.format("dns_update").option("server", wire.host).option("port", wire.port.toString)
+          .mode("append").save()
+      }
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists(t => t.getMessage != null && t.getMessage.contains("label too long")), e)
+      assert(srv.serialOf("lbl-a.test.") == 1, "zone A was applied before zone B failed")
+      assert(srv.lookup("h1.lbl-a.test.").isEmpty)
+      assert(wire.connectionCount == 0)
     }
   }
 
@@ -369,6 +396,28 @@ class WriteConnectorSpec extends AnyFunSuite {
     }
   }
 
+  test("SQL DELETE over three zones: one snapshot and one update connection") {
+    withServer { wire =>
+      val zones = (0 to 2).map(i => s"dz$i.test.")
+      val srv = fresh(wire, zones: _*)
+      zones.foreach(z => srv.update(z, Seq(ARecord(s"a.$z", "1.1.1.1"), ARecord(s"b.$z", "1.1.1.2")), Nil))
+      spark.sql("DROP TABLE IF EXISTS dns_del3")
+      spark.sql(
+        s"""CREATE TABLE dns_del3 USING dns_update
+          |OPTIONS (server '${wire.host}', port '${wire.port}')""".stripMargin)
+      val before = wire.connectionCount
+      spark.sql(s"DELETE FROM dns_del3 WHERE fqdn IN (${zones.map(z => s"'a.${z.dropRight(1)}'").mkString(", ")})")
+      // the driver's transfer client and emitter each open one
+      // connection for all three zones
+      assert(wire.connectionCount - before == 2)
+      zones.foreach { z =>
+        assert(srv.lookup(s"a.$z").isEmpty && srv.lookup(s"b.$z") == Seq("1.1.1.2"), z)
+        assert(srv.serialOf(z) == 3, z)
+      }
+      spark.sql("DROP TABLE dns_del3")
+    }
+  }
+
   test("SQL DELETE without an fqdn constraint is rejected; SELECT fails fast with the pointer") {
     withServer { wire =>
       fresh(wire, "delzone2.test.")
@@ -447,6 +496,67 @@ class WriteConnectorSpec extends AnyFunSuite {
         assert(srv.lookup(s"h$z.pz$z.test.") == Seq(s"10.1.0.$z"))
       }
     }
+  }
+
+  /** `body` with the session confs `kv` set, restored after. */
+  private def withConf[A](kv: (String, String)*)(body: => A): A = {
+    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("a 64-zone repartitionByZone append: 4 reduce tasks under AQE, one connection each") {
+    import org.apache.spark.scheduler._
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val group = "repartition-by-zone-write"
+    // tasks per completed stage of the write's jobs, in completion order
+    val stageTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    val groupStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val g = Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+        if (g == group) j.stageIds.foreach(groupStages.add)
+        if (g == group + "-sentinel") drained.countDown()
+      }
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+        if (groupStages.contains(s.stageInfo.stageId)) stageTasks.add(s.stageInfo.numTasks)
+    }
+    sc.addSparkListener(listener)
+    try withServer { wire =>
+      import spark.implicits._
+      val zones = (0 until 64).map(i => s"cc$i.test.")
+      val srv = fresh(wire, zones: _*)
+      val updates = zones.flatMap(z => (1 to 5).map(i =>
+        (DnsAction.IxfrAdd, s"h$i.$z", s"10.2.0.$i", new Timestamp(i.toLong), 60)))
+        .toDF("action", "fqdn", "ip", "timestamp", "ttl")
+      withConf("spark.sql.shuffle.partitions" -> "4", "spark.sql.adaptive.enabled" -> "true") {
+        sc.setJobGroup(group, "repartitionByZone write")
+        try graft.sources.dns.write.DnsWrites.repartitionByZone(updates)
+          .write.format("dns_update")
+          .option("server", wire.host).option("port", wire.port.toString).mode("append").save()
+        finally sc.clearJobGroup()
+      }
+      // the listener bus delivers in order: once a later job's start is
+      // seen, every event of the write has been
+      sc.setJobGroup(group + "-sentinel", "listener drain")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      // the map stage, then the write's reduce stage: 4 tasks, where a
+      // by-column shuffle of this little data coalesces to 1
+      assert(stageTasks.size == 2 && stageTasks.asScala.last == 4, stageTasks)
+      // each task sends its zones on one connection; one connection per
+      // zone would be 64
+      assert(wire.connectionCount <= 4, s"${wire.connectionCount} connections")
+      zones.foreach { z =>
+        assert(srv.serialOf(z) == 2, z)
+        assert(srv.lookup(s"h5.$z") == Seq("10.2.0.5"), z)
+      }
+    } finally sc.removeSparkListener(listener)
   }
 
   test("written changes round-trip through a dns read") {
