@@ -58,8 +58,8 @@ object BpeTokenizer {
     * in rank order. Plain column expressions end to end — Catalyst
     * constant-folds the patterns and codegen emits a straight-line
     * String.replace chain. The table-parameterized form exists for
-    * the chain-vs-native measurements (BpeProf/BpeEncodeSpec) so the
-    * profiler provably measures THIS chain, not a reimplementation. */
+    * the chain-vs-native checks (BpeEncodeSpec), so they provably
+    * compare against THIS chain, not a reimplementation. */
   def encode(word: Column, merges: Seq[(String, String)]): Column =
     merges.foldLeft(frame(word)) { case (c, (l, r)) =>
       replace(c, lit(s"|$l||$r|"), lit(s"|$l$r|"))

@@ -470,20 +470,21 @@ object Connector {
                                      hasTs: Boolean, ttl: Option[Int])
 
   /** Write-side row validation under the gate: a formulaic
-    * mixed-validity batch (5× each of 12 cases — both valid actions
+    * mixed-validity batch (5× each of 13 cases — both valid actions
     * and every rejection rule) classified through
     * [[graft.sources.dns.DnsValidation.invalidReason]] — the EXACT
     * function the DataWriter throws on, not a parallel Column
     * reimplementation — via a typed map (an audit path, not a hot
     * path). The oracle re-derives every rule in SQL over the same
-    * constructed values: null/empty checks, the action enum, strict
-    * dotted-quad IPv4 octets, timestamp presence, positive ttl. A
-    * drift between the writer's Scala rules and their documented
-    * semantics now breaks this row instead of hiding in a spec. */
+    * constructed values: null/empty checks, the action enum, the
+    * 63-byte label limit, strict dotted-quad IPv4 octets, timestamp
+    * presence, positive ttl. A drift between the writer's Scala rules
+    * and their documented semantics now breaks this row instead of
+    * hiding in a spec. */
   def qDnsValidate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val probes = s.range(60).as[Long].map { id =>
-      val k = id % 12
+    val probes = s.range(65).as[Long].map { id =>
+      val k = id % 13
       val action = k match {
         case 2 => None
         case 3 => Some("  ")
@@ -494,6 +495,7 @@ object Connector {
       val fqdn = k match {
         case 5 => None
         case 6 => Some("")
+        case 12 => Some(s"${"x" * 64}.v.graft")
         case _ => Some(s"h$id.v.graft")
       }
       val ip = k match {
@@ -517,22 +519,23 @@ object Connector {
     * table — the oracle must exercise the rule SEMANTICS). */
   private val qDnsValidateOracle: String =
     """WITH probes AS (
-      |  SELECT i % 12 AS k,
-      |    CASE WHEN i % 12 = 2 THEN NULL
-      |         WHEN i % 12 = 3 THEN '  '
-      |         WHEN i % 12 = 4 THEN 'SOMETHING'
-      |         WHEN i % 12 = 1 THEN 'IXFR_DELETE'
+      |  SELECT i % 13 AS k,
+      |    CASE WHEN i % 13 = 2 THEN NULL
+      |         WHEN i % 13 = 3 THEN '  '
+      |         WHEN i % 13 = 4 THEN 'SOMETHING'
+      |         WHEN i % 13 = 1 THEN 'IXFR_DELETE'
       |         ELSE 'IXFR_ADD' END AS action,
-      |    CASE WHEN i % 12 = 5 THEN NULL
-      |         WHEN i % 12 = 6 THEN ''
+      |    CASE WHEN i % 13 = 5 THEN NULL
+      |         WHEN i % 13 = 6 THEN ''
+      |         WHEN i % 13 = 12 THEN repeat('x', 64)||'.v.graft'
       |         ELSE 'h'||i||'.v.graft' END AS fqdn,
-      |    CASE WHEN i % 12 = 7 THEN NULL
-      |         WHEN i % 12 = 8 THEN '10.0.0.300'
-      |         WHEN i % 12 = 9 THEN '10.0.0'
+      |    CASE WHEN i % 13 = 7 THEN NULL
+      |         WHEN i % 13 = 8 THEN '10.0.0.300'
+      |         WHEN i % 13 = 9 THEN '10.0.0'
       |         ELSE '10.0.0.1' END AS ip,
-      |    (i % 12 <> 10) AS has_ts,
-      |    CASE WHEN i % 12 = 11 THEN 0 ELSE 3600 END AS ttl
-      |  FROM (SELECT unnest(generate_series(0, 59)) AS i)),
+      |    (i % 13 <> 10) AS has_ts,
+      |    CASE WHEN i % 13 = 11 THEN 0 ELSE 3600 END AS ttl
+      |  FROM (SELECT unnest(generate_series(0, 64)) AS i)),
       |classified AS (
       |  SELECT CASE
       |    WHEN action IS NULL THEN 'null_action'
@@ -540,6 +543,8 @@ object Connector {
       |    WHEN action NOT IN ('AXFR', 'IXFR_ADD', 'IXFR_DELETE') THEN 'bad_action'
       |    WHEN fqdn IS NULL THEN 'null_fqdn'
       |    WHEN trim(fqdn) = '' THEN 'empty_fqdn'
+      |    WHEN list_max(list_transform(string_split(fqdn, '.'),
+      |                    x -> length(x))) > 63 THEN 'long_label'
       |    WHEN ip IS NULL THEN 'null_ip'
       |    WHEN trim(ip) = '' THEN 'empty_ip'
       |    WHEN NOT (regexp_matches(ip, '^[0-9]{1,3}(\.[0-9]{1,3}){3}$')

@@ -43,8 +43,7 @@ object EmbeddingOps {
   private val NumBands = 4
   private val BitsPerBand = 8
   /** Max candidate ids kept per (table, bucket), smallest-vec_id-first.
-    * private[graft]: the Dial tool uses it as the default cap when only
-    * bits is being swept. */
+    * DialAuditSpec passes it as the cap when only bits is swept. */
   private[graft] val BucketCap = 128
 
   /** Quantized integer vector. */
@@ -84,7 +83,7 @@ object EmbeddingOps {
   /** Band key for table b at an explicit bits-per-band: `bits` sign
     * bits over table b's dim slice, offset by b·2^bits so keys from
     * different tables never collide. The gate pins bits =
-    * [[BitsPerBand]]; the dial/recall tools pass re-derived values. */
+    * [[BitsPerBand]]; the dial audits pass re-derived values. */
   private def bandKeyAt(b: Int, bits: Int): Column =
     (0 until bits).map { i =>
       when(expr(s"q[${b * bits + i}]") >= 0, lit(1L << i)).otherwise(lit(0L))
@@ -183,7 +182,7 @@ object EmbeddingOps {
 
   /** [[qAnnLsh]] at an explicit (bits, cap) — the same plan with the
     * occupancy dial exposed, so recall-vs-sizing at any corpus scale is
-    * a measurement (`graft.tools.Dial recall`, SCALE.md 100×), not
+    * a measurement ([[annRecallSummaryAt]], SCALE.md 100×), not
     * prose. The gate query delegates here with the pinned constants. */
   private[graft] def annLshAt(s: SparkSession, dir: String,
                               bits: Int, cap: Int): DataFrame = {
@@ -317,7 +316,8 @@ object EmbeddingOps {
     * mean occupancy constant as the corpus grows). Returns the
     * per-band-table audit — bucket count, occupancy mean/max, and how
     * many candidate slots a `cap` would drop — so re-sizing claims are
-    * MEASURED at any corpus scale (`graft.tools.Dial`, SCALE.md). */
+    * MEASURED at any corpus scale (SCALE.md; DialAuditSpec pins the
+    * accounting). */
   private[graft] def bandOccupancyAt(s: SparkSession, dir: String, bits: Int,
                                      cap: Int = BucketCap): DataFrame = {
     import s.implicits._
@@ -404,9 +404,8 @@ object EmbeddingOps {
 
   /** Corpus-level recall@5 of the sign-LSH path at an explicit
     * (bits, cap): [[recallAudit]] over [[annLshAt]], collapsed to one
-    * summary row so `graft.tools.Dial recall` can print
-    * recall-vs-sizing next to the occupancy audits at any corpus
-    * scale — the measured counterpart of "bits ∝ log₂ n". */
+    * summary row — recall-vs-sizing next to the occupancy audits at
+    * any corpus scale, the measured counterpart of "bits ∝ log₂ n". */
   private[graft] def annRecallSummaryAt(s: SparkSession, dir: String,
                                         bits: Int, cap: Int): DataFrame = {
     import s.implicits._
@@ -429,22 +428,11 @@ object EmbeddingOps {
     * is scale-free), audited against the same exact 64-dim
     * max-inner-product truth and rollup as the quantizer recalls —
     * the three families read as one cost/recall menu. Integer-exact
-    * end to end; `graft.tools.Dial rp` sweeps the dims knob. */
-  def qRpRecall(s: SparkSession, dir: String): DataFrame =
-    rpRecallAt(s, dir, dims = 16)
-
-  /** [[qRpRecall]] at an explicit target dimensionality. */
-  private[graft] def rpRecallAt(s: SparkSession, dir: String, dims: Int): DataFrame = {
+    * end to end. */
+  def qRpRecall(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    rpRecallOf(s, vecs(s, dir).select($"vec_id", $"q"), dims)
-  }
-
-  /** The RP composition over an arbitrary (vec_id, q) frame — so the
-    * dial can answer "does projection work on CLUSTERED data" on the
-    * MoG corpus with a measurement. */
-  private def rpRecallOf(s: SparkSession, v: DataFrame, dims: Int): DataFrame = {
-    import s.implicits._
-    require(dims >= 1 && dims <= 64, s"projected dims must be in [1, 64], got $dims")
+    val dims = 16
+    val v = vecs(s, dir).select($"vec_id", $"q")
     // The sign matrix as ONE broadcast row: sg[j][d] ∈ {−1, +1} from
     // the md5 parity of the (j, d) label — index metadata, like the
     // SQ8 range arrays and the PQ codebooks.
@@ -466,7 +454,7 @@ object EmbeddingOps {
     val w = Window.partitionBy($"qid").orderBy($"pdot".desc, $"cid")
     val rpTop = scored.withColumn("rnk", row_number().over(w))
       .filter($"rnk" <= 5).select($"qid", $"cid")
-    PqOps.dotTruthTopKOf(s, v, 5)
+    PqOps.dotTruthTopK(s, dir, 5)
       .join(rpTop.select($"qid".as("aqid"), $"cid".as("acid")),
         $"qid" === $"aqid" && $"cid" === $"acid", "left")
       .groupBy($"qid")
@@ -475,22 +463,6 @@ object EmbeddingOps {
         expr("(10000 * n_hits) DIV n_truth").as("recall_bp"))
       .orderBy($"qid")
   }
-
-  /** One summary row per RP dims setting — the Dial `rp` mode. */
-  private[graft] def rpDialAt(s: SparkSession, dir: String, dims: Int): DataFrame =
-    rpSummary(rpRecallAt(s, dir, dims), dims)
-
-  /** The same dial over the MoG corpus (Dial `rpmog`) — projection on
-    * CLUSTERED data, the other half of the q_rp_recall verdict. */
-  private[graft] def rpMogDialAt(s: SparkSession, dir: String, dims: Int): DataFrame =
-    rpSummary(rpRecallOf(s, PqOps.mogVecs(s, dir), dims), dims)
-
-  private def rpSummary(df: DataFrame, dims: Int): DataFrame =
-    df.agg(count(lit(1)).as("n_queries"),
-        avg(col("recall_bp")).cast("long").as("mean_recall_bp"),
-        min(col("recall_bp")).as("min_recall_bp"))
-      .select(lit(dims).as("dims"), lit(dims * 8L).as("bytes_per_vec"),
-        col("n_queries"), col("mean_recall_bp"), col("min_recall_bp"))
 
   /** Recall@5 of the sign-LSH path. */
   def qAnnRecall(s: SparkSession, dir: String): DataFrame =
@@ -559,10 +531,10 @@ object EmbeddingOps {
   /** The 2-round Lloyd machinery: returns the final-round assignment
     * (vec_id, cid, d2, q, nsq) for [[qKmeansClusters]]'s rollup and
     * [[qSemanticDedup]]'s within-cluster prune. `k` is the cell-count
-    * dial (gate queries pin k=8 to match their oracles; production
-    * sizes k ∝ n to hold cell size — and therefore SemDeDup's
-    * within-cell pair volume per row — constant; SCALE.md measures
-    * exactly that at 10×). */
+    * dial (gate queries pin k=8 to match their oracles, and
+    * [[ivfOccupancyTrainedAt]] runs k = nlist; production sizes k ∝ n
+    * to hold cell size — and therefore SemDeDup's within-cell pair
+    * volume per row — constant; SCALE.md measured that at 10×). */
   private[graft] def kmeansFinalAssign(s: SparkSession, dir: String,
                                        k: Int = 8): DataFrame = {
     import s.implicits._
@@ -599,12 +571,7 @@ object EmbeddingOps {
     * + kept-id sum) is the oracle surface; the oracle replays the full
     * composition — both Lloyd rounds, the pairwise cosines, the greedy
     * drop — nested verbatim over the same tables. */
-  def qSemanticDedup(s: SparkSession, dir: String): DataFrame =
-    semanticDedupAt(s, dir, k = 8) // k pinned to the oracle's Lloyd replay
-
-  /** [[qSemanticDedup]] with the cell-count dial exposed: the 10×
-    * stress (SCALE.md) runs k=8 vs k=80 to measure what k ∝ n buys. */
-  private[graft] def semanticDedupAt(s: SparkSession, dir: String, k: Int): DataFrame = {
+  def qSemanticDedup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // The assignment feeds THREE consumers (both self-join sides + the
     // final membership join); without materialization each one replans
@@ -613,7 +580,8 @@ object EmbeddingOps {
     // same recompute-vs-materialize call as q_dedup_clusters' loop,
     // and the frame is embedding-table-sized, so the write is bounded
     // by the input it replaces.
-    val a2 = kmeansFinalAssign(s, dir, k).select($"vec_id", $"cid", $"q", $"nsq")
+    // k = 8, pinned to the oracle's Lloyd replay
+    val a2 = kmeansFinalAssign(s, dir).select($"vec_id", $"cid", $"q", $"nsq")
       .localCheckpoint()
     val pairs = a2.as("a").join(a2.as("b"),
         $"a.cid" === $"b.cid" && $"a.vec_id" < $"b.vec_id")

@@ -242,11 +242,8 @@ object PqOps {
 
   /** Exact max-inner-product top-k per query — the truth the recall
     * audits and the dial both rank against. */
-  private[queries] def dotTruthTopK(s: SparkSession, dir: String, k: Int): DataFrame =
-    dotTruthTopKOf(s, vecs(s, dir).select(col("vec_id"), col("q")), k)
-
-  /** [[dotTruthTopK]] over an arbitrary (vec_id, q) frame. */
-  private[queries] def dotTruthTopKOf(s: SparkSession, v: DataFrame, k: Int): DataFrame = {
+  private[queries] def dotTruthTopK(s: SparkSession, dir: String, k: Int): DataFrame = {
+    val v = vecs(s, dir).select(col("vec_id"), col("q"))
     val queries = v.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("qid"), col("q").as("qv"))
     val scored = v.join(broadcast(queries), col("vec_id") =!= col("qid"))
@@ -254,41 +251,6 @@ object PqOps {
     val w = Window.partitionBy(col("qid")).orderBy(col("dot").desc, col("cid"))
     scored.withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k).select(col("qid"), col("cid"))
-  }
-
-  /** Flat-ADC recall@5 over the MoG corpus — the recall half of the
-    * clusterable-corpus verdict ([[qPqMogResidual]] is the distortion
-    * half). Dial-only ([[graft.tools.Dial]] `pqmog` mode), measured
-    * into SCALE.md rather than gated: the distortion key already pins
-    * the flip under the oracle, and recall here is the same audit
-    * shape as the gated q_pq_recall with the corpus swapped. */
-  private[graft] def mogRecall(s: SparkSession, dir: String): DataFrame = {
-    val v = mogVecs(s, dir)
-    val (c1, enc) = trainEncodeOf(s, subRowsOf(s, v))
-    val lut = subRowsOf(s, v).filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("qid"), col("m"), col("sub").as("qsub"))
-      .join(broadcast(c1), Seq("m"))
-      .select(col("qid"), col("m"), col("cid"), dot(s, "qsub", "cq").as("pdot"))
-      .groupBy(col("qid"), col("m"))
-      .agg(transform(array_sort(collect_list(struct(col("cid"), col("pdot")))),
-        _.getField("pdot")).as("lrow"))
-      .groupBy(col("qid"))
-      .agg(transform(array_sort(collect_list(struct(col("m"), col("lrow")))),
-        _.getField("lrow")).as("lut"))
-    val scored = codesOf(enc).join(broadcast(lut), col("vec_id") =!= col("qid"))
-      .withColumn("adc", adcGather(s))
-    val w = Window.partitionBy(col("qid")).orderBy(col("adc").desc, col("vec_id"))
-    val adcTop = scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 5).select(col("qid"), col("vec_id").as("cid"))
-    dotTruthTopKOf(s, v, 5)
-      .join(adcTop.select(col("qid").as("aqid"), col("cid").as("acid")),
-        col("qid") === col("aqid") && col("cid") === col("acid"), "left")
-      .groupBy(col("qid"))
-      .agg(count(lit(1)).as("nt"), count(col("acid")).as("nh"))
-      .agg(count(lit(1)).as("n_queries"),
-        (sum(expr("(10000 * nh) DIV nt")) / count(lit(1))).cast("long")
-          .as("mean_recall_bp"),
-        min(expr("(10000 * nh) DIV nt")).as("min_recall_bp"))
   }
 
   /** Shortlist-then-re-rank — how production actually deploys PQ: the
@@ -443,7 +405,7 @@ object PqOps {
     * an ANSI error on the 10× scale replica; ids at 100 TB are far
     * beyond it), and the reduction keeps every intermediate below
     * 1.8e17 at ANY id. */
-  private[graft] def mogVecs(s: SparkSession, dir: String): DataFrame =
+  private def mogVecs(s: SparkSession, dir: String): DataFrame =
     vecs(s, dir).select(col("vec_id"))
       .withColumn("q", expr(
         "transform(sequence(0, 63), d -> CAST(" +
@@ -552,23 +514,9 @@ object PqOps {
     * scan as the brute/ADC baselines — exact query against
     * reconstructed corpus, one corpus pass, no shuffle until the
     * top-k window. */
-  def qSq8Recall(s: SparkSession, dir: String): DataFrame =
-    sqRecallAt(s, dir, bits = 8)
-
-  /** [[qSq8Recall]]'s composition at an explicit bits-per-dimension —
-    * the SQ sizing dial's runnable path (`graft.tools.Dial sq`), same
-    * contract as the bits/nlist/ks dials. `levels = 2^bits − 1` is the
-    * top code; the gate pins bits = 8. */
-  private[graft] def sqRecallAt(s: SparkSession, dir: String, bits: Int): DataFrame =
-    sqRecallOf(s, vecs(s, dir).select(col("vec_id"), col("q")), bits)
-
-  /** The SQ composition over an arbitrary (vec_id, q) frame —
-    * corpus-agnostic like the PQ/IVF `*Of` cores, so the dial can run
-    * it on the MoG table and answer "does the verdict flip on
-    * clustered data" with a measurement. */
-  private def sqRecallOf(s: SparkSession, v: DataFrame, bits: Int): DataFrame = {
-    require(bits >= 1 && bits <= 16, s"bits-per-dim must be in [1, 16], got $bits")
-    val levels = (1 << bits) - 1
+  def qSq8Recall(s: SparkSession, dir: String): DataFrame = {
+    val v = vecs(s, dir).select(col("vec_id"), col("q"))
+    val levels = 255 // the top 8-bit code
     val stats = v.select(posexplode(col("q")).as(Seq("d", "x")))
       .groupBy(col("d")).agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
       .agg(expr("transform(array_sort(collect_list(struct(d, mn))), p -> p.mn)").as("mn"),
@@ -587,7 +535,7 @@ object PqOps {
     val w = Window.partitionBy(col("qid")).orderBy(col("adc").desc, col("cid"))
     val sqTop = scored.withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= 5).select(col("qid"), col("cid"))
-    dotTruthTopKOf(s, v, 5)
+    dotTruthTopK(s, dir, 5)
       .join(sqTop.select(col("qid").as("aqid"), col("cid").as("acid")),
         col("qid") === col("aqid") && col("cid") === col("acid"), "left")
       .groupBy(col("qid"))
@@ -597,26 +545,8 @@ object PqOps {
       .orderBy(col("qid"))
   }
 
-  /** One summary row per SQ bits setting — bytes per vector and what
-    * they buy in recall, next to the PQ dial's rows. */
-  private[graft] def sqDialAt(s: SparkSession, dir: String, bits: Int): DataFrame =
-    sqSummary(sqRecallAt(s, dir, bits), bits)
-
-  /** The same dial over the MoG corpus — the clustered-data half of
-    * the SQ verdict, like `pqmog` for flat ADC. */
-  private[graft] def sqMogDialAt(s: SparkSession, dir: String, bits: Int): DataFrame =
-    sqSummary(sqRecallOf(s, mogVecs(s, dir), bits), bits)
-
-  private def sqSummary(df: DataFrame, bits: Int): DataFrame =
-    df.agg(count(lit(1)).as("n_queries"),
-        avg(col("recall_bp")).cast("long").as("mean_recall_bp"),
-        min(col("recall_bp")).as("min_recall_bp"))
-      .select(lit(bits).as("bits_per_dim"),
-        lit((64L * bits + 7) / 8).as("bytes_per_vec"),
-        col("n_queries"), col("mean_recall_bp"), col("min_recall_bp"))
-
-  /** The codebook-size DIAL as a runnable code path ([[graft.tools
-    * .Dial]] `pq` mode), same contract as the bits/nlist dials: at an
+  /** The codebook-size DIAL as a runnable code path (DialAuditSpec
+    * pins it), same contract as the bits/nlist dials: at an
     * explicit per-subspace codebook size `ks`, one summary row — the
     * bits each code costs, total/mean training distortion, and corpus
     * recall@5 of the flat ADC scan against the exact max-inner-product
@@ -656,15 +586,11 @@ object PqOps {
         col("n_queries"), col("mean_recall_bp"), col("min_recall_bp"))
   }
 
-  /** Intermediate frames exposed for `tools.PqProf`'s stage bisect. */
-  private[graft] def profEncode(s: SparkSession, dir: String): DataFrame =
-    trainEncode(s, dir)._2
+  /** The codes and LUT frames PqOpsSpec recomputes every ADC value from. */
   private[graft] def profCodes(s: SparkSession, dir: String): DataFrame =
     codesOf(trainEncode(s, dir)._2)
   private[graft] def profLut(s: SparkSession, dir: String): DataFrame =
     lutFor(s, dir, trainEncode(s, dir)._1)
-  private[graft] def profCells(s: SparkSession, dir: String): DataFrame =
-    EmbeddingOps.ivfCells(s, dir)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_pq_distortion" -> qPqDistortion,

@@ -1199,7 +1199,7 @@ object TextOps {
   }
 
   /** [[qNgramJaccard]]'s PRE-cap band rows — extracted so the skew
-    * audit (tools/SkewAudit) can measure raw bucket cardinality before
+    * audit ([[SkewAudit]]) can measure raw bucket cardinality before
     * the cap truncates it. Same frame the query caps and verifies. */
   private[queries] def ngramBandRows(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -1423,8 +1423,8 @@ object TextOps {
     * property of the label VALUE space, not of pointer jumping per
     * se: labels are ball-minima, and a jump stalls at any vertex
     * that is the minimum of its own reach-ball, so on an
-    * order-DESTROYED id layout (CcProf -shuffle: ids remapped through
-    * a multiplicative hash) the many local minima dissolve only at
+    * order-DESTROYED id layout (ids remapped through a multiplicative
+    * hash, the layout q_cc_hashed_ids gates) the many local minima dissolve only at
     * the +1/round neighbor-min rate and a diameter-39 path blows the
     * bound — measured, not hypothetical. The loop stops at the actual
     * fixed point (checked per round); hitting the bound without
@@ -1623,7 +1623,7 @@ object TextOps {
   /** Layout-robust connected components: alternating LARGE-STAR /
     * SMALL-STAR (Kiveris et al., SoCC'14). Where [[connectedComponents]]'
     * min-label jumps need vertex-id order to correlate with graph
-    * locality (the measured CcProf -shuffle failure: on hashed ids a
+    * locality (the measured hashed-id failure: on hashed ids a
     * diameter-39 path blows the 16-round bound), the star operators
     * rewire edges themselves — large-star hangs every
     * larger-than-center neighbor under the neighborhood minimum,
@@ -1859,9 +1859,10 @@ object TextOps {
     * through a multiplicative hash ((rk · 2654435761) mod the prime
     * 4294967311 — injective for rk below the modulus, order
     * DESTROYED). On this layout the min-label jumps stall at local
-    * reach-ball minima and blow the 16-round bound (measured, CcProf
-    * -shuffle); the alternating-star operator converges in ~6
-    * alternations regardless. Vertices come from the staged rank map
+    * reach-ball minima and blow the 16-round bound (measured with the
+    * CcProf probe's -shuffle mode, last in commit 7fdb09f); the
+    * alternating-star operator converges in ~6 alternations
+    * regardless. Vertices come from the staged rank map
     * (a consumer like q_graph_components); the oracle replays rank,
     * hash, chain, and true components via the recursive CTE — the
     * same ground truth, blind to which loop produced the labels. */

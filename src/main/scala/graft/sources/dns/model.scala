@@ -134,7 +134,8 @@ object Ipv4 {
   *
   * The rule SET mirrors the reference's DnsPartitionHandler.java:69-77
   * (this repo is deliberately stricter on whitespace-only strings —
-  * SURVEY §2.3); the FIRST-VIOLATION ORDER is this connector's writer
+  * SURVEY §2.3 — and rejects a label the wire encoder cannot carry as
+  * `long_label`); the FIRST-VIOLATION ORDER is this connector's writer
   * order (action→fqdn→ip→timestamp→ttl), NOT the reference's
   * (ip→action→timestamp→ttl→fqdn). The accept/reject set is identical
   * either way — only which reason is reported for a multi-invalid row
@@ -152,6 +153,7 @@ object DnsValidation {
     str(action, "action")
       .orElse(if (!DnsAction.all.contains(action.get)) Some("bad_action") else None)
       .orElse(str(fqdn, "fqdn"))
+      .orElse(if (hasLongLabel(fqdn.get)) Some("long_label") else None)
       .orElse(str(ip, "ip"))
       .orElse(if (!Ipv4.isValid(ip.get)) Some("bad_ip") else None)
       .orElse(if (!hasTimestamp) Some("null_timestamp") else None)
@@ -160,6 +162,22 @@ object DnsValidation {
         case Some(t) if t <= 0 => Some("bad_ttl")
         case _ => None
       })
+  }
+
+  /** True when a '.'-separated label of `fqdn` is longer than
+    * [[DnsWire.MaxLabelBytes]] as [[DnsWire]] encodes it: one byte per
+    * code point, since a non-ASCII one becomes a single replacement byte.
+    * Runs on every written row, so it walks the string in place. */
+  private def hasLongLabel(fqdn: String): Boolean = {
+    var label = 0
+    var i = 0
+    while (i < fqdn.length) {
+      val cp = fqdn.codePointAt(i)
+      label = if (cp == '.') 0 else label + 1
+      if (label > DnsWire.MaxLabelBytes) return true
+      i += Character.charCount(cp)
+    }
+    false
   }
 }
 

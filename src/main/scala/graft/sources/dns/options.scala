@@ -45,21 +45,19 @@ final case class DnsSourceOptions(common: DnsCommonOptions,
   def estimatedZoneRows: Long = estimatedZoneBytes / DnsOptions.EstimatedRowBytes
 }
 
-/** Sink options. The three row-level fields exist ONLY for SQL
+/** Sink options. The two row-level fields exist ONLY for SQL
   * UPDATE/MERGE INTO (`SupportsRowLevelOperations`): a group-based
   * rewrite must SCAN current zone state before writing replacements
   * back, and the append-only write path has no zone list to scan —
   * so `zones` names the operation's groups, and `fixed-timestamp-
-  * micros` / `scan-ttl` supply the two write-schema fields the server
-  * model does not store per record (the reference's A-record state is
-  * (name, ip) pairs — Xfr.java keeps no per-record timestamp or TTL).
-  * Plain appends/overwrites/deletes ignore all three. */
+  * micros` supplies the write-schema timestamp the server model does
+  * not store per record (the reference's A-record state is (name, ip)
+  * pairs — Xfr.java keeps no per-record timestamp or TTL; the scan's
+  * TTL is [[DnsOptions.DefaultScanTtl]]). Plain appends/overwrites/
+  * deletes ignore both. */
 final case class DnsSinkOptions(common: DnsCommonOptions,
                                 zones: Seq[String] = Nil,
-                                fixedTimestampMicros: Option[Long] = None,
-                                scanTtl: Int = DnsOptions.DefaultScanTtl) {
-  require(scanTtl >= 0, s"option 'scan-ttl' must be >= 0: $scanTtl")
-}
+                                fixedTimestampMicros: Option[Long] = None)
 
 object DnsOptions {
   val DefaultPort = 53
@@ -131,8 +129,7 @@ object DnsOptions {
     zones = o.get("zones").toSeq
       .flatMap(_.split(",").iterator.map(_.trim).filter(_.nonEmpty))
       .map(Fqdn.normalize).distinct,
-    fixedTimestampMicros = o.get("fixed-timestamp-micros").map(_.toLong),
-    scanTtl = o.get("scan-ttl").map(_.toInt).getOrElse(DefaultScanTtl))
+    fixedTimestampMicros = o.get("fixed-timestamp-micros").map(_.toLong))
 
   private[dns] def lowerKeys(m: java.util.Map[String, String]): Map[String, String] =
     m.asScala.map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v }.toMap

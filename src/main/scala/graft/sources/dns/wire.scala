@@ -59,6 +59,9 @@ object DnsWire {
 
   // ------------------------------------------------------------ encode
 
+  /** The longest label a name may carry (RFC 1035 §2.3.4). */
+  final val MaxLabelBytes = 63
+
   /** Writes a message straight into one array sized from an upper bound
     * of its encoding, so nothing grows or is copied on the way. The
     * first `offset` bytes stay free for the TCP length prefix. */
@@ -92,14 +95,14 @@ object DnsWire {
       var i = start
       while (i < end && name.charAt(i) < 0x80) i += 1
       if (i == end) {
-        require(end - start < 64, s"label too long in '$name'")
+        require(end - start <= MaxLabelBytes, s"label too long in '$name'")
         u8(end - start)
         i = start
         while (i < end) { buf(pos) = name.charAt(i).toByte; pos += 1; i += 1 }
       } else {
         // non-ASCII: the charset's replacement rules set the byte count
         val bytes = name.substring(start, end).getBytes(StandardCharsets.US_ASCII)
-        require(bytes.length < 64, s"label too long in '$name'")
+        require(bytes.length <= MaxLabelBytes, s"label too long in '$name'")
         u8(bytes.length)
         System.arraycopy(bytes, 0, buf, pos, bytes.length)
         pos += bytes.length

@@ -111,7 +111,7 @@ final class DnsZoneStateReaderFactory(opts: DnsSinkOptions)
             UTF8String.fromString(DnsAction.IxfrAdd),
             UTF8String.fromString(r.fqdn.toLowerCase(java.util.Locale.ROOT)),
             UTF8String.fromString(r.ip),
-            ts, opts.scanTtl)): InternalRow
+            ts, DnsOptions.DefaultScanTtl)): InternalRow
         }
       }
       private var current: InternalRow = _

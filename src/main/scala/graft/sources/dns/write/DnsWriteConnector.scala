@@ -330,11 +330,12 @@ final class DnsDataWriter(opts: DnsSinkOptions, idx: FieldIndices,
   override def write(row: InternalRow): Unit = {
     // Validation mirrors DnsPartitionHandler.java:69-77 via the shared
     // rule table (DnsValidation — the same function the gated
-    // q_dns_validate audit classifies with). What the rules do not
-    // cover (a label too long, say) fails at wire encoding, which
-    // commit() runs for every zone before it sends the first one, so a
-    // task's write stays all-or-nothing either way (the reference fails
-    // the same way when dnsjava parses the address).
+    // q_dns_validate audit classifies with), including the label
+    // length the wire encoder enforces. Anything the rules still miss
+    // fails at wire encoding, which commit() runs for every zone before
+    // it sends the first one, so a task's write stays all-or-nothing
+    // either way (the reference fails the same way when dnsjava parses
+    // the address).
     def strOpt(i: Int): Option[String] =
       if (row.isNullAt(i)) None else Some(row.getUTF8String(i).toString)
     val actionOpt = strOpt(idx.action)

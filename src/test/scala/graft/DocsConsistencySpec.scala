@@ -40,6 +40,25 @@ class DocsConsistencySpec extends AnyFunSuite {
       s"QUERIES.md matrix sentence count is stale — the gate has $n keys")
   }
 
+  test("every tool main the docs name exists under graft/tools") {
+    // SCALE.md and BASELINE.md are round history and may name deleted
+    // tools (with the commit that last held them); these four are the
+    // how-to-run docs, where a stale name is a command that fails.
+    def read(path: String) = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(path)), java.nio.charset.StandardCharsets.UTF_8)
+    val named = Seq("README.md", "QUERIES.md", "SURVEY.md", ".claude/skills/verify/SKILL.md")
+      .flatMap(d => "graft\\.tools\\.([A-Za-z0-9_]+)".r.findAllMatchIn(read(d)).map(d -> _.group(1)))
+    assert(named.nonEmpty, "no graft.tools.<Name> mention found in the docs")
+    val mains = new java.io.File("src/main/scala/graft/tools").listFiles()
+      .filter(_.getName.endsWith(".scala")).map(f => read(f.getPath))
+      .flatMap { src =>
+        "(?m)^object ([A-Za-z0-9_]+)".r.findAllMatchIn(src).map(_.group(1))
+          .filter(_ => src.contains("def main(args: Array[String])"))
+      }.toSet
+    val stale = named.filterNot { case (_, name) => mains.contains(name) }
+    assert(stale.isEmpty, s"docs name tool mains that do not exist: $stale (mains: $mains)")
+  }
+
   test("the committed matrix artifact covers exactly the script's cells") {
     // tools/matrix.sh emits MATRIX_rN.json per run; this pins the
     // LATEST committed artifact's cell list to the script, so a cell

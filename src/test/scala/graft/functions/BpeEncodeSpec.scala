@@ -73,10 +73,9 @@ class BpeEncodeSpec extends AnyFunSuite {
   }
 
   /** A well-formed 1,500-rule vocabulary: all 676 char pairs, then 824
-    * three-char extensions — the shape of a real trained table
-    * (construction shared with the BpeProf measurement tool). */
+    * three-char extensions — the shape of a real trained table. */
   private lazy val bigTable: Seq[(String, String)] =
-    graft.tools.BpeProf.table(1500)
+    BpeTables.synthetic(1500)
 
   test("1,500-rule table: native encodes; equals the reference chain") {
     assert(bigTable.size == 1500)
@@ -108,17 +107,17 @@ class BpeEncodeSpec extends AnyFunSuite {
   test("the replace-chain form cannot execute a production-size table; native can") {
     // the r15 verdict's production-size claim, pinned empirically: the
     // chain builds one nested expression node per rule, and Catalyst's
-    // recursive tree walks blow the stack (BpeProf measures: chain
-    // StackOverflowError at 1,500 and 8,000 rules on the default
-    // stack, native ok and FASTER at more rules — more merges,
-    // shorter outputs). The probe runs on a thread with a PINNED
+    // recursive tree walks blow the stack (the BpeProf probe, last in
+    // commit 7fdb09f, measured: chain StackOverflowError at 1,500 and
+    // 8,000 rules on the default stack, native ok and FASTER at more
+    // rules — more merges, shorter outputs). The probe runs on a thread with a PINNED
     // 512 KiB stack so the overflow is deterministic across JIT
     // states (on the main thread, frame sizes vary enough with
     // inlining that a 1,500-deep walk sometimes squeaked through —
     // observed as a same-code pass/fail flip between suite runs).
     val spark = graft.SparkTestSession.spark
     import spark.implicits._
-    val huge = graft.tools.BpeProf.table(8000)
+    val huge = BpeTables.synthetic(8000)
     val df = Seq("abcabc").toDF("w")
     val nativeOut = df.select(
       GraftFunctions.bpeEncode($"w", BpeEncode.toSpec(huge))).collect()
@@ -126,7 +125,7 @@ class BpeEncodeSpec extends AnyFunSuite {
     var chainRes: Either[Array[org.apache.spark.sql.Row], Throwable] = null
     val probe = new Thread(null, () => {
       chainRes =
-        try Left(df.select(graft.tools.BpeProf.chainColumn($"w", huge)).collect())
+        try Left(df.select(BpeTokenizer.encode($"w", huge)).collect())
         catch { case t: Throwable => Right(t) }
     }, "bpe-chain-probe", 512 * 1024)
     probe.start(); probe.join(120000)

@@ -138,7 +138,7 @@ class ByteBpeSpec extends AnyFunSuite {
     // production-size path the chain form cannot compile
     val spark = graft.SparkTestSession.spark
     import spark.implicits._
-    val big = graft.tools.BpeProf.table(1500)
+    val big = BpeTables.synthetic(1500)
     val spec = BpeEncode.toSpec(big)
     val out = Seq("abcabc", "hello 日本").toDF("w")
       .select(GraftFunctions.bpeEncodeBytes($"w", spec).as("e"))

@@ -82,8 +82,8 @@ class ComponentsSpec extends AnyFunSuite {
 
   test("star alternation converges on the order-destroyed layout where min-label blows its bound") {
     import spark.implicits._
-    // The CcProf -shuffle bijection: order-destroying, injective below
-    // the prime modulus — the id layout of a hashed-key graph.
+    // The hashed-id bijection q_cc_hashed_ids gates: order-destroying,
+    // injective below the prime modulus — the id layout of a hashed-key graph.
     def remap(c: org.apache.spark.sql.Column) =
       pmod(c * 2654435761L, lit(4294967311L))
     val pairs = pathPairs(200, 5) // 5 blocks of 40, diameter 39

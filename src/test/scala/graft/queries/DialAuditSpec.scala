@@ -2,8 +2,8 @@ package graft.queries
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The sizing-dial audit helpers (`graft.tools.Dial` backends) feed
-  * SCALE.md's re-derivation tables; these invariants keep their
+/** The sizing-dial audit helpers (band, IVF, trained-IVF, PQ and
+  * LSH-recall dials) fed SCALE.md's re-derivation tables; these invariants keep their
   * accounting honest: every corpus vector is counted exactly once at
   * any dial setting, cell/bucket counts respect the dial, and the
   * trained-centroid audit agrees with the untrained one on totals (the
@@ -26,7 +26,7 @@ class DialAuditSpec extends AnyFunSuite {
   }
 
   test("annRecallSummaryAt: recall_bp bounded, degenerate bits rejected") {
-    // the Dial recall backend: one summary row, basis points in range
+    // the recall dial: one summary row, basis points in range
     val r = EmbeddingOps.annRecallSummaryAt(spark, dir,
       bits = 4, cap = EmbeddingOps.BucketCap).collect().head
     assert(r.getAs[Long]("n_queries") > 0L)

@@ -125,6 +125,25 @@ class ClientSpec extends AnyFunSuite {
     }
   }
 
+  test("append frames every zone before it sends one: an unencodable zone sends nothing") {
+    // DnsValidation rejects such a row in write(); this pins the
+    // emitter's own order for whatever the rules still miss
+    withServer { srv =>
+      srv.backing.addZone("a.", Nil)
+      srv.backing.addZone("b.", Nil)
+      val em = new WireUpdateEmitter(srv.host, srv.port, 10)
+      def add(fqdn: String) = DnsUpdateRecord(DnsAction.IxfrAdd, fqdn, "1.2.3.4", 0L, 60)
+      try {
+        val e = intercept[IllegalArgumentException](em.append(Seq(
+          "a." -> Seq(add("h.a.")), "b." -> Seq(add(s"${"x" * 64}.b.")))))
+        assert(e.getMessage.contains("label too long"), e)
+      } finally em.close()
+      assert(srv.backing.lookup("h.a.").isEmpty)
+      assert(srv.backing.serialOf("a.") == 1, "zone a was applied before zone b failed")
+      assert(srv.connectionCount == 0)
+    }
+  }
+
   test("update to unknown zone rejects whole message (rcode != 0 equivalent)") {
     withServer { srv =>
       val em = new WireUpdateEmitter(srv.host, srv.port, 10)

@@ -176,9 +176,9 @@ class WriteConnectorSpec extends AnyFunSuite {
   }
 
   test("a task's append is all-or-nothing: an unencodable zone fails it before any zone is sent") {
-    // DnsValidation has no label-length rule; the encoder rejects a
-    // label of 64 bytes or more. Zone A's rows come first in the task,
-    // so a commit that sent zone after zone would apply A, then fail.
+    // A label of 64 bytes or more fails DnsValidation as long_label,
+    // the limit the encoder enforces. Zone A's rows come first in the
+    // task, so a write that sent zone after zone would apply A, then fail.
     withServer { wire =>
       val srv = fresh(wire, "lbl-a.test.", "lbl-b.test.")
       import spark.implicits._
@@ -193,7 +193,7 @@ class WriteConnectorSpec extends AnyFunSuite {
           .mode("append").save()
       }
       val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
-      assert(chain.exists(t => t.getMessage != null && t.getMessage.contains("label too long")), e)
+      assert(chain.exists(t => t.getMessage != null && t.getMessage.contains("long_label")), e)
       assert(srv.serialOf("lbl-a.test.") == 1, "zone A was applied before zone B failed")
       assert(srv.lookup("h1.lbl-a.test.").isEmpty)
       assert(wire.connectionCount == 0)
