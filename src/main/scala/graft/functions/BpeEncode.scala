@@ -7,26 +7,26 @@ import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native BPE encode — priority merges over a broadcast rank table,
-  * per-row O(len·log len) INDEPENDENT of vocabulary size.
+  * per-row O(len·log len) INDEPENDENT of vocabulary size. The one
+  * encoder on production paths (`q_bpe_tokens`, the byte-level keys).
   *
-  * [[BpeTokenizer.encode]]'s replace chain (one codegen'd `replace`
-  * per rule) is correct and oracle-replayable at the gated 40-rule
-  * table, but cannot reach a production 32k-merge vocabulary:
-  * expression depth and per-row cost both grow with the rule count
-  * (r15 verdict item 2). This expression runs the classic
-  * lowest-rank-pair-first merge loop (the GPT-2 encoder shape): a
-  * doubly-linked token list over the word's chars plus a binary heap
-  * of (rank, position) candidates with lazy invalidation — each pop
-  * either merges one pair (pushing ≤ 2 new candidates) or discards a
-  * stale entry, so total work is O(len·log len) with the rank lookup
-  * a hash probe into a table that rides the expression tree exactly
-  * like the chain's plan constants (broadcast with the closure; no
-  * side lookup, no shuffle).
+  * A rank-order `replace` chain (one `replace` per rule, the form
+  * [[BpeTokenizer.oracleEncodeSql]] generates for the oracle) cannot
+  * reach a production 32k-merge vocabulary: expression depth and
+  * per-row cost both grow with the rule count (r15 verdict item 2).
+  * This expression runs the classic lowest-rank-pair-first merge loop
+  * (the GPT-2 encoder shape): a doubly-linked token list over the
+  * word's chars plus a binary heap of (rank, position) candidates with
+  * lazy invalidation — each pop either merges one pair (pushing ≤ 2
+  * new candidates) or discards a stale entry, so total work is
+  * O(len·log len) with the rank lookup a hash probe into a table that
+  * rides the expression tree as a plan constant (broadcast with the
+  * closure; no side lookup, no shuffle).
   *
-  * Chain equivalence (gated by `q_bpe_encode_native`, whose DuckDB
-  * oracle replays the CHAIN form): for a WELL-FORMED table — every
-  * rule side is a single char or the output of an earlier rule, the
-  * defining property of a trained merge list, validated eagerly by
+  * Chain equivalence (gated by `q_bpe_tokens`, whose DuckDB oracle
+  * replays the CHAIN form): for a WELL-FORMED table — every rule side
+  * is a single char or the output of an earlier rule, the defining
+  * property of a trained merge list, validated eagerly by
   * [[BpeEncode.Table]] — merging the lowest-ranked pair first,
   * leftmost occurrence first, performs exactly one left-to-right
   * non-overlapping pass per rule in rank order: a merge can only
@@ -38,8 +38,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Registered as SQL `bpe_encode(word)` over the gated
   * [[BpeTokenizer.Merges]] table via [[GraftExtensions]]; tests
-  * construct the expression directly with 1000+-rule tables the chain
-  * form cannot compile. */
+  * construct the expression directly with 1000+-rule tables. */
 case class BpeEncode(child: Expression, merges: Seq[(String, String)])
     extends UnaryExpression {
 
@@ -77,8 +76,7 @@ object BpeEncode {
     * by `;` (e.g. `"t h;i n;th e"`) — the form the 2-arg SQL surface
     * `bpe_encode(word, spec)` takes. The spec must be a foldable
     * literal: a production vocabulary is a few hundred KB of plan
-    * constant, broadcast with the query exactly like the chain's
-    * patterns, never a side lookup. */
+    * constant, broadcast with the query, never a side lookup. */
   def parseSpec(spec: String): Seq[(String, String)] =
     spec.split(';').toSeq.filter(_.nonEmpty).map { rule =>
       val i = rule.indexOf(' ')
@@ -124,8 +122,8 @@ object BpeEncode {
   }
 
   /** Static seam for generated code. Encodes one word into the framed
-    * `|tok||tok|` form, bit-identical to [[BpeTokenizer.encode]] on
-    * the same table. */
+    * `|tok||tok|` form, bit-identical to the rank-order replace chain
+    * ([[BpeTokenizer.oracleEncodeSql]]) on the same table. */
   def encodeWord(u: UTF8String, table: Table): UTF8String = {
     val s = u.toString
     if (s.isEmpty) return UTF8String.EMPTY_UTF8

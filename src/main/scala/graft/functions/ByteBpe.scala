@@ -23,7 +23,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * the remapped string plugs into the SAME merge machinery
   * ([[BpeEncode.Table]] + heap loop) and the SAME `|tok||tok|` frame
   * currency as the code-point encoder, and the chain-equivalence
-  * proof gated by `q_bpe_encode_native` carries over verbatim: the
+  * proof gated by `q_bpe_tokens` carries over verbatim: the
   * DuckDB oracle replays the rank-order replace chain over the
   * remapped text (closed-form — see `q_bpe_bytelevel`).
   *
@@ -183,7 +183,7 @@ object ByteBpe {
   /** The byte-level encode chain as DuckDB SQL over an ALREADY
     * REMAPPED expression — the oracle replays the rank-order replace
     * chain generated from the same table (the cross-algorithm gate of
-    * `q_bpe_encode_native`, carried to the byte alphabet). Remap
+    * `q_bpe_tokens`, carried to the byte alphabet). Remap
     * chars are embedded as UTF-8 literals; both engines' md5 hashes
     * UTF-8 bytes, so the comparison is bit-level. */
   def oracleEncodeSql(innerRemapped: String): String =

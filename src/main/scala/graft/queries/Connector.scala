@@ -58,13 +58,27 @@ object Connector {
       .option("fixed-timestamp-micros", TsMicros.toString)
       .load()
 
-  /** Full batch read through spark.read.format("dns"): table → one
-    * partition per zone → one wire AXFR each (RFC 1035/5936 encode, TCP
-    * framing, multi-message reassembly) → rows. */
-  def qDnsRead(s: SparkSession, dir: String): DataFrame =
-    axfr(s, readFixture("q_dns_read"), ReadZones)
-      .select("action", "fqdn", "ip", "organization", "timestamp", "zone")
-      .orderBy("zone", "fqdn")
+  /** Full batch read through the SQL-DDL surface: the connector
+    * registered as a catalog table via `CREATE TABLE ... USING dns
+    * OPTIONS (...)` on the V2 session catalog and queried through
+    * `spark.sql` — the reference's RelationProvider SQL path
+    * (DnsSourceRelationProviderTest.java:125-135). Table → one
+    * partition per zone → one wire AXFR each (RFC 1035/5936 encode,
+    * TCP framing, multi-message reassembly) → rows. The
+    * `spark.read.format("dns")` registration is gated by every other
+    * read key. */
+  def qDnsRead(s: SparkSession, dir: String): DataFrame = {
+    val wire = readFixture("q_dns_read")
+    s.sql("DROP TABLE IF EXISTS graft_dns_read")
+    s.sql(
+      s"""CREATE TABLE graft_dns_read USING dns OPTIONS (
+         | server '${wire.host}', port '${wire.port}', organization 'graft',
+         | zones '$ReadZones', xfr 'AXFR',
+         | `fixed-timestamp-micros` '$TsMicros')""".stripMargin)
+    s.sql(
+      """SELECT action, fqdn, ip, organization, timestamp, zone
+        |FROM graft_dns_read ORDER BY zone, fqdn""".stripMargin)
+  }
 
   private val qDnsReadOracle: String =
     s"""WITH h AS (
@@ -78,27 +92,6 @@ object Connector {
        |  make_timestamp($TsMicros) AS "timestamp",
        |  'z'||j||'.graft.' AS zone
        |FROM h ORDER BY zone, fqdn""".stripMargin
-
-  /** Zone-pruned read: four zones registered, ONE requested via an
-    * ordinary `filter` — the zone-equality predicate reaches the
-    * connector's `SupportsPushDownFilters`, which plans one
-    * InputPartition and runs ONE zone transfer instead of four
-    * (asserted partition-level in ReadConnectorSpec; this query makes
-    * the pruned RESULT part of the official oracle gate). Pruning
-    * whole transfers is the connector's only meaningful scan
-    * optimization — at a large zone count it is the difference
-    * between O(zones) network transfers and O(requested). */
-  def qDnsZonePruned(s: SparkSession, dir: String): DataFrame =
-    axfr(s, readFixture("q_dns_zone_pruned"), ReadZones)
-      .filter(col("zone") === "z2.graft.")
-      .select("action", "fqdn", "ip", "zone")
-      .orderBy("fqdn")
-
-  private val qDnsZonePrunedOracle: String =
-    """SELECT 'AXFR' AS action, 'h'||i||'.z2.graft.' AS fqdn,
-      |  '10.2.0.'||i AS ip, 'z2.graft.' AS zone
-      |FROM (SELECT unnest(generate_series(0, 11)) AS i)
-      |ORDER BY fqdn""".stripMargin
 
   /** RUNTIME zone pruning (`SupportsRuntimeFiltering`) under the oracle
     * gate: four zones registered, NONE statically filtered — the zones
@@ -413,25 +406,6 @@ object Connector {
       |  FROM (SELECT unnest([5, 6, 7, 8]) AS k))
       |SELECT * FROM (SELECT * FROM dels UNION ALL SELECT * FROM adds)
       |ORDER BY ord, fqdn""".stripMargin
-
-  /** SQL-DDL surface: the connector registered as a catalog table via
-    * `CREATE TABLE ... USING dns OPTIONS (...)` and queried through
-    * `spark.sql` — the reference's RelationProvider SQL path
-    * (DnsSourceRelationProviderTest.java:125-135) on the V2 session
-    * catalog. Same fixture and oracle as [[qDnsRead]]: DDL-vs-DataFrame
-    * registration must be result-invisible. */
-  def qDnsSql(s: SparkSession, dir: String): DataFrame = {
-    val wire = readFixture("q_dns_sql")
-    s.sql("DROP TABLE IF EXISTS graft_dns_sql")
-    s.sql(
-      s"""CREATE TABLE graft_dns_sql USING dns OPTIONS (
-         | server '${wire.host}', port '${wire.port}', organization 'graft',
-         | zones 'z0.graft,z1.graft,z2.graft,z3.graft', xfr 'AXFR',
-         | `fixed-timestamp-micros` '$TsMicros')""".stripMargin)
-    s.sql(
-      """SELECT action, fqdn, ip, organization, timestamp, zone
-        |FROM graft_dns_sql ORDER BY zone, fqdn""".stripMargin)
-  }
 
   /** The failure POLICY under the gate: four zones requested, one
     * nonexistent, `ignore-failures=true` — the dead zone's transfer
@@ -1092,78 +1066,74 @@ object Connector {
       |UNION ALL SELECT 'TOTAL', CAST(46 AS BIGINT)
       |ORDER BY zone""".stripMargin
 
-  /** LIMIT pushdown (`SupportsPushDownLimit`) under the oracle gate.
-    * Deterministic by construction: the zone filter statically prunes
-    * to ONE partition, whose reader yields records in the zone's
-    * serve order (h0..h11), so the pushed `LIMIT 5` materializes
-    * exactly h0..h4 before Spark's global limit confirms it — the
-    * rows, not just the count, are part of the hash. The re-sort
-    * ABOVE the limit only canonicalizes output order. The partial
-    * contract (reader stops early, Spark keeps the global limit) and
-    * the agg-composition refusal are spec-asserted. */
-  def qDnsLimit(s: SparkSession, dir: String): DataFrame =
-    axfr(s, readFixture("q_dns_limit"), ReadZones)
-      .filter(col("zone") === "z2.graft.")
-      .select("action", "fqdn", "ip", "zone")
-      .limit(5)
-      .orderBy("fqdn")
+  /** The scan pushdowns under one oracle gate: four probes on one
+    * fixture server, each tagged with a `probe` column, unioned. Each
+    * branch keeps its own scan and its own pushed shape (plan-asserted
+    * in PlanAuditSpec, so a union that silently lost a push fails
+    * there even though the rows would still match):
+    *
+    *  - `zone_pruned`: an ordinary `filter` on zone reaches
+    *    `SupportsPushDownV2Filters` (`PushedPredicates`), which plans
+    *    ONE partition and runs ONE zone transfer instead of four — at a
+    *    large zone count the difference between O(zones) network
+    *    transfers and O(requested).
+    *  - `limit`: `SupportsPushDownLimit` over that one partition, whose
+    *    reader yields records in serve order (h0..h11), so the pushed
+    *    `LIMIT 5` is COMPLETE and is exactly h0..h4 — the rows, not
+    *    just the count, are hashed. The partial contract (reader stops
+    *    early, Spark keeps the global limit) is spec-asserted.
+    *  - `topn`: `SupportsPushDownTopN` over four zones, no static
+    *    filter: each partition reader sorts its own zone in memory (a
+    *    zone is bounded by message size) and ships its top 7 (PARTIAL
+    *    push, `PushedTopN=[ORDER BY fqdn ASC LIMIT 7]`); Spark's
+    *    TakeOrdered merges 28 candidate rows instead of resorting all
+    *    46. fqdn is globally unique, so the top-7 set has no tie.
+    *  - `offset`: `SupportsPushDownOffset` composed with a COMPLETE
+    *    TopN push over the one pruned partition: Spark pushes
+    *    `ORDER BY fqdn LIMIT 5 OFFSET 2` as topN(fqdn, 7) + offset(2)
+    *    and drops its own sort/limit/offset nodes; the reader's sorted
+    *    take(7).drop(2) is the answer (h10, h11, h2, h3, h4 — the
+    *    stringy sort pins the reader's UTF8 comparison against
+    *    DuckDB's). A multi-zone scan refuses the offset; that refusal
+    *    is spec-pinned.
+    *
+    * The reference has none of it (DnsSourceRelation.java:17 is a
+    * plain TableScan). */
+  def qDnsPushdown(s: SparkSession, dir: String): DataFrame = {
+    val wire = readFixture("q_dns_pushdown")
+    def scan() = axfr(s, wire, ReadZones).select("action", "fqdn", "ip", "zone")
+    def z2() = scan().filter(col("zone") === "z2.graft.")
+    def tag(probe: String, df: DataFrame) =
+      df.select(lit(probe).as("probe"), col("action"), col("fqdn"), col("ip"), col("zone"))
+    Seq(
+      tag("zone_pruned", z2()),
+      tag("limit", z2().limit(5)),
+      tag("topn", scan().orderBy("fqdn").limit(7)),
+      tag("offset", z2().orderBy("fqdn").offset(2).limit(5)))
+      .reduce(_ unionAll _)
+      .orderBy("probe", "fqdn")
+  }
 
-  private val qDnsLimitOracle: String =
-    """SELECT 'AXFR' AS action, 'h'||i||'.z2.graft.' AS fqdn,
-      |  '10.2.0.'||i AS ip, 'z2.graft.' AS zone
-      |FROM (SELECT unnest(generate_series(0, 4)) AS i)
-      |ORDER BY fqdn""".stripMargin
-
-  /** TopN pushdown (`SupportsPushDownTopN`) under the oracle gate —
-    * the natural completion of the pushdown surface after COUNT and
-    * LIMIT (the reference has none of it: DnsSourceRelation.java:17 is
-    * a plain TableScan). Four zones, NO static filter: each of the
-    * four partition readers sorts its own zone's records by fqdn
-    * in memory (a zone is bounded by message size) and ships its top
-    * 7; Spark's TakeOrdered merges 28 candidate rows instead of
-    * resorting all 46 — at estate scale, top-k over the scan moves
-    * k×zones rows, not the estate. Deterministic: fqdn is globally
-    * unique, so the top-7 set has no tie to break. The pushed shape
-    * (`PushedTopN=[ORDER BY fqdn ASC LIMIT 7]`) is plan-asserted in
-    * ReadConnectorSpec. */
-  def qDnsTopn(s: SparkSession, dir: String): DataFrame =
-    axfr(s, readFixture("q_dns_topn"), ReadZones)
-      .select("action", "fqdn", "ip", "zone")
-      .orderBy("fqdn")
-      .limit(7)
-
-  private val qDnsTopnOracle: String =
+  private val qDnsPushdownOracle: String =
     """WITH h AS (
       |  SELECT 'AXFR' AS action, 'h'||i||'.z'||j||'.graft.' AS fqdn,
-      |    '10.'||j||'.0.'||i AS ip, 'z'||j||'.graft.' AS zone
+      |    '10.'||j||'.0.'||i AS ip, 'z'||j||'.graft.' AS zone, i
       |  FROM (SELECT unnest(generate_series(0,3)) AS j)
       |  CROSS JOIN (SELECT unnest(generate_series(0,12)) AS i)
       |  WHERE i <= 9 + j)
-      |SELECT * FROM h ORDER BY fqdn LIMIT 7""".stripMargin
-
-  /** OFFSET pushdown (`SupportsPushDownOffset`) composed with a
-    * COMPLETE TopN push: the zone filter statically prunes to ONE
-    * partition, so the scan's row order IS the global order — Spark
-    * pushes `ORDER BY fqdn LIMIT 5 OFFSET 2` as topN(fqdn, 7) +
-    * offset(2), drops its own sort/limit/offset nodes entirely, and
-    * the reader's sorted take(7).drop(2) is the answer (rows h10, h11,
-    * h2, h3, h4 of the lexicographic order — the stringy sort is the
-    * point, it pins the reader's UTF8 comparison against DuckDB's).
-    * A multi-zone scan refuses the offset (skipping m rows per
-    * partition is not the global skip); that refusal is spec-pinned. */
-  def qDnsOffset(s: SparkSession, dir: String): DataFrame =
-    axfr(s, readFixture("q_dns_offset"), ReadZones)
-      .filter(col("zone") === "z2.graft.")
-      .select("action", "fqdn", "ip", "zone")
-      .orderBy("fqdn")
-      .offset(2)
-      .limit(5)
-
-  private val qDnsOffsetOracle: String =
-    """SELECT 'AXFR' AS action, 'h'||i||'.z2.graft.' AS fqdn,
-      |  '10.2.0.'||i AS ip, 'z2.graft.' AS zone
-      |FROM (SELECT unnest(generate_series(0, 11)) AS i)
-      |ORDER BY fqdn LIMIT 5 OFFSET 2""".stripMargin
+      |SELECT * FROM (
+      |  SELECT 'zone_pruned' AS probe, action, fqdn, ip, zone
+      |  FROM h WHERE zone = 'z2.graft.'
+      |  UNION ALL
+      |  SELECT 'limit', action, fqdn, ip, zone
+      |  FROM h WHERE zone = 'z2.graft.' AND i < 5
+      |  UNION ALL
+      |  SELECT * FROM (SELECT 'topn', action, fqdn, ip, zone
+      |                 FROM h ORDER BY fqdn LIMIT 7)
+      |  UNION ALL
+      |  SELECT * FROM (SELECT 'offset', action, fqdn, ip, zone
+      |                 FROM h WHERE zone = 'z2.graft.' ORDER BY fqdn LIMIT 5 OFFSET 2))
+      |ORDER BY probe, fqdn""".stripMargin
 
   /** Storage-partitioned join (`SupportsReportPartitioning` +
     * `HasPartitionKey`) under the oracle gate: every record joined to
@@ -1225,11 +1195,9 @@ object Connector {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_dns_read" -> qDnsRead,
-    "q_dns_zone_pruned" -> qDnsZonePruned,
     "q_dns_runtime_prune" -> qDnsRuntimePrune,
     "q_dns_roundtrip" -> qDnsRoundtrip,
     "q_dns_ixfr" -> qDnsIxfr,
-    "q_dns_sql" -> qDnsSql,
     "q_dns_sql_insert" -> qDnsSqlInsert,
     "q_dns_stream" -> qDnsStream,
     "q_dns_zone_change" -> qDnsZoneChange,
@@ -1244,9 +1212,7 @@ object Connector {
     "q_dns_overwrite" -> qDnsOverwrite,
     "q_dns_merge" -> qDnsMerge,
     "q_dns_pushed_count" -> qDnsPushedCount,
-    "q_dns_limit" -> qDnsLimit,
-    "q_dns_topn" -> qDnsTopn,
-    "q_dns_offset" -> qDnsOffset,
+    "q_dns_pushdown" -> qDnsPushdown,
     "q_dns_spj" -> qDnsSpj,
   )
 
@@ -1259,15 +1225,11 @@ object Connector {
     Set("q_dns_stream", "q_dns_stream_sink", "q_dns_zone_change", "q_dns_ratelimit",
       "q_dns_available_now")
 
-  /** The SQL variant shares q_dns_read's oracle verbatim —
-    * registration surface must never change results. */
   val oracles: Map[String, String] = Map(
     "q_dns_read" -> qDnsReadOracle,
-    "q_dns_zone_pruned" -> qDnsZonePrunedOracle,
     "q_dns_runtime_prune" -> qDnsRuntimePruneOracle,
     "q_dns_roundtrip" -> qDnsRoundtripOracle,
     "q_dns_ixfr" -> qDnsIxfrOracle,
-    "q_dns_sql" -> qDnsReadOracle,
     "q_dns_sql_insert" -> qDnsSqlInsertOracle,
     "q_dns_stream" -> qDnsStreamOracle,
     "q_dns_zone_change" -> qDnsZoneChangeOracle,
@@ -1282,9 +1244,7 @@ object Connector {
     "q_dns_overwrite" -> qDnsOverwriteOracle,
     "q_dns_merge" -> qDnsMergeOracle,
     "q_dns_pushed_count" -> qDnsPushedCountOracle,
-    "q_dns_limit" -> qDnsLimitOracle,
-    "q_dns_topn" -> qDnsTopnOracle,
-    "q_dns_offset" -> qDnsOffsetOracle,
+    "q_dns_pushdown" -> qDnsPushdownOracle,
     "q_dns_spj" -> qDnsSpjOracle,
   )
 }

@@ -926,20 +926,6 @@ object PipelineOps {
     * same plan minus the limit. */
   def qCommonPassages(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val win = passageWindows(s, dir)
-    win.groupBy($"whash")
-      .agg(countDistinct($"doc_id").as("n_docs"), count(lit(1)).as("n_occurrences"))
-      .filter($"n_docs" >= 2)
-      .orderBy($"n_docs".desc, $"whash")
-      .limit(20)
-  }
-
-  /** The 8-word window-hash stream (doc_id, whash) — [[qCommonPassages]]'s
-    * input, extracted so the skew audit can measure per-whash
-    * cardinality (the same window hashes drive q_shared_spans'
-    * primary tier and, with a split tag, q_split_contamination). */
-  private[queries] def passageWindows(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     docs(s, dir)
       .select($"doc_id", expr(s"$wordHashSql").as("hs"))
       .filter(size($"hs") >= 8)
@@ -948,6 +934,11 @@ object PipelineOps {
           |  i -> aggregate(slice(hs, i + 1, 8), CAST(0 AS BIGINT),
           |                 (acc, h) -> (acc * 31 + h) % 1000000007))""".stripMargin))
         .as("whash"))
+      .groupBy($"whash")
+      .agg(countDistinct($"doc_id").as("n_docs"), count(lit(1)).as("n_occurrences"))
+      .filter($"n_docs" >= 2)
+      .orderBy($"n_docs".desc, $"whash")
+      .limit(20)
   }
 
   /** Maximal shared-passage extents between document pairs — the

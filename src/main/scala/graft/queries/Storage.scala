@@ -815,7 +815,7 @@ object Storage {
     * ([[graft.sources.warc.GzipMembers.first]]) instead of splitting
     * the stream: the transfer/parse count is 3 members regardless of
     * corpus size (counter-pinned in WarcSourceSpec, the
-    * `q_dns_zone_pruned` discipline; statistics shrink with the
+    * zone-pruning discipline of `q_dns_pushdown`; statistics shrink with the
     * prune, the auto-broadcast payoff). Pushdown is pruning, never
     * filtering — Spark re-evaluates the predicate above the scan, so
     * an index lie could only cost I/O, not correctness. doc 40

@@ -300,25 +300,39 @@ object TextOps {
   }
 
   /** Token counting on a REAL byte-pair-merge vocabulary
-    * ([[graft.functions.BpeTokenizer]] — the merge table is data, the
-    * encode is a codegen'd replace chain, no UDF): per document, the
-    * word count, the exact BPE token count, and the letter count the
-    * compression is measured against. The oracle replays the merge
-    * loop itself — its SQL is GENERATED from the same ranked table —
-    * so a single mis-ordered or mis-bounded merge anywhere in the
-    * chain shifts token counts and breaks the hash. */
+    * ([[graft.functions.BpeTokenizer.Merges]] — the merge table is
+    * data, no UDF) through the native [[graft.functions.BpeEncode]]
+    * expression: a heap-driven lowest-rank-pair merge loop, per-row
+    * O(len·log len) independent of vocabulary size (BpeEncodeSpec runs
+    * it on 1,500- and 8,000-rule tables). Per document: the word
+    * count, the exact BPE token count, the letter count the
+    * compression is measured against, and an md5 over every framed
+    * encoded word.
+    *
+    * The gate is cross-ALGORITHM on the shared 40-rule table: the
+    * DuckDB oracle replays the rank-order `replace` CHAIN generated
+    * from the same table, so `encoded_md5` matches only if priority
+    * merges and one global pass per rule in rank order are
+    * bit-identical (Sennrich et al., ACL'16; proof in BpeEncode's
+    * scaladoc) — and a single mis-ordered or mis-bounded merge shifts
+    * token counts and breaks the hash.
+    *
+    * Scale shape: per-row map work inside whole-stage codegen (the
+    * expression emits one static call), merge table rides the plan,
+    * no shuffle beyond the presentation sort. */
   def qBpeTokens(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.functions.BpeTokenizer
+    import graft.functions.{BpeTokenizer, GraftFunctions}
     val words = regexp_extract_all(lower($"text"), lit("[a-z]+"), lit(0))
     docs(s, dir)
+      .withColumn("enc", transform(words, w => GraftFunctions.bpeEncode(w)))
       .select($"doc_id",
         size(words).cast("long").as("n_words"),
-        aggregate(
-          transform(words, w => BpeTokenizer.tokenCount(BpeTokenizer.encode(w))),
-          lit(0L), (acc, x) => acc + x).as("n_tokens"),
+        aggregate($"enc", lit(0L), (acc, e) => acc + BpeTokenizer.tokenCount(e))
+          .as("n_tokens"),
         aggregate(transform(words, w => length(w).cast("long")),
-          lit(0L), (acc, x) => acc + x).as("n_chars"))
+          lit(0L), (acc, x) => acc + x).as("n_chars"),
+        md5(concat_ws(" ", $"enc")).as("encoded_md5"))
       .orderBy($"doc_id")
   }
 
@@ -454,41 +468,6 @@ object TextOps {
       .orderBy($"doc_id")
   }
 
-  /** Tokenization through the NATIVE [[graft.functions.BpeEncode]]
-    * expression — the production-scale path (r15 verdict item 2): a
-    * heap-driven lowest-rank-pair merge loop, per-row O(len·log len)
-    * INDEPENDENT of vocabulary size, where [[qBpeTokens]]'s replace
-    * chain grows an expression node per rule and tops out long before
-    * a real 32k-merge vocab (BpeEncodeSpec runs the native form on a
-    * 1,500-rule table the chain cannot compile). The gate is the
-    * cross-ALGORITHM proof on the shared 40-rule table: the Spark
-    * side encodes with the heap loop, the DuckDB oracle replays the
-    * rank-order replace chain generated from the same table, and the
-    * md5 over every framed encoded word in every document matches
-    * only if the two formulations are bit-identical — the classic
-    * BPE equivalence (priority merges ≡ one global pass per rule in
-    * rank order, for well-formed tables), here made a gated fact
-    * rather than an assumption.
-    *
-    * Scale shape: identical to [[qBpeTokens]] — per-row map work
-    * inside whole-stage codegen (the expression emits one static
-    * call), merge table rides the plan, no shuffle beyond the
-    * presentation sort. */
-  def qBpeEncodeNative(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.functions.{BpeTokenizer, GraftFunctions}
-    val words = regexp_extract_all(lower($"text"), lit("[a-z]+"), lit(0))
-    docs(s, dir)
-      .select($"doc_id",
-        size(words).cast("long").as("n_words"),
-        aggregate(
-          transform(words, w => BpeTokenizer.tokenCount(GraftFunctions.bpeEncode(w))),
-          lit(0L), (acc, x) => acc + x).as("n_tokens"),
-        md5(concat_ws(" ", transform(words, w => GraftFunctions.bpeEncode(w))))
-          .as("encoded_md5"))
-      .orderBy($"doc_id")
-  }
-
   /** The multilingual + non-BMP corpus for the byte-level BPE gates —
     * ONE shared SQL expression builds the planted string in BOTH
     * engines (CASE + `||` + regexp_extract agree across dialects):
@@ -617,7 +596,7 @@ object TextOps {
     * ([[ByteBpeFixture]]); the DuckDB oracle replays the rank-order
     * replace CHAIN generated from the same 40-rule byte table over
     * the closed-form remapped text — the same cross-ALGORITHM gate as
-    * `q_bpe_encode_native`, now also cross-ALPHABET (both the remap
+    * `q_bpe_tokens`, now also cross-ALPHABET (both the remap
     * and the merges must be bit-right for any md5 to match; the
     * planted rows cover 2-, 3-, and 4-byte sequences incl. two
     * non-BMP code points).
@@ -641,7 +620,7 @@ object TextOps {
   /** Tokenizer DECODE round-trip (r16 verdict item 6) — the lossless-
     * detokenization audit production pipelines run to catch alphabet
     * and framing bugs: decode(encode(x)) must equal x, md5-gated per
-    * doc, on all three encoder paths. For the code-point paths decode
+    * doc, on both encoder paths. For the code-point path decode
     * is trivially `concat(tokens)` = strip the frames (plain SQL
     * `replace`); for the byte-level path it is frames off → unremap →
     * UTF-8 ([[graft.functions.BpeDecodeBytes]]). The oracle never
@@ -652,16 +631,13 @@ object TextOps {
     * failure mode readable (which doc, not just which hash). */
   def qBpeRoundtrip(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import graft.functions.{BpeTokenizer, GraftFunctions}
+    import graft.functions.GraftFunctions
     val words = regexp_extract_all(lower($"text"), lit("[a-z]+"), lit(0))
     docs(s, dir)
       .withColumn("p", expr(ByteBpeFixture.plantedSql))
       .withColumn("byte_dec",
         GraftFunctions.bpeDecodeBytes(GraftFunctions.bpeEncodeBytes($"p")))
       .select($"doc_id",
-        md5(concat_ws(" ",
-          transform(words, w => replace(BpeTokenizer.encode(w), lit("|"), lit("")))))
-          .as("chain_rt_md5"),
         md5(concat_ws(" ",
           transform(words, w => replace(GraftFunctions.bpeEncode(w), lit("|"), lit("")))))
           .as("native_rt_md5"),
@@ -1198,9 +1174,8 @@ object TextOps {
       .orderBy($"doc_a", $"doc_b")
   }
 
-  /** [[qNgramJaccard]]'s PRE-cap band rows — extracted so the skew
-    * audit ([[SkewAudit]]) can measure raw bucket cardinality before
-    * the cap truncates it. Same frame the query caps and verifies. */
+  /** [[qNgramJaccard]]'s PRE-cap band rows — the frame the query caps
+    * and verifies. */
   private[queries] def ngramBandRows(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // Hash bigrams at the map stage (same rationale as `shingles`):
@@ -2189,7 +2164,6 @@ object TextOps {
     "q_wordpiece_tokens" -> qWordpieceTokens,
     "q_token_count" -> qTokenCount,
     "q_bpe_tokens" -> qBpeTokens,
-    "q_bpe_encode_native" -> qBpeEncodeNative,
     "q_bpe_bytelevel" -> qBpeBytelevel,
     "q_bpe_roundtrip" -> qBpeRoundtrip,
     "q_bpe_pretokenize" -> qBpePretokenize,
@@ -2552,10 +2526,12 @@ object TextOps {
         |  CAST(sum(nw) AS BIGINT) AS n_words, CAST(sum(nc) AS BIGINT) AS n_chars,
         |  CAST(sum(nd) AS DOUBLE) / sum(nw) AS diversity
         |FROM per GROUP BY lang, source ORDER BY lang, source""".stripMargin,
-    // GENERATED oracle: the nested replace() chain is built from the
-    // same ranked merge table the Spark expression folds over — the
-    // merge loop is replayed, not re-implemented.
     "q_bpe_learn" -> bpeLearnOracle,
+    // The cross-algorithm gate: the oracle replays the rank-order
+    // REPLACE CHAIN generated from the shared table; the Spark side
+    // ran the native heap-merge expression. The per-doc md5 over every
+    // framed encoded word matches only if the two BPE formulations are
+    // bit-identical.
     "q_bpe_tokens" -> {
       val enc = graft.functions.BpeTokenizer.oracleEncodeSql("w")
       val tc = graft.functions.BpeTokenizer.oracleTokenCountSql(enc)
@@ -2565,7 +2541,8 @@ object TextOps {
          |SELECT doc_id,
          |  CAST(len(l) AS BIGINT) AS n_words,
          |  CAST(coalesce(list_sum(list_transform(l, w -> $tc)), 0) AS BIGINT) AS n_tokens,
-         |  CAST(coalesce(list_sum(list_transform(l, w -> length(w))), 0) AS BIGINT) AS n_chars
+         |  CAST(coalesce(list_sum(list_transform(l, w -> length(w))), 0) AS BIGINT) AS n_chars,
+         |  md5(array_to_string(list_transform(l, w -> $enc), ' ')) AS encoded_md5
          |FROM ws ORDER BY doc_id""".stripMargin
     },
     // DuckDB cannot deflate: the oracle pins the planted repetition
@@ -2615,23 +2592,6 @@ object TextOps {
          |FROM tn LEFT JOIN agg USING (doc_id)
          |ORDER BY doc_id""".stripMargin
     },
-    // The cross-algorithm gate: the oracle replays the rank-order
-    // REPLACE CHAIN generated from the shared table; the Spark side
-    // ran the native heap-merge expression. The per-doc md5 over every
-    // framed encoded word matches only if the two BPE formulations are
-    // bit-identical.
-    "q_bpe_encode_native" -> {
-      val enc = graft.functions.BpeTokenizer.oracleEncodeSql("w")
-      val tc = graft.functions.BpeTokenizer.oracleTokenCountSql(enc)
-      s"""WITH ws AS (
-         |  SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') AS l
-         |  FROM documents)
-         |SELECT doc_id,
-         |  CAST(len(l) AS BIGINT) AS n_words,
-         |  CAST(coalesce(list_sum(list_transform(l, w -> $tc)), 0) AS BIGINT) AS n_tokens,
-         |  md5(array_to_string(list_transform(l, w -> $enc), ' ')) AS encoded_md5
-         |FROM ws ORDER BY doc_id""".stripMargin
-    },
     // Byte-level cross-algorithm + cross-alphabet gate: the oracle
     // rebuilds the planted text already REMAPPED (snippet remaps are
     // Scala-computed literals; space is the pinned 'Ġ'; [a-z]+ words
@@ -2680,7 +2640,6 @@ object TextOps {
     // claim, so any encode→decode loss flips a gated md5.
     "q_bpe_roundtrip" ->
       s"""SELECT doc_id,
-         |  md5(array_to_string(regexp_extract_all(lower(text), '[a-z]+'), ' ')) AS chain_rt_md5,
          |  md5(array_to_string(regexp_extract_all(lower(text), '[a-z]+'), ' ')) AS native_rt_md5,
          |  md5(${ByteBpeFixture.plantedSql}) AS byte_rt_md5,
          |  CAST(1 AS BIGINT) AS byte_rt_ok

@@ -15,6 +15,8 @@ final case class DnsCommonOptions(server: String, port: Int, timeoutSec: Int) {
   require(server.nonEmpty, "option 'server' is required")
   require(port >= 1 && port <= 65535, s"option 'port' out of range: $port")
   require(timeoutSec >= 0, s"option 'timeout' must be >= 0: $timeoutSec")
+  require(timeoutSec <= DnsOptions.MaxTimeoutSec,
+    s"option 'timeout' must be <= ${DnsOptions.MaxTimeoutSec} seconds: $timeoutSec")
 }
 
 final case class DnsSourceOptions(common: DnsCommonOptions,
@@ -80,13 +82,22 @@ object DnsOptions {
     * rows written back by UPDATE/MERGE carry this nominal TTL unless
     * the statement assigns one. */
   val DefaultScanTtl = 3600
+  /** Largest `timeout` whose milliseconds fit the socket API's Int. */
+  val MaxTimeoutSec: Int = Int.MaxValue / 1000
+
+  /** A numeric option, None when absent. A value that does not parse
+    * fails naming the option, not as a bare NumberFormatException. */
+  private def number[A](o: Map[String, String], key: String,
+                        parse: String => Option[A]): Option[A] =
+    o.get(key).map(v => parse(v).getOrElse(
+      throw new IllegalArgumentException(s"option '$key' must be an integer: '$v'")))
 
   private def common(o: Map[String, String]): DnsCommonOptions =
     DnsCommonOptions(
       server = o.getOrElse("server",
         throw new IllegalArgumentException("option 'server' is required")),
-      port = o.get("port").map(_.toInt).getOrElse(DefaultPort),
-      timeoutSec = o.get("timeout").map(_.toInt).getOrElse(DefaultTimeoutSec))
+      port = number(o, "port", _.toIntOption).getOrElse(DefaultPort),
+      timeoutSec = number(o, "timeout", _.toIntOption).getOrElse(DefaultTimeoutSec))
 
   def source(javaMap: java.util.Map[String, String]): DnsSourceOptions =
     source(lowerKeys(javaMap))
@@ -103,19 +114,19 @@ object DnsOptions {
       organization = o.getOrElse("organization",
         throw new IllegalArgumentException("option 'organization' is required")),
       zones = zones,
-      serial = o.get("serial").map(_.toLong).getOrElse(DefaultSerial),
+      serial = number(o, "serial", _.toLongOption).getOrElse(DefaultSerial),
       xfr = o.get("xfr").map(XfrType.parse).getOrElse(DefaultXfr),
       ignoreFailures = o.get("ignore-failures").exists(_.trim.equalsIgnoreCase("true")),
-      maxKeptCommits = o.get("max-kept-commits").map(_.toInt).getOrElse(DefaultMaxKeptCommits),
-      fixedTimestampMicros = o.get("fixed-timestamp-micros").map(_.toLong),
-      estimatedZoneBytes = o.get("estimated-zone-bytes").map(_.toLong)
+      maxKeptCommits = number(o, "max-kept-commits", _.toIntOption).getOrElse(DefaultMaxKeptCommits),
+      fixedTimestampMicros = number(o, "fixed-timestamp-micros", _.toLongOption),
+      estimatedZoneBytes = number(o, "estimated-zone-bytes", _.toLongOption)
         .getOrElse(DefaultEstimatedZoneBytes),
       // Streaming admission control (SupportsAdmissionControl): at most
       // this many ZONES transfer per micro-batch, the rest carry over
       // to later triggers round-robin. Zones are the only subdividable
       // axis — a single transfer is serial by protocol. Batch reads
       // ignore it (a batch is one scan by definition).
-      maxZonesPerBatch = o.get("max-zones-per-batch").map(_.toInt))
+      maxZonesPerBatch = number(o, "max-zones-per-batch", _.toIntOption))
   }
 
   def sink(javaMap: java.util.Map[String, String]): DnsSinkOptions =
@@ -129,7 +140,7 @@ object DnsOptions {
     zones = o.get("zones").toSeq
       .flatMap(_.split(",").iterator.map(_.trim).filter(_.nonEmpty))
       .map(Fqdn.normalize).distinct,
-    fixedTimestampMicros = o.get("fixed-timestamp-micros").map(_.toLong))
+    fixedTimestampMicros = number(o, "fixed-timestamp-micros", _.toLongOption))
 
   private[dns] def lowerKeys(m: java.util.Map[String, String]): Map[String, String] =
     m.asScala.map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v }.toMap

@@ -172,11 +172,12 @@ final class DnsMicroBatchStream(opts: DnsSourceOptions, zones: Seq[String],
     DnsOffset(current.toMap, nonce)
   }
 
-  override def latestOffset(): Offset = synchronized {
-    absorbAccumulators()
-    nonce += 1
-    DnsOffset(current.toMap, nonce)
-  }
+  /** Never called: Spark asks a `SupportsAdmissionControl` stream for
+    * [[latestOffset(start:*]] instead, which is the one place offsets
+    * are minted (Spark's Kafka MicroBatchStream throws here too). */
+  override def latestOffset(): Offset =
+    throw new UnsupportedOperationException(
+      "latestOffset(Offset, ReadLimit) should be called instead of this method")
 
   /** Admission control (`SupportsAdmissionControl`, r16 verdict item
     * 4): bound ZONES per micro-batch — the only subdividable axis for

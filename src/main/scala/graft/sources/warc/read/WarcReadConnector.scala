@@ -87,7 +87,7 @@ object WarcSchemas {
     StructField("payload", StringType, nullable = false)))
 }
 
-/** Test observability (the q_dns_zone_pruned discipline): JVM-wide
+/** Test observability (the zone-pruning discipline of q_dns_pushdown): JVM-wide
   * counters the specs reset and read to PIN the prune shape — a
   * pruned scan must show point reads and never a full member parse.
   * Monotone counters only; results never depend on them. */

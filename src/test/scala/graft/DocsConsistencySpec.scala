@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** QUERIES.md is the judge-facing index of the gate; this pins it to
@@ -57,6 +59,36 @@ class DocsConsistencySpec extends AnyFunSuite {
       }.toSet
     val stale = named.filterNot { case (_, name) => mains.contains(name) }
     assert(stale.isEmpty, s"docs name tool mains that do not exist: $stale (mains: $mains)")
+  }
+
+  test("every main under src/main is Bench, Verify or a graft/tools main") {
+    // a probe main anywhere else is a runnable entry point the tool
+    // docs and the one-timing-loop rule do not see
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = java.nio.file.Files.walk(root)
+    val mains = try files.iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .filter(f => new String(java.nio.file.Files.readAllBytes(f),
+        java.nio.charset.StandardCharsets.UTF_8).contains("def main("))
+      .map(f => root.relativize(f).toString).toSeq.sorted
+    finally files.close()
+    val allowed = (f: String) =>
+      f == "graft/Bench.scala" || f == "graft/Verify.scala" || f.startsWith("graft/tools/")
+    assert(mains.contains("graft/Bench.scala") && mains.contains("graft/Verify.scala"), mains)
+    val stray = mains.filterNot(allowed)
+    assert(stray.isEmpty, s"mains outside Bench, Verify and graft/tools: $stray")
+  }
+
+  test("every key in the matrix's SF-independent allowance is a gated key") {
+    // the negative control passes these keys on wrong-SF data; a stale
+    // name would only surface on a full matrix run
+    val script = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("tools/matrix.sh")), java.nio.charset.StandardCharsets.UTF_8)
+    val allowance = "SF_INDEPENDENT=\"([^\"]*)\"".r.findFirstMatchIn(script)
+      .map(_.group(1).split("\\s+").filter(_.nonEmpty).toSeq)
+      .getOrElse(fail("no SF_INDEPENDENT allowance in tools/matrix.sh"))
+    assert(allowance.nonEmpty)
+    val stale = allowance.filterNot(SparkEntry.queries.contains)
+    assert(stale.isEmpty, s"SF_INDEPENDENT names no gated key: $stale")
   }
 
   test("the committed matrix artifact covers exactly the script's cells") {

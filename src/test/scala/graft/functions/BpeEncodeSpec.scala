@@ -6,8 +6,8 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 /** The native heap-merge BPE encoder: bit-identical to the replace
   * chain on any well-formed table (hand traces + property sweep),
-  * table validation, and the production-size claim — a 1,500-rule
-  * table the chain form cannot even constant-fold through. */
+  * table validation, and the production-size claim — 1,500- and
+  * 8,000-rule tables end to end. */
 class BpeEncodeSpec extends AnyFunSuite {
 
   private def check(p: Prop): Unit = {
@@ -15,10 +15,10 @@ class BpeEncodeSpec extends AnyFunSuite {
     assert(res.passed, res.status.toString)
   }
 
-  /** Reference replace chain, the EXACT semantics of
-    * [[BpeTokenizer.encode]]: frame every char, then one literal
-    * left-to-right non-overlapping replace pass per rule in rank
-    * order (java.lang.String.replace == Spark/DuckDB replace). */
+  /** Reference replace chain, the EXACT semantics of the oracle's
+    * [[BpeTokenizer.oracleEncodeSql]]: frame every char, then one
+    * literal left-to-right non-overlapping replace pass per rule in
+    * rank order (java.lang.String.replace == DuckDB replace). */
   private def chainEncode(word: String, merges: Seq[(String, String)]): String =
     merges.foldLeft(word.map(c => s"|$c|").mkString) {
       case (acc, (l, r)) => acc.replace(s"|$l||$r|", s"|$l$r|")
@@ -98,47 +98,24 @@ class BpeEncodeSpec extends AnyFunSuite {
     import spark.implicits._
     val out = Seq("the", "international", "understanding", "x")
       .toDF("w")
-      .select($"w", GraftFunctions.bpeEncode($"w").as("native"),
-        BpeTokenizer.encode($"w").as("chain"))
+      .select($"w", GraftFunctions.bpeEncode($"w").as("native"))
       .collect()
-    out.foreach(r => assert(r.getString(1) == r.getString(2), r.getString(0)))
+    out.foreach(r =>
+      assert(r.getString(1) == chainEncode(r.getString(0), BpeTokenizer.Merges), r.getString(0)))
   }
 
-  test("the replace-chain form cannot execute a production-size table; native can") {
-    // the r15 verdict's production-size claim, pinned empirically: the
-    // chain builds one nested expression node per rule, and Catalyst's
-    // recursive tree walks blow the stack (the BpeProf probe, last in
-    // commit 7fdb09f, measured: chain StackOverflowError at 1,500 and
-    // 8,000 rules on the default stack, native ok and FASTER at more
-    // rules — more merges, shorter outputs). The probe runs on a thread with a PINNED
-    // 512 KiB stack so the overflow is deterministic across JIT
-    // states (on the main thread, frame sizes vary enough with
-    // inlining that a 1,500-deep walk sometimes squeaked through —
-    // observed as a same-code pass/fail flip between suite runs).
+  test("native encodes an 8,000-rule production-size table end to end") {
+    // a rank-order replace chain builds one nested expression node per
+    // rule, and Catalyst's recursive tree walks overflow the stack at
+    // this size (the BpeProf probe, last in commit 7fdb09f, measured a
+    // StackOverflowError at 1,500 and 8,000 rules); the native form
+    // ships the table as one plan constant.
     val spark = graft.SparkTestSession.spark
     import spark.implicits._
     val huge = BpeTables.synthetic(8000)
-    val df = Seq("abcabc").toDF("w")
-    val nativeOut = df.select(
+    val nativeOut = Seq("abcabc").toDF("w").select(
       GraftFunctions.bpeEncode($"w", BpeEncode.toSpec(huge))).collect()
     assert(nativeOut.head.getString(0) == "|abc||abc|")
-    var chainRes: Either[Array[org.apache.spark.sql.Row], Throwable] = null
-    val probe = new Thread(null, () => {
-      chainRes =
-        try Left(df.select(BpeTokenizer.encode($"w", huge)).collect())
-        catch { case t: Throwable => Right(t) }
-    }, "bpe-chain-probe", 512 * 1024)
-    probe.start(); probe.join(120000)
-    assert(chainRes != null, "chain probe did not finish")
-    chainRes match {
-      case Left(_) => fail(
-        "the 8,000-rule replace chain unexpectedly executed — revisit the scale story")
-      case Right(t) =>
-        def classes(x: Throwable): Seq[String] =
-          if (x == null) Nil else x.getClass.getName +: classes(x.getCause)
-        assert(classes(t).exists(_.contains("StackOverflowError")),
-          s"expected a StackOverflowError in the cause chain, got ${classes(t)}")
-    }
   }
 
   test("2-arg SQL surface runs the 1,500-rule table end to end") {

@@ -1,19 +1,19 @@
 package graft.functions
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 
-/** Pins the merge-loop semantics on hand-traced words; the oracle gate
-  * (q_bpe_tokens) then proves the same chain corpus-wide in both
-  * engines. */
+/** Pins the merge-loop semantics on hand-traced words through the
+  * production encoder (`bpe_encode` over [[BpeTokenizer.Merges]]); the
+  * oracle gate (q_bpe_tokens) then proves it against the generated
+  * replace chain corpus-wide. */
 class BpeTokenizerSpec extends AnyFunSuite {
   private lazy val spark = graft.SparkTestSession.spark
 
   private def enc(words: String*): Seq[(String, String, Long)] = {
     import spark.implicits._
     words.toDF("w")
-      .select($"w", BpeTokenizer.encode($"w").as("e"),
-        BpeTokenizer.tokenCount(BpeTokenizer.encode($"w")).as("n"))
+      .select($"w", GraftFunctions.bpeEncode($"w").as("e"))
+      .select($"w", $"e", BpeTokenizer.tokenCount($"e").as("n"))
       .collect().toSeq.map(r => (r.getString(0), r.getString(1), r.getLong(2)))
   }
 

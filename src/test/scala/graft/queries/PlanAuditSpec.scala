@@ -65,6 +65,43 @@ class PlanAuditSpec extends AnyFunSuite {
       s"expected 2 transfers after runtime pruning, got ${wire.backing.transferCount}")
   }
 
+  test("q_dns_pushdown: every probe keeps its pushed shape through the union") {
+    // A branch that lost its push still returns the oracle's rows (Spark
+    // finishes the filter/limit/sort itself), so only the plan shows it.
+    import org.apache.spark.sql.execution.UnionExec
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val p = executed(Connector.qDnsPushdown(spark, dir))
+    val unions = collectNodes(p).collect { case u: UnionExec => u }
+    assert(unions.size == 1, p.toString)
+    val branches = unions.head.children.map { child =>
+      val nodes = collectNodes(child)
+      val scans = nodes.collect { case b: BatchScanExec => b.scan.description() }
+      assert(scans.size == 1, child.toString)
+      (scans.head, nodes.map(_.nodeName))
+    }
+    def branch(what: String)(pick: String => Boolean): Seq[String] = {
+      val hits = branches.filter(b => pick(b._1))
+      assert(hits.size == 1, s"$what: expected one branch, got ${branches.map(_._1)}")
+      hits.head._2
+    }
+    val sortOrLimit = (n: String) =>
+      n.contains("Sort") || n.contains("Limit") || n.contains("TakeOrdered") || n.contains("Offset")
+    // zone_pruned: the zone predicate reached the scan, nothing else pushed
+    branch("zone_pruned")(d => d.contains("PushedPredicates=[") &&
+      !d.contains("PushedLimit") && !d.contains("PushedTopN") && !d.contains("PushedOffset"))
+    // limit: COMPLETE push over the one pruned zone, no Limit above it
+    val limit = branch("limit")(_.contains("PushedLimit=LIMIT 5"))
+    assert(!limit.exists(sortOrLimit), limit)
+    // topn: PARTIAL push over four zones, Spark's TakeOrdered merges
+    val topn = branch("topn")(d =>
+      d.contains("PushedTopN=[ORDER BY fqdn ASC LIMIT 7]") && !d.contains("PushedOffset"))
+    assert(topn.exists(_.contains("TakeOrdered")), topn)
+    // offset: COMPLETE TopN + offset push, no Sort/Limit above it
+    val offset = branch("offset")(d =>
+      d.contains("PushedTopN=[ORDER BY fqdn ASC LIMIT 7]") && d.contains("PushedOffset=OFFSET 2"))
+    assert(!offset.exists(sortOrLimit), offset)
+  }
+
   test("q_dns_auto_broadcast: reported statistics drive a hint-free static broadcast of the DNS side") {
     val wire = Connector.seedAutoBroadcastFixture()
     val df = Connector.autoBroadcastJoin(spark, wire)
@@ -479,8 +516,8 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(exchanges.size <= 1, s"expected only the orderBy exchange:\n$s")
   }
 
-  test("q_bpe_encode_native: the native expression is in the plan, no join, no explode") {
-    val p = executed(TextOps.qBpeEncodeNative(spark, dir))
+  test("q_bpe_tokens: the native expression is in the plan, no join, no explode") {
+    val p = executed(TextOps.qBpeTokens(spark, dir))
     val s = p.toString
     assert(s.contains("bpe_encode"), s) // the heap-merge expression, not a chain
     assert(!s.contains("Join"), s)

@@ -76,6 +76,39 @@ class ModelSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](DnsOptions.source(base + ("max-kept-commits" -> "0")))
   }
 
+  test("numeric options name themselves on bad input") {
+    val base = Map("server" -> "s", "organization" -> "a", "zones" -> "z")
+    val cases: Seq[(String, Map[String, String] => Any, String, String, String)] = Seq(
+      ("source", DnsOptions.source(_), "port", "abc", "option 'port' must be an integer: 'abc'"),
+      ("source", DnsOptions.source(_), "port", "3000000000",
+        "option 'port' must be an integer: '3000000000'"),
+      ("source", DnsOptions.source(_), "timeout", "1.5", "option 'timeout' must be an integer: '1.5'"),
+      ("source", DnsOptions.source(_), "serial", "x", "option 'serial' must be an integer: 'x'"),
+      ("source", DnsOptions.source(_), "max-kept-commits", "ten",
+        "option 'max-kept-commits' must be an integer: 'ten'"),
+      ("source", DnsOptions.source(_), "fixed-timestamp-micros", "now",
+        "option 'fixed-timestamp-micros' must be an integer: 'now'"),
+      ("source", DnsOptions.source(_), "estimated-zone-bytes", "256k",
+        "option 'estimated-zone-bytes' must be an integer: '256k'"),
+      ("source", DnsOptions.source(_), "max-zones-per-batch", "",
+        "option 'max-zones-per-batch' must be an integer: ''"),
+      ("sink", DnsOptions.sink(_), "port", "abc", "option 'port' must be an integer: 'abc'"),
+      ("sink", DnsOptions.sink(_), "fixed-timestamp-micros", "now",
+        "option 'fixed-timestamp-micros' must be an integer: 'now'"),
+      // seconds whose milliseconds overflow the wire client's Int
+      // socket timeout fail at parse, not at the first exchange
+      ("source", DnsOptions.source(_), "timeout", "2147484",
+        "option 'timeout' must be <= 2147483 seconds: 2147484"),
+      ("sink", DnsOptions.sink(_), "timeout", "2147484",
+        "option 'timeout' must be <= 2147483 seconds: 2147484"))
+    for ((side, parse, key, value, message) <- cases) {
+      val e = intercept[IllegalArgumentException](parse(base + (key -> value)))
+      assert(e.getClass == classOf[IllegalArgumentException], s"$side $key=$value: $e")
+      assert(e.getMessage.contains(message), s"$side $key=$value: ${e.getMessage}")
+    }
+    assert(DnsOptions.source(base + ("timeout" -> "2147483")).common.timeoutSec == 2147483)
+  }
+
   test("offset json round-trips, nonce forces inequality") {
     import graft.sources.dns.read.DnsOffset
     val o = DnsOffset(Map("example.acme." -> 7L, "another.zone." -> 3L), 42L)

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.sources.warc.read.{WarcScan, WarcSchemas, WarcSourceCounters}
 
 /** The format("warc") DSv2 connector: scan shapes (whole-file vs
-  * index-driven point reads — the q_dns_zone_pruned counter
-  * discipline), sidecar-driven statistics, pushdown visibility,
+  * index-driven point reads — the counter discipline of
+  * q_dns_pushdown's zone-pruned probe), sidecar-driven statistics, pushdown visibility,
   * the missing-sidecar fallback, and the fixed-schema contract. */
 class WarcSourceSpec extends AnyFunSuite {
   private lazy val spark = graft.SparkTestSession.spark

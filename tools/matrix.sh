@@ -40,16 +40,18 @@ OUT=${1:-MATRIX_r19.json}
 
 # The SF-independent allowance, one key per line (r17: + q_dns_ratelimit
 # and q_dns_available_now, pure-fixture admission-control lifecycles;
-# r18: + q_dns_merge, pure-fixture MERGE INTO lifecycle).
+# r18: + q_dns_merge, pure-fixture MERGE INTO lifecycle; the
+# q_dns_zone_pruned/limit/topn/offset probes are one key,
+# q_dns_pushdown, and q_dns_sql is q_dns_read). DocsConsistencySpec
+# pins every name here to a gated key.
 SF_INDEPENDENT="q_distinct_estimate
 q_dns_auto_broadcast
 q_dns_ignore_failures
 q_dns_ixfr
-q_dns_limit
 q_dns_merge
 q_dns_metadata_cols
-q_dns_offset
 q_dns_overwrite
+q_dns_pushdown
 q_dns_pushed_count
 q_dns_ratelimit
 q_dns_available_now
@@ -57,15 +59,12 @@ q_dns_read
 q_dns_roundtrip
 q_dns_runtime_prune
 q_dns_spj
-q_dns_sql
 q_dns_sql_delete
 q_dns_sql_insert
 q_dns_stream
 q_dns_stream_sink
-q_dns_topn
 q_dns_validate
 q_dns_zone_change
-q_dns_zone_pruned
 q_tws_metadata"
 mkdir -p "$BASE"
 rc=0
