@@ -4,9 +4,18 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  val Usage = "usage: graft.Verify <sfDir> <outDir> [query ...]"
+
+  /** `<sfDir> <outDir>` and the optional query-name filter, or None
+    * when either directory is missing. */
+  private[graft] def parseArgs(args: Array[String]): Option[(String, String, Set[String])] =
+    if (args.length < 2) None else Some((args(0), args(1), args.drop(2).toSet))
+
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args.take(2)
-    val only = args.drop(2).toSet // optional query-name filter
+    val (sfDir, outDir, only) = parseArgs(args).getOrElse {
+      System.err.println(Usage)
+      sys.exit(2)
+    }
     val spark = Session.create()
     // Host-interference gauge (Session.calibrate), the one Bench times:
     // when a verify run is anomalously slow (or a query times out on

@@ -591,17 +591,22 @@ object Connector {
     // metastore (or concurrent invocations of this key) each get a
     // self-contained table aimed at their own live server, never a
     // DELETE against a stale port.
+    // The table is dropped once the statements ran: the result reads
+    // back over AXFR, and a kept table would leave one more directory
+    // under the warehouse per run.
     val tbl = s"graft_dns_del_${wire.port}"
     s.sql(s"DROP TABLE IF EXISTS $tbl")
-    s.sql(
-      s"""CREATE TABLE $tbl USING dns_update
-         |OPTIONS (server '${wire.host}', port '${wire.port}')""".stripMargin)
-    // unnormalized relative names on purpose: DELETE values normalize
-    // like every other connector entry point
-    s.sql(
-      s"DELETE FROM $tbl WHERE fqdn IN ('d1.dz.graft', 'd5.dz.graft')")
-    s.sql(
-      s"DELETE FROM $tbl WHERE fqdn = 'd3.dz.graft' AND ip = '10.9.0.3'")
+    try {
+      s.sql(
+        s"""CREATE TABLE $tbl USING dns_update
+           |OPTIONS (server '${wire.host}', port '${wire.port}')""".stripMargin)
+      // unnormalized relative names on purpose: DELETE values normalize
+      // like every other connector entry point
+      s.sql(
+        s"DELETE FROM $tbl WHERE fqdn IN ('d1.dz.graft', 'd5.dz.graft')")
+      s.sql(
+        s"DELETE FROM $tbl WHERE fqdn = 'd3.dz.graft' AND ip = '10.9.0.3'")
+    } finally s.sql(s"DROP TABLE IF EXISTS $tbl")
     axfr(s, wire, "dz.graft")
       .select(col("fqdn"), col("ip"), col("zone"), col("_serial"))
       .orderBy("fqdn", "ip")
@@ -680,33 +685,36 @@ object Connector {
     srv.addZone("mz.graft.", (0 to 7).map(k => ARecord(s"m$k.mz.graft.", s"10.20.0.$k")))
     srv.addZone("m2z.graft.", (0 to 3).map(k => ARecord(s"n$k.m2z.graft.", s"10.21.0.$k")))
     srv.addZone("keep.graft.", (0 to 2).map(k => ARecord(s"k$k.keep.graft.", s"10.22.0.$k")))
+    // dropped once the MERGE ran, as in qDnsSqlDelete
     val tbl = s"graft_dns_merge_${wire.port}"
     s.sql(s"DROP TABLE IF EXISTS $tbl")
-    s.sql(
-      s"""CREATE TABLE $tbl USING dns_update
-         |OPTIONS (server '${wire.host}', port '${wire.port}', zones 'mz.graft,m2z.graft',
-         |  `fixed-timestamp-micros` '$TsMicros')""".stripMargin)
-    s.sql(
-      s"""SELECT * FROM VALUES
-         |  ('del', 'm0.mz.graft.',  '10.20.0.0', CAST(NULL AS STRING)),
-         |  ('del', 'm1.mz.graft.',  '10.20.0.1', CAST(NULL AS STRING)),
-         |  ('upd', 'm2.mz.graft.',  '10.20.0.2', '10.20.9.2'),
-         |  ('upd', 'n1.m2z.graft.', '10.21.0.1', '10.21.9.1'),
-         |  ('noop', 'm3.mz.graft.', '10.20.0.3', CAST(NULL AS STRING)),
-         |  ('add', 'x0.mz.graft.',  '10.20.5.0', CAST(NULL AS STRING)),
-         |  ('add', 'x1.m2z.graft.', '10.21.5.1', CAST(NULL AS STRING))
-         |AS s(op, fqdn, ip, new_ip)""".stripMargin)
-      .createOrReplaceTempView("graft_dns_merge_changes")
-    s.sql(
-      s"""MERGE INTO $tbl t
-         |USING graft_dns_merge_changes s
-         |ON t.fqdn = s.fqdn AND t.ip = s.ip
-         |WHEN MATCHED AND s.op = 'del' THEN DELETE
-         |WHEN MATCHED AND s.op = 'upd' THEN UPDATE SET ip = s.new_ip
-         |WHEN NOT MATCHED AND s.op = 'add' THEN INSERT
-         |  (action, fqdn, ip, timestamp, ttl)
-         |  VALUES ('IXFR_ADD', s.fqdn, s.ip, timestamp_micros(${TsMicros + 1L}), 300)
-         |""".stripMargin)
+    try {
+      s.sql(
+        s"""CREATE TABLE $tbl USING dns_update
+           |OPTIONS (server '${wire.host}', port '${wire.port}', zones 'mz.graft,m2z.graft',
+           |  `fixed-timestamp-micros` '$TsMicros')""".stripMargin)
+      s.sql(
+        s"""SELECT * FROM VALUES
+           |  ('del', 'm0.mz.graft.',  '10.20.0.0', CAST(NULL AS STRING)),
+           |  ('del', 'm1.mz.graft.',  '10.20.0.1', CAST(NULL AS STRING)),
+           |  ('upd', 'm2.mz.graft.',  '10.20.0.2', '10.20.9.2'),
+           |  ('upd', 'n1.m2z.graft.', '10.21.0.1', '10.21.9.1'),
+           |  ('noop', 'm3.mz.graft.', '10.20.0.3', CAST(NULL AS STRING)),
+           |  ('add', 'x0.mz.graft.',  '10.20.5.0', CAST(NULL AS STRING)),
+           |  ('add', 'x1.m2z.graft.', '10.21.5.1', CAST(NULL AS STRING))
+           |AS s(op, fqdn, ip, new_ip)""".stripMargin)
+        .createOrReplaceTempView("graft_dns_merge_changes")
+      s.sql(
+        s"""MERGE INTO $tbl t
+           |USING graft_dns_merge_changes s
+           |ON t.fqdn = s.fqdn AND t.ip = s.ip
+           |WHEN MATCHED AND s.op = 'del' THEN DELETE
+           |WHEN MATCHED AND s.op = 'upd' THEN UPDATE SET ip = s.new_ip
+           |WHEN NOT MATCHED AND s.op = 'add' THEN INSERT
+           |  (action, fqdn, ip, timestamp, ttl)
+           |  VALUES ('IXFR_ADD', s.fqdn, s.ip, timestamp_micros(${TsMicros + 1L}), 300)
+           |""".stripMargin)
+    } finally s.sql(s"DROP TABLE IF EXISTS $tbl")
     axfr(s, wire, "mz.graft,m2z.graft,keep.graft")
       .select(col("fqdn"), col("ip"), col("zone"), col("_serial"))
       .orderBy("fqdn", "ip")
@@ -790,11 +798,11 @@ object Connector {
     * two run-to-end runs of `readStream.format("dns")` into one
     * parquet sink sharing one checkpoint. Run 1 starts at serial 0 ⇒
     * AXFR of the seeded zone (10 rows); the zone then changes (3 adds,
-    * 1 delete); run 2 restores the committed serial from the
-    * self-managed progress log and transfers ONLY the IXFR delta
-    * (4 rows). The oracle pins the union — if resume re-ran the AXFR
-    * (duplicate rows) or the commit log failed to persist (13-record
-    * snapshot instead of the delta), the hash breaks. This is the
+    * 1 delete); run 2 resumes from the committed offset — the zone's
+    * SOA serial, in Spark's offset log — and transfers ONLY the IXFR
+    * delta (4 rows). The oracle pins the union — if resume re-ran the
+    * AXFR (duplicate rows) or lost its serial (13-record snapshot
+    * instead of the delta), the hash breaks. This is the
     * reference's headline behavior (DnsStreamingSource.java:31-178,
     * resume test DnsSourceRelationProviderTest.java:203-226) as an
     * official gate row, not just a spec. */
@@ -833,8 +841,8 @@ object Connector {
     * the reference quirk §2.3.3 made a gate: DnsStreamingSource
     * .java:145-149's null-guard for a zone absent from committed
     * progress is unreachable in the reference because its progress
-    * map is keyed by the CURRENT option list; this connector's
-    * restore keys by zone NAME, so the contract is testable and
+    * map is keyed by the CURRENT option list; this connector's offset
+    * keys serials by zone NAME, so the contract is testable and
     * gated). Run 1 streams zones {a, b}: both AXFR from serial 0.
     * Between runs: zone a changes (2 adds, 1 delete), zone b ALSO
     * changes (an add that must never surface), and a brand-new zone c
@@ -883,17 +891,17 @@ object Connector {
     * transfers at most 2 zones (`SupportsAdmissionControl`; zones are
     * the only subdividable axis — a single transfer is serial by
     * protocol, and a zone's size is unknowable before transferring).
-    * Selection is round-robin on the persisted nonce, and the
-    * admitted set rides INSIDE the offset, so a WAL-replayed batch
-    * re-plans the same zones. Spark ignores read limits under
+    * Only zones whose polled SOA serial moved are admitted, round-robin
+    * from a cursor that rides INSIDE the offset, so a WAL-replayed
+    * batch re-plans the same zones. Spark ignores read limits under
     * Trigger.Once (pinned in AdmissionControlSpec), so the fixture
     * runs ProcessingTime and stops once all four AXFRs landed; rows
     * are tagged with their foreachBatch id. The oracle pins the exact
-    * (zone → batch) assignment: batch 0 admits zones {2,3} (nonce 1 ×
-    * limit 2 mod 4), batch 1 admits {0,1}, later batches re-visit
-    * committed zones and transfer NOTHING (empty IXFR) — a source
-    * that over-admits, re-transfers, or loses a carried-over zone
-    * moves a batch_id, duplicates rows, or drops a zone. */
+    * (zone → batch) assignment: batch 0's walk starts 2 zones past
+    * cursor 0 and admits zones {2,3}, batch 1 admits {0,1}, and then
+    * every poll finds the zones unchanged and Spark runs no batch — a
+    * source that over-admits, re-transfers, or loses a carried-over
+    * zone moves a batch_id, duplicates rows, or drops a zone. */
   def qDnsRatelimit(s: SparkSession, dir: String): DataFrame = {
    val staged = Scratch.staged("dns_ratelimit_result", dir) { sb =>
     val wire = freshWire("q_dns_ratelimit")
@@ -946,16 +954,15 @@ object Connector {
 
   /** Trigger.AvailableNow + admission control under the oracle gate —
     * the SELF-TERMINATING rate-limited catch-up
-    * (`SupportsTriggerAvailableNow`): "available" is unknowable for a
-    * poll-incapable source, so the prepared pass is defined as each
-    * zone transferred exactly once, spread over ⌈zones/limit⌉
-    * batches, after which the source re-mints its last offset
-    * verbatim and Spark ends the query — no manual stop, no polling
-    * loop (contrast [[qDnsRatelimit]], which must stop a
+    * (`SupportsTriggerAvailableNow`): one SOA poll at prepare is the
+    * pass's target, and the moved zones are admitted until each has
+    * reached it, spread over ⌈zones/limit⌉ batches, after which the
+    * source returns its start offset and Spark ends the query — no
+    * manual stop (contrast [[qDnsRatelimit]], which must stop a
     * ProcessingTime stream by hand). 4 zones, limit 2 ⇒ exactly two
-    * batches in zone-list order (AvailableNow consumes the REMAINING
-    * set head-first, unlike the steady-state round-robin): batch 0 =
-    * zones {0,1}, batch 1 = {2,3}. The oracle pins the zone→batch
+    * batches in zone-list order (AvailableNow admits head-first,
+    * unlike the steady-state round-robin): batch 0 = zones {0,1},
+    * batch 1 = {2,3}. The oracle pins the zone→batch
     * assignment; a source that fails to terminate is stopped and fails
     * the gate at the [[Replay]] bound, one that re-admits duplicates
     * rows, one that leaks un-admitted zones into a batch moves a

@@ -44,9 +44,6 @@ object TextOps {
   private def capBuckets(bands: DataFrame, cap: Int): DataFrame =
     Banding.capBuckets(bands, "doc_id", cap)
 
-  private def bucketPairs(cappedBands: DataFrame): DataFrame =
-    Banding.bucketPairs(cappedBands, "doc_id", "doc_a", "doc_b")
-
   /** Words of a document; the corpus is whitespace-separated. */
   private val wordsCol: Column = split(col("text"), "\\s+")
 
@@ -929,9 +926,6 @@ object TextOps {
     * carried as `hm` = md5 hex (the minhash chunk source). Hashing
     * BEFORE distinct keeps every downstream shuffle key fixed-width;
     * raw shingle text never leaves the map stage. */
-  private def shingles(s: SparkSession, dir: String): DataFrame =
-    shinglesOf(docs(s, dir))
-
   private def shinglesOf(docsDf: DataFrame): DataFrame = {
     docsDf
       .select(col("doc_id"), wordsCol.as("w"))

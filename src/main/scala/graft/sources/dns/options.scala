@@ -25,14 +25,12 @@ final case class DnsSourceOptions(common: DnsCommonOptions,
                                   serial: Long,
                                   xfr: XfrType,
                                   ignoreFailures: Boolean,
-                                  maxKeptCommits: Int,
                                   fixedTimestampMicros: Option[Long],
                                   estimatedZoneBytes: Long,
                                   maxZonesPerBatch: Option[Int] = None) {
   require(organization.nonEmpty, "option 'organization' is required")
   require(zones.nonEmpty, "option 'zones' is required (CSV of zone names)")
   require(serial >= 0, s"option 'serial' must be >= 0: $serial")
-  require(maxKeptCommits > 0, s"option 'max-kept-commits' must be > 0: $maxKeptCommits")
   require(maxZonesPerBatch.forall(_ > 0),
     s"option 'max-zones-per-batch' must be > 0: ${maxZonesPerBatch.get}")
   require(estimatedZoneBytes > 0,
@@ -66,7 +64,6 @@ object DnsOptions {
   val DefaultTimeoutSec = 10
   val DefaultSerial = 0L
   val DefaultXfr: XfrType = XfrType.IXFR
-  val DefaultMaxKeptCommits = 10
   /** Planner hint for `SupportsReportStatistics`: expected wire payload
     * per zone. A zone's size is unknowable before its transfer runs, so
     * the scan reports zones × this bound — enough for Catalyst to
@@ -117,7 +114,6 @@ object DnsOptions {
       serial = number(o, "serial", _.toLongOption).getOrElse(DefaultSerial),
       xfr = o.get("xfr").map(XfrType.parse).getOrElse(DefaultXfr),
       ignoreFailures = o.get("ignore-failures").exists(_.trim.equalsIgnoreCase("true")),
-      maxKeptCommits = number(o, "max-kept-commits", _.toIntOption).getOrElse(DefaultMaxKeptCommits),
       fixedTimestampMicros = number(o, "fixed-timestamp-micros", _.toLongOption),
       estimatedZoneBytes = number(o, "estimated-zone-bytes", _.toLongOption)
         .getOrElse(DefaultEstimatedZoneBytes),

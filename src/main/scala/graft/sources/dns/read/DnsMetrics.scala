@@ -51,11 +51,11 @@ private[read] final class DnsTaskMetric(metricName: String, v: Long)
   * scan-level CustomMetrics above surface in the SQL UI per scan
   * node, but `StreamingQueryProgress.sources[].metrics` is what a
   * monitoring pipeline actually tails, and it is fed driver-side.
-  * Plain accumulators (the ZoneVersion precedent): executors add the
-  * same per-transfer numbers the task metrics report, Spark ships
-  * them at task success, replays/retries are idempotent only in the
-  * at-least-once sense every Spark accumulator has — acceptable for
-  * MONITORING counters, never used for progress/correctness. */
+  * Plain accumulators: executors add the same per-transfer numbers
+  * the task metrics report, Spark ships them at task success,
+  * replays/retries are idempotent only in the at-least-once sense
+  * every Spark accumulator has — acceptable for MONITORING counters,
+  * never used for progress/correctness. */
 final case class DnsStreamCounters(
     records: org.apache.spark.util.LongAccumulator,
     bytes: org.apache.spark.util.LongAccumulator,

@@ -2,7 +2,6 @@ package graft.sources.dns.read
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsMetadataColumns, SupportsRead, Table, TableCapability, TableProvider}
@@ -465,38 +464,30 @@ final class DnsScan(opts: DnsSourceOptions, zones: Seq[String], schema: StructTy
       ZonePredicates.prune(runtimeZones, p).foreach(runtimeZones = _)
     }
 
-  // One named max-serial accumulator per zone, registered on the
-  // driver at planning time (reference DnsSourceRelationProvider
-  // .java:73-88); values surface in the Spark UI. Streaming does not
-  // read these: the micro-batch stream registers its own. Registered
-  // ONCE per scan (lazy), over the statically-pruned zone list: with
-  // runtime filtering Spark calls toBatch a second time after
-  // [[filter]], and re-registering would double-count. A
-  // runtime-pruned zone simply never updates its accumulator.
-  private lazy val accs: Map[String, ZoneVersion] =
-    ZoneVersion.register(SparkSession.active.sparkContext, "dns.zone.version", zones)
-
   /** A batch at the `serial` option for every zone, over the zones
     * that survived runtime filtering when Spark asked for it. */
   override def toBatch: Batch = {
     val planned = runtimeZones
     new Batch {
       override def planInputPartitions(): Array[InputPartition] =
-        DnsZoneInputPartition.plan(planned, _ => opts.serial)
+        DnsZoneInputPartition.plan(planned, _ => opts.serial, _ => None)
       override def createReaderFactory(): PartitionReaderFactory =
-        new DnsReaderFactory(opts, schema, pushdown, accs, counters = None)
+        new DnsReaderFactory(opts, schema, pushdown, counters = None)
     }
   }
 
   override def toMicroBatchStream(checkpointLocation: String) =
-    new DnsMicroBatchStream(opts, zones, schema, checkpointLocation)
+    new DnsMicroBatchStream(opts, zones, schema)
 }
 
-/** One partition per zone (reference DnsZonePartition.java:11-19).
-  * `HasPartitionKey` exposes that zone as the partition's key-grouped
-  * identity — the row-level half of the scan's
+/** One partition per zone (reference DnsZonePartition.java:11-19),
+  * transferring the changes since `serial`. A stream batch bounds them
+  * at its end offset's serial (`until`); a batch scan reads to the
+  * server's current serial. `HasPartitionKey` exposes the zone as the
+  * partition's key-grouped identity — the row-level half of the scan's
   * [[DnsScan.outputPartitioning]] contract. */
-final case class DnsZoneInputPartition(index: Int, zone: String, serial: Long)
+final case class DnsZoneInputPartition(index: Int, zone: String, serial: Long,
+                                       until: Option[Long])
   extends InputPartition with HasPartitionKey {
   override def partitionKey(): InternalRow =
     new GenericInternalRow(Array[Any](UTF8String.fromString(zone)))
@@ -504,22 +495,23 @@ final case class DnsZoneInputPartition(index: Int, zone: String, serial: Long)
 
 object DnsZoneInputPartition {
   /** The partition plan of batch and stream alike: one partition per
-    * zone, in zone-list order, transferring from `serialOf(zone)`. */
-  def plan(zones: Seq[String], serialOf: String => Long): Array[InputPartition] =
+    * zone, in zone-list order, transferring from `from(zone)` up to
+    * `until(zone)`. */
+  def plan(zones: Seq[String], from: String => Long,
+           until: String => Option[Long]): Array[InputPartition] =
     zones.zipWithIndex.map { case (zone, i) =>
-      DnsZoneInputPartition(i, zone, serialOf(zone)): InputPartition
+      DnsZoneInputPartition(i, zone, from(zone), until(zone)): InputPartition
     }.toArray
 }
 
 final class DnsReaderFactory(opts: DnsSourceOptions, schema: StructType,
                              pushdown: DnsPushdown,
-                             accs: Map[String, ZoneVersion],
                              counters: Option[DnsStreamCounters])
   extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[DnsZoneInputPartition]
-    new DnsPartitionReader(opts, schema, p, pushdown, accs.get(p.zone), counters)
+    new DnsPartitionReader(opts, schema, p, pushdown, counters)
   }
 }
 
@@ -533,7 +525,6 @@ final class DnsReaderFactory(opts: DnsSourceOptions, schema: StructType,
 final class DnsPartitionReader(opts: DnsSourceOptions, schema: StructType,
                                p: DnsZoneInputPartition,
                                pushdown: DnsPushdown,
-                               acc: Option[ZoneVersion],
                                counters: Option[DnsStreamCounters])
   extends PartitionReader[InternalRow] {
 
@@ -559,18 +550,26 @@ final class DnsPartitionReader(opts: DnsSourceOptions, schema: StructType,
     val changes: Seq[(String, ARecord)] =
       try {
         val result = client.transfer(p.zone, p.serial, opts.xfr, opts.common.timeoutSec)
-        acc.foreach(_.add(result.serial))
         xferSerial = result.serial
         val out = result match {
           case AxfrResult(_, records) =>
             xferKind = "AXFR"
             // RFC 1995 §4: an IXFR request answered with a full zone is
             // the server falling back — surfaced as a metric (a delta
-            // request from serial 0 legitimately snapshots; not a fallback)
+            // request from serial 0 legitimately snapshots; not a fallback).
+            // A snapshot cannot be cut at `until`: it is emitted whole,
+            // `_serial` naming the serial it was served at, and the next
+            // stream batch re-applies the deltas past `until` over it,
+            // which set semantics make harmless.
             if (opts.xfr == XfrType.IXFR && p.serial > 0L) metricFallbacks += 1
             records.map(r => (DnsAction.Axfr, r))
-          case IxfrResult(_, deltas) =>
+          case IxfrResult(served, all) =>
             xferKind = "IXFR"
+            // A stream batch ends at its end offset's serial: later
+            // deltas belong to the next batch, so a replayed batch
+            // reads the rows of its first run.
+            val deltas = p.until.fold(all)(u => all.takeWhile(_.endSerial <= u))
+            xferSerial = deltas.lastOption.fold(math.min(served, p.serial))(_.endSerial)
             deltas.flatMap(_.deletes).map(r => (DnsAction.IxfrDelete, r)) ++
               deltas.flatMap(_.adds).map(r => (DnsAction.IxfrAdd, r))
         }
@@ -581,7 +580,12 @@ final class DnsPartitionReader(opts: DnsSourceOptions, schema: StructType,
         }.sum
         out
       } catch {
-        case _: Exception if opts.ignoreFailures => Nil // swallow → empty zone (DnsZoneRDD.java:83-92)
+        // A batch scan swallows → empty zone (DnsZoneRDD.java:83-92). A
+        // stream batch does not: its end offset is already logged, so an
+        // empty zone would lose (start, end] for good. The task fails
+        // instead, and its retry or the batch's replay re-reads the same
+        // bounds; ignore-failures drops a dead zone at the poll.
+        case _: Exception if opts.ignoreFailures && p.until.isEmpty => Nil
       }
     // Streaming per-progress counters ride accumulators to the driver
     // (ReportsSourceMetrics) — same numbers as the task metrics; a

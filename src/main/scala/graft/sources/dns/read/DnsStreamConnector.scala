@@ -1,38 +1,26 @@
 package graft.sources.dns.read
 
-import scala.collection.mutable
-
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, ReportsSourceMetrics, SupportsTriggerAvailableNow}
 
 import graft.sources.dns._
 
-/** Streaming offset: per-zone SOA serials plus an always-advancing
-  * `nonce`. A DNS server cannot be polled for "is there new data?"
-  * without actually transferring the zone, so the offset must compare
-  * unequal on every trigger to force Spark to schedule a batch — the
-  * reference embeds wall-clock time for this (ZoneOffset.java:12-16);
-  * here a deterministic monotonic counter serves the same purpose
-  * without making offsets time-dependent.
+/** Streaming offset: each zone's SOA serial, plus the round-robin
+  * admission `cursor` (see [[DnsMicroBatchStream.latestOffset(start:*]]).
+  * The serials are the stream's position: a batch transfers each zone
+  * from its start serial up to its end serial, so Spark's offset log
+  * alone makes a batch replayable.
   *
-  * Spark's V2 `Offset.equals` compares the `json()` payload, so the
-  * nonce lives inside the JSON.
+  * Spark's V2 `Offset.equals` compares the `json()` payload, so a poll
+  * that finds every serial unchanged yields an equal offset and Spark
+  * runs no batch.
   */
-final case class DnsOffset(serials: Map[String, Long], nonce: Long,
-                           admitted: Option[Seq[String]] = None) extends Offset {
+final case class DnsOffset(serials: Map[String, Long], cursor: Int = 0) extends Offset {
   override def json(): String = {
     val zs = serials.toSeq.sortBy(_._1)
       .map { case (z, s) => s"${DnsOffset.q(z)}:$s" }.mkString("{", ",", "}")
-    // `admitted` (when rate-limited) names the zones THIS batch may
-    // transfer — recorded before "zones" so the serial parser below
-    // can keep scanning everything after the "zones" marker.
-    val adm = admitted.map(a =>
-      a.map(DnsOffset.q).mkString("\"admitted\":[", ",", "],")).getOrElse("")
-    s"""{"nonce":$nonce,$adm"zones":$zs}"""
+    s"""{"cursor":$cursor,"zones":$zs}"""
   }
 }
 
@@ -41,70 +29,29 @@ object DnsOffset {
     "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
 
   /** Minimal parser for the exact shape `json()` emits (zone names are
-    * DNS names — no escapes in practice, but handled anyway). Offsets
-    * written before the admission-control field (no "admitted" key)
-    * parse as unlimited — checkpoint-compatible forward. */
+    * DNS names — no escapes in practice, but handled anyway). An offset
+    * from a checkpoint written before serials were polled carries a
+    * `nonce` (and maybe an `admitted` list) instead of a `cursor`; it
+    * reads as its serials at cursor 0. Its serials were the batch's
+    * start position, so a stream resumed from one re-reads that
+    * batch's changes once. */
   def fromJson(json: String): DnsOffset = {
-    val nonce = """"nonce"\s*:\s*(\d+)""".r.findFirstMatchIn(json)
-      .map(_.group(1).toLong)
-      .getOrElse(throw new IllegalArgumentException(s"bad dns offset json: $json"))
+    val at = json.indexOf("\"zones\"")
+    if (at < 0) throw new IllegalArgumentException(s"bad dns offset json: $json")
     def unescape(s: String): String = s.replace("\\\"", "\"").replace("\\\\", "\\")
     val zone = """"((?:[^"\\]|\\.)*)"\s*:\s*(\d+)""".r
-    val zonesPart = json.substring(json.indexOf("\"zones\"") + 7)
-    val serials = zone.findAllMatchIn(zonesPart).map { m =>
+    val serials = zone.findAllMatchIn(json.substring(at + 7)).map { m =>
       unescape(m.group(1)) -> m.group(2).toLong
     }.toMap
-    val admitted = """"admitted"\s*:\s*\[([^\]]*)\]""".r.findFirstMatchIn(json)
-      .map(m => """"((?:[^"\\]|\\.)*)"""".r.findAllMatchIn(m.group(1))
-        .map(g => unescape(g.group(1))).toSeq)
-    DnsOffset(serials, nonce, admitted)
-  }
-}
-
-/** Self-managed commit log under the query's checkpoint location.
-  *
-  * Spark's own offset log stores the offset that *started* a batch, but
-  * the serial a zone transfer actually reached is only known after the
-  * read (reference ProgressSerDe.java:18-21). So committed post-read
-  * serials are persisted as one JSON file per batch under
-  * `<checkpoint>/graft-dns-progress/<batchId>`, restored on (re)start,
-  * with retention of the newest `maxKept` files
-  * (ProgressSerDe.java:23-145). Uses the Hadoop FileSystem API so the
-  * checkpoint can live on HDFS/S3A on a real cluster.
-  */
-final class ProgressLog(checkpointLocation: String, maxKept: Int) extends Serializable {
-  private val dir = new Path(checkpointLocation, "graft-dns-progress")
-
-  private def fs: FileSystem = dir.getFileSystem(new Configuration())
-
-  /** Highest committed batch id, or -1 when none. */
-  def latestBatchId(): Long = {
-    val f = fs
-    if (!f.exists(dir)) -1L
-    else f.listStatus(dir).iterator
-      .flatMap(s => s.getPath.getName.toLongOption).foldLeft(-1L)(math.max)
+    val cursor = """"cursor"\s*:\s*(\d+)""".r.findFirstMatchIn(json)
+      .fold(0)(_.group(1).toInt)
+    DnsOffset(serials, cursor)
   }
 
-  def restore(): Option[Map[String, Long]] = {
-    val id = latestBatchId()
-    if (id < 0) None
-    else {
-      val in = fs.open(new Path(dir, id.toString))
-      val json = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      Some(DnsOffset.fromJson(json).serials)
-    }
-  }
-
-  def commit(batchId: Long, serials: Map[String, Long]): Unit = {
-    val f = fs
-    if (!f.exists(dir)) f.mkdirs(dir)
-    val out = f.create(new Path(dir, batchId.toString), true)
-    try out.write(DnsOffset(serials, batchId).json().getBytes("UTF-8"))
-    finally out.close()
-    // Retention: drop all but the newest maxKept commit files.
-    val ids = f.listStatus(dir).iterator
-      .flatMap(s => s.getPath.getName.toLongOption).toSeq.sorted
-    ids.dropRight(maxKept).foreach(id => f.delete(new Path(dir, id.toString), false))
+  /** `o` as a [[DnsOffset]], whatever form Spark hands it over in. */
+  def of(o: Offset): DnsOffset = o match {
+    case d: DnsOffset => d
+    case other => fromJson(other.json())
   }
 }
 
@@ -112,20 +59,18 @@ final class ProgressLog(checkpointLocation: String, maxKept: Int) extends Serial
   * DnsStreamingSource.java:52-166 re-expressed on the public V2 API —
   * no `LogicalRelation`/`RowEncoder` internals needed).
   *
-  * Each trigger: `latestOffset` returns the current per-zone serials
-  * with a bumped nonce (always a "new" offset → batch always runs);
-  * `planInputPartitions` plans one partition per zone transferring
-  * changes *since* the start offset's serial; executors report the
-  * post-transfer serial through the per-zone ZoneVersion accumulators;
-  * `commit` folds those back in and persists them via [[ProgressLog]].
+  * The source polls the way a secondary server polls its primary: one
+  * SOA query per zone (RFC 1034 §4.3.5), over one driver-side
+  * connection. Each trigger: `latestOffset` polls every zone's serial
+  * and admits the zones that moved; `planInputPartitions(start, end)`
+  * plans one partition per admitted zone, transferring from its start
+  * serial and keeping the IXFR deltas up to its end serial. Spark's
+  * offset and commit logs are the source's only state.
   */
 final class DnsMicroBatchStream(opts: DnsSourceOptions, zones: Seq[String],
-                                schema: org.apache.spark.sql.types.StructType,
-                                checkpointLocation: String)
+                                schema: org.apache.spark.sql.types.StructType)
   extends MicroBatchStream with SupportsTriggerAvailableNow
   with ReportsSourceMetrics {
-
-  private val log = new ProgressLog(checkpointLocation, opts.maxKeptCommits)
 
   /** Per-progress source metrics (`ReportsSourceMetrics`, r17 verdict
     * item 5) — surfaced in `StreamingQueryProgress.sources[].metrics`,
@@ -135,42 +80,52 @@ final class DnsMicroBatchStream(opts: DnsSourceOptions, zones: Seq[String],
     * [[DnsStreamCounters]] accumulators from the readers; zonesAdmitted
     * counts driver-side when a trigger MINTS its offset — not at
     * planInputPartitions, which Spark may invoke several times per
-    * batch (observed 4x under Trigger.Once). */
+    * batch (observed 4x under Trigger.Once). The backlog — zones whose
+    * last polled serial the consumed offset has not reached, and the
+    * serials between them — comes from the last poll, as Kafka's
+    * source reports offsets behind latest; it costs no query. */
   private val counters = DnsStreamCounters.registered(SparkSession.active.sparkContext)
   private val zonesAdmittedTotal = new java.util.concurrent.atomic.AtomicLong(0L)
 
   override def metrics(latestConsumedOffset: java.util.Optional[Offset])
-      : java.util.Map[String, String] = {
+      : java.util.Map[String, String] = synchronized {
+    val consumed = if (latestConsumedOffset.isPresent)
+      DnsOffset.of(latestConsumedOffset.get).serials else Map.empty[String, Long]
+    val behind = latest.toSeq.map { case (z, s) => s - consumed.getOrElse(z, opts.serial) }
+      .filter(_ > 0)
     val m = new java.util.HashMap[String, String]()
     m.put("recordsTransferred", counters.records.value.toString)
     m.put("payloadBytes", counters.bytes.value.toString)
     m.put("ixfrFallbacks", counters.fallbacks.value.toString)
     m.put("zonesAdmitted", zonesAdmittedTotal.get().toString)
+    m.put("zonesBehind", behind.size.toString)
+    m.put("serialsBehind", behind.sum.toString)
     m
   }
 
-  private val accs: Map[String, ZoneVersion] =
-    ZoneVersion.register(SparkSession.active.sparkContext, "dns.stream.zone.version", zones)
+  /** The driver's one connection for SOA polls; [[stop]] closes it. */
+  private val poller = new WireTransferClient(opts.common.server, opts.common.port)
 
-  /** Driver-side view of each zone's last committed serial. */
-  private val current: mutable.Map[String, Long] = {
-    val restored = log.restore().getOrElse(Map.empty)
-    mutable.Map(zones.map(z => z -> restored.getOrElse(z, opts.serial)): _*)
+  /** Serials of the last poll. */
+  private var latest: Map[String, Long] = Map.empty
+
+  /** Every zone's current serial. A failed query is asked once more: a
+    * failed exchange closes the poller's connection, so the retry goes
+    * over a fresh one. If that fails too, the poll fails the query —
+    * unless `ignore-failures` is set, which leaves the zone out, so it
+    * reads as unchanged. A stream batch's transfer never swallows a
+    * failure (see [[DnsPartitionReader]]); the poll is where
+    * ignore-failures drops a dead zone. */
+  private def poll(): Map[String, Long] = {
+    def ask(z: String) = poller.serialOf(z, opts.common.timeoutSec)
+    latest = zones.flatMap { z =>
+      try Some(z -> (try ask(z) catch { case _: java.io.IOException => ask(z) }))
+      catch { case _: Exception if opts.ignoreFailures => None }
+    }.toMap
+    latest
   }
 
-  private var nonce: Long = log.latestBatchId() + 1
-  private var batchId: Long = log.latestBatchId()
-
-  /** Fold executor-observed post-transfer serials (shipped via the
-    * ZoneVersion accumulators) into the driver-side view. */
-  private def absorbAccumulators(): Unit =
-    zones.foreach { z =>
-      accs.get(z).foreach(a => current(z) = math.max(current(z), a.value))
-    }
-
-  override def initialOffset(): Offset = synchronized {
-    DnsOffset(current.toMap, nonce)
-  }
+  override def initialOffset(): Offset = DnsOffset(zones.map(_ -> opts.serial).toMap)
 
   /** Never called: Spark asks a `SupportsAdmissionControl` stream for
     * [[latestOffset(start:*]] instead, which is the one place offsets
@@ -186,112 +141,79 @@ final class DnsMicroBatchStream(opts: DnsSourceOptions, zones: Seq[String],
     * honored). The default limit comes from the `max-zones-per-batch`
     * option, expressed as `ReadLimit.maxFiles` (a zone is this
     * source's unit of admission, exactly as a file is the file
-    * source's). Selection is round-robin keyed on the persisted nonce
-    * — `(nonce × n) mod zones` — so it is deterministic across
-    * restarts and every zone is served within ⌈zones/n⌉ triggers; the
-    * admitted set rides INSIDE the offset (WAL-replayed, so a crashed
-    * batch re-plans the same zones), and un-admitted zones keep their
-    * committed serials — they simply carry over. */
+    * source's). */
   override def getDefaultReadLimit: ReadLimit =
     opts.maxZonesPerBatch.map(ReadLimit.maxFiles).getOrElse(ReadLimit.allAvailable())
 
-  /** Trigger.AvailableNow (`SupportsTriggerAvailableNow`): "all
-    * available" is unknowable for a poll-incapable source (a zone's
-    * content is only learned by transferring), so the prepared pass
-    * is defined as EACH ZONE TRANSFERRED EXACTLY ONCE since prepare —
-    * a full catch-up to the serials current at run time, spread over
-    * ⌈zones/limit⌉ rate-limited batches. Once every zone has been
-    * admitted, [[latestOffset(start:*]] re-mints the LAST offset
-    * verbatim; Spark sees no new offset and terminates the query. A
-    * restart mid-pass prepares afresh over all zones — committed
-    * serials persist, so already-transferred zones contribute an
-    * empty delta, never duplicates. */
-  @volatile private var availableNowRemaining: Option[Set[String]] = None
-  private var lastMinted: DnsOffset = _
+  /** Trigger.AvailableNow (`SupportsTriggerAvailableNow`): one poll,
+    * taken here, is the pass's target. Zones are then admitted in
+    * zone-list order until each has reached its target serial, spread
+    * over ⌈moved zones / limit⌉ batches; after that
+    * [[latestOffset(start:*]] returns its start and Spark ends the
+    * query. */
+  private var target: Option[Map[String, Long]] = None
 
   override def prepareForTriggerAvailableNow(): Unit = synchronized {
-    availableNowRemaining = Some(zones.toSet)
+    target = Some(poll())
   }
 
+  /** The zones whose polled serial differs from `start` are admitted;
+    * the end offset carries their polled serials, and every other zone
+    * keeps its start serial. A zone missing from `start` starts at the
+    * `serial` option. Nothing moved: `start` itself comes back, and
+    * Spark runs no batch.
+    *
+    * Under a limit of n < zones, the walk over the zone list starts n
+    * zones past the start offset's cursor and admits the first n moved
+    * zones; the end offset records that starting point as its cursor.
+    * So admission is a pure function of the offset — a WAL-replayed or
+    * restarted batch admits the same zones — and a moved zone waits at
+    * most zones / gcd(n, zones) triggers. */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = synchronized {
-    absorbAccumulators()
-    def capped(n: Int, order: Seq[String]): Seq[String] = limit match {
-      case f: ReadMaxFiles if f.maxFiles() < n => order.take(f.maxFiles())
-      case _ => order
+    val from = DnsOffset.of(start)
+    val base = zones.map(z => z -> from.serials.getOrElse(z, opts.serial)).toMap
+    val now = target.getOrElse(poll())
+    val moved = zones.filter(z => now.get(z).exists(_ != base(z)))
+    val n = limit match {
+      case f: ReadMaxFiles => f.maxFiles()
+      case _ => Int.MaxValue
     }
-    availableNowRemaining match {
-      case Some(rem) if rem.isEmpty =>
-        // pass complete: re-mint the last offset VERBATIM (absorbed
-        // serials must not leak in — a changed json looks like new
-        // data) so AvailableNow terminates
-        lastMinted
-      case Some(rem) =>
-        nonce += 1
-        val order = zones.filter(rem) // stable option-list order
-        val admitted = capped(order.size, order)
-        zonesAdmittedTotal.addAndGet(admitted.size.toLong)
-        availableNowRemaining = Some(rem -- admitted)
-        // ALWAYS carry the admitted set in a prepared pass: the
-        // remaining zones must not be planned even when the limit
-        // exceeds what is left
-        lastMinted = DnsOffset(current.toMap, nonce, Some(admitted))
-        lastMinted
-      case None =>
-        nonce += 1
-        val admitted = limit match {
-          case f: ReadMaxFiles if f.maxFiles() < zones.size =>
-            val n = f.maxFiles()
-            val from = ((nonce * n) % zones.size).toInt
-            Some((0 until n).map(i => zones((from + i) % zones.size)))
-          case _ => None // unlimited (or limit ≥ zone count): admit all
-        }
-        zonesAdmittedTotal.addAndGet(
-          admitted.map(_.size).getOrElse(zones.size).toLong)
-        lastMinted = DnsOffset(current.toMap, nonce, admitted)
-        lastMinted
+    val (admitted, cursor) =
+      if (target.isDefined || n >= zones.size) (moved.take(n), from.cursor)
+      else {
+        val s = (from.cursor + n) % zones.size
+        val isMoved = moved.toSet
+        ((zones.drop(s) ++ zones.take(s)).filter(isMoved).take(n), s)
+      }
+    if (admitted.isEmpty) start
+    else {
+      zonesAdmittedTotal.addAndGet(admitted.size.toLong)
+      DnsOffset(base ++ admitted.map(z => z -> now(z)), cursor)
     }
   }
 
   override def reportLatestOffset(): Offset = synchronized {
-    DnsOffset(current.toMap, nonce)
+    if (latest.isEmpty) null else DnsOffset(latest)
   }
 
   override def deserializeOffset(json: String): Offset = DnsOffset.fromJson(json)
 
-  /** Plans from the END offset's serials — the offset that latestOffset
-    * just minted from committed progress. The start offset is Spark's
-    * WAL replay of the *previous* batch's end, whose serials predate the
-    * data that batch actually read (a poll-incapable source only learns
-    * its real position after transferring — reference getBatch likewise
-    * copies zone params at the end offset, DnsStreamingSource.java:80-94). */
+  /** One partition per zone whose serial moved between `start` and
+    * `end`, transferring from its start serial and bounded at its end
+    * serial, so a replayed batch reads the rows of its first run. */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val endOffset = end.asInstanceOf[DnsOffset]
-    val serials = endOffset.serials
-    // Rate-limited batches plan ONLY the admitted zones (the set the
-    // offset itself carries — WAL-replayed, so a recovered batch
-    // re-plans the same zones); the rest transfer in later triggers.
-    val planned = endOffset.admitted match {
-      case Some(adm) => val a = adm.toSet; zones.filter(a)
-      case None => zones
-    }
-    DnsZoneInputPartition.plan(planned, z => serials.getOrElse(z, opts.serial))
+    val from = DnsOffset.of(start).serials
+    val to = DnsOffset.of(end).serials
+    def startOf(z: String) = from.getOrElse(z, opts.serial)
+    DnsZoneInputPartition.plan(zones.filter(z => to.get(z).exists(_ != startOf(z))),
+      startOf, to.get)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new DnsReaderFactory(opts, schema, DnsPushdown.empty, accs, Some(counters))
+    new DnsReaderFactory(opts, schema, DnsPushdown.empty, Some(counters))
 
-  private def persist(): Unit = {
-    absorbAccumulators()
-    batchId += 1
-    log.commit(batchId, current.toMap)
-  }
+  /** Nothing to persist: Spark's commit log already holds `end`. */
+  override def commit(end: Offset): Unit = ()
 
-  /** Spark invokes this lazily — at the start of the batch AFTER `end`
-    * was durably committed, which for Trigger.Once means on the next
-    * run. The durable write that makes resume effectively-once is the
-    * one in [[stop]] (the reference commits in stop() for the same
-    * reason — DnsStreamingSource.java:162-166). */
-  override def commit(end: Offset): Unit = synchronized { persist() }
-
-  override def stop(): Unit = synchronized { persist() }
+  override def stop(): Unit = synchronized { poller.close() }
 }

@@ -5,9 +5,10 @@ import java.net.{InetSocketAddress, ServerSocket, Socket}
 import java.nio.charset.StandardCharsets
 
 /** DNS wire protocol, the connector's one transport, hand-built from
-  * the public RFCs (1035 message format and TCP framing, 5936 AXFR,
-  * 1995 IXFR, 2136 dynamic update) — the role dnsjava plays in the
-  * reference (Xfr.java:37-50, DnsUpdate.java:46-81). The zero-egress
+  * the public RFCs (1035 message format, TCP framing and the SOA
+  * query, 5936 AXFR, 1995 IXFR, 2136 dynamic update) — the role
+  * dnsjava plays in the reference (Xfr.java:37-50,
+  * DnsUpdate.java:46-81). The zero-egress
   * build can't reach a real BIND, so [[WireDnsServer]] serves the same
   * protocol over loopback TCP from an [[InMemoryDnsServer]]; the client
   * side ([[WireTransferClient]], [[WireUpdateEmitter]]) is a real socket
@@ -52,6 +53,11 @@ object DnsWire {
     def rcode: Int = flags & 0xf
     def isResponse: Boolean = (flags & 0x8000) != 0
   }
+
+  /** The refresh check's query: one question for the zone's SOA RR. */
+  def soaQuery(zone: String): Message =
+    Message(1, queryFlags(OpcodeQuery), Seq(Question(Fqdn.normalize(zone), TypeSoa, ClassIn)),
+      Nil, Nil, Nil)
 
   def queryFlags(opcode: Int): Int = (opcode & 0xf) << 11
   def responseFlags(opcode: Int, rcode: Int): Int =
@@ -352,6 +358,11 @@ final class WireDnsServer(val backing: InMemoryDnsServer = new InMemoryDnsServer
   private val accepted = new java.util.concurrent.atomic.AtomicLong(0L)
   def connectionCount: Long = accepted.get()
 
+  /** SOA queries answered — the observable that stream polling is
+    * graded on, beside `backing.transferCount`. */
+  private val soaAnswered = new java.util.concurrent.atomic.AtomicLong(0L)
+  def soaQueryCount: Long = soaAnswered.get()
+
   private val acceptor = new Thread(() => {
     while (running) {
       try {
@@ -411,6 +422,13 @@ final class WireDnsServer(val backing: InMemoryDnsServer = new InMemoryDnsServer
       val q = req.questions.headOption.getOrElse(
         throw new IOException("query without question"))
       q.qtype match {
+        case TypeSoa =>
+          // RFC 1034 §4.3.5: the secondary's refresh check, one SOA RR
+          // back; not a transfer, so `transferCount` does not move
+          val soa = soaRr(q.name, backing.serialOf(q.name))
+          soaAnswered.incrementAndGet()
+          Seq(Message(req.id, responseFlags(OpcodeQuery, RcodeNoError), req.questions,
+            Seq(soa), Nil, Nil))
         case TypeAxfr => axfrResponse(req, q.name)
         case TypeIxfr =>
           val clientSerial = req.authority.collectFirst {
@@ -538,6 +556,22 @@ final class WireTransferClient(host: String, port: Int) extends ZoneTransferClie
   @transient private lazy val connection = new WireConnection(host, port)
 
   def close(): Unit = connection.close()
+
+  /** The zone's current SOA serial: one standard query (QTYPE=SOA,
+    * RFC 1035), one RR back — how a secondary polls its primary
+    * before deciding to transfer (RFC 1034 §4.3.5). An unknown zone
+    * fails with the server's rcode, as a transfer does. */
+  def serialOf(zone: String, timeoutSec: Int): Long =
+    connection.exchange(timeoutSec, s"SOA query for '$zone'") { (in, out) =>
+      writeFramed(out, soaQuery(zone))
+      out.flush()
+      val m = readFramed(in)
+      if (m.rcode != RcodeNoError)
+        throw new IOException(s"SOA query for '$zone' failed: rcode ${m.rcode}")
+      require(m.isResponse, "expected a response message")
+      m.answers.collectFirst { case Rr(_, TypeSoa, _, _, SoaData(s)) => s }
+        .getOrElse(throw new IOException(s"SOA query for '$zone' answered without a SOA RR"))
+    }
 
   override def transfer(zone: String, serial: Long, xfr: XfrType,
                         timeoutSec: Int): TransferResult =

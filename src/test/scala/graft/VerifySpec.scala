@@ -24,6 +24,20 @@ class VerifySpec extends AnyFunSuite {
     assert(oracles.contains("\"q_good\"") && oracles.contains("\"q_bad\""))
   }
 
+  test("one argument is a usage error, not a MatchError") {
+    assert(Verify.parseArgs(Array("/sf")).isEmpty)
+    assert(Verify.parseArgs(Array.empty).isEmpty)
+    assert(Verify.parseArgs(Array("/sf", "/out", "q_a", "q_b")) ==
+      Some(("/sf", "/out", Set("q_a", "q_b"))))
+    // the main itself: usage on stderr, a non-zero exit, no session
+    val proc = new ProcessBuilder(s"${System.getProperty("java.home")}/bin/java",
+      "-cp", System.getProperty("java.class.path"), "graft.Verify", "/sf")
+      .redirectErrorStream(true).start()
+    val printed = new String(proc.getInputStream.readAllBytes(), "UTF-8")
+    assert(proc.waitFor() == 2, printed)
+    assert(printed.trim == Verify.Usage, printed)
+  }
+
   test("the name filter skips keys without counting them as failed") {
     val out = Files.createTempDirectory("graft-verify")
     val queries: Map[String, SparkEntry.Query] = Map(

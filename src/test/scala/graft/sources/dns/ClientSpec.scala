@@ -74,6 +74,36 @@ class ClientSpec extends AnyFunSuite {
     }
   }
 
+  test("SOA queries ride the transfer connection: SOA, AXFR, SOA return the right serials") {
+    withServer { srv =>
+      srv.backing.addZone("z.", Seq(ARecord("a.z.", "1.1.1.1")))
+      val c = client(srv)
+      try {
+        assert(c.serialOf("z.", 10) == 1)
+        srv.backing.update("z.", Seq(ARecord("b.z.", "2.2.2.2")), Nil)
+        assert(c.transfer("z.", 0, XfrType.AXFR, 10).serial == 2)
+        srv.backing.update("z.", Nil, Seq(ARecord("a.z.", "1.1.1.1")))
+        assert(c.serialOf("z", 10) == 3) // a relative name asks for the absolute zone
+        assert(srv.connectionCount == 1)
+      } finally c.close()
+    }
+  }
+
+  test("an SOA query is not a transfer; an unknown zone fails it with rcode 9") {
+    withServer { srv =>
+      srv.backing.addZone("z.", Seq(ARecord("a.z.", "1.1.1.1")))
+      val c = client(srv)
+      try {
+        (1 to 3).foreach(_ => assert(c.serialOf("z.", 10) == 1))
+        assert(srv.backing.transferCount == 0)
+        assert(srv.soaQueryCount == 3)
+        val e = intercept[java.io.IOException](c.serialOf("nope.", 10))
+        assert(e.getMessage == "SOA query for 'nope.' failed: rcode 9")
+        assert(srv.backing.transferCount == 0)
+      } finally c.close()
+    }
+  }
+
   test("update applies changes in message order (RFC 2136 sequential-apply)") {
     withServer { srv =>
       srv.backing.addZone("z.", Nil)

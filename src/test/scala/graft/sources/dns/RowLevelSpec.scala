@@ -23,6 +23,16 @@ class RowLevelSpec extends AnyFunSuite {
     tbl
   }
 
+  test("q_dns_sql_delete and q_dns_merge leave no table in the catalog") {
+    // tables only: q_dns_merge's changelog is a temp view
+    def leftover = spark.catalog.listTables().collect().filterNot(_.isTemporary).map(_.name)
+      .filter(n => n.startsWith("graft_dns_del_") || n.startsWith("graft_dns_merge_")).toSeq
+    val before = leftover
+    assert(graft.queries.Connector.qDnsSqlDelete(spark, "/unused").count() == 6)
+    assert(graft.queries.Connector.qDnsMerge(spark, "/unused").count() == 15)
+    assert(leftover == before, "a key left its table behind")
+  }
+
   test("MERGE INTO: delete + update(ip) + insert, one message per zone") {
     withServer { wire =>
       val srv = wire.backing

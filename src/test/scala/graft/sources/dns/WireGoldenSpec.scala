@@ -99,6 +99,40 @@ class WireGoldenSpec extends AnyFunSuite {
     assert(toHex(encode(m)) == toHex(expected))
   }
 
+  test("golden: SOA query and the server's one-RR answer (RFC 1035 §4.1, QTYPE 6)") {
+    val query = hex(
+      "00 01 00 00" +  // ID=1, QR=0 OPCODE=QUERY
+      " 00 01 00 00 00 00 00 00" +
+      " 07 65 78 61 6d 70 6c 65 03 63 6f 6d 00" +
+      " 00 06" +       // QTYPE = 6 (SOA)
+      " 00 01")
+    assert(toHex(encode(soaQuery("example.com"))) == toHex(query))
+    val answer = hex(
+      "00 01 80 00" +  // ID=1, QR=1 rcode=0
+      " 00 01 00 01 00 00 00 00" + // QD=1 AN=1
+      " 07 65 78 61 6d 70 6c 65 03 63 6f 6d 00 00 06 00 01" +
+      // the zone's SOA: ttl 0, root MNAME/RNAME, SERIAL = 3, zero timers
+      " 07 65 78 61 6d 70 6c 65 03 63 6f 6d 00 00 06 00 01 00 00 00 00" +
+      " 00 16 00 00 00 00 00 03" +
+      " 00 00 00 00 00 00 00 00 00 00 00 00 00 00 00 00")
+    Loopback.withServer { srv =>
+      srv.backing.addZone("example.com.", Nil)
+      srv.backing.update("example.com.", Seq(ARecord("a.example.com.", "10.0.0.1")), Nil)
+      srv.backing.update("example.com.", Seq(ARecord("b.example.com.", "10.0.0.2")), Nil)
+      val sock = new java.net.Socket(srv.host, srv.port)
+      try {
+        sock.setSoTimeout(10000)
+        sock.getOutputStream.write(hex("00 1d") ++ query)
+        val in = new java.io.DataInputStream(sock.getInputStream)
+        val len = in.readUnsignedShort()
+        val got = new Array[Byte](len)
+        in.readFully(got)
+        assert(len == answer.length)
+        assert(toHex(got) == toHex(answer))
+      } finally sock.close()
+    }
+  }
+
   // ------------------------------------------------- encode edge cases
   // Input handling the encoder must keep exactly: which names and IPs
   // it accepts, how it normalizes them, and the message it rejects with.
