@@ -63,8 +63,9 @@ object Connector {
     * OPTIONS (...)` on the V2 session catalog and queried through
     * `spark.sql` — the reference's RelationProvider SQL path
     * (DnsSourceRelationProviderTest.java:125-135). Table → one
-    * partition per zone → one wire AXFR each (RFC 1035/5936 encode,
-    * TCP framing, multi-message reassembly) → rows. The
+    * partition per core, each a pack of zones → one wire AXFR per zone
+    * (RFC 1035/5936 encode, TCP framing, multi-message reassembly) →
+    * rows. The
     * `spark.read.format("dns")` registration is gated by every other
     * read key. */
   def qDnsRead(s: SparkSession, dir: String): DataFrame = {

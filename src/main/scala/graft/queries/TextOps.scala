@@ -1511,7 +1511,7 @@ object TextOps {
     // materialized blocks, not a metric piggybacked on another job.
     def exactSum(df: DataFrame): Long =
       df.agg(coalesce(sum($"l"), lit(0L))).first().getLong(0)
-    val Seq(ca, cb) = pairs.columns.toSeq.map(col)
+    val (ca, cb) = pairColumns(pairs)
     val edgesPlan = pairs.select(ca.as("src"), cb.as("dst"))
       .union(pairs.select(cb.as("src"), ca.as("dst")))
     val edges = if (reliableDir.isDefined) edgesPlan.checkpoint()
@@ -1589,6 +1589,13 @@ object TextOps {
     * hitting it throws loudly. */
   private val MaxStarRounds = 32
 
+  /** The two columns of an edge-pair frame, by position. */
+  private def pairColumns(pairs: DataFrame): (Column, Column) = pairs.columns match {
+    case Array(a, b) => (col(a), col(b))
+    case cols => throw new IllegalArgumentException(
+      s"connected components need a frame of two columns, got [${cols.mkString(", ")}]")
+  }
+
   /** Layout-robust connected components: alternating LARGE-STAR /
     * SMALL-STAR (Kiveris et al., SoCC'14). Where [[connectedComponents]]'
     * min-label jumps need vertex-id order to correlate with graph
@@ -1620,7 +1627,7 @@ object TextOps {
   private[graft] def connectedComponentsRobust(
       s: SparkSession, pairs: DataFrame): (DataFrame, Int) = {
     import s.implicits._
-    val Seq(ca, cb) = pairs.columns.toSeq.map(col)
+    val (ca, cb) = pairColumns(pairs)
     var edges = pairs
       .select(least(ca, cb).as("a"), greatest(ca, cb).as("b"))
       .filter($"a" =!= $"b").distinct().localCheckpoint()

@@ -2,6 +2,7 @@ package graft.sources.dns.read
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsMetadataColumns, SupportsRead, Table, TableCapability, TableProvider}
@@ -21,14 +22,19 @@ import graft.sources.dns._
   * Re-expresses the reference's V1 connector (DnsSourceRelationProvider
   * .java:36-88, DnsSourceRelation.java:17-45, DnsZoneRDD.java:40-103) on
   * public Spark 4 interfaces: registry → Table → ScanBuilder → Batch with
-  * one InputPartition per zone → PartitionReader running the zone
-  * transfer on the executor.
+  * one InputPartition per pack of zones → PartitionReader running the
+  * pack's zone transfers on the executor, one after another over one
+  * connection.
   *
-  * Scale design: parallelism = number of zones, because a single zone
-  * transfer is serial by protocol (reference README.md:4-6) — on a real
-  * cluster each zone's TCP transfer lands on its own executor core, and
-  * everything above the scan (joins, aggregation) is stock Catalyst and
-  * scales independently.
+  * Scale design: one task per core, not one per zone. A single zone
+  * transfer is serial by protocol (reference README.md:4-6), so a scan
+  * cannot use more tasks than Spark has cores for leaf scans; the zone
+  * list is cut into that many contiguous packs
+  * ([[DnsZoneInputPartition.plan]]), and each task pays Spark's
+  * per-task cost and one TCP connect once for its whole pack
+  * (RFC 5936 §4.1 and RFC 7766 §6.2.1 allow many transfers on one
+  * connection). Everything above the scan (joins, aggregation) is
+  * stock Catalyst and scales independently.
   */
 final class DnsTableProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "dns"
@@ -214,15 +220,15 @@ final class DnsScanBuilder(opts: DnsSourceOptions) extends ScanBuilder
     else { pushdown = pushdown.copy(limit = Some(n)); true }
 
   /** ORDER BY ... LIMIT pushdown (`SupportsPushDownTopN`): the reader
-    * sorts its zone's records in memory (a zone is bounded by message
-    * size — it's already a materialized Seq) and emits the top n.
-    * Multi-zone: partial — Spark merges the per-partition top-n's.
-    * Single zone: complete — the scan output IS the query result
-    * (partition-ordered for free under the one-partition-per-zone
-    * contract), and OFFSET composes ([[pushOffset]]). Sort columns may
-    * be outside the projected schema (a complete pushdown removes the
-    * Sort node, so nothing upstream keeps them alive) — the reader
-    * materializes them for the comparison and projects them away. */
+    * sorts its pack's records in memory (each zone is bounded by
+    * message size — it's already a materialized Seq) and emits the top
+    * n. Multi-zone: partial — Spark merges the per-partition top-n's.
+    * Single zone: complete — one zone is one partition, so the scan
+    * output IS the query result, and OFFSET composes ([[pushOffset]]).
+    * Sort columns may be outside the projected schema (a complete
+    * pushdown removes the Sort node, so nothing upstream keeps them
+    * alive) — the reader materializes them for the comparison and
+    * projects them away. */
   override def pushTopN(orders: Array[SortOrder], n: Int): Boolean = {
     if (pushdown.agg.isDefined || orders.isEmpty) false
     else {
@@ -265,12 +271,12 @@ final class DnsScanBuilder(opts: DnsSourceOptions) extends ScanBuilder
     * row materialization, the scan→agg exchange, and the aggregate
     * hash table all disappear. Accepted shapes: COUNT(*) grouped by
     * `zone`, or globally. Grouping by `zone` is COMPLETE pushdown —
-    * an InputPartition IS one zone, so per-partition counts are final
-    * group rows (guarded on the zone list being duplicate-free);
-    * the global form stays PARTIAL (Spark sums the per-partition
-    * counts), and every partition emits a row — count 0 included, the
-    * ignore-failures "empty zone" semantic — so the final sum is
-    * never null. An empty static zone list refuses pushdown (zero
+    * a reader emits one count row per zone of its pack, and no zone is
+    * in two packs (guarded on the zone list being duplicate-free), so
+    * they are final group rows; the global form stays PARTIAL (Spark
+    * sums the per-partition counts), and every partition emits a row —
+    * count 0 included, the ignore-failures "empty zone" semantic — so
+    * the final sum is never null. An empty static zone list refuses pushdown (zero
     * partitions would sum to NULL where COUNT must return 0). */
   private def acceptableAgg(agg: Aggregation): Boolean = {
     val countsOnly = agg.aggregateExpressions.nonEmpty &&
@@ -334,6 +340,10 @@ final class DnsScan(opts: DnsSourceOptions, zones: Seq[String], schema: StructTy
                     pushdown: DnsPushdown)
   extends Scan with SupportsRuntimeV2Filtering with SupportsReportStatistics
   with SupportsReportPartitioning with SupportsReportOrdering {
+
+  /** How many packs at most: read once, so the reported partitioning
+    * and ordering and the planned partitions agree. */
+  private val parallelism = DnsZoneInputPartition.leafParallelism(SparkSession.active)
 
   /** Zones surviving RUNTIME filtering ([[filter]]). Static pushdown
     * already pruned `zones` at ScanBuilder time; this second stage
@@ -405,44 +415,51 @@ final class DnsScan(opts: DnsSourceOptions, zones: Seq[String], schema: StructTy
     }
   }
 
-  /** Output partitioning (`SupportsReportPartitioning`): the scan IS
-    * key-grouped by `zone` — an InputPartition is exactly one zone and
-    * every row it emits carries that zone (the pushed-COUNT-by-zone
-    * form included: its group rows are per-partition too). Reporting
-    * it (each partition exposes its zone via [[DnsZoneInputPartition]]
-    * `HasPartitionKey`) lets Catalyst drop the exchanges a zone-keyed
-    * join or aggregation would otherwise plan: two dns scans joined on
-    * `zone` become a storage-partitioned join — at estate scale, the
-    * difference between shuffling every record of every zone and
-    * joining transfer-local. Recognized when
+  /** True when every pack holds one zone (zones ≤ leaf parallelism)
+    * and `zone` survived projection: only then does each partition
+    * have one partition key. */
+  private def oneZonePerPack: Boolean =
+    runtimeZones.nonEmpty && runtimeZones.length <= parallelism &&
+      schema.fieldNames.contains("zone")
+
+  /** Output partitioning (`SupportsReportPartitioning`): while every
+    * pack holds one zone, the scan IS key-grouped by `zone` — every row
+    * a partition emits carries its zone (the pushed-COUNT-by-zone form
+    * included). Reporting it (each partition exposes its zone via
+    * [[DnsZoneInputPartition]] `HasPartitionKey`) lets Catalyst drop
+    * the exchanges a zone-keyed join or aggregation would otherwise
+    * plan: two dns scans joined on `zone` become a
+    * storage-partitioned join. Recognized when
     * `spark.sql.sources.v2.bucketing.enabled` is true (set by
     * `graft.Session`); inert otherwise — results never change, only
-    * the exchanges. Guarded on `zone` surviving projection: a scan
-    * that pruned `zone` away has nothing to key-group on. */
+    * the exchanges. More zones than leaf parallelism: a pack holds
+    * several zones and has no single key, so the scan reports
+    * `UnknownPartitioning` over its packs and a zone-keyed join
+    * shuffles — the price of one task per core instead of one per
+    * zone. */
   override def outputPartitioning(): org.apache.spark.sql.connector.read.partitioning.Partitioning = {
     import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, UnknownPartitioning}
-    if (runtimeZones.nonEmpty && schema.fieldNames.contains("zone"))
+    if (oneZonePerPack)
       new KeyGroupedPartitioning(
         Array(org.apache.spark.sql.connector.expressions.Expressions.identity("zone")),
         runtimeZones.length)
-    else new UnknownPartitioning(runtimeZones.length)
+    else new UnknownPartitioning(math.min(runtimeZones.length, parallelism))
   }
 
-  /** Output ordering (`SupportsReportOrdering`): every partition is
-    * exactly one zone, so within a partition the `zone` column is
-    * CONSTANT — which means the scan's output is `zone ASC`-ordered
-    * for free, no reader-side sort, no change to the observable
-    * emission order (the IXFR deletes-before-adds contract, §2.3.4,
-    * stays byte-identical). Reporting it is what deletes the Sort
-    * nodes a zone-keyed sort-merge join would otherwise plan under
-    * each scan: combined with [[outputPartitioning]], two dns estates
-    * merge-join with NO exchange and NO sort (asserted in
-    * PlanAuditSpec) — at estate scale the difference between
-    * re-sorting every transferred record and streaming the join.
-    * Same projection guard as the partitioning report. */
+  /** Output ordering (`SupportsReportOrdering`): while every pack
+    * holds one zone, the `zone` column is CONSTANT within a partition,
+    * so the scan's output is `zone ASC`-ordered for free, no
+    * reader-side sort, no change to the observable emission order (the
+    * IXFR deletes-before-adds contract, §2.3.4, stays byte-identical).
+    * Reporting it is what deletes the Sort nodes a zone-keyed
+    * sort-merge join would otherwise plan under each scan: combined
+    * with [[outputPartitioning]], two dns estates merge-join with NO
+    * exchange and NO sort (asserted in PlanAuditSpec). A pack of
+    * several zones is ordered by the zone list, not by name, so it
+    * reports no ordering. */
   override def outputOrdering(): Array[org.apache.spark.sql.connector.expressions.SortOrder] = {
     import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection}
-    if (runtimeZones.nonEmpty && schema.fieldNames.contains("zone"))
+    if (oneZonePerPack)
       Array(Expressions.sort(Expressions.column("zone"), SortDirection.ASCENDING))
     else Array.empty
   }
@@ -470,38 +487,59 @@ final class DnsScan(opts: DnsSourceOptions, zones: Seq[String], schema: StructTy
     val planned = runtimeZones
     new Batch {
       override def planInputPartitions(): Array[InputPartition] =
-        DnsZoneInputPartition.plan(planned, _ => opts.serial, _ => None)
+        DnsZoneInputPartition.plan(planned, parallelism, _ => opts.serial, _ => None)
       override def createReaderFactory(): PartitionReaderFactory =
         new DnsReaderFactory(opts, schema, pushdown, counters = None)
     }
   }
 
   override def toMicroBatchStream(checkpointLocation: String) =
-    new DnsMicroBatchStream(opts, zones, schema)
+    new DnsMicroBatchStream(opts, zones, schema, parallelism)
 }
 
-/** One partition per zone (reference DnsZonePartition.java:11-19),
-  * transferring the changes since `serial`. A stream batch bounds them
-  * at its end offset's serial (`until`); a batch scan reads to the
-  * server's current serial. `HasPartitionKey` exposes the zone as the
-  * partition's key-grouped identity — the row-level half of the scan's
-  * [[DnsScan.outputPartitioning]] contract. */
-final case class DnsZoneInputPartition(index: Int, zone: String, serial: Long,
-                                       until: Option[Long])
+/** One zone of a pack: the changes since `serial`. A stream batch
+  * bounds them at its end offset's serial (`until`); a batch scan
+  * reads to the server's current serial. */
+final case class DnsZoneRead(zone: String, serial: Long, until: Option[Long])
+
+/** One partition: a pack of zones, read one after another over one
+  * connection (the reference plans one partition per zone,
+  * DnsZonePartition.java:11-19). `HasPartitionKey` exposes a one-zone
+  * pack's zone as its key-grouped identity — the row-level half of the
+  * scan's [[DnsScan.outputPartitioning]] contract, which reports key
+  * grouping only while every pack holds one zone. */
+final case class DnsZoneInputPartition(index: Int, zones: Seq[DnsZoneRead])
   extends InputPartition with HasPartitionKey {
-  override def partitionKey(): InternalRow =
-    new GenericInternalRow(Array[Any](UTF8String.fromString(zone)))
+  override def partitionKey(): InternalRow = zones match {
+    case Seq(only) => new GenericInternalRow(Array[Any](UTF8String.fromString(only.zone)))
+    case _ => throw new IllegalStateException(
+      s"a pack of ${zones.size} zones has no single partition key")
+  }
 }
 
 object DnsZoneInputPartition {
-  /** The partition plan of batch and stream alike: one partition per
-    * zone, in zone-list order, transferring from `from(zone)` up to
-    * `until(zone)`. */
-  def plan(zones: Seq[String], from: String => Long,
-           until: String => Option[Long]): Array[InputPartition] =
-    zones.zipWithIndex.map { case (zone, i) =>
-      DnsZoneInputPartition(i, zone, from(zone), until(zone)): InputPartition
-    }.toArray
+  /** Spark's own parallelism for leaf scans, which bounds the packs:
+    * `spark.sql.leafNodeDefaultParallelism` if set, else the context's
+    * default parallelism (its cores, run locally). */
+  def leafParallelism(spark: SparkSession): Int =
+    spark.conf.getOption("spark.sql.leafNodeDefaultParallelism").map(_.toInt)
+      .getOrElse(spark.sparkContext.defaultParallelism)
+
+  /** The partition plan of batch and stream alike: the zone list cut
+    * into at most `packs` contiguous packs whose zone counts differ by
+    * at most one (a zone's size is unknown before its transfer), each
+    * zone transferring from `from(zone)` up to `until(zone)`. Packs
+    * keep zone-list order, so partition order is the row order of one
+    * partition per zone. */
+  def plan(zones: Seq[String], packs: Int, from: String => Long,
+           until: String => Option[Long]): Array[InputPartition] = {
+    require(packs >= 1, s"a dns scan needs at least one pack, got $packs")
+    val n = math.min(packs, zones.length)
+    Array.tabulate[InputPartition](n) { i =>
+      DnsZoneInputPartition(i, zones.slice(i * zones.length / n, (i + 1) * zones.length / n)
+        .map(z => DnsZoneRead(z, from(z), until(z))))
+    }
+  }
 }
 
 final class DnsReaderFactory(opts: DnsSourceOptions, schema: StructType,
@@ -515,174 +553,190 @@ final class DnsReaderFactory(opts: DnsSourceOptions, schema: StructType,
   }
 }
 
-/** Executor-side reader: runs the zone transfer, filters to A records
-  * (done inside the client), tags actions, stamps one timestamp per
-  * partition (reference DnsZoneRDD.java:63-97). IXFR deltas flatten as
-  * ALL deletes then ALL adds — the global order is part of the
-  * observable output (reference Xfr.java:52-74, SURVEY §2.3.4).
-  * close() closes the client's connection.
+/** Executor-side reader: runs the pack's zone transfers one after
+  * another over one connection, filters to A records (done inside the
+  * client), tags actions, stamps one timestamp per partition (reference
+  * DnsZoneRDD.java:63-97). IXFR deltas flatten as ALL deletes then ALL
+  * adds — the global order is part of the observable output (reference
+  * Xfr.java:52-74, SURVEY §2.3.4). A zone is transferred once the rows
+  * of the zone before it are used up; a pushed TopN or global COUNT
+  * needs the whole pack first. Everything but the connection and the
+  * summed metrics stays per zone. close() closes the connection.
   */
 final class DnsPartitionReader(opts: DnsSourceOptions, schema: StructType,
                                p: DnsZoneInputPartition,
                                pushdown: DnsPushdown,
                                counters: Option[DnsStreamCounters])
   extends PartitionReader[InternalRow] {
+  import DnsPartitionReader._
 
   private val client = new WireTransferClient(opts.common.server, opts.common.port)
 
-  // Custom-metric counters, captured while the transfer materializes
-  // below (reported via currentMetricsValues — DnsMetrics.scala).
+  // Custom-metric counters, summed over the pack's transfers (reported
+  // via currentMetricsValues — DnsMetrics.scala).
   private var metricRecords = 0L
   private var metricBytes = 0L
   private var metricFallbacks = 0L
 
-  private val rows: Iterator[InternalRow] = {
-    val tsMicros = opts.fixedTimestampMicros
-      .getOrElse(System.currentTimeMillis() * 1000L)
-    // Per-transfer metadata-column values (`_serial`/`_xfr_kind`) —
-    // runtime facts captured from the transfer result; only read when
-    // the pruned schema asked for them, and a swallowed-failure zone
-    // emits no rows, so the defaults are never observable.
-    var xferSerial = 0L
-    var xferKind = ""
-    // Materialize the change list inside the guard: a lazy networked
-    // client would otherwise throw during next(), outside the catch.
-    val changes: Seq[(String, ARecord)] =
-      try {
-        val result = client.transfer(p.zone, p.serial, opts.xfr, opts.common.timeoutSec)
-        xferSerial = result.serial
-        val out = result match {
-          case AxfrResult(_, records) =>
-            xferKind = "AXFR"
-            // RFC 1995 §4: an IXFR request answered with a full zone is
-            // the server falling back — surfaced as a metric (a delta
-            // request from serial 0 legitimately snapshots; not a fallback).
-            // A snapshot cannot be cut at `until`: it is emitted whole,
-            // `_serial` naming the serial it was served at, and the next
-            // stream batch re-applies the deltas past `until` over it,
-            // which set semantics make harmless.
-            if (opts.xfr == XfrType.IXFR && p.serial > 0L) metricFallbacks += 1
-            records.map(r => (DnsAction.Axfr, r))
-          case IxfrResult(served, all) =>
-            xferKind = "IXFR"
-            // A stream batch ends at its end offset's serial: later
-            // deltas belong to the next batch, so a replayed batch
-            // reads the rows of its first run.
-            val deltas = p.until.fold(all)(u => all.takeWhile(_.endSerial <= u))
-            xferSerial = deltas.lastOption.fold(math.min(served, p.serial))(_.endSerial)
-            deltas.flatMap(_.deletes).map(r => (DnsAction.IxfrDelete, r)) ++
-              deltas.flatMap(_.adds).map(r => (DnsAction.IxfrAdd, r))
-        }
-        metricRecords = out.length.toLong
-        metricBytes = out.iterator.map { case (_, r) =>
-          (r.fqdn.getBytes(java.nio.charset.StandardCharsets.UTF_8).length +
-            r.ip.getBytes(java.nio.charset.StandardCharsets.UTF_8).length).toLong
-        }.sum
-        out
-      } catch {
-        // A batch scan swallows → empty zone (DnsZoneRDD.java:83-92). A
-        // stream batch does not: its end offset is already logged, so an
-        // empty zone would lose (start, end] for good. The task fails
-        // instead, and its retry or the batch's replay re-reads the same
-        // bounds; ignore-failures drops a dead zone at the poll.
-        case _: Exception if opts.ignoreFailures && p.until.isEmpty => Nil
+  /** One zone's transfer: its records in runs that share an action, in
+    * emission order, and the transfer's `_serial`/`_xfr_kind` values. */
+  private final class Transferred(val zone: String, val serial: Long, val kind: String,
+                                  val runs: Seq[(UTF8String, Seq[ARecord])]) {
+    val size: Long = runs.map(_._2.size.toLong).sum
+  }
+
+  /** Transfers one zone and counts it into the metrics. None: a batch
+    * scan under ignore-failures swallowed its failure, so the zone is
+    * empty (DnsZoneRDD.java:83-92) and the pack reads on. A stream
+    * batch does not swallow: its end offset is already logged, so an
+    * empty zone would lose (start, end] for good. The task fails
+    * instead, and its retry or the batch's replay re-reads the same
+    * bounds; ignore-failures drops a dead zone at the poll. */
+  private def transfer(z: DnsZoneRead): Option[Transferred] = {
+    val served =
+      try Some(client.transfer(z.zone, z.serial, opts.xfr, opts.common.timeoutSec))
+      catch { case _: Exception if opts.ignoreFailures && z.until.isEmpty => None }
+    served.map { result =>
+      var fallbacks = 0L
+      val t = result match {
+        case AxfrResult(serial, records) =>
+          // RFC 1995 §4: an IXFR request answered with a full zone is
+          // the server falling back — surfaced as a metric (a delta
+          // request from serial 0 legitimately snapshots; not a fallback).
+          // A snapshot cannot be cut at `until`: it is emitted whole,
+          // `_serial` naming the serial it was served at, and the next
+          // stream batch re-applies the deltas past `until` over it,
+          // which set semantics make harmless.
+          if (opts.xfr == XfrType.IXFR && z.serial > 0L) fallbacks = 1L
+          new Transferred(z.zone, serial, "AXFR", Seq(AxfrAction -> records))
+        case IxfrResult(serial, all) =>
+          // A stream batch ends at its end offset's serial: later
+          // deltas belong to the next batch, so a replayed batch
+          // reads the rows of its first run.
+          val deltas = z.until.fold(all)(u => all.takeWhile(_.endSerial <= u))
+          new Transferred(z.zone, deltas.lastOption.fold(math.min(serial, z.serial))(_.endSerial),
+            "IXFR", Seq(IxfrDeleteAction -> deltas.flatMap(_.deletes),
+              IxfrAddAction -> deltas.flatMap(_.adds)))
       }
-    // Streaming per-progress counters ride accumulators to the driver
-    // (ReportsSourceMetrics) — same numbers as the task metrics; a
-    // swallowed-failure zone contributes zeros.
-    counters.foreach { c =>
-      c.records.add(metricRecords)
-      c.bytes.add(metricBytes)
-      c.fallbacks.add(metricFallbacks)
+      var bytes = 0L
+      t.runs.foreach(_._2.foreach(r => bytes += utf8Length(r.fqdn) + utf8Length(r.ip)))
+      metricRecords += t.size
+      metricBytes += bytes
+      metricFallbacks += fallbacks
+      // Streaming per-progress counters ride accumulators to the driver
+      // (ReportsSourceMetrics) — the same numbers as the task metrics.
+      counters.foreach { c =>
+        c.records.add(t.size)
+        c.bytes.add(bytes)
+        c.fallbacks.add(fallbacks)
+      }
+      t
     }
-    // Pushed COUNT(*): the transfer ran above; ship count rows, not
-    // record rows. Grouped-by-zone (complete pushdown) emits a group
-    // row only when records exist — matching the row path, where an
-    // empty or swallowed-failure zone contributes no group. The global
-    // (partial) form always emits, count 0 included, so Spark's final
-    // sum is never null.
-    pushdown.agg match {
-      case Some(PushedCountAgg(byZone)) =>
-        val n = changes.length.toLong
-        if (byZone && n == 0L) Iterator.empty
-        else {
-          val row = new GenericInternalRow(schema.length)
-          var i = 0
-          if (byZone) { row.update(0, UTF8String.fromString(p.zone)); i = 1 }
-          while (i < schema.length) { row.setLong(i, n); i += 1 }
-          Iterator.single(row.asInstanceOf[InternalRow])
-        }
-      case None =>
-        // A pushed ORDER BY may name columns the projection pruned
-        // away (a COMPLETE TopN push removes the Sort node, so nothing
-        // upstream keeps them alive): materialize them for the
-        // comparison, project them away after.
-        val sortOnly: Seq[String] = pushdown.topN
-          .map(_.orders.map(_.field).distinct.filterNot(schema.fieldNames.contains))
-          .getOrElse(Seq.empty)
-        val buildSchema = StructType(schema.fields ++ sortOnly.map(f =>
-          (DnsSchemas.read.fields ++ DnsSchemas.metadata.fields).find(_.name == f)
-            .getOrElse(throw new IllegalStateException(s"unknown dns sort column '$f'"))))
-        // Only the pruned columns are materialized (SupportsPushDownRequiredColumns).
-        val fieldWriters: Array[(InternalRow, Int, String, ARecord) => Unit] =
-          buildSchema.fieldNames.map[(InternalRow, Int, String, ARecord) => Unit] {
-            case "action" => (row, i, action, _) => row.update(i, UTF8String.fromString(action))
-            case "fqdn" => (row, i, _, rec) => row.update(i, UTF8String.fromString(rec.fqdn.toLowerCase(java.util.Locale.ROOT)))
-            case "ip" => (row, i, _, rec) => row.update(i, UTF8String.fromString(rec.ip))
-            case "organization" => (row, i, _, _) => row.update(i, UTF8String.fromString(opts.organization))
-            case "timestamp" => (row, i, _, _) => row.setLong(i, tsMicros)
-            case "zone" => (row, i, _, _) => row.update(i, UTF8String.fromString(p.zone))
-            case "_serial" => (row, i, _, _) => row.setLong(i, xferSerial)
-            case "_xfr_kind" => (row, i, _, _) => row.update(i, UTF8String.fromString(xferKind))
-            case other => throw new IllegalStateException(s"unknown dns column '$other'")
-          }
-        def build(action: String, rec: ARecord): InternalRow = {
-          val row = new GenericInternalRow(fieldWriters.length)
-          var i = 0
-          while (i < fieldWriters.length) { fieldWriters(i)(row, i, action, rec); i += 1 }
-          row
-        }
-        val selected: Iterator[InternalRow] = pushdown.topN match {
-          case Some(t) =>
-            // Pushed ORDER BY ... LIMIT: in-memory sort of the zone's
-            // already-materialized record list (bounded by the DNS
-            // message size), stable so ties keep serve order. Take
-            // BEFORE drop: a complete push arrives as
-            // pushTopN(orders, k + m) + pushOffset(m).
-            val cmp = topNOrdering(t, buildSchema)
-            changes.map { case (a, r) => build(a, r) }.sorted(cmp)
-              .iterator.take(t.limit).drop(pushdown.offset.getOrElse(0))
-          case None =>
-            // Partial limit: stop materializing past the pushed bound —
-            // Spark's global limit above the scan finishes the job (a
-            // single-zone complete push takes exactly the answer).
-            val limited = pushdown.limit.foldLeft(
-              changes.iterator.map { case (a, r) => build(a, r) })((it, n) => it.take(n))
-            limited.drop(pushdown.offset.getOrElse(0))
-        }
-        // project away sort-only columns (they sit appended, so the
-        // output row is the first schema.length fields)
-        if (sortOnly.isEmpty) selected
-        else selected.map { r =>
-          val out = new GenericInternalRow(schema.length)
-          var i = 0
-          while (i < schema.length) {
-            schema(i).dataType match {
-              case StringType => out.update(i, r.getUTF8String(i))
-              case LongType | TimestampType => out.setLong(i, r.getLong(i))
-              case other => throw new IllegalStateException(s"unexpected dns column type $other")
-            }
-            i += 1
-          }
-          out.asInstanceOf[InternalRow]
-        }
+  }
+
+  private val transfers: Iterator[Transferred] = p.zones.iterator.flatMap(transfer)
+
+  /** A pushed COUNT(*) row: the zone first when grouped by it. */
+  private def countRow(zone: Option[String], n: Long): InternalRow = {
+    val row = new GenericInternalRow(schema.length)
+    var i = 0
+    zone.foreach { z => row.update(0, UTF8String.fromString(z)); i = 1 }
+    while (i < schema.length) { row.setLong(i, n); i += 1 }
+    row
+  }
+
+  /** The columns rows are built with: a pushed ORDER BY may name
+    * columns the projection pruned away (a COMPLETE TopN push removes
+    * the Sort node, so nothing upstream keeps them alive), so they are
+    * materialized for the comparison, appended, and projected away
+    * after. Only the pruned columns are materialized otherwise
+    * (SupportsPushDownRequiredColumns). */
+  private val sortOnly: Seq[String] = pushdown.topN
+    .map(_.orders.map(_.field).distinct.filterNot(schema.fieldNames.contains))
+    .getOrElse(Seq.empty)
+  private val buildSchema = StructType(schema.fields ++ sortOnly.map(f =>
+    (DnsSchemas.read.fields ++ DnsSchemas.metadata.fields).find(_.name == f)
+      .getOrElse(throw new IllegalStateException(s"unknown dns sort column '$f'"))))
+  private val actionAt = buildSchema.fieldNames.indexOf("action")
+  private val fqdnAt = buildSchema.fieldNames.indexOf("fqdn")
+  private val ipAt = buildSchema.fieldNames.indexOf("ip")
+  private val organization = UTF8String.fromString(opts.organization)
+  private val tsMicros: Any = opts.fixedTimestampMicros
+    .getOrElse(System.currentTimeMillis() * 1000L)
+
+  /** One zone's rows. The columns that are constant over the zone are
+    * encoded once into a template; a row copies it and adds the
+    * record's own action, fqdn and ip. */
+  private def rowsOf(t: Transferred): Iterator[InternalRow] = {
+    val template = buildSchema.fieldNames.map[Any] {
+      case "action" | "fqdn" | "ip" => null
+      case "organization" => organization
+      case "timestamp" => tsMicros
+      case "zone" => UTF8String.fromString(t.zone)
+      case "_serial" => t.serial
+      case "_xfr_kind" => UTF8String.fromString(t.kind)
+      case other => throw new IllegalStateException(s"unknown dns column '$other'")
     }
+    t.runs.iterator.flatMap { case (action, records) =>
+      records.iterator.map { r =>
+        val values = template.clone()
+        if (actionAt >= 0) values(actionAt) = action
+        if (fqdnAt >= 0) values(fqdnAt) = UTF8String.fromString(r.fqdn.toLowerCase(java.util.Locale.ROOT))
+        if (ipAt >= 0) values(ipAt) = UTF8String.fromString(r.ip)
+        new GenericInternalRow(values): InternalRow
+      }
+    }
+  }
+
+  private val rows: Iterator[InternalRow] = pushdown.agg match {
+    // Pushed COUNT(*): the transfers run, count rows ship instead of
+    // record rows. Grouped by zone (complete pushdown), a zone emits its
+    // group row only when records exist — matching the row path, where
+    // an empty or swallowed-failure zone contributes no group. The
+    // global (partial) form emits one row per pack, count 0 included,
+    // so Spark's final sum is never null.
+    case Some(PushedCountAgg(true)) =>
+      transfers.filter(_.size > 0).map(t => countRow(Some(t.zone), t.size))
+    case Some(PushedCountAgg(false)) =>
+      Iterator.single(countRow(None, transfers.map(_.size).sum))
+    case None =>
+      val selected: Iterator[InternalRow] = pushdown.topN match {
+        case Some(t) =>
+          // Pushed ORDER BY ... LIMIT: in-memory sort of the pack's
+          // rows (each zone bounded by the DNS message size), stable so
+          // ties keep serve order. Take BEFORE drop: a complete push
+          // arrives as pushTopN(orders, k + m) + pushOffset(m).
+          transfers.flatMap(rowsOf).toVector.sorted(topNOrdering(t))
+            .iterator.take(t.limit).drop(pushdown.offset.getOrElse(0))
+        case None =>
+          // Partial limit: stop materializing past the pushed bound —
+          // Spark's global limit above the scan finishes the job (a
+          // single-zone complete push takes exactly the answer).
+          pushdown.limit.foldLeft(transfers.flatMap(rowsOf))((it, n) => it.take(n))
+            .drop(pushdown.offset.getOrElse(0))
+      }
+      // project away sort-only columns (they sit appended, so the
+      // output row is the first schema.length fields)
+      if (sortOnly.isEmpty) selected
+      else selected.map { r =>
+        val out = new GenericInternalRow(schema.length)
+        var i = 0
+        while (i < schema.length) {
+          schema(i).dataType match {
+            case StringType => out.update(i, r.getUTF8String(i))
+            case LongType | TimestampType => out.setLong(i, r.getLong(i))
+            case other => throw new IllegalStateException(s"unexpected dns column type $other")
+          }
+          i += 1
+        }
+        out.asInstanceOf[InternalRow]
+      }
   }
 
   /** Row ordering for a pushed TopN: column-by-column comparison over
     * the build schema (strings and long-backed timestamps are the only
     * dns column kinds; nothing is nullable). */
-  private def topNOrdering(t: PushedTopN, buildSchema: StructType): Ordering[InternalRow] = {
+  private def topNOrdering(t: PushedTopN): Ordering[InternalRow] = {
     val keys: Seq[(Int, DataType, Boolean)] = t.orders.map(o =>
       (buildSchema.fieldIndex(o.field), buildSchema(o.field).dataType, o.ascending))
     (a: InternalRow, b: InternalRow) => {
@@ -718,4 +772,29 @@ final class DnsPartitionReader(opts: DnsSourceOptions, schema: StructType,
       new DnsTaskMetric(DnsMetrics.FallbacksName, metricFallbacks))
 
   override def close(): Unit = client.close()
+}
+
+object DnsPartitionReader {
+  private val AxfrAction = UTF8String.fromString(DnsAction.Axfr)
+  private val IxfrAddAction = UTF8String.fromString(DnsAction.IxfrAdd)
+  private val IxfrDeleteAction = UTF8String.fromString(DnsAction.IxfrDelete)
+
+  /** `s.getBytes(UTF_8).length`, without encoding `s`: a surrogate
+    * pair is 4 bytes, and an unpaired surrogate is the 1-byte '?' the
+    * encoder writes for it. */
+  private[read] def utf8Length(s: String): Int = {
+    var n = 0
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      n += (if (c < 0x80) 1
+      else if (c < 0x800) 2
+      else if (!Character.isSurrogate(c)) 3
+      else if (Character.isHighSurrogate(c) && i + 1 < s.length &&
+          Character.isLowSurrogate(s.charAt(i + 1))) { i += 1; 4 }
+      else 1)
+      i += 1
+    }
+    n
+  }
 }

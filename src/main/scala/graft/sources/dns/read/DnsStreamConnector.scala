@@ -63,12 +63,14 @@ object DnsOffset {
   * SOA query per zone (RFC 1034 §4.3.5), over one driver-side
   * connection. Each trigger: `latestOffset` polls every zone's serial
   * and admits the zones that moved; `planInputPartitions(start, end)`
-  * plans one partition per admitted zone, transferring from its start
-  * serial and keeping the IXFR deltas up to its end serial. Spark's
-  * offset and commit logs are the source's only state.
+  * packs the admitted zones into at most `parallelism` partitions (one
+  * task per core, as the batch scan plans them), each zone transferring
+  * from its start serial and keeping the IXFR deltas up to its end
+  * serial. Spark's offset and commit logs are the source's only state.
   */
 final class DnsMicroBatchStream(opts: DnsSourceOptions, zones: Seq[String],
-                                schema: org.apache.spark.sql.types.StructType)
+                                schema: org.apache.spark.sql.types.StructType,
+                                parallelism: Int)
   extends MicroBatchStream with SupportsTriggerAvailableNow
   with ReportsSourceMetrics {
 
@@ -109,17 +111,22 @@ final class DnsMicroBatchStream(opts: DnsSourceOptions, zones: Seq[String],
   /** Serials of the last poll. */
   private var latest: Map[String, Long] = Map.empty
 
-  /** Every zone's current serial. A failed query is asked once more: a
-    * failed exchange closes the poller's connection, so the retry goes
-    * over a fresh one. If that fails too, the poll fails the query —
-    * unless `ignore-failures` is set, which leaves the zone out, so it
-    * reads as unchanged. A stream batch's transfer never swallows a
-    * failure (see [[DnsPartitionReader]]); the poll is where
-    * ignore-failures drops a dead zone. */
+  /** Every zone's current serial. A query whose connection failed is
+    * asked once more: the failed exchange closed the poller's
+    * connection, so the retry goes over a fresh one. An rcode answer
+    * (an unknown zone's NOTAUTH) is not asked again, and keeps the
+    * connection. A failure fails the query — unless `ignore-failures`
+    * is set, which leaves the zone out, so it reads as unchanged. A
+    * stream batch's transfer never swallows a failure (see
+    * [[DnsPartitionReader]]); the poll is where ignore-failures drops a
+    * dead zone. */
   private def poll(): Map[String, Long] = {
     def ask(z: String) = poller.serialOf(z, opts.common.timeoutSec)
     latest = zones.flatMap { z =>
-      try Some(z -> (try ask(z) catch { case _: java.io.IOException => ask(z) }))
+      try Some(z -> (try ask(z) catch {
+        case e: DnsRcodeException => throw e
+        case _: java.io.IOException => ask(z)
+      }))
       catch { case _: Exception if opts.ignoreFailures => None }
     }.toMap
     latest
@@ -198,15 +205,16 @@ final class DnsMicroBatchStream(opts: DnsSourceOptions, zones: Seq[String],
 
   override def deserializeOffset(json: String): Offset = DnsOffset.fromJson(json)
 
-  /** One partition per zone whose serial moved between `start` and
-    * `end`, transferring from its start serial and bounded at its end
-    * serial, so a replayed batch reads the rows of its first run. */
+  /** The zones whose serial moved between `start` and `end`, packed
+    * into at most `parallelism` partitions; each zone transfers from its
+    * start serial and is bounded at its end serial, so a replayed batch
+    * reads the rows of its first run. */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val from = DnsOffset.of(start).serials
     val to = DnsOffset.of(end).serials
     def startOf(z: String) = from.getOrElse(z, opts.serial)
     DnsZoneInputPartition.plan(zones.filter(z => to.get(z).exists(_ != startOf(z))),
-      startOf, to.get)
+      parallelism, startOf, to.get)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

@@ -358,8 +358,9 @@ final class WireDnsServer(val backing: InMemoryDnsServer = new InMemoryDnsServer
   private val accepted = new java.util.concurrent.atomic.AtomicLong(0L)
   def connectionCount: Long = accepted.get()
 
-  /** SOA queries answered — the observable that stream polling is
-    * graded on, beside `backing.transferCount`. */
+  /** SOA queries answered, a NOTAUTH for an unknown zone included —
+    * the observable that stream polling is graded on, beside
+    * `backing.transferCount`. */
   private val soaAnswered = new java.util.concurrent.atomic.AtomicLong(0L)
   def soaQueryCount: Long = soaAnswered.get()
 
@@ -425,8 +426,8 @@ final class WireDnsServer(val backing: InMemoryDnsServer = new InMemoryDnsServer
         case TypeSoa =>
           // RFC 1034 §4.3.5: the secondary's refresh check, one SOA RR
           // back; not a transfer, so `transferCount` does not move
-          val soa = soaRr(q.name, backing.serialOf(q.name))
           soaAnswered.incrementAndGet()
+          val soa = soaRr(q.name, backing.serialOf(q.name))
           Seq(Message(req.id, responseFlags(OpcodeQuery, RcodeNoError), req.questions,
             Seq(soa), Nil, Nil))
         case TypeAxfr => axfrResponse(req, q.name)
@@ -507,10 +508,16 @@ private object WireSocket {
     new BufferedOutputStream(sock.getOutputStream, BufferBytes)
 }
 
+/** The server answered with a non-zero rcode, and the exchange read
+  * that answer whole, so the connection is still in step: the message
+  * names the rcode, and [[WireConnection]] keeps the connection open. */
+final class DnsRcodeException(message: String, val rcode: Int) extends IOException(message)
+
 /** A client's one TCP connection to a DNS server, opened by the first
   * exchange and reused by every later one (RFC 7766 §6.2.1), until its
   * owner calls [[close]]. An exchange that throws closes it, so the
-  * next one reconnects; nothing is retried inside a call. timeout=0
+  * next one reconnects — except on a [[DnsRcodeException]], whose
+  * answer was read whole; nothing is retried inside a call. timeout=0
   * always fails, before connecting (reference failure matrix);
   * otherwise it is a real connect + SO read timeout. TCP_NODELAY is
   * on: each exchange is one flushed request, so Nagle's algorithm only
@@ -527,7 +534,10 @@ private final class WireConnection(host: String, port: Int) {
       if (sock == null) open(timeoutSec)
       sock.setSoTimeout(timeoutSec * 1000)
       f(in, out)
-    } catch { case t: Throwable => close(); throw t }
+    } catch {
+      case e: DnsRcodeException => throw e
+      case t: Throwable => close(); throw t
+    }
 
   private def open(timeoutSec: Int): Unit = {
     val s = new Socket()
@@ -567,7 +577,7 @@ final class WireTransferClient(host: String, port: Int) extends ZoneTransferClie
       out.flush()
       val m = readFramed(in)
       if (m.rcode != RcodeNoError)
-        throw new IOException(s"SOA query for '$zone' failed: rcode ${m.rcode}")
+        throw new DnsRcodeException(s"SOA query for '$zone' failed: rcode ${m.rcode}", m.rcode)
       require(m.isResponse, "expected a response message")
       m.answers.collectFirst { case Rr(_, TypeSoa, _, _, SoaData(s)) => s }
         .getOrElse(throw new IOException(s"SOA query for '$zone' answered without a SOA RR"))
@@ -589,10 +599,16 @@ final class WireTransferClient(host: String, port: Int) extends ZoneTransferClie
       out.flush()
 
       val rrs = scala.collection.mutable.ArrayBuffer.empty[Rr]
+      var messages = 0
       def readInto(): Unit = {
         val m = readFramed(in)
-        if (m.rcode != RcodeNoError)
-          throw new IOException(s"zone transfer of '$zone' failed: rcode ${m.rcode}")
+        messages += 1
+        if (m.rcode != RcodeNoError) {
+          // A first response is the whole answer; a later one may leave
+          // the rest of the transfer unread on the connection.
+          val msg = s"zone transfer of '$zone' failed: rcode ${m.rcode}"
+          throw (if (messages == 1) new DnsRcodeException(msg, m.rcode) else new IOException(msg))
+        }
         require(m.isResponse, "expected a response message")
         rrs ++= m.answers
       }
@@ -710,7 +726,8 @@ final class WireTransferClient(host: String, port: Int) extends ZoneTransferClie
 
 /** RFC 2136 dynamic updates over TCP: adds as class-IN RRs with the
   * record TTL, deletes as class-NONE; any rcode != 0 throws (job fails,
-  * like the reference). Every message of a call is framed before the
+  * like the reference) and keeps the connection, whose next request
+  * waits for no earlier answer. Every message of a call is framed before the
   * first is sent, so a batch that cannot be framed fails unsent. All
   * calls share the emitter's one connection ([[WireConnection]]), zone
   * after zone, until its owner calls [[close]]. */
@@ -773,7 +790,7 @@ final class WireUpdateEmitter(host: String, port: Int, timeoutSec: Int) extends 
           out.flush()
           val resp = readFramed(in)
           if (resp.rcode != RcodeNoError)
-            throw new IOException(s"$what of '$zone' rejected: rcode ${resp.rcode}")
+            throw new DnsRcodeException(s"$what of '$zone' rejected: rcode ${resp.rcode}", resp.rcode)
         }
       }
     }

@@ -26,15 +26,16 @@ import graft.sources.dns._
   * statement into a join of this operation's SCAN (current zone state)
   * with the source, and a `ReplaceData` write of the surviving rows —
   * the connector only supplies the two ends re-used from the existing
-  * paths (read: one partition per zone, AXFR; write: the truncate
-  * writer's stage-then-commit discipline).
+  * paths (read: a serial-0 AXFR snapshot of each zone; write: the
+  * truncate writer's stage-then-commit discipline).
   *
   * Beyond the reference, whose sink is append-only
   * (DnsSinkRelation.java:33-42); the batch twin of the IXFR-apply
   * semantics the query-level `q_cdc_apply` demonstrates.
   *
-  * Scale shape: the scan is one task per zone (the same unit as the
-  * read connector); the write stages per-zone replacement content on
+  * Scale shape: the scan is one task per zone ([[DnsZoneStatePartition]];
+  * unlike the read connector, which packs zones one task per core, it
+  * reads one zone per task); the write stages per-zone replacement content on
   * tasks and commits ONE overwrite message per zone from the driver,
   * exactly once — content must fit one RFC 2136 message anyway, so a
   * zone replacement is small by construction, and the number of

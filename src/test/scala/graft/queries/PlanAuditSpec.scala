@@ -102,6 +102,47 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(!offset.exists(sortOrLimit), offset)
   }
 
+  test("packed dns scan: global COUNT(*), LIMIT and TopN over two-zone packs keep Spark's final operator") {
+    // 8 zones on local[4] pack two to a partition, so each pushed
+    // operator runs per pack and Spark's own node must finish it.
+    import org.apache.spark.sql.functions.{col, count, lit}
+    import org.apache.spark.sql.execution.{CollectLimitExec, GlobalLimitExec, TakeOrderedAndProjectExec}
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import graft.sources.dns.{ARecord, Loopback}
+    Loopback.withServer { wire =>
+      val zones = (0 until 8).map(i => s"pk$i.graft.")
+      zones.zipWithIndex.foreach { case (z, i) =>
+        wire.backing.addZone(z, (0 to i).map(j => ARecord(s"h$j.$z", s"10.$i.0.$j")))
+      }
+      def load() = spark.read.format("dns")
+        .option("server", wire.host).option("port", wire.port.toString)
+        .option("organization", "graft").option("zones", zones.mkString(","))
+        .option("xfr", "AXFR").load()
+      def audit(df: DataFrame, pushed: String): Seq[SparkPlan] = {
+        val nodes = collectNodes(executed(df))
+        val scans = nodes.collect { case b: BatchScanExec => b }
+        assert(scans.size == 1 && scans.head.inputRDD.getNumPartitions == 4, nodes.mkString("\n"))
+        assert(scans.head.scan.description().contains(pushed), scans.head.scan.description())
+        nodes
+      }
+      val total = load().agg(count(lit(1)))
+      assert(audit(total, "PushedAggregation=[COUNT(*)]").exists(_.isInstanceOf[HashAggregateExec]))
+      assert(total.collect()(0).getLong(0) == (1 to 8).sum)
+
+      val limited = load().limit(5)
+      assert(audit(limited, "PushedLimit=LIMIT 5").exists(n =>
+        n.isInstanceOf[CollectLimitExec] || n.isInstanceOf[GlobalLimitExec]))
+      assert(limited.collect().length == 5)
+
+      val top = load().orderBy(col("fqdn").desc).limit(7)
+      assert(audit(top, "PushedTopN=[ORDER BY fqdn DESC LIMIT 7]")
+        .exists(_.isInstanceOf[TakeOrderedAndProjectExec]))
+      val fqdns = zones.zipWithIndex.flatMap { case (z, i) => (0 to i).map(j => s"h$j.$z") }
+      assert(top.collect().map(_.getAs[String]("fqdn")).toSeq == fqdns.sorted.reverse.take(7))
+    }
+  }
+
   test("q_dns_auto_broadcast: reported statistics drive a hint-free static broadcast of the DNS side") {
     val wire = Connector.seedAutoBroadcastFixture()
     val df = Connector.autoBroadcastJoin(spark, wire)

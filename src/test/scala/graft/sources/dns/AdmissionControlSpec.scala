@@ -25,7 +25,7 @@ class AdmissionControlSpec extends AnyFunSuite {
       "server" -> "127.0.0.1", "port" -> port.toString, "organization" -> "acme",
       "zones" -> zones.mkString(",")) ++
       maxZones.map(n => "max-zones-per-batch" -> n.toString))
-    new DnsMicroBatchStream(opts, opts.zones, DnsSchemas.read)
+    new DnsMicroBatchStream(opts, opts.zones, DnsSchemas.read, parallelism = 4)
   }
 
   private val zones = Seq("z0.acme", "z1.acme", "z2.acme", "z3.acme")
@@ -80,7 +80,7 @@ class AdmissionControlSpec extends AnyFunSuite {
           "z2.acme." -> 1L, "z3.acme." -> 1L))
         // planning honors the moved set — and only it — bounded at end
         val parts = s1.planInputPartitions(start, o1)
-          .map(_.asInstanceOf[DnsZoneInputPartition]).toSeq
+          .map(_.asInstanceOf[DnsZoneInputPartition]).toSeq.flatMap(_.zones)
         assert(parts.map(p => (p.zone, p.serial, p.until)) ==
           Seq(("z2.acme.", 0L, Some(1L)), ("z3.acme.", 0L, Some(1L))))
         // every zone caught up: the next poll is the start itself

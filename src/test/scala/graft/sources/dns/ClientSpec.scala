@@ -135,20 +135,22 @@ class ClientSpec extends AnyFunSuite {
     }
   }
 
-  test("a rejected update closes the emitter's connection; the next update reconnects") {
+  test("a rejected update keeps the emitter's connection; the next update reuses it") {
     withServer { srv =>
       srv.backing.addZone("z.", Nil)
       val em = new WireUpdateEmitter(srv.host, srv.port, 10)
       def add(zone: String, host: String) =
         em.update(zone, Seq(DnsUpdateRecord(DnsAction.IxfrAdd, s"$host.$zone", "1.2.3.4", 0L, 60)))
       try {
-        val e = intercept[java.io.IOException](add("ghost.zone.", "a"))
+        // the rcode answer was read whole: the connection stays in step
+        val e = intercept[DnsRcodeException](add("ghost.zone.", "a"))
         assert(e.getMessage == "update of 'ghost.zone.' rejected: rcode 9")
+        assert(e.rcode == DnsWire.RcodeNotAuth)
         assert(srv.connectionCount == 1)
         add("z.", "a")
-        assert(srv.connectionCount == 2, "the failed exchange's connection was reused")
+        assert(srv.connectionCount == 1, "the rejected exchange closed its connection")
         add("z.", "b")
-        assert(srv.connectionCount == 2, "a good exchange's connection was not reused")
+        assert(srv.connectionCount == 1, "a good exchange's connection was not reused")
       } finally em.close()
       assert(srv.backing.lookup("a.z.") == Seq("1.2.3.4"))
       assert(srv.backing.serialOf("z.") == 3)

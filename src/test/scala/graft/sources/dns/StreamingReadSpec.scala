@@ -181,13 +181,13 @@ class StreamingReadSpec extends AnyFunSuite {
     * from `latestOffset`, partitions from `planInputPartitions`, rows
     * from the stream's reader factory, as (action, fqdn, ip, _serial,
     * _xfr_kind). */
-  private final class Direct(opts: DnsSourceOptions) {
+  private final class Direct(opts: DnsSourceOptions, parallelism: Int = 4) {
     import graft.sources.dns.read.{DnsMicroBatchStream, DnsOffset}
     import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
     private val schema = org.apache.spark.sql.types.StructType(
       DnsSchemas.read.fields ++ DnsSchemas.metadata.fields)
     spark // the stream registers its counters on the active session
-    val stream = new DnsMicroBatchStream(opts, opts.zones, schema)
+    val stream = new DnsMicroBatchStream(opts, opts.zones, schema, parallelism)
     def initial: Offset = stream.initialOffset()
     def next(start: Offset): Offset = stream.latestOffset(start, ReadLimit.allAvailable())
     def read(start: Offset, end: Offset): Seq[(String, String, String, Long, String)] = {
@@ -387,6 +387,41 @@ class StreamingReadSpec extends AnyFunSuite {
           assert(wire.connectionCount == 2)
         } finally d.stream.stop()
       } finally proxy.close()
+    }
+  }
+
+  test("a trigger that admits more moved zones than the parallelism plans that many partitions") {
+    withServer { wire =>
+      val zones = (0 until 5).map(i => s"m$i.acme.")
+      zones.foreach(z => wire.backing.addZone(z, Seq(ARecord(s"a.$z", "10.8.0.1"))))
+      val d = new Direct(sourceOpts(wire, zones.mkString(",")), parallelism = 2)
+      try {
+        val o1 = d.next(d.initial)
+        assert(d.stream.planInputPartitions(d.initial, o1).length == 2)
+        assert(d.read(d.initial, o1).map(_._2) == zones.map(z => s"a.$z"))
+        zones.foreach(z => wire.backing.update(z, Seq(ARecord(s"b.$z", "10.8.0.2")), Nil))
+        val o2 = d.next(o1)
+        val parts = d.stream.planInputPartitions(o1, o2)
+          .map(_.asInstanceOf[graft.sources.dns.read.DnsZoneInputPartition])
+        assert(parts.map(_.zones.map(_.zone)).toSeq == Seq(zones.take(2), zones.drop(2)))
+        assert(d.read(o1, o2) == zones.map(z => (DnsAction.IxfrAdd, s"b.$z", "10.8.0.2", 2L, "IXFR")))
+      } finally d.stream.stop()
+    }
+  }
+
+  test("a 5-poll stream with a dead zone opens 1 connection and sends 1 SOA query per zone per poll") {
+    withServer { wire =>
+      wire.backing.addZone("l1.acme.", Seq(ARecord("a.l1.acme.", "10.9.0.1")))
+      wire.backing.addZone("l2.acme.", Seq(ARecord("a.l2.acme.", "10.9.0.2")))
+      val d = new Direct(sourceOpts(wire, "l1.acme,dead.acme,l2.acme", "ignore-failures" -> "true"))
+      try {
+        val o1 = d.next(d.initial)
+        (2 to 5).foreach(_ => assert(d.next(o1).json() == o1.json()))
+        // the dead zone's NOTAUTH is not asked again and keeps the connection
+        assert(wire.soaQueryCount == 3 * 5)
+        assert(wire.connectionCount == 1)
+        assert(d.serials(o1) == Map("l1.acme." -> 1L, "dead.acme." -> 0L, "l2.acme." -> 1L))
+      } finally d.stream.stop()
     }
   }
 }

@@ -531,11 +531,12 @@ class WireSpec extends AnyFunSuite {
     assert(df.count() == 0)
   }
 
-  test("12-zone wire AXFR: one partition per zone, every record lands") {
-    // Partition-per-zone parallelism on REAL TCP at connector breadth:
-    // 12 concurrent transfer connections (the prior wire fixtures used
-    // <=4 zones, so the accept loop's thread-per-connection path and
-    // the chunked-AXFR reassembly had never run 12-wide).
+  test("12-zone wire AXFR: one partition per core, every record lands") {
+    // Packed parallelism on REAL TCP at connector breadth: the 12
+    // zones ride 4 concurrent connections (local[4]), 3 transfers
+    // each, so the accept loop's thread-per-connection path, the
+    // chunked-AXFR reassembly and back-to-back transfers on one
+    // connection all run.
     val spark = graft.SparkTestSession.spark
     withServer { srv =>
       val zones = (0 until 12).map(i => s"z$i.breadth.acme.")
@@ -548,13 +549,14 @@ class WireSpec extends AnyFunSuite {
         .option("organization", "acme")
         .option("zones", zones.map(_.dropRight(1)).mkString(","))
         .option("xfr", "AXFR").load()
-      assert(df.rdd.getNumPartitions == 12, "expected one input partition per zone")
+      assert(df.rdd.getNumPartitions == 4, "expected one input partition per core")
       val got = df.select("fqdn", "ip").collect()
         .map(r => (r.getString(0), r.getString(1))).toSet
       val want = zones.zipWithIndex.flatMap { case (z, i) =>
         Seq((s"a.$z", s"10.7.$i.1"), (s"b.$z", s"10.7.$i.2"))
       }.toSet
       assert(got == want)
+      assert(srv.connectionCount == 4, "expected one connection per pack")
     }
   }
 
@@ -574,7 +576,7 @@ class WireSpec extends AnyFunSuite {
         .option("organization", "acme")
         .option("zones", zones.map(_.dropRight(1)).mkString(","))
         .option("xfr", "IXFR").option("serial", "1").load()
-      assert(df.rdd.getNumPartitions == 12)
+      assert(df.rdd.getNumPartitions == 4) // 12 zones packed on local[4]
       val rows = df.select("fqdn", "action").collect()
         .map(r => (r.getString(0), r.getString(1)))
       // 5 bumped zones x (1 delete + 1 add); the 7 up-to-date zones
